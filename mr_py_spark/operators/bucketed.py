@@ -479,23 +479,21 @@ def replay_guard(
     id_col: str,
     minmax=_UNSET,
 ) -> DataFrame:
-    """O(delta) idempotence guard for standing-index appends (VERDICT
-    r13 'minor, watch it': the *_index_append replay guards probed the
-    FULL standing table's id column per micro-batch — a column-pruned
-    scan, O(index) per batch at 10⁹ rows). Returns ``new_rows`` with
-    ids the table already holds dropped.
+    """O(delta) idempotence guard for standing-index appends (probing
+    the FULL standing table's id column per micro-batch would be a
+    column-pruned scan, O(index) per batch at 10⁹ rows). Returns
+    ``new_rows`` with ids the table already holds dropped.
 
     Mechanism: a max-id WATERMARK in a tiny JSON sidecar NEXT TO
     the table's own data directory (``<location>_rwm`` — no catalog
     entry, so externally-owned sessions never get a surprise managed
     table in their warehouse dir; JSON file, not a 1-row parquet
-    dataset — see ``sidecar_read_json``, r16: the parquet form cost
-    a Spark job per read/write on every micro-batch). Invariant — the watermark is always
-    >= every id the standing table holds, because it is raised BEFORE
-    the caller can append (and bootstraps from a one-time full max
-    over the table, so pre-guard appends are covered). Ids ABOVE the
-    watermark
-    are therefore provably absent: the normal streaming batch (fresh,
+    dataset — see ``sidecar_read_json``: the parquet form cost a Spark
+    job per read/write on every micro-batch). Invariant — the
+    watermark is always >= every id the standing table holds, because
+    it is raised BEFORE the caller can append (and bootstraps from a
+    one-time full max over the table, so pre-guard appends are
+    covered). Ids ABOVE the watermark are therefore provably absent: the normal streaming batch (fresh,
     higher ids) passes through with ZERO index I/O — the input frame
     is returned as-is. Only ids at-or-below the watermark (a replay,
     or id reuse) pay the exact index-side semi-join, restricted to
@@ -509,26 +507,25 @@ def replay_guard(
     path (and the atomic rename write means no reader can ever see a
     torn one). The guard is only sound if every append
     to ``table`` flows through it (or through a caller that raises the
-    watermark first) — all three maintenance loops do. The sidecar's
-    read-modify-write is SINGLE-WRITER (the foreachBatch driver loop
+    watermark first) — ``append_guard`` routes every standing-index
+    append this way, and ``streaming.maintenance_step`` admits through
+    those appends. The sidecar's read-modify-write is SINGLE-WRITER (the foreachBatch driver loop
     the whole standing-index tier assumes): two concurrent appenders
     could interleave read/raise and leave the lower max standing.
 
-    ``minmax`` (r17, VERDICT r16 item 2): precomputed
-    (min_id, max_id) of ``new_rows`` — a caller that already paid a
+    ``minmax``: precomputed (min_id, max_id) of ``new_rows`` — a caller that already paid a
     delta-sized agg passes it and the entirely-fresh fast path costs
     zero Spark jobs. Must describe EXACTLY ``new_rows``'s ``id_col``
     ((None, None) for a known-empty batch)."""
     if not spark.catalog.tableExists(table):
         return new_rows
     wm_path = _table_location(spark, table).rstrip("/") + "_rwm"
-    # min rides the same single pass over the delta (r16): the normal
+    # min rides the same single pass over the delta: the normal
     # streaming batch is entirely-fresh (min > wm), which the min
     # proves WITHOUT a second suspects-empty? job — the fast path is
-    # then exactly one delta-sized job plus two file touches. r17:
-    # a caller that already aggregated the delta (the streaming loops
-    # agg their persisted status frame) passes ``minmax`` and the fast
-    # path costs ZERO jobs.
+    # then exactly one delta-sized job plus two file touches, or ZERO
+    # jobs when the caller passes ``minmax`` (the streaming loops agg
+    # their persisted status frame).
     if minmax is _UNSET:
         row = new_rows.agg(
             F.max(id_col).alias("mx"), F.min(id_col).alias("mn")
@@ -556,10 +553,8 @@ def replay_guard(
     # failure propagates — soundness depends on the raise landing)
     if raise_to is not None:
         sidecar_write_json(wm_path, {"wm": int(raise_to)})
-    # ADVICE r16: when mn <= wm the minimum-id row itself satisfies the
-    # suspects filter, so "suspects empty?" is provably false — the old
-    # limit(1).count() disjunct could never return 0 and only added one
-    # wasted delta-sized job to every slow-path batch.
+    # when mn <= wm the minimum-id row itself satisfies the suspects
+    # filter, so "suspects empty?" is provably false and needs no job
     if suspects is not new_rows and mn > wm:
         return new_rows  # the O(delta) fast path: zero index I/O
     ids = suspects.select(id_col)
@@ -617,6 +612,38 @@ def raise_watermark(
     )
     if mx is not None and int(mx) > got:
         sidecar_write_json(wm_path, {"wm": int(mx)})
+
+
+def append_guard(
+    table: str,
+    rows: DataFrame,
+    id_col: str,
+    idempotent: bool,
+    stats: tuple[int, int | None, int | None] | None,
+) -> tuple[DataFrame, tuple[int, int | None, int | None] | None]:
+    """The replay discipline every standing-index append runs before
+    its rows land: ``idempotent=True`` drops ids ``table`` already
+    holds (``replay_guard``), otherwise the watermark is raised to
+    cover ``rows`` (``raise_watermark``), so either way the guard's
+    every-append-raises-first invariant holds.
+
+    ``stats`` is the precomputed (count, min_id, max_id) of ``rows``
+    ((0, None, None) for a known-empty frame; None when unknown). It
+    makes the fresh-batch path job-free. Returns the rows to append and
+    the stats that still describe them: None whenever the guard
+    filtered anything, because stats taken upstream of a filter no
+    longer describe the appended frame."""
+    spark = rows.sparkSession
+    if idempotent:
+        kept = replay_guard(
+            spark, table, rows, id_col,
+            _UNSET if stats is None else (stats[1], stats[2]),
+        )
+        return kept, stats if kept is rows else None
+    raise_watermark(
+        spark, table, rows, id_col, _UNSET if stats is None else stats[2]
+    )
+    return rows, stats
 
 
 def compact_bucketed_table(

@@ -800,7 +800,8 @@ def corpus_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_index_append(
     new_docs: DataFrame,
     table: str,
-    delta_stats: tuple[int, int | None, int | None] | None = None,
+    idempotent: bool = False,
+    stats: tuple[int, int | None, int | None] | None = None,
 ) -> None:
     """Index MAINTENANCE: band ``new_docs`` (doc_id, text) and append
     their entries into the standing index table under the SAME bucket
@@ -808,48 +809,46 @@ def lsh_index_append(
     admitted to the corpus. Spark validates the bucket spec against
     the existing table, so a drifted bucket count fails loudly instead
     of silently mixing layouts; the append bands at the TABLE's
-    current rows-per-band (r14 — after a re-band, appends must not
+    current rows-per-band (after a re-band, appends must not
     reintroduce the old banding). (Tests exercise this on a private
     table — the per-sf_dir cached index is content-stamped to the
     fixture file and must stay a pure function of it.)
 
-    r15 additions, both BEFORE the rows land: the replay-guard
-    watermark is raised unconditionally (ADVICE r14 — an append
-    outside replay_guard left above-watermark ids unraised, so a later
-    idempotent replay of them took the zero-I/O fast path and
-    re-admitted duplicates), and the gauge sufficient statistics are
-    bumped O(delta) (``_lsh_gauge_bump``; a no-op while no gauge
-    sidecar exists). The entries frame is persisted across its three
-    consumers so the delta is shingled once.
+    Before the rows land, the shared replay guard runs
+    (``bucketed.append_guard``: ``idempotent=True`` drops doc_ids the
+    table already holds, otherwise the watermark is raised), and the
+    gauge sufficient statistics are bumped O(delta)
+    (``_lsh_gauge_bump``; a no-op while no gauge sidecar exists). The
+    entries frame is persisted across its consumers so the delta is
+    shingled once.
 
-    CONTRACT (r16): batch doc_ids are MONOTONE across appends — each
-    fresh batch's ids exceed every previously appended id. Both
-    sidecars rest on it (replay_guard's watermark fast path and the
-    gauge's replay skip); the streaming loops satisfy it by
-    construction. A violating batch still APPENDS correctly (the index
-    itself is id-agnostic) but is skipped by the gauge with a warning
+    CONTRACT: batch doc_ids are MONOTONE across appends — each fresh
+    batch's ids exceed every previously appended id. Both sidecars
+    rest on it (replay_guard's watermark fast path and the gauge's
+    replay skip); the streaming loops satisfy it by construction. A
+    violating batch still APPENDS correctly (the index itself is
+    id-agnostic) but is skipped by the gauge with a warning
     (stale-LOW — see ``_lsh_gauge_bump``) and, if idempotent replay is
     in use, may be re-admitted by a later replay.
 
-    ``delta_stats`` (r17, VERDICT r16 item 2): precomputed
-    (n_docs, min_id, max_id) of ``new_docs`` — a caller that already
-    paid a delta-sized agg (the streaming loop aggregates its
-    persisted status frame) passes it through and this append runs
-    ZERO aggregation jobs of its own: the gauge bump and the
-    watermark raise share the one stats tuple instead of each firing
-    a per-batch agg (watermark max + gauge d0 were two jobs; now one,
-    or zero when supplied). Only valid for the EXACT frame being
-    appended — a caller whose replay_guard FILTERED the batch must
-    not pass stats computed upstream of the filter."""
-    from mr_py_spark.operators.bucketed import _BUCKETS, raise_watermark
+    ``stats``: precomputed (n_docs, min_id, max_id) of ``new_docs``.
+    The guard and the gauge bump share it, so the append runs no
+    aggregation job of its own; the guard drops it when it filtered
+    anything, and the append then aggregates the entries it writes."""
+    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
     from mr_py_spark.sources.sinks import write_bucketed
 
     spark = new_docs.sparkSession
+    rows, stats = (
+        append_guard(table, new_docs, "doc_id", True, stats)
+        if idempotent
+        else (new_docs, stats)
+    )
     entries = lsh_band_entries(
-        minhash_signatures(new_docs), lsh_table_band_rows(spark, table)
+        minhash_signatures(rows), lsh_table_band_rows(spark, table)
     ).persist()
     try:
-        if delta_stats is None:
+        if stats is None:
             row = (
                 entries.filter(F.col("band_id") == 0)
                 .agg(
@@ -859,13 +858,10 @@ def lsh_index_append(
                 )
                 .collect()[0]
             )
-            delta_stats = (int(row.nd), row.mn, row.mx)
-        _lsh_gauge_bump(spark, table, entries, d0=delta_stats)
-        mx = delta_stats[2]
-        raise_watermark(
-            spark, table, new_docs, "doc_id",
-            max_id=None if mx is None else int(mx),
-        )
+            stats = (int(row.nd), row.mn, row.mx)
+        if not idempotent:  # the watermark raise shares the entries' stats
+            append_guard(table, rows, "doc_id", False, stats)
+        _lsh_gauge_bump(spark, table, entries, d0=stats)
         write_bucketed(entries, table, _LSH_INDEX_KEYS, _BUCKETS, mode="append")
     finally:
         entries.unpersist()

@@ -1246,45 +1246,21 @@ def hier_index_append(
     new_vectors: DataFrame,
     table: str,
     idempotent: bool = False,
-    minmax: tuple[int | None, int | None] | None = None,
+    stats: tuple[int, int | None, int | None] | None = None,
 ) -> None:
     """O(delta) maintenance for a standing two-level inverted file:
     assign ``new_vectors`` (vec_id, v) against the EXISTING root and
     leaf centroids — never a retrain at either level — and append the
     (vec_id, bucket, leaf, v) entries under the same (bucket, leaf)
-    bucket spec (Spark validates it; drift fails loudly). The same
-    replay guard as ivf_index_append: ``idempotent=True`` drops
-    vec_ids the table already holds before the append —
-    watermark-gated (bucketed.replay_guard, r14), so the normal fresh
-    batch costs zero index I/O; ``idempotent=False`` appends still
-    RAISE the watermark (ADVICE r14 — see ivf_index_append).
-    ``minmax`` (r17): precomputed (min, max) vec_id of the delta —
-    see ivf_index_append; makes the fresh-batch guard path job-free."""
-    from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
-        raise_watermark,
-        replay_guard,
-    )
+    bucket spec (Spark validates it; drift fails loudly).
+    ``idempotent``/``stats``: the shared replay guard, as in
+    ivf_index_append (``bucketed.append_guard``)."""
+    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
     from mr_py_spark.operators.similarity import ivf_assign_with
     from mr_py_spark.sources.sinks import write_bucketed
 
-    if idempotent:
-        new_vectors = (
-            replay_guard(new_vectors.sparkSession, table, new_vectors, "vec_id")
-            if minmax is None
-            else replay_guard(
-                new_vectors.sparkSession, table, new_vectors, "vec_id",
-                minmax=minmax,
-            )
-        )
-    elif minmax is None:
-        raise_watermark(new_vectors.sparkSession, table, new_vectors, "vec_id")
-    else:
-        raise_watermark(
-            new_vectors.sparkSession, table, new_vectors, "vec_id",
-            max_id=minmax[1],
-        )
-    entries = hier_assign(ivf_assign_with(root_cent, new_vectors), leaf_cent)
+    rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
+    entries = hier_assign(ivf_assign_with(root_cent, rows), leaf_cent)
     write_bucketed(entries, table, ("bucket", "leaf"), _BUCKETS, mode="append")
 
 
@@ -1295,23 +1271,17 @@ def hier_pq_codes_append(
     new_vectors: DataFrame,
     table: str,
     idempotent: bool = False,
-    minmax: tuple[int | None, int | None] | None = None,
+    stats: tuple[int, int | None, int | None] | None = None,
 ) -> None:
-    """O(delta) maintenance for a standing PQ-CODE inverted file (r16,
-    VERDICT r15 item 7 — the codes table had append-by-rebuild only,
-    so a streaming hier index serving through ADC would re-encode the
-    whole corpus per admitted batch): assign ``new_vectors`` (vec_id,
-    v) against the EXISTING root and leaf centroids, encode under the
-    EXISTING codebooks (one zero-shuffle mapInPandas pass over the
-    delta — never a books retrain), and append the (vec_id, bucket,
-    leaf, code) rows under the same (bucket, leaf) bucket spec (Spark
-    validates it; spec drift fails loudly). Same replay discipline as
-    ``hier_index_append``, against the CODES table's own sidecar:
-    ``idempotent=True`` drops vec_ids the table already holds via the
-    watermark-gated ``bucketed.replay_guard`` (fresh monotone batches
-    cost zero index I/O); ``idempotent=False`` appends still RAISE the
-    watermark (ADVICE r14 — mixed-mode callers must not leave it
-    stale-LOW).
+    """O(delta) maintenance for a standing PQ-CODE inverted file:
+    assign ``new_vectors`` (vec_id, v) against the EXISTING root and
+    leaf centroids, encode under the EXISTING codebooks (one
+    zero-shuffle mapInPandas pass over the delta — never a books
+    retrain), and append the (vec_id, bucket, leaf, code) rows under
+    the same (bucket, leaf) bucket spec (Spark validates it; spec
+    drift fails loudly). ``idempotent``/``stats``: the shared replay
+    guard (``bucketed.append_guard``), against the CODES table's own
+    watermark sidecar.
 
     GENERATION CONTRACT: codes are a pure function of (root/leaf
     assignment, books). A ``hier_retrain`` or books rebuild
@@ -1324,31 +1294,12 @@ def hier_pq_codes_append(
     codes table in the same swap as its index tables. Appends
     bit-equal a full re-encode and replay-idempotence are
     property-tested (tests/test_properties.py)."""
-    from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
-        raise_watermark,
-        replay_guard,
-    )
+    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
     from mr_py_spark.operators.similarity import ivf_assign_with
     from mr_py_spark.sources.sinks import write_bucketed
 
-    if idempotent:
-        new_vectors = (
-            replay_guard(new_vectors.sparkSession, table, new_vectors, "vec_id")
-            if minmax is None
-            else replay_guard(
-                new_vectors.sparkSession, table, new_vectors, "vec_id",
-                minmax=minmax,
-            )
-        )
-    elif minmax is None:
-        raise_watermark(new_vectors.sparkSession, table, new_vectors, "vec_id")
-    else:
-        raise_watermark(
-            new_vectors.sparkSession, table, new_vectors, "vec_id",
-            max_id=minmax[1],
-        )
-    assigned = hier_assign(ivf_assign_with(root_cent, new_vectors), leaf_cent)
+    rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
+    assigned = hier_assign(ivf_assign_with(root_cent, rows), leaf_cent)
     write_bucketed(
         _pq_encode_frame(assigned, books), table, ("bucket", "leaf"),
         _BUCKETS, mode="append",

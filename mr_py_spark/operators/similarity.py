@@ -1485,7 +1485,7 @@ def ivf_index_append(
     new_vectors: DataFrame,
     table: str,
     idempotent: bool = False,
-    minmax: tuple[int | None, int | None] | None = None,
+    stats: tuple[int, int | None, int | None] | None = None,
 ) -> None:
     """Index MAINTENANCE for the standing IVF index (the ANN twin of
     dedup.py:lsh_index_append): assign ``new_vectors`` (vec_id, v)
@@ -1498,49 +1498,17 @@ def ivf_index_append(
     cached index is content-stamped to the fixture and must stay a
     pure function of it.)
 
-    ``idempotent=True`` is the REPLAY guard for at-least-once ingest
-    loops (VERDICT r11 — the lsh_maintenance_step guard 3): vectors
-    whose vec_id the table already holds are dropped before the
-    append, so re-running a crashed batch admits nothing. The check is
-    watermark-gated (bucketed.replay_guard, r14): the normal fresh
-    batch costs ZERO index I/O; only at-or-below-watermark suspects
-    (a replay) pay an index-side semi restricted to them.
-
-    ``idempotent=False`` appends still RAISE the watermark (ADVICE
-    r14: the guard's every-append-raises-first precondition was
-    unenforced — an unguarded append of above-watermark ids left the
-    watermark stale-LOW, so a later idempotent replay of those rows
-    fast-pathed past the table check and re-admitted duplicates).
-
-    ``minmax`` (r17, VERDICT r16 item 2): precomputed (min, max) of
-    the delta's vec_id — callers that already aggregated the batch
-    (the streaming loops agg their persisted status frame) pass it
-    through to the guard/raise, making the fresh-batch path job-free;
-    a (None, None) tuple is a known-empty batch."""
-    from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
-        raise_watermark,
-        replay_guard,
-    )
+    ``idempotent``/``stats``: the shared replay guard
+    (``bucketed.append_guard``). ``idempotent=True`` drops vec_ids the
+    table already holds, so re-running a crashed batch admits nothing;
+    a fresh batch costs zero index I/O. ``idempotent=False`` appends
+    still raise the watermark. ``stats`` is the delta's precomputed
+    (count, min, max) vec_id."""
+    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
     from mr_py_spark.sources.sinks import write_bucketed
 
-    if idempotent:
-        new_vectors = (
-            replay_guard(new_vectors.sparkSession, table, new_vectors, "vec_id")
-            if minmax is None
-            else replay_guard(
-                new_vectors.sparkSession, table, new_vectors, "vec_id",
-                minmax=minmax,
-            )
-        )
-    elif minmax is None:
-        raise_watermark(new_vectors.sparkSession, table, new_vectors, "vec_id")
-    else:
-        raise_watermark(
-            new_vectors.sparkSession, table, new_vectors, "vec_id",
-            max_id=minmax[1],
-        )
-    write_bucketed(ivf_assign_with(cent, new_vectors), table, "bucket",
+    rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
+    write_bucketed(ivf_assign_with(cent, rows), table, "bucket",
                    _BUCKETS, mode="append")
 
 

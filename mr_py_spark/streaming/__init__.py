@@ -991,67 +991,209 @@ def statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_maintenance_step(
-    spark: SparkSession, table: str, out: str, idx_path: str,
-    reband_check_every: int = 8, collision_cap: float | None = None,
-    reband_log: list | None = None,
+def maintenance_step(
+    spark: SparkSession,
+    out: str,
+    index_table: str,
+    id_col: str,
+    *,
+    project,
+    view,
+    trips,
+    actuate,
+    triage,
+    first_build,
+    append,
+    recover=None,
+    bootstrap=None,
+    after=None,
+    check_every: int = 8,
+    actuation_log: list | None = None,
 ):
-    """The per-micro-batch body of ``stream_lsh_index_maintenance``,
-    split out so the two-batch planted test can drive it over a
-    controlled file sequence. Triage the batch against the standing
-    index (empty on the first batch), write the statuses to ``out``,
-    and ADMIT the survivors — status 'new', which is exactly the
-    min-id representative of every within-batch near-dup cluster plus
-    all genuinely novel docs — into the index under the existing
-    bucket spec (lsh_index_append). Everything is executor-side
-    except Spark's own bounded planning; per-batch work is
-    O(batch x bucket occupancy), independent of corpus size.
+    """The one foreachBatch body behind every standing-index
+    maintenance loop (LSH, flat IVF, hier): triage each micro-batch
+    against the live index, write its statuses to the parquet sink at
+    ``out``, and admit the survivors (status 'new': each within-batch
+    cluster's min-id representative plus every novel row) into
+    ``index_table``. Per-batch work is O(batch x bucket occupancy),
+    independent of corpus size. The per-index parts are hooks; the
+    phase order is fixed here:
 
-    REPLAY-IDEMPOTENT (VERDICT/ADVICE r11: foreachBatch is
-    at-least-once — a crash between the index append and the
-    checkpoint commit re-runs the batch): three guards make a replayed
-    (batch, batch_id) a byte-level no-op, property-tested in
-    tests/test_streaming_sink.py:
+    1. ``recover()`` finishes crash-interrupted swaps;
+    2. ``project(batch_df)`` selects the batch columns and
+       ``bootstrap(batch, n_rows)`` fits the first-batch quantizer;
+    3. ``view(batch, corpus)`` builds the triage context from the
+       pre-batch corpus (None while the index does not exist);
+    4. every ``check_every`` batches (0 disables), ``trips(batch, ctx,
+       batch_max)`` reads the gauge and, when it trips,
+       ``actuate(batch, ids, ctx)`` rebuilds the index in place
+       (crash-atomic), ``actuation_log`` records the batch_id, and the
+       view is derived again;
+    5. ``triage(batch, ctx)`` yields the statuses, which are persisted;
+    6. one aggregate over them and the batch ids materialises the cache,
+       yields the admitted ids' (count, min, max) — the STATS — and
+       refuses a batch that repeats an id;
+    7. the statuses land in the batch_id partition of ``out``;
+    8. the admitted rows are the batch semi-joined to the 'new' ids;
+    9. ``append(ctx, rows, stats)`` (index present) or
+       ``first_build(ctx, rows)``; then ``after(ctx, rows, stats,
+       warm)``; the statuses are unpersisted on every exit.
 
-    1. triage sees the PRE-BATCH index view — the standing table is
-       anti-joined against the batch's own doc_ids before use, so a
-       replay whose own survivors already landed neither self-matches
-       ('every doc dup_of_corpus of itself') nor flips a
-       dup_within_delta to dup_of_corpus against its own admitted rep;
-    2. statuses land in a batch_id=N partition under DYNAMIC partition
-       overwrite — a replay rewrites ITS partition in place instead of
-       appending duplicate rows;
-    3. admission anti-joins the survivors against doc_ids already
-       present in the index, so a replayed append admits nothing.
+    DUPLICATE IDS: a batch that repeats an ``id_col`` value raises a
+    ValueError naming the column and batch_id before anything is
+    written. Null ids are not counted: such a row gets a status and is
+    never admitted (the semi-join never matches null). The check rides a job the step runs anyway: the stats
+    aggregate, or, when a write comes earlier, the one batch aggregate
+    behind ``n_rows()``/``batch_max()`` (zero-argument callables for
+    the bootstrap's row count and the gauge's max id), which also runs
+    before an actuation.
 
-    All three guards are broadcast-side joins on the SMALL batch
-    frame (LeftSemi/LeftAnti BuildRight over ids, or index-side
-    map-only anti against the broadcast ids) — no new shuffle of
-    index-sized data, so the O(batch x occupancy) claim stands.
+    REPLAY-IDEMPOTENT: foreachBatch is at-least-once (a crash between
+    the index append and the checkpoint commit re-runs the batch), so
+    three guards make a replayed (batch, batch_id) a byte-level no-op:
 
-    Every ``reband_check_every`` batches the loop runs the re-band
-    gauge check and, past ``collision_cap``, escalates the banding in
-    place (lsh_reband — crash-atomic; r14, closing the text tier's
-    gauge-without-actuator gap, VERDICT r13 item 4). r15 (VERDICT r14
-    item 1): the check reads the INCREMENTAL sufficient statistics
-    (lsh_gauge_stats — a 1-file sidecar read; every append bumps them
-    O(delta) inside lsh_index_append), not a full-index gauge scan —
-    the r14 form paid an index-sized groupBy plus a corpus-wide
-    distinct every 8 batches, the very complexity class this loop's
-    docstring forbids. The same replay discipline as the semantic
-    tier's retrain, now carried by the sidecar itself: the DECISION
-    reads the pre-batch stats (the sidecar's atomic pre-bump snapshot,
-    keyed by the bump watermark — lsh_gauge_stats(batch_max_id=...)),
-    so an original run and its replay agree; band entries are a pure
-    function of (signature, band_rows), so even a double-fired replay
-    rewrite converges to the same rows; triage and appends band at the
-    TABLE's current rows-per-band (the banding sidecar, passed through
-    minhash_delta_status's band_rows — ADVICE r14: deriving it from
-    the frame re-paid an O(index) agg per batch), so both generations
-    answer probes correctly."""
+    - guard 1: triage sees the PRE-BATCH corpus — the index anti-joined
+      against the batch's own ids — so a replay whose survivors already
+      landed neither matches itself nor flips dup_within_delta to
+      dup_of_corpus against its own admitted representative;
+    - guard 2: statuses land in a batch_id=N partition under DYNAMIC
+      partition overwrite, so a replay rewrites its own partition;
+    - guard 3: appends run ``idempotent=True`` through
+      ``bucketed.append_guard``: ids the index already holds are
+      dropped, at zero index I/O for a fresh batch.
+
+    All three are broadcast-side joins on the small batch frame, so no
+    index-sized data is shuffled. The gauge reads a pre-batch snapshot
+    and an actuation rebuilds from the pre-batch view, so an original
+    run and its replay make the same decision and build the same
+    tables.
+
+    STATS CONTRACT: the stats describe exactly ``rows`` as handed to
+    ``append``/``after`` (the semi-join keeps precisely the 'new' ids).
+    An append passes them to ``append_guard``, which drops them when
+    its guard filtered anything; the append then aggregates what it
+    writes itself.
+
+    PRECONDITIONS: one writer per index (the watermark and gauge
+    sidecars are read-modify-write), and ids monotone across batches
+    (each fresh batch's ids exceed every appended id — the watermark
+    fast path and the gauge's replay skip rest on it). Ids repeated
+    inside one batch are refused (DUPLICATE IDS above)."""
+    import functools
+
     from pyspark.sql import functions as SF
 
-    from mr_py_spark.operators.bucketed import _BUCKETS, replay_guard
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        if recover is not None:
+            recover()
+        batch = project(batch_df)
+        ids = batch.select(id_col)
+
+        def refuse_repeats(n: int, n_ids: int) -> None:
+            if n != n_ids:
+                raise ValueError(
+                    f"micro-batch {batch_id}: {id_col} is not unique ({n} "
+                    f"non-null {id_col} values, {n_ids} distinct); "
+                    f"standing-index maintenance needs one row per id"
+                )
+
+        @functools.cache
+        def batch_agg():
+            row = batch.agg(
+                SF.count(SF.lit(1)).alias("n"),
+                SF.count(id_col).alias("n_key"),
+                SF.size(SF.collect_set(id_col)).alias("n_ids"),
+                SF.max(id_col).alias("mx"),
+            ).collect()[0]
+            refuse_repeats(row.n_key, row.n_ids)
+            return row
+
+        if bootstrap is not None:
+            bootstrap(batch, lambda: batch_agg().n)
+        warm = spark.catalog.tableExists(index_table)
+
+        def pre_batch_view():
+            # guard 1: map-only anti-join against the broadcast batch ids
+            corpus = (
+                spark.table(index_table).join(ids, id_col, "left_anti")
+                if warm
+                else None
+            )
+            return view(batch, corpus)
+
+        ctx = pre_batch_view()
+        if (
+            check_every
+            and warm
+            and batch_id > 0
+            and batch_id % check_every == 0
+            and trips(batch, ctx, lambda: batch_agg().mx)
+        ):
+            batch_agg()
+            actuate(batch, ids, ctx)
+            if actuation_log is not None:
+                actuation_log.append(int(batch_id))
+            ctx = pre_batch_view()
+        status = triage(batch, ctx).persist()
+        try:
+            new = SF.col("status") == "new"
+            adm, key = SF.col("adm"), SF.col(id_col)
+            row = (
+                status.filter(new)
+                .select(id_col, SF.lit(True).alias("adm"))
+                .unionByName(ids.withColumn("adm", SF.lit(False)))
+                .agg(
+                    SF.count(SF.when(adm, 1)),
+                    SF.min(SF.when(adm, key)),
+                    SF.max(SF.when(adm, key)),
+                    SF.count(SF.when(~adm, key)),
+                    SF.size(SF.collect_set(SF.when(~adm, key))),
+                )
+                .collect()[0]
+            )
+            refuse_repeats(row[3], row[4])
+            stats = tuple(row[:3])
+            # guard 2
+            (
+                status.withColumn("batch_id", SF.lit(int(batch_id)))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(out)
+            )
+            rows = batch.join(status.filter(new).select(id_col), id_col, "left_semi")
+            if warm:
+                append(ctx, rows, stats)  # guard 3
+            else:
+                first_build(ctx, rows)
+            if after is not None:
+                after(ctx, rows, stats, warm)
+        finally:
+            status.unpersist()
+
+    return step
+
+
+def _lsh_maintenance_step(
+    spark: SparkSession, table: str, out: str, idx_path: str,
+    check_every: int = 8, collision_cap: float | None = None,
+    actuation_log: list | None = None,
+):
+    """``maintenance_step`` for the text LSH index (doc_id, text).
+    Triage is ``minhash_delta_status`` against the band table at the
+    TABLE's current rows-per-band (the banding sidecar), the first
+    batch builds the index at ``idx_path`` and later batches admit
+    through ``lsh_index_append``.
+
+    Gauge: the collision mass from the incremental sufficient
+    statistics (``lsh_gauge_stats`` — a sidecar read, bumped O(delta)
+    by every append; the decision reads the pre-bump snapshot keyed by
+    the batch max id, so a replay agrees). Past ``collision_cap`` the
+    actuator escalates the banding in place (``lsh_reband``,
+    crash-atomic). Band entries are a pure function of (signature,
+    band_rows), so a double-fired replay rewrite converges to the same
+    rows."""
+    from mr_py_spark.operators.bucketed import _BUCKETS
     from mr_py_spark.operators.dedup import (
         _LSH_COLLISION_CAP,
         _LSH_INDEX_KEYS,
@@ -1061,8 +1203,8 @@ def _lsh_maintenance_step(
         lsh_gauge_trips,
         lsh_index_append,
         lsh_next_band_rows,
-        lsh_table_band_rows,
         lsh_reband,
+        lsh_table_band_rows,
         minhash_delta_status,
         minhash_signatures,
     )
@@ -1070,141 +1212,69 @@ def _lsh_maintenance_step(
 
     cap = _LSH_COLLISION_CAP if collision_cap is None else collision_cap
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", "text")
-        ids = batch.select("doc_id")
-        have_index = spark.catalog.tableExists(table)
-        # guard 1: pre-batch index view (replay: a crashed run may have
-        # already admitted this batch's survivors). Index-side anti
-        # against the broadcast batch ids — map-only, no index shuffle.
-        cb = (
-            spark.table(table).join(ids, "doc_id", "left_anti")
-            if have_index
-            else None
-        )
-        cur = lsh_table_band_rows(spark, table) if have_index else None
-        if (
-            reband_check_every
-            and have_index
-            and batch_id > 0
-            and batch_id % reband_check_every == 0
-            and cur < _N_HASHES
-        ):
-            bmax = batch.agg(SF.max("doc_id")).collect()[0][0]
-            stats = lsh_gauge_stats(
-                spark, table,
-                batch_max_id=None if bmax is None else int(bmax),
-            )
-            if lsh_gauge_trips(stats, cap, band_rows=cur):
-                lsh_reband(spark, table, lsh_next_band_rows(cur))
-                if reband_log is not None:
-                    reband_log.append(int(batch_id))
-                cb = spark.table(table).join(ids, "doc_id", "left_anti")
-                cur = lsh_table_band_rows(spark, table)
-        status = minhash_delta_status(
-            batch.limit(0) if not have_index else None,
-            batch,
-            corpus_bands=cb,
+    def view(batch, corpus):
+        return corpus, None if corpus is None else lsh_table_band_rows(spark, table)
+
+    def trips(batch, ctx, batch_max):
+        cur = ctx[1]
+        return cur < _N_HASHES and lsh_gauge_trips(
+            lsh_gauge_stats(spark, table, batch_max_id=batch_max()),
+            cap,
             band_rows=cur,
         )
-        # persist + count forces materialization BEFORE the admission
-        # write below reads/extends the index the statuses were
-        # computed against (the stream_cdc_latest_filesink race note)
-        status.persist().count()
-        # guard 2: statuses keyed by batch_id with dynamic partition
-        # overwrite — a replayed batch rewrites its own partition.
-        (
-            status.withColumn("batch_id", SF.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-        new_docs = batch.join(
-            status.filter(SF.col("status") == "new").select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-        if have_index:
-            # r17 (VERDICT r16 item 2): ONE agg over the PERSISTED
-            # status frame supplies (count, min, max) of the admitted
-            # ids for the whole admission path — new_docs' id set IS
-            # status's 'new' id set (the semi-join filters batch to
-            # exactly those ids), so the guard's fresh-path check and
-            # the append's watermark/gauge stats all read this tuple
-            # instead of each firing its own delta agg (3 jobs → 1,
-            # and the 1 is a cached-frame scan).
-            st = (
-                status.filter(SF.col("status") == "new")
-                .agg(
-                    SF.count(SF.lit(1)).alias("nd"),
-                    SF.min("doc_id").alias("mn"),
-                    SF.max("doc_id").alias("mx"),
-                )
-                .collect()[0]
-            )
-            stats = (
-                int(st.nd),
-                None if st.mn is None else int(st.mn),
-                None if st.mx is None else int(st.mx),
-            )
-            # guard 3: never re-admit a doc the index already holds —
-            # watermark-gated (bucketed.replay_guard, r14): a fresh
-            # batch costs zero index I/O, a replay pays an index semi
-            # restricted to its own (at-or-below-watermark) ids.
-            guarded = replay_guard(
-                spark, table, new_docs, "doc_id",
-                minmax=(stats[1], stats[2]),
-            )
-            if guarded is new_docs:
-                # fast path: nothing filtered, stats still describe the
-                # appended frame exactly — the append runs job-free
-                # aside from its write (and the gauge's O(delta) probe)
-                lsh_index_append(guarded, table, delta_stats=stats)
-            else:
-                # replay slow path: the guard filtered; stats computed
-                # upstream of the filter no longer apply
-                lsh_index_append(guarded, table)
-        else:
-            entries = lsh_band_entries(minhash_signatures(new_docs))
-            write_bucketed(entries, table, _LSH_INDEX_KEYS, _BUCKETS, path=idx_path)
-        status.unpersist()
 
-    return step
+    def triage(batch, ctx):
+        bands, cur = ctx
+        return minhash_delta_status(
+            batch.limit(0) if bands is None else None,
+            batch,
+            corpus_bands=bands,
+            band_rows=cur,
+        )
+
+    def first_build(ctx, rows):
+        entries = lsh_band_entries(minhash_signatures(rows))
+        write_bucketed(entries, table, _LSH_INDEX_KEYS, _BUCKETS, path=idx_path)
+
+    return maintenance_step(
+        spark, out, table, "doc_id",
+        project=lambda b: b.select("doc_id", "text"),
+        view=view,
+        trips=trips,
+        actuate=lambda batch, ids, ctx: lsh_reband(
+            spark, table, lsh_next_band_rows(ctx[1])
+        ),
+        triage=triage,
+        first_build=first_build,
+        append=lambda ctx, rows, stats: lsh_index_append(
+            rows, table, idempotent=True, stats=stats
+        ),
+        check_every=check_every,
+        actuation_log=actuation_log,
+    )
 
 
 def _ivf_maintenance_step(
     spark: SparkSession, cent_table: str, idx_table: str, out: str,
-    cent_path: str, idx_path: str, drift_check_every: int = 8,
-    drift_ratio: float | None = None, retrain_log: list | None = None,
+    cent_path: str, idx_path: str, check_every: int = 8,
+    drift_ratio: float | None = None, actuation_log: list | None = None,
 ):
-    """The per-micro-batch body of ``stream_semantic_index_maintenance``
-    — the IVF/embedding twin of ``_lsh_maintenance_step``, with the
-    same three replay-idempotence guards (pre-batch triage view,
-    per-batch_id dynamic partition overwrite, idempotent admit). The
-    quantizer trains once on the first batch; thereafter the loop is
-    SELF-HEALING (VERDICT r12 item 3 — the first-batch-only quantizer
-    was the gauge-without-actuator gap): every ``drift_check_every``
-    batches the incoming batch's p05 top-1 similarity is compared to
-    the GENERATION-PINNED indexed-cohort reference (r15,
-    ``drift_ref_stats`` — bootstrap once per quantizer generation from
-    the pre-batch view, then a 1-file sidecar read plus one O(batch)
-    scoring pass; the old form re-scored the full inverted file every
-    scheduled check, the same O(index) gauge class the LSH loop fixed
-    this round — and a moving reference also MASKED slow drift by
-    absorbing post-drift admissions into the cohort it compared
-    against), and on degradation past ``drift_ratio`` ``ivf_retrain``
-    rebuilds centroids + inverted file in place (crash-atomic swap)
-    before the batch is triaged; 0 disables it (the pure never-retrain
-    policy). Replay stays byte-idempotent: the drift decision reads
-    the pinned reference (written at the first check of the
-    generation, so original and replay agree) and the retrain corpus
-    uses the PRE-BATCH index view (``exclude_ids``), so a replayed
-    batch makes the identical decision and rebuilds identical tables;
-    the reference sidecar lives INSIDE the index's data directory and
-    resets exactly when a retrain swaps the generation; a crash
-    mid-swap is finished by the recover_compaction call at step entry.
-    ``retrain_log`` (tests) collects the batch_ids that retrained."""
+    """``maintenance_step`` for the flat IVF index (vec_id, embedding).
+    The quantizer trains once, on the first batch, from an EXPLICITLY
+    ORDERED sample (a bare-limit sample's row order is not
+    replay-stable), with ``_kmeans_k`` sizing for cluster-mate work.
+    Triage is ``semantic_delta_status``; admits go through
+    ``ivf_index_append``; the first build also pins the drift
+    reference (the quantizer's own training cohort).
+
+    Gauge: the batch's p05 top-1 similarity against the
+    GENERATION-PINNED reference (``drift_ref_stats`` — a sidecar inside
+    the index's data dir, so it resets exactly when a retrain swaps the
+    generation; only the delta is scored). Degradation past
+    ``drift_ratio`` triggers ``ivf_retrain`` (centroids + inverted file,
+    crash-atomic swap; the pre-batch view via ``exclude_ids``, the
+    tripping batch via ``extra_train``). ``recover`` finishes a swap a
+    crash interrupted."""
     from pyspark.sql import functions as SF
 
     from mr_py_spark.operators.bucketed import _BUCKETS, recover_compaction
@@ -1227,164 +1297,93 @@ def _ivf_maintenance_step(
     if drift_ratio is None:
         drift_ratio = _DRIFT_P05_RATIO
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        # finish any crash-interrupted retrain swap before reading the
-        # tables (re-attach-on-next-use; no-op without a marker)
+    def recover():
         recover_compaction(spark, cent_path)
         recover_compaction(spark, idx_path)
-        batch = batch_df.select(
-            "vec_id", SF.col("embedding").cast("array<double>").alias("v")
+
+    def bootstrap(batch, n_rows):
+        if spark.catalog.tableExists(cent_table):
+            return
+        cents = _ivf_centroids(
+            spark, batch, max(2, _kmeans_k(n_rows())),
+            sample=_ordered_train_sample(batch),
         )
-        if not spark.catalog.tableExists(cent_table):
-            # one-time quantizer fit on the FIRST batch: the sample is
-            # collected EXPLICITLY ORDERED (ADVICE r13 — _ivf_centroids'
-            # default collection is a bare limit whose prefix/row-order
-            # is not replay-stable, voiding the byte-identical-replay
-            # guarantee this loop's crash-window tests rely on); sized
-            # for cluster-mate candidate work like the batch corpus
-            # index
-            cents = _ivf_centroids(
-                spark, batch, max(2, _kmeans_k(batch.count())),
-                sample=_ordered_train_sample(batch),
-            )
-            cent_df = spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cents)],
-                "cid long, cv array<double>",
-            )
-            write_bucketed(cent_df, cent_table, "cid", _BUCKETS, path=cent_path)
+        cent_df = spark.createDataFrame(
+            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
+        )
+        write_bucketed(cent_df, cent_table, "cid", _BUCKETS, path=cent_path)
+
+    def view(batch, corpus):
         cent = spark.table(cent_table)
-        ids = batch.select("vec_id")
-        have_idx = spark.catalog.tableExists(idx_table)
-        corpus = (
-            spark.table(idx_table).join(ids, "vec_id", "left_anti")
-            if have_idx
-            else ivf_assign_with(cent, batch.limit(0))
+        return cent, ivf_assign_with(cent, batch.limit(0)) if corpus is None else corpus
+
+    def trips(batch, ctx, batch_max):
+        cent, corpus = ctx
+        return drift_degraded_pinned(
+            drift_ref_stats(spark, cent, idx_table, corpus),
+            delta_p05(cent, batch),
+            drift_ratio,
         )
-        if (
-            drift_check_every
-            and have_idx
-            and batch_id > 0
-            and batch_id % drift_check_every == 0
-            # r15: the reference cohort is GENERATION-PINNED
-            # (drift_ref_stats — bootstrap once per generation from the
-            # pre-batch view, then a sidecar read), and only the DELTA
-            # is scored per check — the old ivf_drift_frame call
-            # re-scored the whole inverted file every scheduled check,
-            # the O(index) gauge class the LSH tier fixed this round
-            and drift_degraded_pinned(
-                drift_ref_stats(spark, cent, idx_table, corpus),
-                delta_p05(cent, batch),
-                drift_ratio,
-            )
-        ):
-            ivf_retrain(
-                spark, cent_table, idx_table, exclude_ids=ids,
-                extra_train=batch,
-            )
-            if retrain_log is not None:
-                retrain_log.append(int(batch_id))
-            cent = spark.table(cent_table)
-            corpus = spark.table(idx_table).join(ids, "vec_id", "left_anti")
-        status = semantic_delta_status(cent, corpus, batch)
-        status.persist().count()
-        (
-            status.withColumn("batch_id", SF.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
+
+    def first_build(ctx, rows):
+        write_bucketed(
+            ivf_assign_with(ctx[0], rows), idx_table, "bucket", _BUCKETS,
+            path=idx_path,
         )
-        new_vecs = batch.join(
-            status.filter(SF.col("status") == "new").select("vec_id"),
-            "vec_id",
-            "left_semi",
-        )
-        if have_idx:
-            # r17 (VERDICT r16 item 2): one agg over the PERSISTED
-            # status frame supplies the admitted ids' (min, max) to the
-            # append's replay guard — the fresh-batch path then runs
-            # zero delta aggs of its own (the LSH loop's shared-stats
-            # pattern; new_vecs' id set IS status's 'new' id set).
-            mm = (
-                status.filter(SF.col("status") == "new")
-                .agg(SF.min("vec_id").alias("mn"), SF.max("vec_id").alias("mx"))
-                .collect()[0]
-            )
-            ivf_index_append(
-                cent, new_vecs, idx_table, idempotent=True,
-                minmax=(
-                    None if mm.mn is None else int(mm.mn),
-                    None if mm.mx is None else int(mm.mx),
-                ),
-            )
-        else:
-            write_bucketed(
-                ivf_assign_with(cent, new_vecs), idx_table, "bucket",
-                _BUCKETS, path=idx_path,
-            )
-            # first generation: pin its drift reference at creation
-            # (r16, VERDICT r15 item 3 — the first scheduled check is
-            # then a warm sidecar read; a crash before this pin lands
-            # is repaired by drift_ref_stats' bootstrap). The cohort is
-            # the quantizer's own training batch — exactly what
-            # "degraded relative to training" compares against.
-            pin_drift_ref(spark, cent, idx_table)
-        status.unpersist()
+        pin_drift_ref(spark, ctx[0], idx_table)
 
-    return step
+    return maintenance_step(
+        spark, out, idx_table, "vec_id",
+        project=lambda b: b.select(
+            "vec_id", SF.col("embedding").cast("array<double>").alias("v")
+        ),
+        recover=recover,
+        bootstrap=bootstrap,
+        view=view,
+        trips=trips,
+        actuate=lambda batch, ids, ctx: ivf_retrain(
+            spark, cent_table, idx_table, exclude_ids=ids, extra_train=batch
+        ),
+        triage=lambda batch, ctx: semantic_delta_status(*ctx, batch),
+        first_build=first_build,
+        append=lambda ctx, rows, stats: ivf_index_append(
+            ctx[0], rows, idx_table, idempotent=True, stats=stats
+        ),
+        check_every=check_every,
+        actuation_log=actuation_log,
+    )
 
 
-@register("stream_semantic_index_maintenance", tags=("C9", "C2", "C3", "A8"))
-def stream_semantic_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest loop for the STANDING IVF index — semantic
-    near-dup triage of each micro-batch of newly-embedded documents
-    against the live index, statuses to a parquet sink, survivors
-    admitted via ``ivf_index_append`` (never a retrain; the r12 drift
-    monitor schedules those out-of-band). Completes the standing-index
-    tier's streaming surface: LSH for text (stream_lsh_index_
-    maintenance), IVF for embeddings (this), both replay-idempotent
-    under foreachBatch's at-least-once contract via the same three
-    guards (property-tested in tests/test_streaming_sink.py).
-
-    Rows-only (seeded quantizers are engine-specific): cross-batch
-    semantics and byte-level replay idempotence are property-tested
-    over a controlled two-file stream; the fixture drain is checked
-    for one-status-per-vector and determinism."""
+def _drain_maintenance(
+    spark: SparkSession, sf_dir: str, name: str, source: str,
+    tables: tuple[str, ...], make_step, id_col: str,
+) -> DataFrame:
+    """Drain one standing-index maintenance loop over the fixture's
+    ``source`` parquet file: a fresh per-sf_dir temp root ``name``, the
+    loop's ``tables`` dropped, a file stream through
+    ``foreachBatch(make_step(root, out))`` run to completion. Returns
+    the statuses with ``id_col`` (batch_id widened to long)."""
     import shutil
     import tempfile
 
     harden(spark)
+    src = sf_dir.rstrip("/")
     root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.rstrip("/").replace("/", "_"),
-        "ivf_maint",
+        tempfile.gettempdir(), "spark_graft_stream", src.replace("/", "_"), name
     )
     shutil.rmtree(root, ignore_errors=True)
     out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
     os.makedirs(out, exist_ok=True)
-    tag = stream_table_tag(sf_dir)
-    cent_table = f"mrps_stream_ivf_cent_{tag}"
-    idx_table = f"mrps_stream_ivf_idx_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {cent_table}")
-    spark.sql(f"DROP TABLE IF EXISTS {idx_table}")
-
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet").schema
-    stream = (
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    schema = spark.read.parquet(f"{src}/{source}.parquet").schema
+    q = (
         spark.readStream.schema(schema)
         .format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir.rstrip("/"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _ivf_maintenance_step(
-                spark, cent_table, idx_table, out,
-                os.path.join(root, "cent"), os.path.join(root, "index"),
-            )
-        )
-        .option("checkpointLocation", ckpt)
+        .option("pathGlobFilter", f"{source}.parquet")
+        .load(src)
+        .writeStream.foreachBatch(make_step(root, out))
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
         .start()
     )
     try:
@@ -1392,86 +1391,67 @@ def stream_semantic_index_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     finally:
         q.stop()
     return spark.read.parquet(out).select(
-        "vec_id",
+        id_col,
         "status",
         "match_id",
+        # partition-inferred int -> long (stable emit width)
         F.col("batch_id").cast("long").alias("batch_id"),
+    )
+
+
+@register("stream_semantic_index_maintenance", tags=("C9", "C2", "C3", "A8"))
+def stream_semantic_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming ingest loop for the STANDING IVF index: semantic
+    near-dup triage of each micro-batch of newly-embedded documents
+    against the live index, statuses to a parquet sink, survivors
+    admitted via ``ivf_index_append``, drift-triggered retrains in
+    loop (``_ivf_maintenance_step``). Replay-idempotent under
+    foreachBatch's at-least-once contract (``maintenance_step``).
+
+    Rows-only (seeded quantizers are engine-specific): cross-batch
+    semantics and byte-level replay idempotence are property-tested
+    over controlled streams (tests/test_streaming_sink.py); the
+    fixture drain is checked for one-status-per-vector and
+    determinism."""
+    tag = stream_table_tag(sf_dir)
+    cent_table = f"mrps_stream_ivf_cent_{tag}"
+    idx_table = f"mrps_stream_ivf_idx_{tag}"
+    return _drain_maintenance(
+        spark, sf_dir, "ivf_maint", "embeddings", (cent_table, idx_table),
+        lambda root, out: _ivf_maintenance_step(
+            spark, cent_table, idx_table, out,
+            os.path.join(root, "cent"), os.path.join(root, "index"),
+        ),
+        "vec_id",
     )
 
 
 @register("stream_lsh_index_maintenance", tags=("C9", "C2", "C1", "A8"))
 def stream_lsh_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest loop for the STANDING LSH index (C9 + C2): the
-    capstone that ties the round's standing-index tier into the
-    streaming surface. Each micro-batch of newly-crawled documents is
-    (1) fuzzy-triaged against the index (``minhash_delta_status`` over
-    the materialized band table — no corpus re-banding, the O(delta)
-    path), (2) its statuses appended to a parquet result sink, and
-    (3) its SURVIVORS (status 'new' = each within-batch cluster's
-    min-id representative + novel docs) admitted to the index via
-    ``lsh_index_append`` under the same bucket spec — so the index the
-    NEXT batch sees includes this batch's survivors. foreachBatch is
-    the right tool because the state is a queryable warehouse table,
-    not operator state: downstream batch queries join against the
-    live index between micro-batches (the continuous-aggregate
-    pattern, stream_cdc_latest_filesink's argument).
+    """Streaming ingest loop for the STANDING LSH index (C9 + C2). Each
+    micro-batch of newly-crawled documents is fuzzy-triaged against the
+    index (``minhash_delta_status`` over the materialized band table —
+    no corpus re-banding), its statuses appended to a parquet result
+    sink, and its SURVIVORS admitted via ``lsh_index_append`` — so the
+    index the NEXT batch sees includes this batch's survivors.
+    foreachBatch is the right tool because the state is a queryable
+    warehouse table, not operator state: downstream batch queries join
+    against the live index between micro-batches. EXACTLY-ONCE in
+    effect despite foreachBatch's at-least-once contract: the step is
+    replay-idempotent (``maintenance_step``), so a re-run batch leaves
+    both sinks byte-identical.
 
-    The loop is EXACTLY-ONCE in effect despite foreachBatch's
-    at-least-once contract: the step body is replay-idempotent (see
-    ``_lsh_maintenance_step`` — pre-batch triage view, per-batch_id
-    dynamic partition overwrite for statuses, admit-anti-join for the
-    index), so checkpoint recovery re-running a batch leaves both
-    sinks byte-identical.
-
-    Rows-only (MinHash statuses are engine-specific): the two-batch
-    cross-batch semantics — batch-2 near-dups of batch-1 docs report
-    dup_of_corpus, the index accumulates exactly the survivor set —
-    are property-tested over a controlled two-file stream, as is
-    byte-level replay idempotence (tests/test_streaming_sink.py); the
+    Rows-only (MinHash statuses are engine-specific): cross-batch
+    semantics and byte-level replay idempotence are property-tested
+    over controlled streams (tests/test_streaming_sink.py); the
     fixture drain is checked for one-status-per-doc and determinism."""
-    import shutil
-    import tempfile
-
-    harden(spark)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.rstrip("/").replace("/", "_"),
-        "lsh_maint",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    idx_path = os.path.join(root, "index")
-    os.makedirs(out, exist_ok=True)
-    tag = stream_table_tag(sf_dir)
-    table = f"mrps_stream_lsh_idx_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir.rstrip("/"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _lsh_maintenance_step(spark, table, out, idx_path)
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out).select(
+    table = f"mrps_stream_lsh_idx_{stream_table_tag(sf_dir)}"
+    return _drain_maintenance(
+        spark, sf_dir, "lsh_maint", "documents", (table,),
+        lambda root, out: _lsh_maintenance_step(
+            spark, table, out, os.path.join(root, "index")
+        ),
         "doc_id",
-        "status",
-        "match_id",
-        # partition-inferred int -> long (stable emit width, CLAUDE.md)
-        F.col("batch_id").cast("long").alias("batch_id"),
     )
 
 
@@ -1533,63 +1513,50 @@ def _books_np(spark: SparkSession, books_table: str):
 def _hier_maintenance_step(
     spark: SparkSession, root_table: str, leaf_table: str, idx_table: str,
     out: str, root_path: str, leaf_path: str, idx_path: str,
-    drift_check_every: int = 8, drift_ratio: float | None = None,
-    retrain_log: list | None = None,
+    check_every: int = 8, drift_ratio: float | None = None,
+    actuation_log: list | None = None,
     root_rows: int | None = None, leaf_rows: int | None = None,
     codes_table: str | None = None, codes_path: str | None = None,
     books_table: str | None = None, books_path: str | None = None,
     pq_m: int = 4, pq_k: int = 16,
 ):
-    """The per-micro-batch body of ``stream_hier_index_maintenance`` —
-    the TWO-LEVEL twin of ``_ivf_maintenance_step``, for corpora past
-    the flat tier's 4096-centroid broadcast cap (the hier quantizer is
-    the production form there, SCALE.md r13; a streaming loop that
-    quietly kept the flat quantizer would walk straight back into the
-    super-linear occupancy regime the hierarchy exists to avoid).
-
-    Same three replay-idempotence guards (pre-batch triage view,
-    per-batch_id dynamic partition overwrite, idempotent admit) and
-    the same self-healing schedule: the quantizer pair (roots + leaf
-    table) trains on the first batch; every ``drift_check_every``
-    batches the incoming batch is scored against the ROOT level (a
-    hier index drifts at the root first — leaves only partition within
-    roots) and compared to the generation-pinned reference
-    (``drift_ref_stats``/``drift_degraded_pinned``, r15 — see the flat
-    loop for why the pinned form replaces the per-check full-index
-    re-score); a degraded p05 triggers ``hier_retrain`` — the
-    crash-atomic three-table rebuild — before the batch is triaged. Replay discipline is unchanged: the
-    drift decision and retrain corpus use the PRE-BATCH index view
-    (``exclude_ids``), the tripping batch rides ``extra_train``, and a
-    crash mid-swap is finished by recover_compaction at step entry.
-    ``root_rows``/``leaf_rows`` are test knobs (defaults: the module
-    grains, ~4096/~64).
+    """``maintenance_step`` for the TWO-LEVEL index — the production
+    semantic form past the flat tier's 4096-centroid broadcast cap.
+    The quantizer pair (roots + leaf table) trains on the first batch;
+    the two bootstrap writes are guarded separately, so a crash
+    between them replays into a leaf rebuild from the persisted roots
+    and the same batch (deterministic). Triage runs through the
+    (bucket, leaf) cells (``semantic_delta_status_hier``); admits go
+    through ``hier_index_append``. The gauge scores the ROOT level (a
+    hier index drifts at the root first) against the generation-pinned
+    reference, and a trip triggers ``hier_retrain``, the crash-atomic
+    three-table rebuild. ``root_rows``/``leaf_rows`` are test knobs
+    (defaults: the module grains, ~4096/~64).
 
     With ``codes_table``/``codes_path``/``books_table``/``books_path``
-    set, the loop also maintains the STANDING PQ-CODE inverted file
-    the ADC serve tier reads (r16, VERDICT r15 item 7 — previously the
-    codes table was batch-rebuild-only, so a streaming hier index
-    serving through ADC re-encoded the corpus per admitted batch):
+    set, the after-hook also maintains the STANDING PQ-CODE inverted
+    file the ADC serve tier reads:
 
-    - Codebooks train ONCE, on the bootstrap batch's admitted cohort
-      (bounded ordered sample), and persist as a small bucketed table;
-      they quantize RAW subspaces, so index retrains do not invalidate
-      them (only the assignment columns of code rows move) — a books
-      rebuild is an operator decision, not loop maintenance.
+    - Codebooks train ONCE (``pq_m`` x ``pq_k``), on a bounded ordered
+      sample of the first indexed cohort, keyed on "codes missing,
+      index present" so an empty or all-dup first batch defers it and a
+      crash before it lands repeats it on replay. They quantize RAW
+      subspaces, so retrains do not invalidate them.
     - Admitted vectors are encoded O(delta) per batch
-      (``hier_pq_codes_append``, replay-idempotent against the codes
-      table's own watermark sidecar — a crash between the index append
-      and the codes append replays into an idx no-op plus the missed
-      codes append, converging).
-    - GENERATION COHERENCE is self-healing by construction: a
-      ``_codes_gen.json`` sidecar INSIDE the codes data dir (the r15
-      lives-with-the-generation pattern) records the ROOT-table
-      content hash the codes were encoded under; every step entry
-      compares it to the live root hash and re-encodes the codes table
-      from the index (crash-atomic ``replace_bucketed_table``) on
-      mismatch — so a retrain immediately re-encodes, and a crash
-      BETWEEN the retrain's swap and the re-encode is repaired at the
-      next entry. The root hash is the generation identity because
-      every retrain rewrites the roots and no append ever does."""
+      (``hier_pq_codes_append``, replay-guarded against the codes
+      table's own watermark — a crash between the index append and the
+      codes append replays into an idx no-op plus the missed codes
+      append).
+    - GENERATION COHERENCE self-heals: a ``_codes_gen.json`` sidecar
+      INSIDE the codes data dir records the ROOT-table content hash the
+      codes were encoded under; every step entry compares it to the
+      live root hash and re-encodes the codes table from the index
+      (crash-atomic ``replace_bucketed_table``) on mismatch. A retrain
+      re-encodes at once, and a crash between the retrain's swap and
+      the re-encode is repaired at the next entry. The root hash is the
+      generation identity because every retrain rewrites the roots and
+      no append does."""
+    import numpy as np
     from pyspark.sql import functions as SF
 
     from mr_py_spark.operators.bucketed import (
@@ -1619,6 +1586,7 @@ def _hier_maintenance_step(
         ivf_assign_with,
         pin_drift_ref,
     )
+    from mr_py_spark.operators.vectors import _pq_train
     from mr_py_spark.sources.sinks import write_bucketed
 
     if drift_ratio is None:
@@ -1631,49 +1599,35 @@ def _hier_maintenance_step(
             "_hier_maintenance_step: codes maintenance needs codes_table, "
             "codes_path, books_table AND books_path"
         )
+    exists = spark.catalog.tableExists
+
+    def encoded_index(books):
+        idx = spark.table(idx_table).select("vec_id", "bucket", "leaf", "v")
+        return _pq_encode_frame(idx, books)
 
     def rebuild_codes(gen: str) -> None:
-        # one zero-shuffle re-encode of the index under the stored
-        # books; crash-atomic two-phase swap, then the gen sidecar
-        # (a crash between swap and sidecar re-runs this — wasteful,
-        # never wrong: the rebuild is a pure function of (index, books))
+        # a pure function of (index, books): a crash before the sidecar
+        # lands only repeats it
         replace_bucketed_table(
-            spark, codes_table,
-            _pq_encode_frame(
-                spark.table(idx_table).select("vec_id", "bucket", "leaf", "v"),
-                _books_np(spark, books_table),
-            ),
+            spark, codes_table, encoded_index(_books_np(spark, books_table)),
             ("bucket", "leaf"),
         )
         _codes_gen_write(codes_path, gen)
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        paths = (root_path, leaf_path, idx_path) + (
+    def recover():
+        for p in (root_path, leaf_path, idx_path) + (
             (codes_path, books_path) if codes_on else ()
-        )
-        for p in paths:
-            recover_compaction(spark, p)
-        if (
-            codes_on
-            and spark.catalog.tableExists(codes_table)
-            and spark.catalog.tableExists(root_table)
         ):
-            # generation self-heal (docstring): codes encoded under a
-            # root generation that is no longer live are re-encoded
-            # before anything reads or appends to them
+            recover_compaction(spark, p)
+        if codes_on and exists(codes_table) and exists(root_table):
             gen = _root_gen_hash(spark, root_table)
             if _codes_gen_read(codes_path) != gen:
                 rebuild_codes(gen)
-        batch = batch_df.select(
-            "vec_id", SF.col("embedding").cast("array<double>").alias("v")
-        )
-        if not spark.catalog.tableExists(root_table):
-            # one-time two-level fit on the FIRST batch: bounded-collect
-            # root k-means on an EXPLICITLY ORDERED sample (ADVICE r13,
-            # same replay-stability reason as the flat loop's
-            # bootstrap), then the distributed per-root leaf pass
-            n0 = batch.count()
-            nroot = min(_hier_nroot(n0, r_rows), max(1, n0))
+
+    def bootstrap(batch, n_rows):
+        if not exists(root_table):
+            n = n_rows()
+            nroot = min(_hier_nroot(n, r_rows), max(1, n))
             cents = _ivf_centroids(
                 spark, batch, nroot, sample=_ordered_train_sample(batch)
             )
@@ -1684,12 +1638,7 @@ def _hier_maintenance_step(
                 ),
                 root_table, "cid", _BUCKETS, path=root_path,
             )
-        if not spark.catalog.tableExists(leaf_table):
-            # separate guard: a crash between the two bootstrap writes
-            # replays THIS batch (foreachBatch checkpoint), so the leaf
-            # rebuild from the persisted roots + the same batch is
-            # deterministic — the flat loop has no such window (one
-            # quantizer table), the two-level bootstrap does
+        if not exists(leaf_table):
             write_bucketed(
                 hier_leaf_centroids(
                     ivf_assign_with(spark.table(root_table), batch),
@@ -1697,298 +1646,164 @@ def _hier_maintenance_step(
                 ),
                 leaf_table, "bucket", _BUCKETS, path=leaf_path,
             )
-        root = spark.table(root_table)
-        leaf = spark.table(leaf_table)
-        ids = batch.select("vec_id")
-        have_idx = spark.catalog.tableExists(idx_table)
-        corpus = (
-            spark.table(idx_table).join(ids, "vec_id", "left_anti")
-            if have_idx
-            else spark.createDataFrame(
+
+    def view(batch, corpus):
+        if corpus is None:
+            corpus = spark.createDataFrame(
                 [], "vec_id long, bucket long, leaf long, v array<double>"
             )
+        return spark.table(root_table), spark.table(leaf_table), corpus
+
+    def trips(batch, ctx, batch_max):
+        root, _, corpus = ctx
+        return drift_degraded_pinned(
+            drift_ref_stats(
+                spark, root, idx_table, corpus.select("vec_id", "bucket", "v")
+            ),
+            delta_p05(root, batch),
+            drift_ratio,
         )
-        if (
-            drift_check_every
-            and have_idx
-            and batch_id > 0
-            and batch_id % drift_check_every == 0
-            # r15: generation-pinned reference (sidecar in the idx
-            # table's data dir — hier_retrain swaps that dir, so the
-            # reference resets exactly with the quantizer) + O(batch)
-            # delta scoring, replacing the full-inverted-file re-score
-            # per check; a hier index still gauges at the ROOT level
-            and drift_degraded_pinned(
-                drift_ref_stats(
-                    spark, root, idx_table,
-                    corpus.select("vec_id", "bucket", "v"),
-                ),
-                delta_p05(root, batch),
-                drift_ratio,
-            )
-        ):
-            hier_retrain(
-                spark, root_table, leaf_table, idx_table,
-                exclude_ids=ids, extra_train=batch,
-                root_rows=r_rows, leaf_rows=l_rows,
-            )
-            if retrain_log is not None:
-                retrain_log.append(int(batch_id))
-            root = spark.table(root_table)
-            leaf = spark.table(leaf_table)
-            corpus = spark.table(idx_table).join(ids, "vec_id", "left_anti")
-            if codes_on and spark.catalog.tableExists(codes_table):
-                # the retrain moved every row's (bucket, leaf): re-
-                # encode now; a crash before this lands is repaired by
-                # the entry self-heal (the new roots won't match the
-                # codes' recorded generation)
-                rebuild_codes(_root_gen_hash(spark, root_table))
-        status = semantic_delta_status_hier(root, leaf, corpus, batch)
-        status.persist().count()
-        (
-            status.withColumn("batch_id", SF.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
+
+    def actuate(batch, ids, ctx):
+        hier_retrain(
+            spark, root_table, leaf_table, idx_table,
+            exclude_ids=ids, extra_train=batch,
+            root_rows=r_rows, leaf_rows=l_rows,
         )
-        new_vecs = batch.join(
-            status.filter(SF.col("status") == "new").select("vec_id"),
-            "vec_id",
-            "left_semi",
+        if codes_on and exists(codes_table):
+            rebuild_codes(_root_gen_hash(spark, root_table))
+
+    def first_build(ctx, rows):
+        root, leaf, _ = ctx
+        write_bucketed(
+            hier_assign(ivf_assign_with(root, rows), leaf),
+            idx_table, ("bucket", "leaf"), _BUCKETS, path=idx_path,
         )
-        if have_idx:
-            # r17 (VERDICT r16 item 2): one agg over the PERSISTED
-            # status frame supplies the admitted ids' (min, max) to
-            # BOTH appends' replay guards — fresh batches then pay no
-            # per-guard delta agg (two jobs saved per warm batch).
-            mm = (
-                status.filter(SF.col("status") == "new")
-                .agg(SF.min("vec_id").alias("mn"), SF.max("vec_id").alias("mx"))
-                .collect()[0]
-            )
-            mmt = (
-                None if mm.mn is None else int(mm.mn),
-                None if mm.mx is None else int(mm.mx),
-            )
-            hier_index_append(
-                root, leaf, new_vecs, idx_table, idempotent=True, minmax=mmt
-            )
-            if codes_on and spark.catalog.tableExists(codes_table):
-                # O(delta) code admit, replay-idempotent against the
-                # CODES table's own watermark (a crash between the two
-                # appends replays into an idx no-op + this catch-up)
+        pin_drift_ref(
+            spark, root, idx_table,
+            spark.table(idx_table).select("vec_id", "bucket", "v"),
+        )
+
+    def after(ctx, rows, stats, warm):
+        if exists(codes_table):
+            if warm:
                 hier_pq_codes_append(
-                    root, leaf, _books_np(spark, books_table), new_vecs,
-                    codes_table, idempotent=True, minmax=mmt,
+                    ctx[0], ctx[1], _books_np(spark, books_table), rows,
+                    codes_table, idempotent=True, stats=stats,
                 )
-        else:
-            write_bucketed(
-                hier_assign(ivf_assign_with(root, new_vecs), leaf),
-                idx_table, ("bucket", "leaf"), _BUCKETS, path=idx_path,
-            )
-            # first generation: pin the ROOT-level drift reference at
-            # creation (r16, VERDICT r15 item 3 — see the flat loop)
-            pin_drift_ref(
-                spark, root,
-                idx_table,
-                spark.table(idx_table).select("vec_id", "bucket", "v"),
-            )
-        if (
-            codes_on
-            and not spark.catalog.tableExists(codes_table)
-            and spark.catalog.tableExists(idx_table)
-        ):
-            # CODES BOOTSTRAP, deliberately keyed on "codes missing,
-            # index present" rather than the index's own bootstrap
-            # branch: an empty or all-dup first batch defers it to the
-            # first batch that actually indexes something, and a crash
-            # between the index write and this block is repaired on
-            # replay by the same condition. Books train ONCE, on a
-            # bounded ordered sample of the INDEXED cohort (the flat
-            # loop's replay-stable sampling discipline); the first
-            # code generation is then one encode pass over the index.
-            import numpy as _np
+            return
+        if not exists(idx_table):
+            return
+        X = _ordered_train_sample(spark.table(idx_table).select("vec_id", "v"))
+        if not len(X):
+            return
+        books = _pq_train(
+            np.asarray(X, dtype=np.float64),
+            m=pq_m, k=min(pq_k, len(X)), sub=X.shape[1] // pq_m,
+        )
+        write_bucketed(
+            spark.createDataFrame(
+                [
+                    (mi, ki, [float(x) for x in books[mi, ki]])
+                    for mi in range(books.shape[0])
+                    for ki in range(books.shape[1])
+                ],
+                "mi long, ki long, sub array<double>",
+            ),
+            books_table, "mi", _BUCKETS, path=books_path,
+        )
+        write_bucketed(
+            encoded_index(books), codes_table, ("bucket", "leaf"), _BUCKETS,
+            path=codes_path,
+        )
+        _codes_gen_write(codes_path, _root_gen_hash(spark, root_table))
 
-            from mr_py_spark.operators.similarity import (
-                _ordered_train_sample as _ots,
-            )
-            from mr_py_spark.operators.vectors import _pq_train
-
-            X = _ots(spark.table(idx_table).select("vec_id", "v"))
-            if len(X):
-                books = _pq_train(
-                    _np.asarray(X, dtype=_np.float64),
-                    m=pq_m,
-                    k=min(pq_k, len(X)),
-                    sub=X.shape[1] // pq_m,
-                )
-                write_bucketed(
-                    spark.createDataFrame(
-                        [
-                            (mi, ki, [float(x) for x in books[mi, ki]])
-                            for mi in range(books.shape[0])
-                            for ki in range(books.shape[1])
-                        ],
-                        "mi long, ki long, sub array<double>",
-                    ),
-                    books_table, "mi", _BUCKETS, path=books_path,
-                )
-                write_bucketed(
-                    _pq_encode_frame(
-                        spark.table(idx_table).select(
-                            "vec_id", "bucket", "leaf", "v"
-                        ),
-                        books,
-                    ),
-                    codes_table, ("bucket", "leaf"), _BUCKETS,
-                    path=codes_path,
-                )
-                _codes_gen_write(codes_path, _root_gen_hash(spark, root_table))
-        status.unpersist()
-
-    return step
+    return maintenance_step(
+        spark, out, idx_table, "vec_id",
+        project=lambda b: b.select(
+            "vec_id", SF.col("embedding").cast("array<double>").alias("v")
+        ),
+        recover=recover,
+        bootstrap=bootstrap,
+        view=view,
+        trips=trips,
+        actuate=actuate,
+        triage=lambda batch, ctx: semantic_delta_status_hier(*ctx, batch),
+        first_build=first_build,
+        append=lambda ctx, rows, stats: hier_index_append(
+            ctx[0], ctx[1], rows, idx_table, idempotent=True, stats=stats
+        ),
+        after=after if codes_on else None,
+        check_every=check_every,
+        actuation_log=actuation_log,
+    )
 
 
 @register("stream_hier_index_maintenance", tags=("C9", "C2", "C3", "A8"))
 def stream_hier_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest loop for the STANDING TWO-LEVEL index — the
     production semantic-maintenance form past the flat tier's
-    4096-centroid cap (SCALE.md r13: cell occupancy pinned at ~64 at
-    any corpus size where the flat loop's bucket occupancy grows
-    linearly): each micro-batch is triaged against the live
-    (bucket, leaf) cells (``semantic_delta_status_hier``, candidate
-    work ~64 rows/vector), statuses land in a parquet sink, survivors
-    are admitted via ``hier_index_append`` under the same composite
-    bucket spec, and root-level drift triggers the crash-atomic
-    three-table ``hier_retrain``. Replay-idempotent under
-    foreachBatch's at-least-once contract via the same three guards as
-    the LSH and flat-IVF loops (byte-level property tests in
-    tests/test_streaming_sink.py). Rows-only (seeded quantizers are
-    engine-specific); the fixture drain is checked for
-    one-status-per-vector and determinism."""
-    import shutil
-    import tempfile
-
-    harden(spark)
-    root_dir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.rstrip("/").replace("/", "_"),
-        "hier_maint",
-    )
-    shutil.rmtree(root_dir, ignore_errors=True)
-    out = os.path.join(root_dir, "out")
-    ckpt = os.path.join(root_dir, "ckpt")
-    os.makedirs(out, exist_ok=True)
+    4096-centroid cap (cell occupancy stays ~64 at any corpus size,
+    where the flat loop's bucket occupancy grows linearly): each
+    micro-batch is triaged against the live (bucket, leaf) cells,
+    statuses land in a parquet sink, survivors are admitted via
+    ``hier_index_append``, and root-level drift triggers the
+    crash-atomic three-table ``hier_retrain``
+    (``_hier_maintenance_step``). Replay-idempotent under
+    foreachBatch's at-least-once contract (``maintenance_step``).
+    Rows-only (seeded quantizers are engine-specific); the fixture
+    drain is checked for one-status-per-vector and determinism."""
     tag = stream_table_tag(sf_dir)
-    root_table = f"mrps_stream_hier_root_{tag}"
-    leaf_table = f"mrps_stream_hier_leaf_{tag}"
-    idx_table = f"mrps_stream_hier_idx_{tag}"
-    for t in (root_table, leaf_table, idx_table):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir.rstrip("/"))
+    tables = tuple(
+        f"mrps_stream_hier_{t}_{tag}" for t in ("root", "leaf", "idx")
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            _hier_maintenance_step(
-                spark, root_table, leaf_table, idx_table, out,
-                os.path.join(root_dir, "root"),
-                os.path.join(root_dir, "leaf"),
-                os.path.join(root_dir, "index"),
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out).select(
+    return _drain_maintenance(
+        spark, sf_dir, "hier_maint", "embeddings", tables,
+        lambda root, out: _hier_maintenance_step(
+            spark, *tables, out,
+            os.path.join(root, "root"),
+            os.path.join(root, "leaf"),
+            os.path.join(root, "index"),
+        ),
         "vec_id",
-        "status",
-        "match_id",
-        F.col("batch_id").cast("long").alias("batch_id"),
     )
 
 
 @register("stream_hier_pq_maintenance", tags=("C9", "C3", "A8", "B22"))
 def stream_hier_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``stream_hier_index_maintenance`` with the ADC tier's standing
-    PQ-CODE table maintained in the same loop (r16, VERDICT r15
-    item 7): codebooks train once on the bootstrap cohort and persist,
-    admitted vectors are encoded O(delta) per batch under the codes
-    table's own replay guard, and generation coherence is the
-    self-healing root-hash sidecar check (``_hier_maintenance_step``
-    docstring — a retrain re-encodes; a crash between swap and
-    re-encode repairs at the next step entry). Emits the audit the
-    lifecycle promises instead of the triage statuses: the codes table
-    is row-identical (codes included) to a one-pass encode of the
-    final index under the stored books, covers exactly the indexed
-    ids, and the stored generation matches the live roots. Rows-only
-    (seeded quantizers + engine-specific code layout); crash-window,
-    replay, and retrain-re-encode properties are byte-level-tested in
-    tests/test_streaming_sink.py."""
-    import shutil
-    import tempfile
-
+    PQ-CODE table maintained in the same loop (``_hier_maintenance_step``
+    codes options: books train once on the bootstrap cohort, admitted
+    vectors are encoded O(delta) under the codes table's own replay
+    guard, and a root-hash sidecar keeps the codes on the live
+    generation). Emits the audit the lifecycle promises instead of the
+    triage statuses: the codes table is row-identical (codes included)
+    to a one-pass encode of the final index under the stored books,
+    covers exactly the indexed ids, and the stored generation matches
+    the live roots. Rows-only (seeded quantizers + engine-specific code
+    layout); crash-window, replay, and retrain-re-encode properties are
+    byte-level-tested in tests/test_streaming_sink.py."""
     from mr_py_spark.operators.bucketed import _table_location
     from mr_py_spark.operators.hier import _pq_encode_frame
 
-    harden(spark)
-    root_dir = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.rstrip("/").replace("/", "_"),
-        "hier_pq_maint",
-    )
-    shutil.rmtree(root_dir, ignore_errors=True)
-    out = os.path.join(root_dir, "out")
-    ckpt = os.path.join(root_dir, "ckpt")
-    os.makedirs(out, exist_ok=True)
     tag = stream_table_tag(sf_dir)
-    root_table = f"mrps_stream_hpq_root_{tag}"
-    leaf_table = f"mrps_stream_hpq_leaf_{tag}"
-    idx_table = f"mrps_stream_hpq_idx_{tag}"
-    codes_table = f"mrps_stream_hpq_codes_{tag}"
-    books_table = f"mrps_stream_hpq_books_{tag}"
-    for t in (root_table, leaf_table, idx_table, codes_table, books_table):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir.rstrip("/"))
+    root_table, leaf_table, idx_table, codes_table, books_table = (
+        f"mrps_stream_hpq_{t}_{tag}"
+        for t in ("root", "leaf", "idx", "codes", "books")
     )
-    codes_path = os.path.join(root_dir, "codes")
-    q = (
-        stream.writeStream.foreachBatch(
-            _hier_maintenance_step(
-                spark, root_table, leaf_table, idx_table, out,
-                os.path.join(root_dir, "root"),
-                os.path.join(root_dir, "leaf"),
-                os.path.join(root_dir, "index"),
-                codes_table=codes_table, codes_path=codes_path,
-                books_table=books_table,
-                books_path=os.path.join(root_dir, "books"),
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_maintenance(
+        spark, sf_dir, "hier_pq_maint", "embeddings",
+        (root_table, leaf_table, idx_table, codes_table, books_table),
+        lambda root, out: _hier_maintenance_step(
+            spark, root_table, leaf_table, idx_table, out,
+            os.path.join(root, "root"),
+            os.path.join(root, "leaf"),
+            os.path.join(root, "index"),
+            codes_table=codes_table, codes_path=os.path.join(root, "codes"),
+            books_table=books_table, books_path=os.path.join(root, "books"),
+        ),
+        "vec_id",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # lifecycle audit (vs the statuses the sibling query already emits)
     idx = spark.table(idx_table)
     got = spark.table(codes_table).select(

@@ -74,7 +74,7 @@ def main() -> None:
               flush=True)
         step = _lsh_maintenance_step(
             spark, table, os.path.join(root, "out"),
-            os.path.join(root, "idx"), reband_check_every=2,
+            os.path.join(root, "idx"), check_every=2,
         )
         for b in range(args.batches):
             rows_b = [

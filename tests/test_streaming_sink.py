@@ -5,6 +5,7 @@ the durable path."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mr_py_spark.functions import dsum
@@ -247,77 +248,6 @@ def test_stream_lsh_maintenance_cross_batch(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_ivf_maintenance_two_batch_and_replay(spark, tmp_path):
-    """The IVF/embedding twin of the LSH maintenance loop: batch-2
-    near-dups of batch-1 vectors report dup_of_corpus against the
-    maintained index, within-batch dups report dup_within_delta,
-    the quantizer trains once (batch 1) and never retrains, and a
-    replayed (batch, batch_id) leaves statuses and the index row set
-    byte-identical."""
-    import os
-
-    import numpy as np
-
-    from mr_py_spark.streaming import _ivf_maintenance_step
-
-    # orthonormal basis vectors: every non-copy pair has cosine exactly
-    # 0 < tau, so the planted statuses are deterministic by geometry
-    X = np.eye(40)
-    vecs = [[float(x) for x in r] for r in X]
-    cent_t, idx_t = "mrps_test_sivf_cent", "mrps_test_sivf_idx"
-    spark.sql(f"DROP TABLE IF EXISTS {cent_t}")
-    spark.sql(f"DROP TABLE IF EXISTS {idx_t}")
-    out = str(tmp_path / "out")
-    os.makedirs(out, exist_ok=True)
-    step = _ivf_maintenance_step(
-        spark, cent_t, idx_t, out,
-        str(tmp_path / "cent"), str(tmp_path / "index"),
-    )
-
-    def snapshot():
-        statuses = sorted(
-            (r.vec_id, r.status, r.match_id, r.batch_id)
-            for r in spark.read.parquet(out).collect()
-        )
-        index = sorted(
-            (r.vec_id, r.bucket) for r in spark.table(idx_t).collect()
-        )
-        return statuses, index
-
-    b0 = spark.createDataFrame(
-        [(i, vecs[i]) for i in range(20)] + [(100, vecs[3])],
-        "vec_id long, embedding array<double>",
-    )
-    try:
-        step(b0, 0)
-        snap0 = snapshot()
-        got0 = {d: (s, m) for d, s, m, _ in snap0[0]}
-        assert len(got0) == 21  # one status per batch vector
-        assert got0[3] == ("new", None)
-        assert got0[100] == ("dup_within_delta", 3)  # exact in-batch copy
-        cent_rows = sorted(tuple(r.cv) for r in spark.table(cent_t).collect())
-        step(b0, 0)  # replay of the table-creation batch
-        assert snapshot() == snap0
-        assert sorted(tuple(r.cv) for r in spark.table(cent_t).collect()) == cent_rows
-        b1 = spark.createDataFrame(
-            [(200, vecs[7]), (201, [float(x) for x in X[25]])],
-            "vec_id long, embedding array<double>",
-        )
-        step(b1, 1)
-        snap1 = snapshot()
-        got1 = {d: (s, m) for d, s, m, _ in snap1[0]}
-        assert got1[200] == ("dup_of_corpus", 7)  # exact copy of an indexed vec
-        assert got1[201] == ("new", None)  # orthogonal to everything indexed
-        step(b1, 1)  # replay of the latest batch
-        assert snapshot() == snap1
-        idx_ids = {v for v, _ in snap1[1]}
-        new_ids = {d for d, (s, _) in {**got0, **got1}.items() if s == "new"}
-        assert idx_ids == new_ids  # index holds exactly the survivor set
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {cent_t}")
-        spark.sql(f"DROP TABLE IF EXISTS {idx_t}")
-
-
 def test_stream_semantic_maintenance_fixture_drain(spark):
     """Registered-query drain on the fixture: one status per embedding,
     statuses in the enum, deterministic across two drains."""
@@ -339,66 +269,244 @@ def test_stream_semantic_maintenance_fixture_drain(spark):
     assert out1 == out2
 
 
-def test_lsh_maintenance_step_replay_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: a crash between the index append
-    and the checkpoint commit replays the batch (VERDICT/ADVICE r11).
-    Re-invoking the step with the same (batch, batch_id) must leave
-    BOTH sinks byte-identical: statuses don't duplicate or flip (no
-    'dup_of_corpus of itself', no dup_within_delta -> dup_of_corpus
-    against the batch's own admitted representative), and the index
-    row set doesn't grow."""
+_BASE_TEXT = "the quick brown fox jumps over the lazy dog again and again " * 5
+_OTHER_TEXT = "completely different content about spark engines and parquet files "
+
+
+def _loop_kind(spark, kind: str, root):
+    """A private standing-index loop of ``kind`` ("lsh", "ivf", or
+    "hier" with PQ-code maintenance on): (step, id_col, rows of the two
+    replay batches, snapshot). The snapshot is every sink the loop
+    writes — statuses plus the index, quantizer, books and codes tables
+    (and the codes generation sidecar) — as sorted row reprs, so
+    equality is byte-level (repr round-trips doubles exactly)."""
     import os
 
-    from mr_py_spark.streaming import _lsh_maintenance_step
+    import numpy as np
 
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    other = "completely different content about spark engines and parquet files "
-    table = "mrps_test_stream_lsh_replay"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    out = str(tmp_path / "out")
+    from mr_py_spark.streaming import (
+        _codes_gen_read,
+        _hier_maintenance_step,
+        _ivf_maintenance_step,
+        _lsh_maintenance_step,
+    )
+
+    out = os.path.join(root, "out")
     os.makedirs(out, exist_ok=True)
-    step = _lsh_maintenance_step(spark, table, out, str(tmp_path / "index"))
+    tag = f"mrps_test_loop_{kind}_{os.path.basename(root)}"
+    if kind == "lsh":
+        tables = (f"{tag}_idx",)
+        step = _lsh_maintenance_step(spark, tables[0], out, os.path.join(root, "index"))
+        batches = (
+            [(1, _BASE_TEXT), (2, _OTHER_TEXT), (3, _BASE_TEXT + " tail")],
+            [(10, _BASE_TEXT + " more"), (11, "novel words entirely " * 8)],
+        )
+        schema, id_col = "doc_id long, text string", "doc_id"
+    else:
+        vecs = [[float(x) for x in r] for r in np.eye(40)]
+        batches = (
+            [(i, vecs[i]) for i in range(20)] + [(100, vecs[3])],
+            [(200, vecs[7]), (201, vecs[25])],
+        )
+        schema, id_col = "vec_id long, embedding array<double>", "vec_id"
+        if kind == "ivf":
+            tables = (f"{tag}_cent", f"{tag}_idx")
+            step = _ivf_maintenance_step(
+                spark, *tables, out,
+                os.path.join(root, "cent"), os.path.join(root, "index"),
+            )
+        else:
+            tables = tuple(
+                f"{tag}_{t}" for t in ("root", "leaf", "idx", "codes", "books")
+            )
+            step = _hier_maintenance_step(
+                spark, *tables[:3], out,
+                os.path.join(root, "root"), os.path.join(root, "leaf"),
+                os.path.join(root, "index"),
+                root_rows=4, leaf_rows=2,  # force a real multi-leaf hierarchy
+                codes_table=tables[3], codes_path=os.path.join(root, "codes"),
+                books_table=tables[4], books_path=os.path.join(root, "books"),
+            )
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
     def snapshot():
-        statuses = sorted(
-            (r.doc_id, r.status, r.match_id, r.batch_id)
-            for r in spark.read.parquet(out).collect()
-        )
-        index = sorted(
-            tuple(r) for r in spark.table(table).collect()
-        )
-        return statuses, index
+        def rows(df):
+            return sorted(repr(tuple(r)) for r in df.collect())
 
-    b0 = spark.createDataFrame(
-        [(1, base), (2, other), (3, base + " tail")],
-        "doc_id long, text string",
-    )
+        snap = {"status": rows(spark.read.parquet(out))}
+        for t in tables:  # keyed by role (idx, cent, ...), not by name
+            role = t[len(tag) + 1:]
+            snap[role] = rows(spark.table(t)) if spark.catalog.tableExists(t) else None
+        if kind == "hier":
+            snap["codes_gen"] = _codes_gen_read(os.path.join(root, "codes"))
+        return snap
+
+    frames = [spark.createDataFrame(b, schema) for b in batches]
+    return step, id_col, frames, snapshot, tables
+
+
+def _statuses(spark, out, id_col):
+    return {
+        r[0]: (r.status, r.match_id)
+        for r in spark.read.parquet(out).select(id_col, "status", "match_id").collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def loop_reference(spark, tmp_path_factory):
+    """Per kind, the snapshots of an UNCRASHED loop after batch 0 and
+    after batch 1. Building one also checks the two-batch semantics and
+    the plain replay (a re-run of a batch that finished): each replay
+    leaves every sink byte-identical."""
+    import os
+
+    refs = {}
+
+    def get(kind):
+        if kind in refs:
+            return refs[kind]
+        root = str(tmp_path_factory.mktemp(f"ref_{kind}"))
+        step, id_col, (b0, b1), snapshot, tables = _loop_kind(spark, kind, root)
+        out = os.path.join(root, "out")
+        try:
+            step(b0, 0)
+            snap0 = snapshot()
+            step(b0, 0)  # replay of the table-creation batch
+            assert snapshot() == snap0
+            got0 = _statuses(spark, out, id_col)
+            if kind == "lsh":
+                # 3 is a within-delta dup of 1 and must STAY that on the
+                # replay (1 is now in the index — guard 1)
+                assert got0[1] == ("new", None)
+                assert got0[3] == ("dup_within_delta", 1)
+            else:
+                assert len(got0) == 21  # one status per batch vector
+                assert got0[3] == ("new", None)
+                assert got0[100] == ("dup_within_delta", 3)  # exact in-batch copy
+            if kind == "hier":
+                leaves = spark.table(tables[1]).count()
+                assert leaves > spark.table(tables[0]).count()  # more leaves than roots
+            step(b1, 1)
+            snap1 = snapshot()
+            step(b1, 1)  # replay of the latest batch
+            assert snapshot() == snap1
+            got1 = _statuses(spark, out, id_col)
+            if kind == "lsh":
+                assert got1[10] == ("dup_of_corpus", 1)
+                assert got1[11] == ("new", None)
+            else:
+                assert got1[200] == ("dup_of_corpus", 7)  # copy of an indexed vec
+                assert got1[201] == ("new", None)  # orthogonal to everything
+            idx = [t for t in tables if t.endswith("_idx")][0]
+            idx_ids = {r[0] for r in spark.table(idx).select(id_col).collect()}
+            assert idx_ids == {d for d, (s, _) in got1.items() if s == "new"}
+            if kind == "hier":  # codes cover exactly the indexed ids
+                codes = {r.vec_id for r in spark.table(tables[3]).collect()}
+                assert codes == idx_ids
+        finally:
+            for t in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+        refs[kind] = (snap0, snap1)
+        return refs[kind]
+
+    return get
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "kind,point",
+    [(k, p) for k in ("lsh", "ivf", "hier") for p in ("stats", "status", "admit")]
+    + [("hier", "after")],  # only hier has an after-hook (the PQ codes)
+)
+def test_maintenance_step_crash_replay(spark, tmp_path, monkeypatch, loop_reference, kind, point):
+    """foreachBatch is at-least-once: a crash anywhere inside the step
+    re-runs the batch. Crash each batch once at ``point`` — "stats":
+    after triage, before the stats aggregate and the status write
+    (nothing durable lies between them); "status": after the status
+    write, as the append or first build starts; "admit": as the append
+    or first build returns; "after": as hier's PQ-codes upkeep returns —
+    then replay it: every sink — statuses, index, quantizer, books,
+    codes — must end byte-identical to the uncrashed loop's."""
+    import mr_py_spark.streaming as streaming
+
+    armed = []
+
+    def crash(at):
+        if armed and at == point:
+            armed.clear()
+            raise _Crash(at)
+
+    def hooked(hook, before, done):
+        def run(*args):
+            crash(before)
+            result = hook(*args)
+            crash(done)
+            return result
+
+        return run
+
+    real = streaming.maintenance_step
+
+    def crashing_step(*args, triage, append, first_build, after=None, **kw):
+        return real(
+            *args,
+            triage=hooked(triage, None, "stats"),
+            append=hooked(append, "status", "admit"),
+            first_build=hooked(first_build, "status", "admit"),
+            after=after and hooked(after, None, "after"),
+            **kw,
+        )
+
+    snap0, snap1 = loop_reference(kind)
+    monkeypatch.setattr(streaming, "maintenance_step", crashing_step)
+    step, _, (b0, b1), snapshot, tables = _loop_kind(spark, kind, str(tmp_path))
     try:
+        for bid, (frame, want) in enumerate(((b0, snap0), (b1, snap1))):
+            armed.append(True)
+            with pytest.raises(_Crash):
+                step(frame, bid)
+            step(frame, bid)  # the replay
+            assert snapshot() == want, (kind, point, bid)
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "hier"])
+def test_maintenance_step_refuses_duplicate_ids(spark, tmp_path, kind):
+    """A batch that repeats an id fails loudly — a ValueError naming the
+    id column and the batch_id — before the step writes anything: on the
+    first batch no table exists afterwards, on a warm batch every sink
+    is unchanged. A null id is not a repeat: that row gets a status and
+    is never admitted (the semi-join never matches null)."""
+    import os
+
+    root = str(tmp_path)
+    step, id_col, (b0, b1), snapshot, tables = _loop_kind(spark, kind, root)
+    try:
+        dup0 = b0.unionByName(b0.limit(1))
+        with pytest.raises(ValueError, match=rf"micro-batch 0: {id_col} is not unique"):
+            step(dup0, 0)
+        assert not any(spark.catalog.tableExists(t) for t in tables)
+        assert os.listdir(os.path.join(root, "out")) == []
         step(b0, 0)
         snap0 = snapshot()
-        # replay of the FIRST batch (the table-creation branch crashed
-        # after committing the table but before the checkpoint)
-        step(b0, 0)
+        with pytest.raises(ValueError, match=rf"micro-batch 1: {id_col} is not unique"):
+            step(b1.unionByName(b1), 1)
         assert snapshot() == snap0
-        # statuses are sane on the replay: 3 is a within-delta dup of 1
-        # and must STAY that (1 is now in the index — guard 1)
-        got = {d: (s, m) for d, s, m, _ in snap0[0]}
-        assert got[1] == ("new", None)
-        assert got[3] == ("dup_within_delta", 1)
-        b1 = spark.createDataFrame(
-            [(10, base + " more"), (11, "novel words entirely " * 8)],
-            "doc_id long, text string",
-        )
-        step(b1, 1)
-        snap1 = snapshot()
-        got1 = {d: (s, m) for d, s, m, _ in snap1[0]}
-        assert got1[10] == ("dup_of_corpus", 1)
-        assert got1[11] == ("new", None)
-        # replay of the LATEST batch (the realistic recovery path)
-        step(b1, 1)
-        assert snapshot() == snap1
+        null_id = b1.limit(1).withColumn(id_col, F.lit(None).cast("long"))
+        step(b1.unionByName(null_id), 1)
+        status = spark.read.parquet(os.path.join(root, "out"))
+        assert status.filter(F.col(id_col).isNull()).count() == 1
+        idx = [t for t in tables if t.endswith("_idx")][0]
+        assert spark.table(idx).filter(F.col(id_col).isNull()).count() == 0
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_lsh_maintenance_reband_trips_once_and_replays(spark, tmp_path):
@@ -461,7 +569,7 @@ def test_lsh_maintenance_reband_trips_once_and_replays(spark, tmp_path):
     log: list[int] = []
     step = _lsh_maintenance_step(
         spark, table, out, str(tmp_path / "index"),
-        reband_check_every=2, collision_cap=cap, reband_log=log,
+        check_every=2, collision_cap=cap, actuation_log=log,
     )
 
     def snapshot():
@@ -539,7 +647,7 @@ def test_ivf_maintenance_drift_triggers_one_retrain(spark, tmp_path):
     step = _ivf_maintenance_step(
         spark, cent_t, idx_t, out,
         str(tmp_path / "cent"), str(tmp_path / "index"),
-        drift_check_every=1, retrain_log=log,
+        check_every=1, actuation_log=log,
     )
 
     def snapshot():
@@ -567,6 +675,12 @@ def test_ivf_maintenance_drift_triggers_one_retrain(spark, tmp_path):
             [(100 + i, vecs[30 + i]) for i in range(15)],
             "vec_id long, embedding array<double>",
         )
+        # the same batch with a repeated id trips the gauge too, but is
+        # refused before the retrain writes anything
+        snap0 = snapshot()
+        with pytest.raises(ValueError, match="micro-batch 1: vec_id is not unique"):
+            step(b1.unionByName(b1.limit(1)), 1)
+        assert log == [] and snapshot() == snap0
         step(b1, 1)
         assert log == [1]
         snap1 = snapshot()
@@ -626,7 +740,7 @@ def test_ivf_maintenance_undrifted_never_retrains(spark, tmp_path):
         step = _ivf_maintenance_step(
             spark, cent_t, idx_t, out,
             str(tmp_path / f"cent_{label}"), str(tmp_path / f"index_{label}"),
-            drift_check_every=every, retrain_log=log,
+            check_every=every, actuation_log=log,
         )
         try:
             for bid, rows in enumerate(batches):
@@ -645,82 +759,6 @@ def test_ivf_maintenance_undrifted_never_retrains(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {cent_t}")
             spark.sql(f"DROP TABLE IF EXISTS {idx_t}")
     assert results["checked"] == results["never"] and len(results["checked"]) == 24
-
-
-def test_hier_maintenance_two_batch_and_replay(spark, tmp_path):
-    """The two-level twin of the IVF maintenance loop: cross-batch
-    statuses hold through the (bucket, leaf) cells, the quantizer pair
-    trains once on batch 1, and a replayed (batch, batch_id) leaves
-    statuses, the inverted file, and BOTH quantizer tables
-    byte-identical."""
-    import os
-
-    import numpy as np
-
-    from mr_py_spark.streaming import _hier_maintenance_step
-
-    X = np.eye(40)
-    vecs = [[float(x) for x in r] for r in X]
-    root_t, leaf_t, idx_t = (
-        "mrps_test_shier_root", "mrps_test_shier_leaf", "mrps_test_shier_idx"
-    )
-    for t in (root_t, leaf_t, idx_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    out = str(tmp_path / "out")
-    os.makedirs(out, exist_ok=True)
-    step = _hier_maintenance_step(
-        spark, root_t, leaf_t, idx_t, out,
-        str(tmp_path / "root"), str(tmp_path / "leaf"),
-        str(tmp_path / "index"),
-        root_rows=4, leaf_rows=2,  # force a real multi-leaf hierarchy
-    )
-
-    def snapshot():
-        statuses = sorted(
-            (r.vec_id, r.status, r.match_id, r.batch_id)
-            for r in spark.read.parquet(out).collect()
-        )
-        index = sorted(
-            (r.vec_id, r.bucket, r.leaf) for r in spark.table(idx_t).collect()
-        )
-        roots = sorted(tuple(r.cv) for r in spark.table(root_t).collect())
-        leaves = sorted(
-            (r.bucket, r.leaf, tuple(r.lv))
-            for r in spark.table(leaf_t).collect()
-        )
-        return statuses, index, roots, leaves
-
-    b0 = spark.createDataFrame(
-        [(i, vecs[i]) for i in range(20)] + [(100, vecs[3])],
-        "vec_id long, embedding array<double>",
-    )
-    try:
-        step(b0, 0)
-        snap0 = snapshot()
-        assert len(snap0[3]) > len(snap0[2])  # more leaves than roots
-        got0 = {d: (s, m) for d, s, m, _ in snap0[0]}
-        assert len(got0) == 21
-        assert got0[3] == ("new", None)
-        assert got0[100] == ("dup_within_delta", 3)
-        step(b0, 0)  # replay of the bootstrap batch
-        assert snapshot() == snap0
-        b1 = spark.createDataFrame(
-            [(200, vecs[7]), (201, [float(x) for x in X[25]])],
-            "vec_id long, embedding array<double>",
-        )
-        step(b1, 1)
-        snap1 = snapshot()
-        got1 = {d: (s, m) for d, s, m, _ in snap1[0]}
-        assert got1[200] == ("dup_of_corpus", 7)
-        assert got1[201] == ("new", None)
-        step(b1, 1)  # replay of the latest batch
-        assert snapshot() == snap1
-        idx_ids = {v for v, _, _ in snap1[1]}
-        new_ids = {d for d, (s, _) in {**got0, **got1}.items() if s == "new"}
-        assert idx_ids == new_ids
-    finally:
-        for t in (root_t, leaf_t, idx_t):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_hier_maintenance_drift_retrains_once_and_replays(spark, tmp_path):
@@ -749,7 +787,7 @@ def test_hier_maintenance_drift_retrains_once_and_replays(spark, tmp_path):
         spark, root_t, leaf_t, idx_t, out,
         str(tmp_path / "root"), str(tmp_path / "leaf"),
         str(tmp_path / "index"),
-        drift_check_every=1, retrain_log=log, root_rows=4, leaf_rows=2,
+        check_every=1, actuation_log=log, root_rows=4, leaf_rows=2,
     )
 
     def snapshot():
