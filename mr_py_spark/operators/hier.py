@@ -51,6 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mr_py_spark.operators.vectors import _kmeans_init, _lloyd, _nearest, _unit_rows
 from mr_py_spark.registry import register
 from mr_py_spark.sources import tbl
 from mr_py_spark.util import table_rows as _table_rows
@@ -68,48 +69,6 @@ def _hier_nroot(n: int, root_rows: int = _ROOT_ROWS) -> int:
     """Root count sized for ~root_rows vectors per root, clamped like
     _ivf_nlist so the root broadcast stays bounded."""
     return max(8, min(_MAX_K, round(n / root_rows) or 1))
-
-
-def _np_spherical_kmeans(X: np.ndarray, k: int, seed: int) -> np.ndarray:
-    """Deterministic seeded spherical k-means on an in-memory (n, dim)
-    float64 block — the LEAF trainer, run once per root group inside
-    applyInPandas (so "distributed" means across groups; each group is
-    bounded by root occupancy). Farthest-point init at small k for
-    spread, seeded choice above; 8 Lloyd rounds; empty clusters are
-    dropped and the result L2-normalized so dot == cosine during
-    assignment. Bucketing quality is what a quantizer needs — the
-    recall/status properties gate it, not cluster optimality."""
-    n = len(X)
-    k = max(1, min(k, n))
-    rng = np.random.RandomState(seed)
-    if k == 1:
-        cent = X.mean(0, keepdims=True).copy()
-    elif k <= 64:
-        idx = [int(rng.randint(n))]
-        d2 = ((X - X[idx[0]]) ** 2).sum(1)
-        for _ in range(k - 1):
-            nxt = int(d2.argmax())
-            idx.append(nxt)
-            d2 = np.minimum(d2, ((X - X[nxt]) ** 2).sum(1))
-        cent = X[idx].copy()
-    else:
-        cent = X[rng.choice(n, k, replace=False)].copy()
-    for _ in range(8):
-        # argmin ||x-c||^2 == argmax x.c - |c|^2/2; mean update is a
-        # scatter-add (the r13-correction Lloyd rule: a per-occupied-
-        # cluster mask loop is O(k·n) per round, which a hot root at
-        # k≈4096 over ~262k rows turns into 1e9 ops per round)
-        assign = (X @ cent.T - 0.5 * (cent**2).sum(1)).argmax(1)
-        sums = np.zeros_like(cent)
-        np.add.at(sums, assign, X)
-        counts = np.bincount(assign, minlength=len(cent))
-        occ = counts > 0
-        cent[occ] = sums[occ] / counts[occ, None].astype(np.float64)
-    assign = (X @ cent.T - 0.5 * (cent**2).sum(1)).argmax(1)
-    cent = cent[np.unique(assign)]  # drop empties, renumber dense
-    norms = np.linalg.norm(cent, axis=1)
-    norms[norms == 0.0] = 1.0
-    return cent / norms[:, None]
 
 
 def _spread_by_bucket(root_assigned: DataFrame, spread: int | None) -> DataFrame:
@@ -144,15 +103,19 @@ def hier_leaf_centroids(
     bucket id, so rebuilds are bit-identical regardless of partition
     layout. k_leaf = ceil(occupancy / leaf_rows), capped at _MAX_K —
     sized per group, so hot roots get proportionally more leaves.
-    ``spread`` (build paths pass nroot) unbundles groups from tasks —
-    see _spread_by_bucket."""
+    Training is the shared Lloyd kernel (vectors._lloyd, 8 rounds from
+    vectors._kmeans_init); empty leaves are then dropped (renumbered
+    dense) and the rest L2-normalized so dot == cosine during
+    assignment. ``spread`` (build paths pass nroot) unbundles groups
+    from tasks — see _spread_by_bucket."""
 
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
         X = np.asarray(list(pdf["v"]), dtype=np.float64)
         b = int(pdf["bucket"].iloc[0])
         k = max(1, min(_MAX_K, -(-len(X) // leaf_rows)))
-        cent = _np_spherical_kmeans(X, k, seed=b)
+        cent = _lloyd(X, _kmeans_init(X, k, seed=b))
+        cent = _unit_rows(cent[np.unique(_nearest(X, cent))])
         return pd.DataFrame(
             {
                 "bucket": np.full(len(cent), b, dtype=np.int64),
@@ -237,7 +200,7 @@ def hier_corpus_index(spark: SparkSession, sf_dir: str):
     candidate equi-joins on the cell stay exchange-free on the corpus
     side. All three ride the content-stamped cache with a builder
     stamp over every function and knob the persisted bytes depend on
-    (ADVICE r12: including the shared assignment kernel).
+    (``_hier_index_stamp`` plus the corpus/delta split constants).
 
     Cold-build cost note (r13 review, REVERSED by the r15 profile):
     the r13 guess was that the leaf TRAINING groupBy and ASSIGNMENT
@@ -257,10 +220,7 @@ def hier_corpus_index(spark: SparkSession, sf_dir: str):
         _INC_MULT,
     )
     from mr_py_spark.operators.similarity import (
-        _IVF_TRAIN_CAP,
         _emb_double,
-        _fold_order_blocks,
-        _ivf_assign_pass,
         _ivf_centroids,
         ivf_assign_with,
     )
@@ -272,16 +232,8 @@ def hier_corpus_index(spark: SparkSession, sf_dir: str):
     )
     n = _table_rows(e, sf_dir, "embeddings")
     nroot = min(_hier_nroot(n), max(1, n))
-    # stamp every function the persisted bytes depend on, including the
-    # scoring kernel hier_assign delegates to (the ADVICE r12 class: a
-    # 1-line wrapper in the stamp list hides edits to the body it wraps)
-    stamp = builder_stamp(
-        _ivf_centroids, ivf_assign_with, _ivf_assign_pass,
-        _np_spherical_kmeans, hier_leaf_centroids, hier_assign,
-        _fold_order_blocks,
-        nroot=nroot, root_rows=_ROOT_ROWS, leaf_rows=_LEAF_ROWS,
-        inc=(_INC_MULT, _INC_BUCKETS, _INC_DELTA_BUCKET),
-        train_cap=_IVF_TRAIN_CAP,
+    stamp = _hier_index_stamp(n) + builder_stamp(
+        inc=(_INC_MULT, _INC_BUCKETS, _INC_DELTA_BUCKET)
     )
 
     def build_root() -> DataFrame:
@@ -718,29 +670,22 @@ _HIER_TWO_LEVEL_CEIL = 4096 * 4096 * 64
 
 
 def _hier_index_stamp(n: int) -> str:
-    """The builder stamp shared by ALL standing tables derived from the
-    hier index build — the three index tables AND the PQ code table
-    (ADVICE r14: hier_pq_codes' stamp omitted the assignment builder,
-    so an edit to hier_assign rebuilt the index under its own stamp
-    while the codes table re-attached STALE — ADC would score codes
-    whose (bucket, leaf) cells no longer match the index). One source
-    of truth so the two can never drift apart again."""
+    """The builder stamp of every standing table derived from a hier
+    index build — both index builders' three tables AND the PQ code
+    table (an edit to the assignment must never leave codes whose
+    (bucket, leaf) cells no longer match the index). It names every
+    function the persisted bytes depend on: the root quantizer (the
+    flat IVF stamp), the leaf trainer and the Lloyd kernel it calls,
+    and the scoring kernel hier_assign delegates to — a wrapper in a
+    stamp list hides edits to the body it calls."""
     from mr_py_spark.operators.bucketed import builder_stamp
-    from mr_py_spark.operators.similarity import (
-        _IVF_TRAIN_CAP,
-        _fold_order_blocks,
-        _ivf_assign_pass,
-        _ivf_centroids,
-        ivf_assign_with,
-    )
+    from mr_py_spark.operators.similarity import _fold_order_blocks, _ivf_stamp
 
     nroot = min(_hier_nroot(n), max(1, n))
-    return builder_stamp(
-        _ivf_centroids, ivf_assign_with, _ivf_assign_pass,
-        _np_spherical_kmeans, hier_leaf_centroids, hier_assign,
-        _fold_order_blocks,
-        nroot=nroot, root_rows=_ROOT_ROWS, leaf_rows=_LEAF_ROWS,
-        train_cap=_IVF_TRAIN_CAP,
+    return _ivf_stamp(nroot) + builder_stamp(
+        hier_leaf_centroids, hier_assign, _fold_order_blocks,
+        _kmeans_init, _lloyd, _nearest, _unit_rows,
+        root_rows=_ROOT_ROWS, leaf_rows=_LEAF_ROWS,
     )
 
 
@@ -827,19 +772,18 @@ _PQ_LEAF_PROBE = 24
 
 def _pq_books_stamp() -> str:
     """The builder stamp of the PERSISTED PQ codebooks — everything the
-    trained book bytes depend on. Shared by _hier_pq_books (its own
-    table's stamp) and hier_pq_codes (ADVICE r14: the codes are a pure
-    function of the BOOKS as well as the assignment, but the codes
-    table's stamp covered only the encode pass — a _pq_train or
-    _PQ_TRAIN change rebuilt the books under their own stamp while the
-    codes re-attached stale, so ADC would score stale codes against
-    new books: silent recall collapse in the pre-rank)."""
+    trained book bytes depend on, the Lloyd kernel _pq_train calls
+    included. Shared by _hier_pq_books (its own table's stamp) and
+    hier_pq_codes: the codes are a pure function of the books as well
+    as the assignment, so a books rebuild must never leave stale codes
+    to be scored against new books."""
     from mr_py_spark.operators.bucketed import builder_stamp
     from mr_py_spark.operators.similarity import _ordered_train_sample
     from mr_py_spark.operators.vectors import _PQ_TRAIN, _pq_train
 
     return builder_stamp(
-        _pq_train, _ordered_train_sample, m=_PQ_M, k=_PQ_K, train=_PQ_TRAIN
+        _pq_train, _lloyd, _nearest, _ordered_train_sample,
+        m=_PQ_M, k=_PQ_K, train=_PQ_TRAIN,
     )
 
 

@@ -1045,85 +1045,36 @@ def _ivf_centroids(
     seed: int = 7,
     sample=None,
 ) -> list:
-    """``nlist`` spherical centroids: seeded k-means (pyspark.ml) on a
-    bounded prefix of the corpus, then L2-normalized so dot product ==
-    cosine during assignment (spherical-k-means style). Falls back to
-    the first ``nlist`` vectors (already unit-norm) if pyspark.ml is
-    unavailable. k-means|| init is quadratic-ish in k, so large
-    centroid counts switch to seeded random init — bucketing quality,
-    not cluster quality, is what IVF needs. Returns a plain list: the
-    set is bounded (<= 4096), so it rides a broadcast variable.
-    ``seed`` varies the quantizer for the L-table tier (each table an
-    independently-seeded k-means on the same bounded sample); pass the
-    (rows, dim) ``sample`` ndarray to reuse one collected training
-    prefix across the L builds instead of re-collecting per table."""
-    try:
-        import numpy as np
+    """``nlist`` spherical centroids: the shared Lloyd kernel
+    (vectors._kmeans_init, then 8 rounds of vectors._lloyd with a
+    float32 assignment matmul — 2.7x faster than float64 at k=4096)
+    on a bounded prefix of the corpus, L2-normalized so dot product ==
+    cosine during assignment. ``nlist`` is clamped to the sample size;
+    a ragged or null vector in the sample raises. Bucketing quality,
+    not cluster quality, is what IVF needs, and the recall property
+    tests gate it; the distributed Lloyd is kmeans.py. Returns a plain
+    list: the set is bounded (<= 4096), so it rides a broadcast
+    variable. ``seed`` varies the quantizer for the L-table tier (each
+    table an independently-seeded k-means on the same bounded sample);
+    pass the (rows, dim) ``sample`` ndarray to reuse one collected
+    training prefix across the L builds instead of re-collecting per
+    table."""
+    from mr_py_spark.operators.vectors import _kmeans_init, _lloyd, _unit_rows
 
-        X = (
-            sample
-            if sample is not None
-            else np.asarray(
-                [r.v for r in e.limit(_IVF_TRAIN_CAP).select("v").collect()],
-                dtype=np.float64,
-            )
-        )
-        rng = np.random.RandomState(seed)
-        if nlist <= 64:
-            # farthest-point init (argmax of d2 — maximally spread, a
-            # deterministic quality knob at small k; NOT k-means++ D^2
-            # sampling, which would draw proportionally to d2)
-            idx = [int(rng.randint(len(X)))]
-            d2 = ((X - X[idx[0]]) ** 2).sum(1)
-            for _ in range(nlist - 1):
-                nxt = int(d2.argmax())
-                idx.append(nxt)
-                d2 = np.minimum(d2, ((X - X[nxt]) ** 2).sum(1))
-            cent = X[idx].copy()
-        else:
-            cent = X[rng.choice(len(X), nlist, replace=False)].copy()
-        # Lloyd, matmul form (argmin ||x-c||^2 == argmax x.c - ||c||^2/2).
-        # Driver-side numpy on the SAME bounded sample the old
-        # pyspark.ml path trained on, ~2x faster end-to-end at sf100
-        # (collect 4.8 s + 8 iters 9.4 s vs 30.1 s for ml KMeans) and
-        # one less runtime dependency; bucketing quality is what IVF
-        # needs, and the recall property tests gate it.
-        # Two r13-correction fixes to the Lloyd rounds, both exposed by
-        # the honest fixture (SCALE.md r13 correction; the poisoned
-        # fixture's fake structure left most clusters empty and hid
-        # them behind a 121-176 s build that was really 685-1912 s):
-        # (1) mean update is a scatter-add — the first cut looped
-        #     `X[assign == k].mean(0)` per OCCUPIED cluster, O(k·n)
-        #     boolean masks (measured 0.1 s vs minutes at k=4096);
-        # (2) the assignment matmul runs in float32 against a
-        #     CONTIGUOUS transposed centroid matrix — this container's
-        #     OpenBLAS does ~1.3 Gflop/s on a strided float64 gemm and
-        #     2.7x that in float32 (measured: 47.7 -> 17.4 s per round
-        #     at k=4096, n=100k). Assignment is a bucketing decision, so
-        #     float32 argmax is fine for a seeded quantizer (rows-only
-        #     + property contracts; builder stamps rebuild every cached
-        #     index); the MEANS still accumulate from float64 X.
-        # The 100 TB answer remains the distributed partial-moment
-        # Lloyd (kmeans.py) — this driver form exists for the bounded
-        # sample path and the L-table multi-seed tier.
-        X32 = X.astype(np.float32)
-        for _ in range(8):
-            ct32 = np.ascontiguousarray(cent.T.astype(np.float32))
-            half32 = (0.5 * (cent**2).sum(1)).astype(np.float32)
-            assign = (X32 @ ct32 - half32).argmax(1)
-            sums = np.zeros_like(cent)
-            np.add.at(sums, assign, X)
-            counts = np.bincount(assign, minlength=len(cent))
-            occ = counts > 0
-            cent[occ] = sums[occ] / counts[occ, None].astype(np.float64)
-        cents = [[float(x) for x in c] for c in cent]
-    except Exception:
-        cents = [[float(x) for x in r.v] for r in e.orderBy("vec_id").limit(nlist).collect()]
-    normed = []
-    for c in cents:
-        n = sum(x * x for x in c) ** 0.5
-        normed.append([x / n for x in c] if n > 0 else c)
-    return normed
+    X = sample if sample is not None else _ivf_train_prefix(e)
+    cent = _lloyd(X, _kmeans_init(X, nlist, seed), f32=True)
+    return _unit_rows(cent).tolist()
+
+
+def _ivf_train_prefix(e: DataFrame):
+    """The (rows, dim) float64 training prefix of ``e``: its first
+    _IVF_TRAIN_CAP ``v`` vectors, a bounded metadata collect."""
+    import numpy as np
+
+    return np.asarray(
+        [r.v for r in e.limit(_IVF_TRAIN_CAP).select("v").collect()],
+        dtype=np.float64,
+    )
 
 
 def _ivf_candidates(
@@ -1149,18 +1100,10 @@ def _ivf_candidates(
     if nlist is None:
         nlist = min(_ivf_nlist(n_corpus), max(1, n_corpus))
     tables = max(1, tables)
-    sample = None
-    if tables > 1:
-        # collect the bounded training prefix ONCE and share it across
-        # the L independently-seeded k-means builds (the seeds vary the
-        # init, not the data — re-collecting per table paid L scans)
-        try:
-            sample = np.asarray(
-                [r.v for r in e.limit(_IVF_TRAIN_CAP).select("v").collect()],
-                dtype=np.float64,
-            )
-        except Exception:
-            sample = None  # _ivf_centroids falls back per table
+    # collect the bounded training prefix ONCE and share it across the
+    # L independently-seeded k-means builds (the seeds vary the init,
+    # not the data — re-collecting per table paid L scans)
+    sample = _ivf_train_prefix(e)
     cents_per_table = [
         _ivf_centroids(spark, e, nlist, seed=7 + 13 * t, sample=sample)
         for t in range(tables)
@@ -1357,6 +1300,28 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivf_stamp(nlist: int) -> str:
+    """The builder stamp of a standing flat IVF quantizer and its
+    inverted file: every function and knob the persisted bytes depend
+    on — the centroid trainer AND the Lloyd kernel it calls (a wrapper
+    in a stamp list hides edits to the body it calls), the assignment
+    pass, nlist and the training cap. Shared by ivf_index,
+    ivf_corpus_index and the hier root level (_hier_index_stamp)."""
+    from mr_py_spark.operators.bucketed import builder_stamp
+    from mr_py_spark.operators.vectors import (
+        _kmeans_init,
+        _lloyd,
+        _nearest,
+        _unit_rows,
+    )
+
+    return builder_stamp(
+        _ivf_centroids, _ivf_train_prefix, ivf_assign_with, _ivf_assign_pass,
+        _kmeans_init, _lloyd, _nearest, _unit_rows,
+        nlist=nlist, train_cap=_IVF_TRAIN_CAP,
+    )
+
+
 def ivf_index(spark: SparkSession, sf_dir: str):
     """The STANDING IVF index (the ANN analogue of the corpus LSH
     index, dedup.py:corpus_lsh_index): centroids and the assigned
@@ -1390,12 +1355,7 @@ def ivf_index(spark: SparkSession, sf_dir: str):
     # static schemas: a fresh session re-attaching valid persisted
     # files must never invoke the builders just for the DDL — build_cent
     # runs the full driver-side k-means eagerly (ADVICE r11)
-    from mr_py_spark.operators.bucketed import builder_stamp
-
-    stamp = builder_stamp(
-        _ivf_centroids, ivf_assign_with, _ivf_assign_pass,
-        nlist=nlist, train_cap=_IVF_TRAIN_CAP,
-    )
+    stamp = _ivf_stamp(nlist)
     cent = _bucketed_table(
         spark, sf_dir, "ivf_cent", "cid", frame_of=build_cent,
         src_name="embeddings", schema="cid long, cv array<double>",
@@ -1431,9 +1391,9 @@ def _ivf_assign_pass(cent: DataFrame, vectors: DataFrame, with_score: bool) -> D
     output columns are the INPUT ARRAYS passed through untouched —
     only ``bucket``/``score`` are newly materialized. The similarity
     values are the same float64 ``m @ cmat.T`` dgemm over the same
-    rows, so assignments are bit-identical (pinned by the A/B in
-    scripts/r17_assign_ab.py and the standing append-equals-rebuild
-    property tests)."""
+    rows, so assignments are bit-identical (pinned by the standing
+    append-equals-rebuild property tests). A null or wrong-length
+    vector raises instead of reshaping into misaligned rows."""
     import numpy as np
     import pyarrow as pa
 
@@ -1450,8 +1410,15 @@ def _ivf_assign_pass(cent: DataFrame, vectors: DataFrame, with_score: bool) -> D
                 continue
             vec_id = rb.column(rb.schema.get_field_index("vec_id"))
             v = rb.column(rb.schema.get_field_index("v"))
-            flat = v.flatten().to_numpy(zero_copy_only=False)
-            m = flat.reshape(rb.num_rows, -1)
+            vals = v.flatten()
+            d = cmat.shape[1]
+            # per-row lengths, not just the total: a 63- and a 65-dim
+            # row still flatten to 2·64 values
+            if v.null_count or vals.null_count or (np.diff(v.offsets) != d).any():
+                raise ValueError(
+                    f"column 'v' holds a null or a vector whose length is not {d}"
+                )
+            m = vals.to_numpy(zero_copy_only=False).reshape(rb.num_rows, d)
             sims = m @ cmat.T
             bucket = pa.array(sims.argmax(1).astype(np.int64), type=pa.int64())
             if with_score:
@@ -1598,16 +1565,10 @@ def ivf_corpus_index(spark: SparkSession, sf_dir: str):
             [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
         )
 
-    # builder stamp covers every knob the persisted content depends on
-    # (quantizer source incl. seed/iterations, assignment source, the
-    # corpus/delta split constants, nlist) — review r12: stamping one
-    # hand-picked knob misses the rest of the class
     from mr_py_spark.operators.bucketed import builder_stamp
 
-    stamp = builder_stamp(
-        _ivf_centroids, ivf_assign_with, _ivf_assign_pass,
-        nlist=nlist, inc=(_INC_MULT, _INC_BUCKETS, _INC_DELTA_BUCKET),
-        train_cap=_IVF_TRAIN_CAP,
+    stamp = _ivf_stamp(nlist) + builder_stamp(
+        inc=(_INC_MULT, _INC_BUCKETS, _INC_DELTA_BUCKET)
     )
     cent = _bucketed_table(
         spark, sf_dir, "ivf_corpus_cent", "cid", frame_of=build_cent,
@@ -2763,28 +2724,6 @@ _AUDIT_NLIST = 16  # coarse cells for the A/B (driver-sf scale)
 _AUDIT_TRAIN = 4096  # bounded, hash-free deterministic train prefix
 
 
-def _audit_lloyd(X, k: int, iters: int = 8, seed: int = 7):
-    """Plain-L2 Lloyd on a bounded in-memory sample for the whitening
-    A/B: BOTH variants must use the same assignment rule, and the
-    spherical tier's centroid normalization (`_ivf_centroids`) is only
-    meaningful for unit-norm inputs — whitened vectors aren't. Same
-    scatter-add mean update as the main driver Lloyd (the r13
-    O(k·n)-mask lesson); float64 throughout (k here is tiny)."""
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    cent = X[rng.choice(len(X), min(k, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        d2 = (X**2).sum(1)[:, None] - 2.0 * (X @ cent.T) + (cent**2).sum(1)
-        assign = d2.argmin(1)
-        sums = np.zeros_like(cent)
-        np.add.at(sums, assign, X)
-        counts = np.bincount(assign, minlength=len(cent))
-        occ = counts > 0
-        cent[occ] = sums[occ] / counts[occ, None].astype(np.float64)
-    return cent
-
-
 def _quantizer_stats(spark: SparkSession, frame: DataFrame, back):
     """(cells_used, occ_max, occ_cv, pq_mse_raw) for one A/B variant.
     ``frame`` is (vec_id, v); ``back`` maps quantization residuals
@@ -2798,7 +2737,7 @@ def _quantizer_stats(spark: SparkSession, frame: DataFrame, back):
     import numpy as np
     import pandas as pd
 
-    from mr_py_spark.operators.vectors import _pq_train
+    from mr_py_spark.operators.vectors import _lloyd, _nearest, _pq_train
 
     X = np.asarray(
         [
@@ -2810,7 +2749,13 @@ def _quantizer_stats(spark: SparkSession, frame: DataFrame, back):
         ],
         dtype=np.float64,
     )
-    cent = _audit_lloyd(X, _AUDIT_NLIST)
+    # plain-L2 cells from a seeded-choice start: the spherical tier's
+    # normalization only means something for unit-norm inputs, and
+    # whitened vectors aren't
+    pick = np.random.RandomState(7).choice(
+        len(X), min(_AUDIT_NLIST, len(X)), replace=False
+    )
+    cent = _lloyd(X, X[pick])
     d = X.shape[1]
     sub = 8
     books = _pq_train(X, m=d // sub, k=16, sub=sub)
@@ -2823,8 +2768,7 @@ def _quantizer_stats(spark: SparkSession, frame: DataFrame, back):
             if not len(pdf):
                 continue
             M = np.asarray(list(pdf["v"]), dtype=np.float64)
-            d2 = -2.0 * (M @ c_b.T) + (c_b**2).sum(1)
-            cell = d2.argmin(1)
+            cell = _nearest(M, c_b)
             recon = np.empty_like(M)
             for mi in range(m):
                 s = M[:, mi * sub_b : (mi + 1) * sub_b]

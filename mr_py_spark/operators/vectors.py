@@ -14,6 +14,7 @@ below true precision anywhere.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,30 +133,82 @@ _PQ_TRAIN = 4096  # bounded training sample (hash-ordered, deterministic)
 _PQ_ITERS = 8
 
 
+def _kmeans_init(X, k: int, seed: int):
+    """Start centres for the driver/worker Lloyd kernel: ``k`` clamped
+    to the sample size, farthest-point picks at k <= 64 (argmax of d2 —
+    maximally spread, a deterministic quality knob; NOT k-means++ D^2
+    sampling, which would draw proportionally to d2) and a seeded
+    choice above (farthest-point costs k passes over X)."""
+    n = len(X)
+    k = max(1, min(k, n))
+    rng = np.random.RandomState(seed)
+    if k > 64:
+        return X[rng.choice(n, k, replace=False)]
+    idx = [int(rng.randint(n))]
+    d2 = ((X - X[idx[0]]) ** 2).sum(1)
+    for _ in range(k - 1):
+        nxt = int(d2.argmax())
+        idx.append(nxt)
+        d2 = np.minimum(d2, ((X - X[nxt]) ** 2).sum(1))
+    return X[idx]
+
+
+def _nearest(X, cent, f32: bool = False):
+    """Nearest centre per row: argmin ||x-c||^2 == argmax x.c - |c|^2/2.
+    ``f32`` runs the matmul in float32 against a CONTIGUOUS transposed
+    centre matrix: the bundled OpenBLAS measured 2.7x faster than a
+    strided float64 gemm (47.7 -> 17.4 s per round at k=4096,
+    n=100k). Assignment is a bucketing decision, so a float32 argmax
+    is fine for a seeded quantizer."""
+    half = 0.5 * (cent**2).sum(1)
+    if not f32:
+        return (X @ cent.T - half).argmax(1)
+    ct = np.ascontiguousarray(cent.T, dtype=np.float32)
+    return (X.astype(np.float32) @ ct - half.astype(np.float32)).argmax(1)
+
+
+def _lloyd(X, cent, iters: int = 8, f32: bool = False):
+    """THE in-memory Lloyd kernel behind every quantizer fit (IVF/hier
+    roots, hier leaves, PQ codebooks, the whitening audit): ``iters``
+    rounds from the float64 start centres ``cent`` (updated in place
+    and returned). The mean update is a scatter-add — a per-cluster
+    ``X[assign == k].mean(0)`` mask loop is O(k·n) per round, minutes
+    at k=4096 — and it accumulates from float64 X whatever ``f32``
+    does to the assignment. Empty clusters keep their previous centre.
+    The distributed exact-integer Lloyd is kmeans.py, a different
+    arithmetic on purpose (oracle-backed)."""
+    for _ in range(iters):
+        assign = _nearest(X, cent, f32)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, assign, X)
+        counts = np.bincount(assign, minlength=len(cent))
+        occ = counts > 0
+        cent[occ] = sums[occ] / counts[occ, None].astype(np.float64)
+    return cent
+
+
+def _unit_rows(C):
+    """Rows L2-normalized (zero rows left as they are), so dot ==
+    cosine during spherical assignment."""
+    norms = np.linalg.norm(C, axis=1)
+    norms[norms == 0.0] = 1.0
+    return C / norms[:, None]
+
+
 def _pq_train(X, m: int = _PQ_M, k: int = _PQ_K, sub: int = _PQ_SUB, iters: int = _PQ_ITERS):
-    """Per-subspace Lloyd k-means on the bounded training sample.
-    Deterministic: init = the first ``k`` training rows in hash order,
-    fixed iteration count, numpy float64 throughout. Returns an
+    """Per-subspace Lloyd k-means (``_lloyd``) on the bounded training
+    sample. Deterministic: init = the first ``k`` training rows in hash
+    order, fixed iteration count, float64 throughout. Returns an
     (m, k, sub) codebook array. Storage quantization (emb_pq_codes)
     uses the coarse default (8x16, 4 bytes/vec); the IVFPQ search tier
     passes 16x256 (16 bytes/vec) — coarser codes collapse
     within-cluster neighbors to identical codes and ADC ranking
     degenerates (measured: nn5-in-ADC-top100 0.32 at 8x16 vs 0.99 at
     16x256 on the zipf cluster corpus)."""
-    import numpy as np
-
     books = np.empty((m, k, sub))
     for mi in range(m):
         s = X[:, mi * sub : (mi + 1) * sub]
-        cent = s[:k].copy()
-        for _ in range(iters):
-            d2 = ((s[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-            assign = d2.argmin(1)
-            for ki in range(k):
-                mask = assign == ki
-                if mask.any():
-                    cent[ki] = s[mask].mean(0)
-        books[mi] = cent
+        books[mi] = _lloyd(s, s[:k].copy(), iters)
     return books
 
 
@@ -176,12 +229,11 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: training collects a hash-ordered _PQ_TRAIN-row sample
     (TakeOrderedAndProject; a BOUNDED metadata collect ~1 MB, the same
-    exemption class as the IVF centroid fallback — CLAUDE.md); the
+    exemption class as the IVF root training sample); the
     codebook broadcast is (8*16*8) doubles; encoding is ONE
     zero-shuffle Arrow-vectorized pass (mapInPandas, numpy argmin per
     subspace). Nothing in the plan scales with anything but n/width.
     """
-    import numpy as np
     import pandas as pd
 
     from mr_py_spark.util import bc

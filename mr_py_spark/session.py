@@ -190,7 +190,7 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
         # VERDICT r15 item 5; A/B in SCALE.md r16). Task-level
         # parallelism comes from Spark; intra-task BLAS threads only
         # fight it. The DRIVER process is deliberately left unpinned —
-        # the bounded-sample k-means (_np_spherical_kmeans) runs there
+        # the bounded-sample root k-means (vectors._lloyd) runs there
         # and does benefit from threaded BLAS.
         .config(
             "spark.executorEnv.OPENBLAS_NUM_THREADS",
