@@ -248,11 +248,10 @@ def minhash_pairs_from_bands(
         band_entries = band_entries.join(
             F.broadcast(hot), ["band_id", "band_key"], "left_anti"
         )
-    # JVM-parsed join condition + verify expression (r17, VERDICT r16
-    # item 1: the 2×16-col aliasing select and the 16-term agreement
-    # sum were ~1,500 py4j round trips per construction). The
-    # intermediate 34-column .distinct() is GONE (one exchange + two
-    # HashAggregates removed): jaccard_est is a pure function of the
+    # JVM-parsed join condition + verify expression: the 2×16-col
+    # aliasing select and the 16-term agreement sum were ~1,500 py4j
+    # round trips per construction. No intermediate distinct over the
+    # 34 signature columns: jaccard_est is a pure function of the
     # signatures, so pairs duplicated across shared bands collapse
     # identically in the final distinct — output set unchanged
     # (property-pinned).

@@ -1855,7 +1855,7 @@ def drift_ref_stats(
     loops' first-index writes), so this bootstrap is strictly the
     REPAIR path: a crash between the index swap and the pin, or a
     pre-r16 table. Pinning at creation closes the window where up to
-    drift_check_every−1 post-generation batches joined the reference
+    check_every−1 post-generation batches joined the reference
     cohort, and moves the one O(index) bootstrap pass (25 s at 2M)
     out of the serving loop and into the build/retrain that is
     already O(index). An EMPTY cohort is returned but never pinned
@@ -1936,7 +1936,7 @@ def pin_drift_ref(
     ``drift_ref_stats`` this OVERWRITES any sidecar (creation defines
     the generation; a leftover file can only be stale) and defaults
     ``assigned`` to the table itself. Closes the first-check window
-    (up to drift_check_every−1 post-creation batches previously joined
+    (up to check_every−1 post-creation batches previously joined
     the reference cohort) and keeps the O(index) scoring pass inside
     the build/retrain, which is already O(index) — the serving loop's
     scheduled checks are then always the warm 1-file read. An empty
@@ -2813,8 +2813,8 @@ def emb_whiten_quantizer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers are comparable). Rows-only: k-means/PQ float iterations
     are engine-specific; the emit contract (exactly these two
     variants, stats well-formed) is property-tested, and SCALE.md r14
-    pins the measured DIRECTION (scripts/r14_whiten_ab.py, 200k
-    vectors): on the near-isotropic fixture whitening is a wash
+    ("Whitening preconditioner A/B", 200k vectors) pins the measured
+    DIRECTION: on the near-isotropic fixture whitening is a wash
     (occ_cv 0.046→0.053, PQ MSE unchanged — nothing to fix, noise
     amplified); on a spectrally-decayed variant (condition ~400) it
     FIXES coarse-cell balance (occ_cv 0.150→0.053, occ_max −14%) while

@@ -212,7 +212,7 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
         # probed fraction). Set here and NOT in harden(): harden is in
         # every registered query's fingerprint closure, so a conf
         # nudge there re-stamps the whole registry into the driver
-        # verification window at once (the registry.py:314 hazard —
+        # verification window at once (the `_fingerprint` hazard —
         # this exact edit did it in-session before being moved). A
         # vanilla harness session keeps Spark's default; the prune is
         # a performance pushdown, never a correctness dependency.

@@ -16,6 +16,8 @@ import json
 import os
 import re
 
+import pytest
+
 from mr_py_spark.registry import (
     FLAGSHIPS,
     DriverRow,
@@ -128,11 +130,11 @@ def test_fingerprint_sidecar_stable_across_loads():
 
 
 def test_sidecar_never_written_from_pytest(monkeypatch):
-    """A pytest process must NEVER persist fingerprint stamps (VERDICT
-    r11): tests monkeypatch module constants, and a sidecar sync running
-    while module state is patched hashes the patched values — poisoning
-    entries with wrong fingerprints and dirtying the tree on every full
-    test run. Force a dirty entry (a name the sidecar has never seen)
+    """A pytest process must NEVER persist fingerprint stamps: tests
+    replace module functions (the crash harness wraps
+    streaming.maintenance_step), and a sidecar sync running while one is
+    patched hashes the wrapper's closure — poisoning entries with wrong
+    fingerprints and dirtying the tree on every full test run. Force a dirty entry (a name the sidecar has never seen)
     through _fingerprint_rounds and assert the on-disk sidecar is
     byte-identical after — while the IN-MEMORY stamp still marks the
     new entry as upcoming (ordering behavior is ungated)."""
@@ -267,30 +269,220 @@ def test_verification_ledger_shape_and_staleness_budget():
         assert not outside, f"unproven queries outside the window: {outside}"
 
 
-def test_fingerprint_sees_module_data_constants(monkeypatch):
-    """fp schema v2: changing a referenced module-level data constant
-    (a threshold, a bucket count, a conf dict) must change the
-    fingerprint — the r10 harden() conf edit escaped re-stamping
-    because only function sources were hashed."""
-    import mr_py_spark.operators.kmeans as km
-    from mr_py_spark.registry import _fingerprint
+# Fingerprints of one checkout, computed in a fresh interpreter whose
+# cwd is the checkout: {query: [fingerprint, sorted closure keys]}.
+# PYTEST_CURRENT_TEST keeps the run from writing a sidecar.
+_FP_SCRIPT = """
+import json, os, sys
+from mr_py_spark import registry
+assert registry.__file__.startswith(os.getcwd()), registry.__file__
+memo = {}
+out = {}
+for name, q in registry.load_all().items():
+    funcs, consts = registry._dep_closure(q.fn, memo)
+    out[name] = [registry._fingerprint(q, memo), sorted({**funcs, **consts})]
+json.dump(out, sys.stdout)
+"""
 
-    reg = load_all()
-    q = reg["semantic_dedup"]
-    before = _fingerprint(q)
-    monkeypatch.setattr(km, "_TAU", 0.99)
-    after = _fingerprint(q)
-    assert before != after
+_FP_ENV_KNOBS = (
+    "TMPDIR",
+    "SPARK_GRAFT_BUCKETS",
+    "SPARK_GRAFT_IVF_TABLES",
+    "SPARK_GRAFT_WAREHOUSE",
+)
+
+# variant -> (file under mr_py_spark/, old text, new text): one
+# behaviour-changing source edit each.
+_FP_EDITS = {
+    "tau": ("operators/kmeans.py", "_TAU = 0.35\n", "_TAU = 0.36\n"),
+    "confs": (
+        "session.py",
+        '"spark.sql.adaptive.enabled": "true",',
+        '"spark.sql.adaptive.enabled": "false",',
+    ),
+    "pq_k": (
+        "operators/hier.py",
+        "_PQ_M, _PQ_K = 16, 256\n",
+        "_PQ_M, _PQ_K = 16, 128\n",
+    ),
+    "body": (
+        "functions/__init__.py",
+        'return F.lit(literal).cast("timestamp_ntz")',
+        'return F.lit(str(literal)).cast("timestamp_ntz")',
+    ),
+    "default": ("operators/graph.py", "_DAMPING = 0.85\n", "_DAMPING = 0.8\n"),
+}
+
+
+def _rewrite_docs_and_comments(path) -> None:
+    """Replace every docstring (with a longer one) and every comment of
+    one module, and prepend a comment line: only text the fingerprint
+    must ignore changes, and every line number moves."""
+    import ast
+    import io
+    import tokenize
+
+    src = path.read_bytes()
+    starts = [0]
+    for line in src.splitlines(keepends=True):
+        starts.append(starts[-1] + len(line))
+    spans = [
+        (
+            starts[d.lineno - 1] + d.col_offset,
+            starts[d.end_lineno - 1] + d.end_col_offset,
+        )
+        for node in ast.walk(ast.parse(src))
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and ast.get_docstring(node, False) is not None
+        for d in node.body[:1]
+    ]
+    for a, b in sorted(spans, reverse=True):  # ast offsets are in bytes
+        src = src[:a] + b'"""Rewritten docstring.\n\nOne line longer."""' + src[b:]
+    text = src.decode()
+    lines = text.splitlines(keepends=True)
+    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.type == tokenize.COMMENT:
+            (row, col), (_, end) = tok.start, tok.end
+            line = lines[row - 1]
+            lines[row - 1] = line[:col] + "# rewritten comment" + line[end:]
+    path.write_text("# leading comment\n" + "".join(lines))
+
+
+@pytest.fixture(scope="module")
+def fp_variants(tmp_path_factory):
+    """{variant: fingerprint-script output} for this checkout ("base",
+    run without the env knobs), a verbatim copy at another path run with
+    every ``_FP_ENV_KNOBS`` entry set ("moved"), a copy with every
+    docstring and comment rewritten ("docs"), and one copy per
+    ``_FP_EDITS`` entry."""
+    import shutil
+    import subprocess
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    base_env = {k: v for k, v in os.environ.items() if k not in _FP_ENV_KNOBS}
+    base_env["PYTEST_CURRENT_TEST"] = "fingerprint-harness"
+    runs = {"base": (ROOT, base_env)}
+    for variant in ("moved", "docs", *_FP_EDITS):
+        root = tmp_path_factory.mktemp(f"fp_{variant}")
+        shutil.copytree(
+            os.path.join(ROOT, "mr_py_spark"),
+            root / "mr_py_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        env = dict(base_env)
+        if variant == "moved":
+            (root / "tmp").mkdir()
+            env.update(
+                TMPDIR=str(root / "tmp"),
+                SPARK_GRAFT_BUCKETS="16",
+                SPARK_GRAFT_IVF_TABLES="2",
+                SPARK_GRAFT_WAREHOUSE=str(root / "tmp" / "warehouse"),
+            )
+        elif variant == "docs":
+            for path in (root / "mr_py_spark").rglob("*.py"):
+                _rewrite_docs_and_comments(path)
+        else:
+            rel, old, new = _FP_EDITS[variant]
+            path = root / "mr_py_spark" / rel
+            text = path.read_text()
+            assert text.count(old) == 1, (variant, old)
+            path.write_text(text.replace(old, new))
+        runs[variant] = (str(root), env)
+
+    def run(item):
+        variant, (root, env) = item
+        proc = subprocess.run(
+            [sys.executable, "-c", _FP_SCRIPT],
+            cwd=root,
+            env=dict(env, PYTHONPATH=root),
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, (variant, proc.stderr[-2000:])
+        return variant, json.loads(proc.stdout)
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        out = dict(pool.map(run, runs.items()))
+    for variant, (root, _) in runs.items():
+        if variant != "base":  # the pytest gate kept the copies sidecar-free
+            assert not os.path.exists(os.path.join(root, ".fingerprints.json"))
+    return out
+
+
+def _fps(run: dict) -> dict[str, str]:
+    return {name: fp for name, (fp, _) in run.items()}
+
+
+def _changed_by_edit(fp_variants, variant: str, *keys: str) -> set[str]:
+    """The queries whose fingerprint the ``variant`` edit changed,
+    checked to be exactly the queries whose closure holds one of
+    ``keys`` (fully qualified names)."""
+    base, edited = _fps(fp_variants["base"]), _fps(fp_variants[variant])
+    assert edited.keys() == base.keys()
+    changed = {n for n in base if base[n] != edited[n]}
+    reach = {
+        n for n, (_, closure) in fp_variants["base"].items() if set(keys) & set(closure)
+    }
+    assert changed == reach, (variant, sorted(changed ^ reach))
+    return changed
+
+
+def test_fingerprint_invariant_to_path_env_docstrings_and_comments(fp_variants):
+    """The fingerprint reads only the checkout's code: another checkout
+    path, TMPDIR, SPARK_GRAFT_BUCKETS / _IVF_TABLES / _WAREHOUSE, and
+    rewritten docstrings and comments (which also move every line)
+    leave every query's fingerprint unchanged."""
+    base = _fps(fp_variants["base"])
+    assert len(base) == len(load_all())
+    assert _fps(fp_variants["moved"]) == base
+    assert _fps(fp_variants["docs"]) == base
+
+
+def test_fingerprint_sees_module_data_constants(fp_variants):
+    """Editing a referenced module-level data constant's definition (a
+    threshold, a bucket count, a conf dict) must change the
+    fingerprint of exactly the queries that reach it."""
+    changed = _changed_by_edit(fp_variants, "tau", "mr_py_spark.operators.kmeans._TAU")
+    assert "semantic_dedup" in changed
+    assert len(changed) < len(fp_variants["base"])
+
+
+def test_fingerprint_sees_harden_conf_dict(fp_variants):
+    """Every query reaches harden() through tbl(), and harden's
+    behavior is driven by the module-level _RUNTIME_CONFS dict: editing
+    one entry must re-stamp."""
+    changed = _changed_by_edit(
+        fp_variants, "confs", "mr_py_spark.session._RUNTIME_CONFS"
+    )
+    assert "q1_pricing_summary" in changed
+
+
+def test_fingerprint_sees_tuple_bindings_bodies_and_defaults(fp_variants):
+    """A constant bound by a tuple assignment, a helper's function
+    body, and a constant read only as an argument default each
+    re-stamp exactly the queries that reach them."""
+    hier = "mr_py_spark.operators.hier"
+    pq = _changed_by_edit(fp_variants, "pq_k", f"{hier}._PQ_M", f"{hier}._PQ_K")
+    assert "knn_hier_pq_topk_indexed" in pq
+    body = _changed_by_edit(fp_variants, "body", "mr_py_spark.functions.ts_ntz")
+    assert "q1_pricing_summary" in body
+    damping = _changed_by_edit(
+        fp_variants, "default", "mr_py_spark.operators.graph._DAMPING"
+    )
+    assert "pagerank_parts" in damping
+    for changed in (pq, body, damping):
+        assert 0 < len(changed) < len(fp_variants["base"])
 
 
 def test_dep_closure_sees_function_local_imports():
-    """fp schema v3 (r15): a dependency bound by a function-LOCAL
-    ``from mr_py_spark... import x`` must be in the closure — the
-    streaming module imports almost everything this way, so the
-    globals-only walk (v2) silently missed e.g. an ivf_index_append
-    edit under every streaming query. The v2 reproduction path
-    (local_imports=False) must keep NOT seeing it, or migration
-    re-checks would re-stamp the world."""
+    """A dependency bound by a function-LOCAL ``from mr_py_spark...
+    import x`` must be in the closure: the streaming module imports
+    almost everything this way, so a globals-only walk silently missed
+    e.g. an ivf_index_append edit under every streaming query."""
     from mr_py_spark.registry import _dep_closure
 
     def probe(spark, sf_dir):
@@ -298,38 +490,35 @@ def test_dep_closure_sees_function_local_imports():
 
         return replay_guard
 
-    sources, _ = _dep_closure(probe)
-    assert any("def replay_guard" in s for s in sources)
-    sources_v2, _ = _dep_closure(probe, local_imports=False)
-    assert not any("def replay_guard" in s for s in sources_v2)
-    # constants bound by local import are folded too (the v2 rule,
-    # extended to the local-import channel)
+    funcs, _ = _dep_closure(probe, {})
+    assert "mr_py_spark.operators.bucketed.replay_guard" in funcs
+    # constants bound by local import are folded too, as the source
+    # that defines them (not the value this process gave them)
     def probe2(spark, sf_dir):
         from mr_py_spark.operators.bucketed import _BUCKETS
 
         return _BUCKETS
 
-    _, consts = _dep_closure(probe2)
-    assert any(
-        c.startswith("mr_py_spark.operators.bucketed._BUCKETS=") for c in consts
-    )
+    _, consts = _dep_closure(probe2, {})
+    assert "SPARK_GRAFT_BUCKETS" in consts["mr_py_spark.operators.bucketed._BUCKETS"]
     # the closure is transitive THROUGH a locally-imported function
     def probe3(spark, sf_dir):
         from mr_py_spark.operators.dedup import lsh_index_append
 
         return lsh_index_append
 
-    sources3, _ = _dep_closure(probe3)
-    assert any("def lsh_index_append" in s for s in sources3)
-    assert any("def raise_watermark" in s for s in sources3)  # its local import
+    funcs3, _ = _dep_closure(probe3, {})
+    assert "mr_py_spark.operators.dedup.lsh_index_append" in funcs3
+    # ... and through that function's own local import
+    assert "mr_py_spark.operators.bucketed.raise_watermark" in funcs3
 
 
 def test_fingerprint_schema_migration_keeps_rounds(tmp_path, monkeypatch):
-    """Bumping _FP_VERSION re-hashes entries but KEEPS their recorded
-    round — PROVIDED the old-schema hash still matches (the query
-    itself is unchanged). A real edit that shares a sync with the
-    version bump must NOT ride the migration: it re-enters the window
-    (ADVICE r11 — the exact miss class the sidecar exists to prevent)."""
+    """A sidecar entry keeps its recorded round only while both its
+    fingerprint and its schema version match. An entry recorded under
+    another version (a retired or unknown schema) or with a stale
+    fingerprint re-enters the window, re-stamped at the current
+    version."""
     import json as _json
 
     import mr_py_spark.registry as regmod
@@ -337,55 +526,25 @@ def test_fingerprint_schema_migration_keeps_rounds(tmp_path, monkeypatch):
     reg = load_all()
     victim = next(iter(reg))
     q = reg[victim]
-    v1_fp = regmod._fingerprint_v1(q)
+    fp = regmod._fingerprint(q, {})
     side = tmp_path / ".fingerprints.json"
-    side.write_text(_json.dumps({victim: {"fp": v1_fp, "round": 3, "v": 1}}))
     monkeypatch.setattr(regmod, "_FP_PATH", str(side))
     # this test exercises the WRITE path against a private tmp sidecar,
     # so lift the pytest write gate (test_sidecar_never_written_from_pytest
     # covers the gate itself against the real sidecar)
     monkeypatch.delenv("PYTEST_CURRENT_TEST", raising=False)
-    rounds = regmod._fingerprint_rounds({victim: q})
-    assert rounds[victim] == 3  # unchanged query: preserved
-    stored = _json.loads(side.read_text())[victim]
-    assert stored["v"] == regmod._FP_VERSION
-    assert stored["fp"] == regmod._fingerprint(q)
-    # an entry whose OLD-schema hash does NOT match (the query was
-    # edited in the same sync as the bump) is re-stamped to upcoming
-    side.write_text(
-        _json.dumps({victim: {"fp": "edited-alongside-bump", "round": 3, "v": 1}})
-    )
-    rounds_edit = regmod._fingerprint_rounds({victim: q})
-    assert rounds_edit[victim] > 3
-    # an UNKNOWN recorded version (no keeper hash fn) also re-verifies
-    side.write_text(_json.dumps({victim: {"fp": "???", "round": 3, "v": 99}}))
-    assert regmod._fingerprint_rounds({victim: q})[victim] > 3
-    # and a REAL change after a completed migration is still caught
-    side.write_text(
-        _json.dumps(
-            {victim: {"fp": "now-stale-again", "round": 3, "v": regmod._FP_VERSION}}
-        )
-    )
-    rounds2 = regmod._fingerprint_rounds({victim: q})
-    assert rounds2[victim] > 3
 
+    def rounds_for(entry):
+        side.write_text(_json.dumps({victim: entry}))
+        return regmod._fingerprint_rounds({victim: q})[victim]
 
-def test_fingerprint_sees_harden_conf_dict(monkeypatch):
-    """Regression for the exact r10 escape: every query reaches
-    harden() through tbl(), and harden's behavior is driven by the
-    module-level _RUNTIME_CONFS dict — editing it must re-stamp (under
-    fp schema v1 it did not, which is why schema v2 exists)."""
-    import mr_py_spark.session as sess
-    from mr_py_spark.registry import _fingerprint
-
-    reg = load_all()
-    q = reg["q1_pricing_summary"]
-    before = _fingerprint(q)
-    monkeypatch.setattr(
-        sess, "_RUNTIME_CONFS", dict(sess._RUNTIME_CONFS, **{"x.y": "z"})
-    )
-    after = _fingerprint(q)
-    assert before != after
+    assert rounds_for({"fp": fp, "round": 3, "v": regmod._FP_VERSION}) == 3
+    for v in (regmod._FP_VERSION - 1, 99):  # retired / unknown schema
+        assert rounds_for({"fp": fp, "round": 3, "v": v}) > 3
+        stored = _json.loads(side.read_text())[victim]
+        assert (stored["fp"], stored["v"]) == (fp, regmod._FP_VERSION)
+    stale = {"fp": "now-stale", "round": 3, "v": regmod._FP_VERSION}
+    assert rounds_for(stale) > 3
 
 
 def test_survey8_table_matches_registry():
