@@ -144,9 +144,8 @@ def main() -> None:
         "queries": timings,
         "spread": spread,
         "sf": sf,
-        # r17 (VERDICT r16 items 4/6): make the driver's core-count
-        # scaling probe legible without a code dive. ``cpus`` is what
-        # the session actually ran (the env the driver varies);
+        # Make the core-count scaling probe legible without a code
+        # dive. ``cpus`` is what the session actually ran with;
         # ``scaling_note`` names the floor-bound class — at sf0.1 the
         # headline queries sit on Spark's ~0.2-1 s per-action JVM
         # constant (job launch + codegen), so their wall barely moves
@@ -154,7 +153,7 @@ def main() -> None:
         # knn_selfjoin and the index sub-block at sf1 (BENCH_r16 vs
         # BENCH_r16_c8: sf1 knn 2.03->3.15 s at 32->8 cores while
         # sf0.1 aggregates stayed 0.87-1.13x).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+        "cpus": spark.sparkContext.defaultParallelism,
         "scaling_note": (
             "sf0.1 headline queries are launch-floor-bound (~0.2-1s "
             "per-action JVM constant); core-count scaling is visible "

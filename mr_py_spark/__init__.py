@@ -17,8 +17,10 @@ Layout:
     mr_compat.py   - mapper/reducer veneer (reference API parity, A1-A9)
     streaming/     - Structured Streaming surface (C6-C9)
     registry.py    - query/oracle registry consumed by __spark_entry__.py
+    _zipimport.py  - stat-gated zip import cache for Python workers
 """
 
+from mr_py_spark import _zipimport  # noqa: F401  (first: workers run this file)
 from mr_py_spark.registry import REGISTRY, register
 
 __all__ = ["REGISTRY", "register"]

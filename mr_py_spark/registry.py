@@ -209,6 +209,10 @@ def _pkg_import(node: ast.AST) -> bool:
     )
 
 
+def _pkg_module(obj) -> bool:
+    return isinstance(obj, types.ModuleType) and obj.__name__.startswith("mr_py_spark")
+
+
 def _fn_node(f, memo: dict) -> tuple[str, list]:
     """(rendering, dependencies) of one function: the ``ast.dump`` of
     its dedented, docstring-stripped source, so comments, docstrings
@@ -216,11 +220,13 @@ def _fn_node(f, memo: dict) -> tuple[str, list]:
     as its raw text and a sourceless function as its qualified name.
     Dependencies are module-level names, resolved by ``_const_node``:
     every name in its (nested) code's co_names or its argument defaults
-    that is a global of its module, plus every name bound by a
-    function-local ``from mr_py_spark... import`` (the streaming module
-    imports almost everything that way). Attribute names in co_names
-    that collide with an unrelated module global only ADD material: a
-    spurious re-verification at worst, never a missed one."""
+    that is a global of its module, every co_names entry that is an
+    attribute of an mr_py_spark module bound as such a global, plus
+    every name bound by a function-local ``from mr_py_spark... import``
+    (the streaming module imports almost everything that way).
+    Attribute names in co_names that collide with an unrelated module
+    global only ADD material: a spurious re-verification at worst,
+    never a missed one."""
     try:
         src = inspect.getsource(f)
     except (OSError, TypeError):  # no source file (REPL-defined etc.)
@@ -244,6 +250,10 @@ def _fn_node(f, memo: dict) -> tuple[str, list]:
         for d in args.defaults + [d for d in args.kw_defaults if d is not None]:
             names.update(n.id for n in ast.walk(d) if isinstance(n, ast.Name))
     deps = [(mod.__name__, n) for n in sorted(names) if n in g]
+    # ``mr_compat.mapreduce(...)``: an attribute call through a package
+    # module global puts the module and the attribute in co_names
+    for m in {g[n] for n in names if _pkg_module(g.get(n))}:
+        deps += [(m.__name__, a) for a in sorted(names) if a in vars(m)]
     deps += [
         (node.module, a.name)
         for node in _stmts(tree)

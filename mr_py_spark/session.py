@@ -159,13 +159,30 @@ def harden(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM capped at
+    16g: in local mode the driver heap also holds every executor, and
+    a heap larger than the machine (16g on a 15 GB host without swap)
+    fails by the OOM killer instead of by a Java OutOfMemoryError."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):  # no sysconf: old default
+        return "16g"
+    return f"{min(16 * 1024, ram // 2 // 2**20)}m"
+
+
 def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSession:
     """Build a local session sized for this machine.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Shuffle
     partitions are pinned to the core count: at local scale the default
     200 over-parallelizes tiny shuffles; on a real cluster you would
-    size this to 2-3x total executor cores and let AQE coalesce.
+    size this to 2-3x total executor cores and let AQE coalesce. The
+    driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` or half of physical RAM,
+    at most 16g.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -220,7 +237,7 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
             "spark.sql.parquet.pushdown.inFilterThreshold",
             os.environ.get("SPARK_GRAFT_PARQUET_IN_THRESHOLD", "1024"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # static conf: must be set at session build; bucketed-table tests
         # and any saveAsTable land here instead of cwd/spark-warehouse.

@@ -311,6 +311,11 @@ _FP_EDITS = {
         'return F.lit(str(literal)).cast("timestamp_ntz")',
     ),
     "default": ("operators/graph.py", "_DAMPING = 0.85\n", "_DAMPING = 0.8\n"),
+    "attr": (
+        "mr_compat.py",
+        "    if num_partitions is not None:\n",
+        "    if num_partitions:\n",
+    ),
 }
 
 
@@ -463,8 +468,10 @@ def test_fingerprint_sees_harden_conf_dict(fp_variants):
 
 def test_fingerprint_sees_tuple_bindings_bodies_and_defaults(fp_variants):
     """A constant bound by a tuple assignment, a helper's function
-    body, and a constant read only as an argument default each
-    re-stamp exactly the queries that reach them."""
+    body, a constant read only as an argument default, and a function
+    called as an attribute of a package module global
+    (``mr_compat.mapreduce``) each re-stamp exactly the queries that
+    reach them."""
     hier = "mr_py_spark.operators.hier"
     pq = _changed_by_edit(fp_variants, "pq_k", f"{hier}._PQ_M", f"{hier}._PQ_K")
     assert "knn_hier_pq_topk_indexed" in pq
@@ -474,7 +481,9 @@ def test_fingerprint_sees_tuple_bindings_bodies_and_defaults(fp_variants):
         fp_variants, "default", "mr_py_spark.operators.graph._DAMPING"
     )
     assert "pagerank_parts" in damping
-    for changed in (pq, body, damping):
+    attr = _changed_by_edit(fp_variants, "attr", "mr_py_spark.mr_compat.mapreduce")
+    assert "mr_wordcount" in attr
+    for changed in (pq, body, damping, attr):
         assert 0 < len(changed) < len(fp_variants["base"])
 
 
