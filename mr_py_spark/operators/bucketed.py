@@ -267,9 +267,24 @@ def _data_files(path: str) -> list[str]:
 
 def _commit_marker(path: str) -> str:
     """Two-phase-commit marker for ``compact_bucketed_table``'s swap:
-    lives NEXT TO the data directory (not inside it — the directory is
-    what gets renamed), and exists exactly while a swap is in flight."""
+    exists exactly while a swap is in flight. The one metadata record
+    that sits BESIDE the data directory (see ``sidecar_path``): the
+    directory is what the swap renames."""
     return path.rstrip("/") + "__commit.json"
+
+
+def sidecar_path(spark: SparkSession, table: str, name: str) -> str:
+    """Where ``table``'s per-generation metadata record ``name`` lives:
+    ``_<name>.json`` INSIDE the table's data directory. Parquet scans
+    skip ``_``-prefixed files, and the record lives and dies with its
+    generation by location: ``mode="append"`` writes leave it, an
+    overwrite write clears the directory, and the two-phase swap
+    renames a fresh directory into place, so no record can outlive the
+    rows it describes. A lost record only costs its reader one exact
+    re-derive. The swap's own commit marker is the exception
+    (``_commit_marker``): it must survive the directory rename, so it
+    sits beside the directory."""
+    return os.path.join(_table_location(spark, table), f"_{name}.json")
 
 
 def recover_compaction(spark: SparkSession, path: str) -> bool:
@@ -284,13 +299,17 @@ def recover_compaction(spark: SparkSession, path: str) -> bool:
     directory otherwise; either generation has identical content, so
     the recovered table is always full-fidelity. Idempotent: a crash
     during recovery leaves the marker, and the next call finishes."""
-    import json
-
     marker = _commit_marker(path)
-    if not os.path.exists(marker):
+    m = sidecar_read_json(
+        marker, ("table", "tmp_tbl", "path", "cols", "keys", "n_buckets")
+    )
+    if m is None:
+        if os.path.exists(marker):
+            # a swap IS in flight: guessing "none" could drop a table
+            raise RuntimeError(
+                f"recover_compaction: unreadable commit marker {marker}"
+            )
         return False
-    with open(marker) as f:
-        m = json.load(f)
     path = m["path"]
     tmp_path = f"{path.rstrip('/')}__compacting"
     old_path = f"{path.rstrip('/')}__old"
@@ -337,18 +356,14 @@ def _swap_in_side_copy(
     only after the re-attach; ``recover_compaction(spark, path)``
     finishes or rolls back a swap that crashed at any point
     (crash-injection-tested in tests/test_sinks.py)."""
-    import json
-
     tmp_path = f"{path.rstrip('/')}__compacting"
     old_path = f"{path.rstrip('/')}__old"
     marker = _commit_marker(path)
-    with open(marker + ".tmp", "w") as f:
-        json.dump(
-            {"table": table, "tmp_tbl": tmp_tbl, "path": path,
-             "cols": cols, "keys": keys, "n_buckets": n_buckets},
-            f,
-        )
-    os.replace(marker + ".tmp", marker)
+    sidecar_write_json(
+        marker,
+        {"table": table, "tmp_tbl": tmp_tbl, "path": path,
+         "cols": cols, "keys": keys, "n_buckets": n_buckets},
+    )
     spark.sql(f"DROP TABLE {tmp_tbl}")
     spark.sql(f"DROP TABLE {table}")
     os.replace(path, old_path)
@@ -402,55 +417,34 @@ def replace_bucketed_table(
     _swap_in_side_copy(spark, table, tmp_tbl, path, cols, keys, n_buckets)
 
 
-def sidecar_read_json(path: str) -> dict | None:
-    """Read a 1-record JSON metadata sidecar; ``None`` when it is
-    ABSENT or DETERMINISTICALLY unreadable (torn content, or the
-    legacy 1-row-parquet directory form) — exactly the cases where
-    every other reader of the same path fails the same way, so a
-    caller that degrades to its bootstrap/re-derive stays consistent
-    across processes. Transient I/O errors (an OSError on an existing,
-    valid file) PROPAGATE — the ADVICE r15 narrowing: silently
-    treating a transient failure as "absent" would let a replay read
-    the valid-but-lower value later and fast-path unsoundly.
-
-    Why JSON files and not 1-row parquet datasets (r16): the parquet
-    form costs a FULL Spark job per read and per write — measured
-    0.2–0.5 s each on this container — and the per-batch maintenance
-    paths (replay_guard + raise_watermark + the LSH banding lookup)
-    paid up to three of them per micro-batch. A local JSON read is
-    ~0.1 ms, and ``os.replace`` gives atomicity the parquet overwrite
-    never had (its mid-overwrite unreadable window disappears)."""
+def sidecar_read_json(path: str, keys: tuple[str, ...]) -> dict | None:
+    """Read a 1-record JSON metadata sidecar as ``{k: record[k] for k in
+    keys}``. ``None`` when it is ABSENT, torn, or misses a key: every
+    reader of the same file fails the same way, so a caller that
+    degrades to its exact re-derive stays consistent across processes.
+    Any other OSError on an existing file (a transient I/O failure)
+    PROPAGATES: read as "absent", a replay could later read the valid
+    but lower value and take an unsound fast path."""
     import json
 
     try:
         with open(path) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-    except (IsADirectoryError, ValueError):
-        # directory = legacy parquet sidecar (pre-r16 generation);
-        # ValueError covers torn/invalid JSON. Both deterministic.
+            rec = json.load(f)
+        return {k: rec[k] for k in keys}
+    except (FileNotFoundError, ValueError, KeyError, TypeError):
         return None
 
 
 def sidecar_write_json(path: str, payload: dict) -> None:
-    """Atomically (re)write a JSON metadata sidecar: tmp + fsync +
-    rename, so readers see the old record or the new one, never a torn
-    file. The fsync (ADVICE r16) extends the guarantee from process
-    crashes to power loss: without it a lost rename could leave a
-    STALE-LOW watermark standing after the subsequent table append
-    survived — the unsound direction ``replay_guard`` exists to close.
-    The parent-dir fsync after the rename is best-effort (the rename's
-    durability; a lost rename with a durable tmp is still just
-    "old record visible", which every caller handles). A legacy
-    parquet-directory sidecar at the same path is removed first (a
-    crash between the two steps leaves the sidecar absent, which every
-    caller treats as its bootstrap case — stale-never, the safe
-    direction)."""
+    """Atomically (re)write a JSON metadata sidecar: per-process tmp +
+    fsync + rename, so readers see the old record or the new one, never
+    a torn file, and a power loss cannot undo the rename after a later
+    table append survived (a STALE-LOW watermark is the unsound
+    direction ``replay_guard`` exists to close). The parent-dir fsync
+    is best-effort: a lost rename with a durable tmp still reads as the
+    old record, which every caller handles."""
     import json
 
-    if os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
         json.dump(payload, f)
@@ -484,16 +478,14 @@ def replay_guard(
     column-pruned scan, O(index) per batch at 10⁹ rows). Returns
     ``new_rows`` with ids the table already holds dropped.
 
-    Mechanism: a max-id WATERMARK in a tiny JSON sidecar NEXT TO
-    the table's own data directory (``<location>_rwm`` — no catalog
-    entry, so externally-owned sessions never get a surprise managed
-    table in their warehouse dir; JSON file, not a 1-row parquet
-    dataset — see ``sidecar_read_json``: the parquet form cost a Spark
-    job per read/write on every micro-batch). Invariant — the
+    Mechanism: a max-id WATERMARK in the table's ``rwm`` sidecar
+    (``sidecar_path``: a file inside the data directory, no catalog
+    entry, so it dies with the table generation). Invariant — the
     watermark is always >= every id the standing table holds, because
-    it is raised BEFORE the caller can append (and bootstraps from a
-    one-time full max over the table, so pre-guard appends are
-    covered). Ids ABOVE the watermark are therefore provably absent: the normal streaming batch (fresh,
+    it is raised BEFORE the caller can append and bootstraps from a
+    full max over the table (paid once per generation, which covers
+    appends made before the guard ran). Ids ABOVE the watermark are
+    therefore provably absent: the normal streaming batch (fresh,
     higher ids) passes through with ZERO index I/O — the input frame
     is returned as-is. Only ids at-or-below the watermark (a replay,
     or id reuse) pay the exact index-side semi-join, restricted to
@@ -503,23 +495,24 @@ def replay_guard(
     the append leaves the watermark stale-HIGH, which only widens the
     exact-check set (the retried batch's ids are <= wm, get checked
     against the table, found absent, and admitted — nothing lost); an
-    absent or unreadable sidecar degrades to the bootstrap full-max
-    path (and the atomic rename write means no reader can ever see a
-    torn one). The guard is only sound if every append
-    to ``table`` flows through it (or through a caller that raises the
-    watermark first) — ``append_guard`` routes every standing-index
-    append this way, and ``streaming.maintenance_step`` admits through
-    those appends. The sidecar's read-modify-write is SINGLE-WRITER (the foreachBatch driver loop
-    the whole standing-index tier assumes): two concurrent appenders
-    could interleave read/raise and leave the lower max standing.
+    absent or torn sidecar degrades to the bootstrap full max. The
+    guard is only sound if every append to ``table`` flows through it
+    (or through a caller that raises the watermark first) —
+    ``append_guard`` routes every standing-index append this way, and
+    ``streaming.maintenance_step`` admits through those appends. The
+    sidecar's read-modify-write is SINGLE-WRITER (the foreachBatch
+    driver loop the whole standing-index tier assumes): two concurrent
+    appenders could interleave read/raise and leave the lower max
+    standing.
 
-    ``minmax``: precomputed (min_id, max_id) of ``new_rows`` — a caller that already paid a
-    delta-sized agg passes it and the entirely-fresh fast path costs
-    zero Spark jobs. Must describe EXACTLY ``new_rows``'s ``id_col``
-    ((None, None) for a known-empty batch)."""
+    ``minmax``: precomputed (min_id, max_id) of ``new_rows`` — a
+    caller that already paid a delta-sized agg passes it and the
+    entirely-fresh fast path costs zero Spark jobs. Must describe
+    EXACTLY ``new_rows``'s ``id_col`` ((None, None) for a known-empty
+    batch)."""
     if not spark.catalog.tableExists(table):
         return new_rows
-    wm_path = _table_location(spark, table).rstrip("/") + "_rwm"
+    wm_path = sidecar_path(spark, table, "rwm")
     # min rides the same single pass over the delta: the normal
     # streaming batch is entirely-fresh (min > wm), which the min
     # proves WITHOUT a second suspects-empty? job — the fast path is
@@ -536,12 +529,11 @@ def replay_guard(
     if mx is None:  # empty batch
         return new_rows
     mx, mn = int(mx), int(mn)
-    rec = sidecar_read_json(wm_path)
+    rec = sidecar_read_json(wm_path, ("wm",))
     wm = None if rec is None else int(rec["wm"])
     if wm is None:
         # bootstrap: one full (column-pruned) max over the standing
-        # table, paid ONCE per table lifetime — covers ids appended
-        # before the guard existed
+        # table, paid once per table generation
         got = spark.table(table).agg(F.max(id_col)).collect()[0][0]
         wm = mx if got is None else max(mx, int(got))
         suspects = new_rows
@@ -570,12 +562,11 @@ def raise_watermark(
     max_id=_UNSET,
 ) -> None:
     """Unconditionally raise ``table``'s replay-guard watermark to
-    cover ``new_rows`` BEFORE they are appended (ADVICE r14:
-    ``replay_guard``'s soundness precondition — every append raises the
-    watermark first — was documented but not enforced; an
-    idempotent=False append of above-watermark ids left the watermark
-    stale-LOW by caller mixing, so a later idempotent replay of those
-    rows took the zero-I/O fast path and re-admitted duplicates). The
+    cover ``new_rows`` BEFORE they are appended: ``replay_guard`` is
+    sound only if every append raises the watermark first, and an
+    idempotent=False append of above-watermark ids would otherwise
+    leave it stale-LOW, so a later idempotent replay of those rows
+    would take the zero-I/O fast path and re-admit duplicates. The
     ``*_index_append`` helpers call this on every non-guarded append.
 
     Only an EXISTING watermark is raised: while no sidecar exists the
@@ -587,21 +578,16 @@ def raise_watermark(
     through ``replay_guard`` (which raises) pays only one 1-row
     sidecar read and one delta-sized max.
 
-    ``max_id`` (r17): precomputed max of ``new_rows``'s ``id_col``
-    (None for a known-empty batch) — supplied by callers that already
-    aggregated the delta (``lsh_index_append`` shares one stats pass
-    across the gauge bump and this raise), making the raise job-free."""
+    ``max_id``: precomputed max of ``new_rows``'s ``id_col`` (None for
+    a known-empty batch) — supplied by callers that already aggregated
+    the delta (``lsh_index_append`` shares one stats pass across the
+    gauge bump and this raise), making the raise job-free."""
     if not spark.catalog.tableExists(table):
         return
-    wm_path = _table_location(spark, table).rstrip("/") + "_rwm"
-    rec = sidecar_read_json(wm_path)
-    # None = absent or deterministically unreadable (legacy/torn form):
-    # replay_guard's own read fails the same way and bootstraps from
-    # the full table max, so skipping the raise is safe. A TRANSIENT
-    # failure on a valid existing file propagates out of
-    # sidecar_read_json instead of silently skipping (ADVICE r15: the
-    # later replay would read that valid stale-LOW value, fast-path,
-    # and re-admit duplicates).
+    wm_path = sidecar_path(spark, table, "rwm")
+    rec = sidecar_read_json(wm_path, ("wm",))
+    # None = absent or torn: replay_guard's own read fails the same way
+    # and bootstraps from the full table max, so skipping is safe
     if rec is None:
         return
     got = int(rec["wm"])

@@ -881,69 +881,28 @@ def lsh_index_band_rows(bands: DataFrame) -> int:
     return _N_HASHES // (int(row.m) + 1)
 
 
-def _banding_sidecar(spark: SparkSession, table: str) -> str:
-    from mr_py_spark.operators.bucketed import _table_location
-
-    return _table_location(spark, table).rstrip("/") + "_banding"
-
-
-def _table_generation(spark: SparkSession, table: str) -> int:
-    """Identity of the table's CURRENT data-directory generation: the
-    dir's inode. The crash-atomic swap (replace_bucketed_table /
-    recover_compaction) installs a NEW directory by rename, so any
-    rebuild — including a rollback — changes the inode; appends write
-    files INTO the dir and leave it unchanged. This is what lets a
-    cached derived property (the banding sidecar) self-heal across a
-    crash between the swap and the sidecar refresh: a sidecar bound to
-    the pre-swap inode simply mismatches and the caller re-derives."""
-    import os as _os
-
-    from mr_py_spark.operators.bucketed import _table_location
-
-    return int(_os.stat(_table_location(spark, table)).st_ino)
-
-
 def lsh_table_band_rows(spark: SparkSession, table: str) -> int:
     """``lsh_index_band_rows`` for a STANDING table, without the
-    per-call index scan (the replay-guard lesson, same round: a
-    bounded-looking derive that reads a full column per micro-batch is
-    O(index) per batch at 10⁹ rows). The banding rides a 1-record JSON
-    sidecar next to the table's data directory (r16: a file read, not
-    the former 1-row-parquet Spark job — 0.43 s warm measured against
-    the 0.25 s index agg it was supposed to beat; see
-    ``bucketed.sidecar_read_json``), BOUND to the data
-    dir's generation (inode — see ``_table_generation``): absent,
-    unreadable, or from another generation (pre-r14 tables, a crash
-    between lsh_reband's swap and its sidecar refresh, a compaction or
-    rollback), it degrades to the exact column derive and REPAIRS the
-    sidecar — so a stale sidecar can cost one bounded re-derive, never
-    a wrong banding."""
-    from mr_py_spark.operators.bucketed import sidecar_read_json
+    per-call index scan: a bounded-looking derive that reads a full
+    column per micro-batch is O(index) per batch at 10⁹ rows. The
+    banding rides the table's ``banding`` sidecar
+    (``bucketed.sidecar_path``), which dies with the table generation,
+    so a re-band, compaction or rollback can never leave a stale
+    banding behind; absent or torn, it is re-derived exactly from the
+    table and repaired."""
+    from mr_py_spark.operators.bucketed import (
+        sidecar_path,
+        sidecar_read_json,
+        sidecar_write_json,
+    )
 
-    side = _banding_sidecar(spark, table)
-    gen = _table_generation(spark, table)
-    rec = sidecar_read_json(side)
-    if rec is not None and int(rec["gen"]) == gen:
+    side = sidecar_path(spark, table, "banding")
+    rec = sidecar_read_json(side, ("band_rows",))
+    if rec is not None:
         return int(rec["band_rows"])
     rows = lsh_index_band_rows(spark.table(table))
-    try:
-        _banding_write(spark, table, rows, gen)
-    except OSError:
-        pass  # read-only location: derive-per-call still correct
+    sidecar_write_json(side, {"band_rows": rows})
     return rows
-
-
-def _banding_write(
-    spark: SparkSession, table: str, band_rows: int, gen: int | None = None
-) -> None:
-    from mr_py_spark.operators.bucketed import sidecar_write_json
-
-    if gen is None:
-        gen = _table_generation(spark, table)
-    sidecar_write_json(
-        _banding_sidecar(spark, table),
-        {"band_rows": int(band_rows), "gen": int(gen)},
-    )
 
 
 #: Re-band trigger: the index's mean COLLISION mass per band probe —
@@ -1023,59 +982,21 @@ def lsh_next_band_rows(cur: int) -> int:
 _GAUGE_WM_FLOOR = -(1 << 62)
 
 
-def _lsh_gauge_path(spark: SparkSession, table: str) -> str:
-    """The gauge sufficient-statistic sidecar lives INSIDE the table's
-    data directory (underscore-prefixed, so parquet scans ignore it —
-    the _SUCCESS convention): it lives and dies with the table
-    GENERATION by location. An overwrite recreation clears the
-    directory and the crash-atomic two-phase swap renames a fresh
-    directory into place, so a stale gauge can never outlive the rows
-    it summarizes — no inode binding and no write_bucketed hook needed,
-    unlike the banding sidecar that lives beside the dir."""
-    import os as _os
-
-    from mr_py_spark.operators.bucketed import _table_location
-
-    return _os.path.join(_table_location(spark, table), "_gauge.json")
-
-
-def _lsh_gauge_read(path: str) -> dict | None:
-    import json as _json
-
-    try:
-        with open(path) as f:
-            d = _json.load(f)
-        return {
-            k: int(d[k])
-            for k in ("mass", "n_docs", "prev_mass", "prev_n_docs", "bump_wm")
-        }
-    except (OSError, ValueError, KeyError, TypeError):
-        return None  # absent or half-written: caller re-derives exactly
+#: the gauge sidecar's record: current stats, the pre-bump snapshot
+#: and the bump watermark, written together in ONE atomic write — that
+#: atomicity closes every crash window between "stats updated" and
+#: "replay marker updated".
+_GAUGE_KEYS = ("mass", "n_docs", "prev_mass", "prev_n_docs", "bump_wm")
 
 
 def _lsh_gauge_write(
     path: str, cur: tuple[int, int], prev: tuple[int, int], bump_wm: int
 ) -> None:
-    """One ATOMIC write carrying the current stats, the pre-bump
-    snapshot, and the bump watermark together — the atomicity is what
-    closes every crash window between "stats updated" and "replay
-    marker updated" (they are the same os.replace)."""
-    import json as _json
-    import os as _os
+    from mr_py_spark.operators.bucketed import sidecar_write_json
 
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(
-            {
-                "mass": int(cur[0]),
-                "n_docs": int(cur[1]),
-                "prev_mass": int(prev[0]),
-                "prev_n_docs": int(prev[1]),
-                "bump_wm": int(bump_wm),
-            },
-            f,
-        )
-    _os.replace(tmp, path)
+    sidecar_write_json(
+        path, dict(zip(_GAUGE_KEYS, (*cur, *prev, bump_wm)))
+    )
 
 
 def _lsh_gauge_full(bands: DataFrame) -> tuple[int, int, int]:
@@ -1139,21 +1060,14 @@ def lsh_gauge_stats(
     only because ``lsh_reband`` is a pure function of the stored
     signatures, but the one-snapshot design is sized to the loop's
     contract, not to multi-writer tables (ADVICE r15)."""
-    path = _lsh_gauge_path(spark, table)
-    got = _lsh_gauge_read(path)
+    from mr_py_spark.operators.bucketed import sidecar_path, sidecar_read_json
+
+    path = sidecar_path(spark, table, "gauge")
+    got = sidecar_read_json(path, _GAUGE_KEYS)
     if got is None:
         mass, nd, mx = _lsh_gauge_full(spark.table(table))
-        got = {
-            "mass": mass,
-            "n_docs": nd,
-            "prev_mass": mass,
-            "prev_n_docs": nd,
-            "bump_wm": mx,
-        }
-        try:
-            _lsh_gauge_write(path, (mass, nd), (mass, nd), mx)
-        except OSError:
-            pass  # read-only location: derive-per-call still correct
+        got = dict(zip(_GAUGE_KEYS, (mass, nd, mass, nd, mx)))
+        _lsh_gauge_write(path, (mass, nd), (mass, nd), mx)
     if batch_max_id is not None and int(batch_max_id) <= got["bump_wm"]:
         return {"mass": got["prev_mass"], "n_docs": got["prev_n_docs"]}
     return {"mass": got["mass"], "n_docs": got["n_docs"]}
@@ -1243,8 +1157,10 @@ def _lsh_gauge_bump(
     ``lsh_index_append`` computes it once and shares it with the
     replay-watermark raise, so the bump adds no job beyond the
     O(delta) occupancy probe."""
-    path = _lsh_gauge_path(spark, table)
-    got = _lsh_gauge_read(path)
+    from mr_py_spark.operators.bucketed import sidecar_path, sidecar_read_json
+
+    path = sidecar_path(spark, table, "gauge")
+    got = sidecar_read_json(path, _GAUGE_KEYS)
     if got is None:
         return
     if d0 is None:
@@ -1283,9 +1199,9 @@ def _lsh_gauge_bump(
 
 
 def lsh_reband(spark: SparkSession, table: str, band_rows: int) -> dict:
-    """The re-band ACTUATOR (r14, the text tier's ivf_retrain): rewrite
-    the standing LSH index's band entries at ``band_rows`` rows per
-    band through the crash-atomic two-phase swap
+    """The re-band ACTUATOR (the text tier's ivf_retrain): rewrite the
+    standing LSH index's band entries at ``band_rows`` rows per band
+    through the crash-atomic two-phase swap
     (bucketed.replace_bucketed_table — recover_compaction rolls
     forward/back from a crash at any point; same bucket spec, so every
     consumer keeps its exchange-free scan).
@@ -1297,37 +1213,35 @@ def lsh_reband(spark: SparkSession, table: str, band_rows: int) -> dict:
     17-column distinct) + the scan-local re-banding explode. No text
     re-read, no shingling: O(index-signature bytes) once per re-band
     event. Returns {"band_rows", "n_docs"} for ledgers."""
-    from mr_py_spark.operators.bucketed import replace_bucketed_table
+    from mr_py_spark.operators.bucketed import (
+        replace_bucketed_table,
+        sidecar_path,
+        sidecar_read_json,
+        sidecar_write_json,
+    )
 
-    old_gauge = _lsh_gauge_read(_lsh_gauge_path(spark, table))
+    gauge = sidecar_path(spark, table, "gauge")
+    old_gauge = sidecar_read_json(gauge, _GAUGE_KEYS)
     sig = spark.table(table).filter(F.col("band_id") == 0).select(
         "doc_id", *[f"mh{i}" for i in range(_N_HASHES)]
     )
     entries = lsh_band_entries(sig, band_rows)
     replace_bucketed_table(spark, table, entries, _LSH_INDEX_KEYS)
-    # refresh the banding sidecar, bound to the NEW generation; a
-    # crash before this line leaves a sidecar bound to the OLD inode,
-    # which lsh_table_band_rows detects and re-derives — stale can
-    # cost a re-derive, never a wrong banding
-    _banding_write(spark, table, band_rows)
+    # the swap installed a fresh directory without sidecars; a crash
+    # before these writes just costs the next reader an exact re-derive
+    sidecar_write_json(
+        sidecar_path(spark, table, "banding"), {"band_rows": int(band_rows)}
+    )
     # refresh the gauge sufficient statistics EXACTLY from the new
-    # generation (the old gauge file vanished with the swapped-out
-    # dir; a crash before this write just costs the next reader the
-    # bootstrap): ONE column-pruned pass that also supplies the return
-    # dict's n_docs — r15, the old code paid a second band_id=0 scan
-    # for the count alone; this scan funds the O(delta) gauge for
-    # every batch until the next re-band. The bump watermark carries
-    # over monotonically: it bounds ids whose deltas were ever bumped,
-    # and a rebuild only re-bands rows already covered by it.
+    # generation: ONE column-pruned pass that also supplies the return
+    # dict's n_docs and funds the O(delta) gauge for every batch until
+    # the next re-band. The bump watermark carries over monotonically:
+    # it bounds ids whose deltas were ever bumped, and a rebuild only
+    # re-bands rows already covered by it.
     mass, n_docs, mx = _lsh_gauge_full(spark.table(table))
     if old_gauge is not None:
         mx = max(mx, old_gauge["bump_wm"])
-    try:
-        _lsh_gauge_write(
-            _lsh_gauge_path(spark, table), (mass, n_docs), (mass, n_docs), mx
-        )
-    except OSError:
-        pass  # read-only location: the bootstrap path still answers
+    _lsh_gauge_write(gauge, (mass, n_docs), (mass, n_docs), mx)
     return {"band_rows": int(band_rows), "n_docs": n_docs}
 
 

@@ -1827,55 +1827,44 @@ def drift_ref_stats(
     spark: SparkSession, cent: DataFrame, idx_table: str,
     assigned: DataFrame | None,
 ) -> dict:
-    """GENERATION-PINNED reference cohort for the drift gauge (r15 —
-    the semantic twin of the LSH gauge fix: ``ivf_drift_frame``'s
-    indexed cohort re-scores the ENTIRE inverted file — a full
-    vector-column scan, n dot products and a percentile — every
-    scheduled check, the same O(index)-per-check class VERDICT r14
-    item 1 named). The indexed cohort's {n_vecs, mean_top1, p05_top1,
-    p50_top1} are computed ONCE per index GENERATION and pinned in a
-    ``_drift_ref.json`` INSIDE the index table's data directory — the
-    LSH gauge's lifetime-by-location trick: a retrain's two-phase swap
-    renames a fresh directory into place, so the reference resets
-    exactly when the quantizer does, and appends leave it pinned.
+    """GENERATION-PINNED reference cohort for the drift gauge:
+    ``ivf_drift_frame``'s indexed cohort re-scores the ENTIRE inverted
+    file — a full vector-column scan, n dot products and a percentile
+    — so a per-check re-score would be O(index) per check. The indexed
+    cohort's {n_vecs, mean_top1, p05_top1, p50_top1} are computed ONCE
+    per index GENERATION and pinned in the index table's ``drift_ref``
+    sidecar (``bucketed.sidecar_path``), which dies with the
+    generation: a retrain's swap resets the reference exactly when the
+    quantizer changes, and appends leave it pinned.
 
-    Pinning is also a SEMANTIC fix, not just a cost one: the old
-    moving reference re-scored post-drift ADMISSIONS into the indexed
-    cohort, so an index slowly filling with drifted-but-under-cap
-    vectors dragged its own reference down and masked exactly the
-    drift the gauge exists to catch. The pinned reference is the
-    quantizer's own cohort as of its generation — what "degraded
-    relative to training" actually means.
+    Pinning is also a SEMANTIC fix, not just a cost one: a moving
+    reference re-scores post-drift ADMISSIONS into the indexed cohort,
+    so an index slowly filling with drifted-but-under-cap vectors would
+    drag its own reference down and mask exactly the drift the gauge
+    exists to catch. The pinned reference is the quantizer's own cohort
+    as of its generation — what "degraded relative to training"
+    actually means.
 
-    ``assigned`` is the caller's PRE-BATCH index view, used only on
-    the bootstrap path (absent/unreadable sidecar) — one exact pass,
-    repaired to the sidecar. As of r16 (VERDICT r15 item 3) every
-    generation WRITER pins the reference itself at creation
-    (``pin_drift_ref`` — ivf_retrain/hier_retrain and the streaming
-    loops' first-index writes), so this bootstrap is strictly the
-    REPAIR path: a crash between the index swap and the pin, or a
-    pre-r16 table. Pinning at creation closes the window where up to
-    check_every−1 post-generation batches joined the reference
-    cohort, and moves the one O(index) bootstrap pass (25 s at 2M)
-    out of the serving loop and into the build/retrain that is
-    already O(index). An EMPTY cohort is returned but never pinned
-    (a replay-window first check with the whole index anti-joined
-    away must not freeze n_vecs=0 for the generation). Pass
-    ``assigned=None`` on a known-warm path; the read path never
-    touches the index (property-tested)."""
-    import json as _json
-    import os as _os
+    Every generation writer pins the reference at creation
+    (``pin_drift_ref``), so the bootstrap here is the REPAIR path (a
+    crash between the index swap and the pin): ``assigned`` is the
+    caller's PRE-BATCH index view, scored once and pinned. An EMPTY
+    cohort is returned but never pinned (a replay-window first check
+    with the whole index anti-joined away must not freeze n_vecs=0 for
+    the generation). Pass ``assigned=None`` on a known-warm path; the
+    read path never touches the index (property-tested)."""
+    from mr_py_spark.operators.bucketed import (
+        sidecar_path,
+        sidecar_read_json,
+        sidecar_write_json,
+    )
 
-    from mr_py_spark.operators.bucketed import _table_location
-
-    path = _os.path.join(_table_location(spark, idx_table), "_drift_ref.json")
-    keys = ("n_vecs", "mean_top1", "p05_top1", "p50_top1")
-    try:
-        with open(path) as f:
-            d = _json.load(f)
-        return {k: d[k] for k in keys}
-    except (OSError, ValueError, KeyError):
-        pass
+    path = sidecar_path(spark, idx_table, "drift_ref")
+    got = sidecar_read_json(
+        path, ("n_vecs", "mean_top1", "p05_top1", "p50_top1")
+    )
+    if got is not None:
+        return got
     if assigned is None:
         raise ValueError(
             f"drift_ref_stats: no pinned reference at {path} and no "
@@ -1883,7 +1872,7 @@ def drift_ref_stats(
         )
     stats = _drift_ref_compute(cent, assigned)
     if stats["n_vecs"] > 0:
-        _drift_ref_write(path, stats)
+        sidecar_write_json(path, stats)
     return stats
 
 
@@ -1911,49 +1900,28 @@ def _drift_ref_compute(cent: DataFrame, assigned: DataFrame) -> dict:
     }
 
 
-def _drift_ref_write(path: str, stats: dict) -> None:
-    import json as _json
-    import os as _os
-
-    try:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(stats, f)
-        _os.replace(tmp, path)
-    except OSError:
-        pass  # read-only location: derive-per-call still correct
-
-
 def pin_drift_ref(
     spark: SparkSession, cent: DataFrame, idx_table: str,
     assigned: DataFrame | None = None,
 ) -> dict:
-    """Pin the drift reference AT GENERATION CREATION (r16, VERDICT r15
-    item 3 + ADVICE): called by the index WRITERS — ``ivf_retrain`` /
-    ``hier_retrain`` right after their inverted-file swap, and the
-    streaming loops' first-index ``write_bucketed`` — in the same pass
-    that creates the generation, from the just-built cohort. Unlike
-    ``drift_ref_stats`` this OVERWRITES any sidecar (creation defines
-    the generation; a leftover file can only be stale) and defaults
-    ``assigned`` to the table itself. Closes the first-check window
-    (up to check_every−1 post-creation batches previously joined
-    the reference cohort) and keeps the O(index) scoring pass inside
-    the build/retrain, which is already O(index) — the serving loop's
-    scheduled checks are then always the warm 1-file read. An empty
+    """Pin the drift reference AT GENERATION CREATION: called by the
+    index WRITERS — ``ivf_retrain`` / ``hier_retrain`` right after
+    their inverted-file swap, and the streaming loops' first-index
+    ``write_bucketed`` — from the just-built cohort, so the serving
+    loop's scheduled checks are always the warm 1-file read and the
+    O(index) scoring pass stays inside the build/retrain that is
+    already O(index). Unlike ``drift_ref_stats`` this OVERWRITES any
+    sidecar (creation defines the generation; a leftover file can only
+    be stale) and defaults ``assigned`` to the table itself. An empty
     cohort is still never pinned (same replay-window rule as the
     bootstrap)."""
-    import os as _os
-
-    from mr_py_spark.operators.bucketed import _table_location
+    from mr_py_spark.operators.bucketed import sidecar_path, sidecar_write_json
 
     if assigned is None:
         assigned = spark.table(idx_table).select("vec_id", "bucket", "v")
     stats = _drift_ref_compute(cent, assigned)
     if stats["n_vecs"] > 0:
-        _drift_ref_write(
-            _os.path.join(_table_location(spark, idx_table), "_drift_ref.json"),
-            stats,
-        )
+        sidecar_write_json(sidecar_path(spark, idx_table, "drift_ref"), stats)
     return stats
 
 

@@ -25,8 +25,6 @@ probed fraction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -78,27 +76,6 @@ def write_bucketed(
 
         fat = any(isinstance(f.dataType, ArrayType) for f in df.schema.fields)
         row_group_bytes = VECTOR_ROW_GROUP_BYTES if fat else 8 * 1024 * 1024
-    if mode != "append" and path is not None:
-        # a (re)created table invalidates any replay-guard watermark
-        # sidecar a previous generation left at this path: a stale
-        # watermark BELOW the new contents' ids would let a replayed
-        # append pass unchecked (bucketed.replay_guard's invariant is
-        # per table generation; stale-HIGH is safe, stale-LOW is not)
-        import shutil as _sh
-
-        def _rm_sidecar(p: str) -> None:
-            # JSON file (r16) or legacy 1-row-parquet directory
-            _sh.rmtree(p, ignore_errors=True)
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-
-        _rm_sidecar(path.rstrip("/") + "_rwm")
-        # same reasoning for the LSH banding sidecar: a recreated table
-        # at the build-default banding under a stale sidecar
-        # would band its appends wrong (mixed-banding corruption)
-        _rm_sidecar(path.rstrip("/") + "_banding")
     # Align the write to the bucket spec: ONE file per occupied bucket
     # per write (r16). The bucketed writer emits a file per
     # (task, bucket) pair, so a frame arriving with N upstream

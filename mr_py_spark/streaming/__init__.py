@@ -1475,24 +1475,15 @@ def _root_gen_hash(spark: SparkSession, root_table: str) -> str:
     return h.hexdigest()
 
 
-def _codes_gen_read(codes_path: str) -> str | None:
-    import json as _json
+def _codes_gen_read(spark: SparkSession, codes_table: str) -> str | None:
+    """The root generation the codes table was encoded under (its
+    ``codes_gen`` sidecar); None when absent or torn."""
+    from mr_py_spark.operators.bucketed import sidecar_path, sidecar_read_json
 
-    try:
-        with open(os.path.join(codes_path, "_codes_gen.json")) as f:
-            return _json.load(f)["root_gen"]
-    except (OSError, ValueError, KeyError):
-        return None
-
-
-def _codes_gen_write(codes_path: str, gen: str) -> None:
-    import json as _json
-
-    p = os.path.join(codes_path, "_codes_gen.json")
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump({"root_gen": gen}, f)
-    os.replace(tmp, p)
+    rec = sidecar_read_json(
+        sidecar_path(spark, codes_table, "codes_gen"), ("root_gen",)
+    )
+    return None if rec is None else rec["root_gen"]
 
 
 def _books_np(spark: SparkSession, books_table: str):
@@ -1547,9 +1538,9 @@ def _hier_maintenance_step(
       table's own watermark — a crash between the index append and the
       codes append replays into an idx no-op plus the missed codes
       append).
-    - GENERATION COHERENCE self-heals: a ``_codes_gen.json`` sidecar
-      INSIDE the codes data dir records the ROOT-table content hash the
-      codes were encoded under; every step entry compares it to the
+    - GENERATION COHERENCE self-heals: the codes table's ``codes_gen``
+      sidecar (``bucketed.sidecar_path``) records the ROOT-table content
+      hash the codes were encoded under; every step entry compares it to the
       live root hash and re-encodes the codes table from the index
       (crash-atomic ``replace_bucketed_table``) on mismatch. A retrain
       re-encodes at once, and a crash between the retrain's swap and
@@ -1563,6 +1554,8 @@ def _hier_maintenance_step(
         _BUCKETS,
         recover_compaction,
         replace_bucketed_table,
+        sidecar_path,
+        sidecar_write_json,
     )
     from mr_py_spark.operators.hier import (
         _LEAF_ROWS,
@@ -1612,7 +1605,12 @@ def _hier_maintenance_step(
             spark, codes_table, encoded_index(_books_np(spark, books_table)),
             ("bucket", "leaf"),
         )
-        _codes_gen_write(codes_path, gen)
+        stamp_codes(gen)
+
+    def stamp_codes(gen: str) -> None:
+        sidecar_write_json(
+            sidecar_path(spark, codes_table, "codes_gen"), {"root_gen": gen}
+        )
 
     def recover():
         for p in (root_path, leaf_path, idx_path) + (
@@ -1621,7 +1619,7 @@ def _hier_maintenance_step(
             recover_compaction(spark, p)
         if codes_on and exists(codes_table) and exists(root_table):
             gen = _root_gen_hash(spark, root_table)
-            if _codes_gen_read(codes_path) != gen:
+            if _codes_gen_read(spark, codes_table) != gen:
                 rebuild_codes(gen)
 
     def bootstrap(batch, n_rows):
@@ -1716,7 +1714,7 @@ def _hier_maintenance_step(
             encoded_index(books), codes_table, ("bucket", "leaf"), _BUCKETS,
             path=codes_path,
         )
-        _codes_gen_write(codes_path, _root_gen_hash(spark, root_table))
+        stamp_codes(_root_gen_hash(spark, root_table))
 
     return maintenance_step(
         spark, out, idx_table, "vec_id",
@@ -1783,7 +1781,6 @@ def stream_hier_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live roots. Rows-only (seeded quantizers + engine-specific code
     layout); crash-window, replay, and retrain-re-encode properties are
     byte-level-tested in tests/test_streaming_sink.py."""
-    from mr_py_spark.operators.bucketed import _table_location
     from mr_py_spark.operators.hier import _pq_encode_frame
 
     tag = stream_table_tag(sf_dir)
@@ -1822,9 +1819,9 @@ def stream_hier_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .count()
     )
-    gen_ok = _codes_gen_read(
-        _table_location(spark, codes_table)
-    ) == _root_gen_hash(spark, root_table)
+    gen_ok = _codes_gen_read(spark, codes_table) == _root_gen_hash(
+        spark, root_table
+    )
     return spark.createDataFrame(
         [
             ("n_indexed", int(idx.count())),

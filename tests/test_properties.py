@@ -1787,7 +1787,7 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
     table would band appends wrong)."""
     import os
 
-    from mr_py_spark.operators.bucketed import _BUCKETS, _table_location
+    from mr_py_spark.operators.bucketed import _BUCKETS, sidecar_path
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         lsh_band_entries,
@@ -1809,7 +1809,7 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
             lsh_band_entries(minhash_signatures(docs)), table,
             _LSH_INDEX_KEYS, _BUCKETS, path=path,
         )
-        side = _table_location(spark, table).rstrip("/") + "_banding"
+        side = sidecar_path(spark, table, "banding")
         assert not os.path.exists(side)
         assert lsh_table_band_rows(spark, table) == 4  # derive + repair
         assert os.path.exists(side)
@@ -1821,8 +1821,8 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
         assert lsh_table_band_rows(spark, table) == 8  # re-derive correct
         # crash window: a rebuild WITHOUT the sidecar refresh (a crash
         # between lsh_reband's swap and its sidecar write) must not
-        # serve the stale banding — the generation binding (dir inode)
-        # forces a re-derive
+        # serve the stale banding — the swap installs a directory
+        # without the sidecar, which forces a re-derive
         from mr_py_spark.operators.bucketed import replace_bucketed_table
         from mr_py_spark.operators.dedup import lsh_index_band_rows as _derive
 
@@ -1832,7 +1832,7 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
         )
         replace_bucketed_table(
             spark, table, lsh_band_entries(sig2, 16), _LSH_INDEX_KEYS
-        )  # the swap alone; sidecar still says 8 @ old generation
+        )  # the swap alone; the 8-row sidecar left with the old dir
         assert _derive(spark.table(table)) == 16
         assert lsh_table_band_rows(spark, table) == 16  # healed, not 8
         # recreation clears the sidecar
@@ -2016,9 +2016,9 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
 
     from mr_py_spark.operators.bucketed import (
         _BUCKETS,
-        _table_location,
         raise_watermark,
         replay_guard,
+        sidecar_path,
     )
     from mr_py_spark.sources.sinks import write_bucketed
 
@@ -2042,7 +2042,7 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
             ivf_assign_with(cent, vecs(range(5))), table, "bucket",
             _BUCKETS, path=str(tmp_path / "ivf"),
         )
-        wm_path = _table_location(spark, table).rstrip("/") + "_rwm"
+        wm_path = sidecar_path(spark, table, "rwm")
         # absent sidecar: raise_watermark must NOT invent one
         raise_watermark(spark, table, vecs([100]), "vec_id")
         assert not os.path.exists(wm_path)
@@ -2077,8 +2077,8 @@ def test_drift_ref_stats_pinned_generation(spark, tmp_path):
 
     from mr_py_spark.operators.bucketed import (
         _BUCKETS,
-        _table_location,
         replace_bucketed_table,
+        sidecar_path,
     )
     from mr_py_spark.operators.similarity import (
         delta_p05,
@@ -2140,7 +2140,7 @@ def test_drift_ref_stats_pinned_generation(spark, tmp_path):
         assert drift_degraded_pinned(ref, delta_p05(cent, drifted))
         assert not drift_degraded_pinned(ref, delta_p05(cent, healthy))
         # empty cohort: returned, never pinned
-        side = os.path.join(_table_location(spark, table), "_drift_ref.json")
+        side = sidecar_path(spark, table, "drift_ref")
         os.remove(side)
         empty = drift_ref_stats(
             spark, cent, table, spark.table(table).limit(0)
@@ -2174,8 +2174,8 @@ def test_pin_drift_ref_at_creation(spark, tmp_path):
 
     from mr_py_spark.operators.bucketed import (
         _BUCKETS,
-        _table_location,
         replace_bucketed_table,
+        sidecar_path,
     )
     from mr_py_spark.operators.similarity import (
         _drift_ref_compute,
@@ -2230,7 +2230,7 @@ def test_pin_drift_ref_at_creation(spark, tmp_path):
         # retrain pins the NEW generation immediately: the sidecar
         # exists post-swap and equals the rebuilt cohort's exact stats
         ivf_retrain(spark, cent_t, idx_t, nlist=2)
-        side = os.path.join(_table_location(spark, idx_t), "_drift_ref.json")
+        side = sidecar_path(spark, idx_t, "drift_ref")
         assert os.path.exists(side)
         exact = _drift_ref_compute(
             spark.table(cent_t),

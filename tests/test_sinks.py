@@ -372,7 +372,7 @@ def test_replay_guard_fast_path_and_exactness(spark, tmp_path):
     degrades to the exact bootstrap check."""
     import shutil
 
-    from mr_py_spark.operators.bucketed import replay_guard
+    from mr_py_spark.operators.bucketed import replay_guard, sidecar_path
 
     table = "t_replay_guard"
     path = str(tmp_path / "idx")
@@ -419,7 +419,7 @@ def test_replay_guard_fast_path_and_exactness(spark, tmp_path):
 
         # vanished sidecar: bootstrap re-derives from the table —
         # replay still admits nothing, fresh still admitted
-        os.remove(path + "_rwm")  # r16: a JSON file, not a dir
+        os.remove(sidecar_path(spark, table, "rwm"))
         assert replay_guard(spark, table, b3, "vec_id").count() == 0
         b4 = spark.createDataFrame([(200, 0)], "vec_id long, x long")
         assert sorted(
@@ -431,6 +431,6 @@ def test_replay_guard_fast_path_and_exactness(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(path, ignore_errors=True)
         write_bucketed(base, table, "vec_id", 4, path=path)
-        assert not os.path.exists(path + "_rwm")
+        assert not os.path.exists(sidecar_path(spark, table, "rwm"))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")

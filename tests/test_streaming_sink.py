@@ -339,7 +339,7 @@ def _loop_kind(spark, kind: str, root):
             role = t[len(tag) + 1:]
             snap[role] = rows(spark.table(t)) if spark.catalog.tableExists(t) else None
         if kind == "hier":
-            snap["codes_gen"] = _codes_gen_read(os.path.join(root, "codes"))
+            snap["codes_gen"] = _codes_gen_read(spark, tables[3])
         return snap
 
     frames = [spark.createDataFrame(b, schema) for b in batches]
@@ -1034,14 +1034,14 @@ def test_hier_pq_codes_loop_replay_and_generation_self_heal(spark, tmp_path):
         # died before the codes re-encode — codes still carry the OLD
         # generation's (bucket, leaf)
         hier_retrain(spark, root_t, leaf_t, idx_t, root_rows=4, leaf_rows=2)
-        assert _codes_gen_read(codes_path) != _root_gen_hash(spark, root_t)
+        assert _codes_gen_read(spark, codes_t) != _root_gen_hash(spark, root_t)
         stale = codes_snapshot()
         assert stale != full_encode()  # demonstrably stale
         b2 = spark.createDataFrame(
             [(300, vecs[30])], "vec_id long, embedding array<double>"
         )
         step(b2, 2)  # entry self-heal re-encodes, then admits the batch
-        assert _codes_gen_read(codes_path) == _root_gen_hash(spark, root_t)
+        assert _codes_gen_read(spark, codes_t) == _root_gen_hash(spark, root_t)
         assert codes_snapshot() == full_encode()
         assert 300 in {c[0] for c in codes_snapshot()}
         assert books_snapshot() == books0
