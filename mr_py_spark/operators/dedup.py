@@ -1062,15 +1062,26 @@ def lsh_gauge_stats(
     contract, not to multi-writer tables (ADVICE r15)."""
     from mr_py_spark.operators.bucketed import sidecar_path, sidecar_read_json
 
-    path = sidecar_path(spark, table, "gauge")
-    got = sidecar_read_json(path, _GAUGE_KEYS)
+    got = sidecar_read_json(sidecar_path(spark, table, "gauge"), _GAUGE_KEYS)
     if got is None:
-        mass, nd, mx = _lsh_gauge_full(spark.table(table))
-        got = dict(zip(_GAUGE_KEYS, (mass, nd, mass, nd, mx)))
-        _lsh_gauge_write(path, (mass, nd), (mass, nd), mx)
+        got = lsh_pin_gauge(spark, table)
     if batch_max_id is not None and int(batch_max_id) <= got["bump_wm"]:
         return {"mass": got["prev_mass"], "n_docs": got["prev_n_docs"]}
     return {"mass": got["mass"], "n_docs": got["n_docs"]}
+
+
+def lsh_pin_gauge(spark: SparkSession, table: str) -> dict:
+    """Write ``table``'s gauge record from ONE exact pass over its
+    current generation (``_lsh_gauge_full``) and return it: the lazy
+    bootstrap of ``lsh_gauge_stats``, and the streaming loop's first
+    build, which pins the gauge at creation (as ``pin_drift_ref`` pins
+    the drift reference) so the serving loop's first check is a warm
+    sidecar read, not an O(index) pass."""
+    from mr_py_spark.operators.bucketed import sidecar_path
+
+    mass, nd, mx = _lsh_gauge_full(spark.table(table))
+    _lsh_gauge_write(sidecar_path(spark, table, "gauge"), (mass, nd), (mass, nd), mx)
+    return dict(zip(_GAUGE_KEYS, (mass, nd, mass, nd, mx)))
 
 
 def lsh_gauge_trips(

@@ -26,6 +26,7 @@ import inspect
 import json
 import os
 import re
+import sys
 import textwrap
 import types
 from collections.abc import Callable
@@ -367,6 +368,12 @@ def _read_sidecar() -> dict | None:
     return data if isinstance(data, dict) else {}
 
 
+def _in_pytest() -> bool:
+    """True in a pytest process, collection included: test modules call
+    ``load_all()`` at import, before pytest sets ``PYTEST_CURRENT_TEST``."""
+    return "PYTEST_CURRENT_TEST" in os.environ or "pytest" in sys.modules
+
+
 def _fingerprint_rounds(registry: dict[str, Query]) -> dict[str, int]:
     """Per query, the round at which its CURRENT (fn source, oracle)
     fingerprint first appeared, per the ``.fingerprints.json`` sidecar.
@@ -395,7 +402,7 @@ def _fingerprint_rounds(registry: dict[str, Query]) -> dict[str, int]:
         else:
             out[name] = 0 if bootstrap else upcoming
             dirty[name] = {"fp": fp, "round": out[name], "v": _FP_VERSION}
-    if dirty and "PYTEST_CURRENT_TEST" not in os.environ:
+    if dirty and not _in_pytest():
         # Never WRITE the sidecar from a pytest process: tests replace
         # module functions (the crash harness wraps
         # streaming.maintenance_step), and a sync that runs while one is

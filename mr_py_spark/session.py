@@ -174,6 +174,28 @@ def _driver_memory() -> str:
     return f"{min(16 * 1024, ram // 2 // 2**20)}m"
 
 
+#: ``spark.sql.codegen.cache.maxEntries`` of ``get_spark`` sessions
+#: (static; Spark's default is 100). The whole registry at sf0.01 in one
+#: session generates 3,058-3,097 distinct classes (CodegenMetrics compile
+#: count under an oversized cache); a small cold hier build alone
+#: generates 114, so at 100 a warm rebuild recompiled 76-91 of them. The
+#: headroom covers the cache's split of its bound across segments. At
+#: about 53 KB of Metaspace per class, a full cache holds ~210 MB.
+_CODEGEN_CACHE_ENTRIES = 4096
+
+
+def _prepend_worker_path(spark: SparkSession) -> None:
+    """Put the package root first on the Python workers' PYTHONPATH,
+    keeping any value set through ``spark.executorEnv.PYTHONPATH`` (the
+    JVM appends the environment's own PYTHONPATH itself): the daemon
+    module must be importable before any task has shipped the package."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if parts[:1] != [root]:
+        env["PYTHONPATH"] = os.pathsep.join([root, *parts])
+
+
 def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSession:
     """Build a local session sized for this machine.
 
@@ -182,7 +204,11 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
     200 over-parallelizes tiny shuffles; on a real cluster you would
     size this to 2-3x total executor cores and let AQE coalesce. The
     driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` or half of physical RAM,
-    at most 16g.
+    at most 16g. Python workers fork from the preloaded
+    ``mr_py_spark._daemon`` and the codegen class cache holds
+    ``_CODEGEN_CACHE_ENTRIES`` classes; a session made elsewhere and
+    passed to ``harden`` keeps Spark's defaults for both (performance
+    only, never correctness).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -239,6 +265,11 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
         )
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
+        # Fork Python workers from a daemon that has already imported
+        # numpy/pandas/pyarrow/pyspark and this package (see
+        # mr_py_spark/_daemon.py); its PYTHONPATH entry is added below.
+        .config("spark.python.daemon.module", "mr_py_spark._daemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         # static conf: must be set at session build; bucketed-table tests
         # and any saveAsTable land here instead of cwd/spark-warehouse.
         # Per-process dir: a leftover location from a dead run would make
@@ -253,4 +284,5 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _prepend_worker_path(spark)
     return harden(spark)

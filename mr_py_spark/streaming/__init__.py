@@ -1186,14 +1186,15 @@ def _lsh_maintenance_step(
     through ``lsh_index_append``.
 
     Gauge: the collision mass from the incremental sufficient
-    statistics (``lsh_gauge_stats`` — a sidecar read, bumped O(delta)
-    by every append; the decision reads the pre-bump snapshot keyed by
-    the batch max id, so a replay agrees). Past ``collision_cap`` the
+    statistics (``lsh_gauge_stats`` — a sidecar read, pinned by the
+    first build and bumped O(delta) by every append; the decision
+    reads the pre-bump snapshot keyed by the batch max id, so a replay
+    agrees). Past ``collision_cap`` the
     actuator escalates the banding in place (``lsh_reband``,
-    crash-atomic). Band entries are a pure function of (signature,
-    band_rows), so a double-fired replay rewrite converges to the same
-    rows."""
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    crash-atomic; ``recover`` finishes a swap a crash interrupted).
+    Band entries are a pure function of (signature, band_rows), so a
+    double-fired replay rewrite converges to the same rows."""
+    from mr_py_spark.operators.bucketed import _BUCKETS, recover_compaction
     from mr_py_spark.operators.dedup import (
         _LSH_COLLISION_CAP,
         _LSH_INDEX_KEYS,
@@ -1203,6 +1204,7 @@ def _lsh_maintenance_step(
         lsh_gauge_trips,
         lsh_index_append,
         lsh_next_band_rows,
+        lsh_pin_gauge,
         lsh_reband,
         lsh_table_band_rows,
         minhash_delta_status,
@@ -1235,10 +1237,12 @@ def _lsh_maintenance_step(
     def first_build(ctx, rows):
         entries = lsh_band_entries(minhash_signatures(rows))
         write_bucketed(entries, table, _LSH_INDEX_KEYS, _BUCKETS, path=idx_path)
+        lsh_pin_gauge(spark, table)
 
     return maintenance_step(
         spark, out, table, "doc_id",
         project=lambda b: b.select("doc_id", "text"),
+        recover=lambda: recover_compaction(spark, idx_path),
         view=view,
         trips=trips,
         actuate=lambda batch, ids, ctx: lsh_reband(

@@ -151,6 +151,48 @@ def test_sidecar_never_written_from_pytest(monkeypatch):
     assert rounds[probe] > 0  # in-memory: stamped as upcoming, not persisted
 
 
+_COLLECT_PROBE = """
+import mr_py_spark.registry as regmod
+
+regmod._FP_PATH = {side!r}
+regmod.load_all()
+
+
+def test_noop():
+    pass
+"""
+
+
+def test_sidecar_never_written_during_collection(tmp_path):
+    """Test modules call ``load_all()`` at import, i.e. while pytest
+    collects and before it sets ``PYTEST_CURRENT_TEST``: the write gate
+    must hold there too. A module that points the registry at a private
+    sidecar with a dirty stamp (an empty record set, so every entry
+    needs stamping) leaves it byte-identical under ``pytest
+    --collect-only``, and the same module run as a plain script does
+    rewrite it (the stamp really is dirty)."""
+    import subprocess
+    import sys
+
+    side = tmp_path / ".fingerprints.json"
+    probe = tmp_path / "test_collect_probe.py"
+    probe.write_text(_COLLECT_PROBE.format(side=str(side)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTEST_CURRENT_TEST"}
+    env["PYTHONPATH"] = ROOT
+    for argv, rewritten in (
+        ([sys.executable, "-m", "pytest", "--collect-only", "-q",
+          "-p", "no:cacheprovider", str(probe)], False),
+        ([sys.executable, str(probe)], True),
+    ):
+        side.write_text("{}")
+        proc = subprocess.run(
+            argv, cwd=tmp_path, env=env, capture_output=True, text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+        assert (side.read_text() != "{}") == rewritten, argv
+
+
 def test_flagships_inside_driver_window_unless_fresh():
     """Bench headliners outrank other entries for the window whenever
     they are stale — but one verified green in the LATEST recorded
@@ -541,7 +583,7 @@ def test_fingerprint_schema_migration_keeps_rounds(tmp_path, monkeypatch):
     # this test exercises the WRITE path against a private tmp sidecar,
     # so lift the pytest write gate (test_sidecar_never_written_from_pytest
     # covers the gate itself against the real sidecar)
-    monkeypatch.delenv("PYTEST_CURRENT_TEST", raising=False)
+    monkeypatch.setattr(regmod, "_in_pytest", lambda: False)
 
     def rounds_for(entry):
         side.write_text(_json.dumps({victim: entry}))

@@ -621,6 +621,109 @@ def test_lsh_maintenance_reband_trips_once_and_replays(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def _novel_docs(ids):
+    return [
+        (i, f"novel document {i} " + " ".join(f"t{i}_{j}" for j in range(30)))
+        for i in ids
+    ]
+
+
+def test_lsh_maintenance_reband_crash_recovers(spark, tmp_path, monkeypatch):
+    """A crash inside ``lsh_reband``'s two-phase swap is finished by the
+    replay: seed 20 docs, send a batch of 5 whose gauge check trips
+    (cap -1), fail the ``__old`` rename, then replay the batch. The
+    loop's ``recover`` hook rolls the swap forward, so the index holds
+    all 25 docs and the commit marker is gone (without it the replay
+    saw no index table and rebuilt it from the 5 docs alone)."""
+    import os
+
+    from mr_py_spark.operators import bucketed
+    from mr_py_spark.streaming import _lsh_maintenance_step
+
+    table = "mrps_test_stream_lsh_reband_crash"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    idx_path = str(tmp_path / "index")
+    out = str(tmp_path / "out")
+    os.makedirs(out)
+    step = _lsh_maintenance_step(
+        spark, table, out, idx_path, check_every=1, collision_cap=-1.0
+    )
+    schema = "doc_id long, text string"
+    real_replace = os.replace
+    armed = []
+
+    def failing_replace(src, dst, *a, **kw):
+        if armed and str(dst).endswith("__old"):
+            armed.clear()
+            raise OSError("injected crash on the __old rename")
+        return real_replace(src, dst, *a, **kw)
+
+    try:
+        step(spark.createDataFrame(_novel_docs(range(20)), schema), 0)
+        batch = spark.createDataFrame(_novel_docs(range(100, 105)), schema)
+        monkeypatch.setattr(bucketed.os, "replace", failing_replace)
+        armed.append(True)
+        with pytest.raises(OSError, match="injected"):
+            step(batch, 1)
+        assert os.path.exists(bucketed._commit_marker(idx_path))
+        step(batch, 1)  # the replay
+        ids = {
+            r.doc_id
+            for r in spark.table(table).filter(F.col("band_id") == 0).collect()
+        }
+        assert ids == set(range(20)) | set(range(100, 105))
+        assert not os.path.exists(bucketed._commit_marker(idx_path))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_lsh_first_build_pins_the_gauge(spark, tmp_path, monkeypatch):
+    """The LSH loop's first build pins the gauge record, byte-identical
+    to the one the lazy bootstrap of ``lsh_gauge_stats`` writes, so the
+    serving loop's gauge checks never pay the O(index) pass: with
+    ``_lsh_gauge_full`` forbidden after the first build, a second batch
+    whose gauge check runs (check_every=1) still goes through."""
+    import os
+
+    from mr_py_spark.operators import dedup
+    from mr_py_spark.operators.bucketed import sidecar_path
+    from mr_py_spark.streaming import _lsh_maintenance_step
+
+    table = "mrps_test_stream_lsh_gauge_pin"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    out = str(tmp_path / "out")
+    os.makedirs(out)
+    checks = []
+    real_stats = dedup.lsh_gauge_stats
+    monkeypatch.setattr(
+        dedup, "lsh_gauge_stats",
+        lambda *a, **kw: checks.append(1) or real_stats(*a, **kw),
+    )
+    step = _lsh_maintenance_step(
+        spark, table, out, str(tmp_path / "index"), check_every=1
+    )
+    schema = "doc_id long, text string"
+    try:
+        step(spark.createDataFrame(_novel_docs(range(20)), schema), 0)
+        gauge = sidecar_path(spark, table, "gauge")
+        with open(gauge, "rb") as f:
+            pinned = f.read()
+        os.remove(gauge)
+        real_stats(spark, table)  # the lazy bootstrap
+        with open(gauge, "rb") as f:
+            assert f.read() == pinned
+
+        def forbidden(bands):
+            raise AssertionError("O(index) gauge pass in the serving loop")
+
+        monkeypatch.setattr(dedup, "_lsh_gauge_full", forbidden)
+        step(spark.createDataFrame(_novel_docs(range(100, 105)), schema), 1)
+        assert checks == [1]  # batch 1 ran its gauge check
+        assert real_stats(spark, table)["n_docs"] == 25
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_ivf_maintenance_drift_triggers_one_retrain(spark, tmp_path):
     """The drift actuator (VERDICT r12 item 3): a planted-drift stream
     — batch 0 trains the quantizer on subspace A, batch 1 arrives from
