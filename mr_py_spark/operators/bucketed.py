@@ -417,6 +417,51 @@ def replace_bucketed_table(
     _swap_in_side_copy(spark, table, tmp_tbl, path, cols, keys, n_buckets)
 
 
+# Table-save hooks of the quantizer builders (hier.hier_build,
+# similarity.ivf_build): ``save(name, frame_of, keys, schema)`` persists
+# the frame ``frame_of()`` builds as table ``name``, bucketed on
+# ``keys``, and returns the persisted table, which the builder's next
+# stage reads.
+
+
+def stamped_save(spark: SparkSession, sf_dir: str, src_name: str, stamp: str):
+    """Save hook of the batch indexes: each table through the
+    content-stamped cache of fixture ``src_name`` (``_bucketed_table``,
+    looked up at call time)."""
+
+    def save(name, frame_of, keys, schema):
+        return _bucketed_table(
+            spark, sf_dir, name, keys, frame_of=frame_of, src_name=src_name,
+            schema=schema, stamp_extra=stamp,
+        )
+
+    return save
+
+
+def replace_save(spark: SparkSession):
+    """Save hook of the retrains: rewrite the standing table in place
+    through the crash-atomic swap (``replace_bucketed_table``)."""
+
+    def save(name, frame_of, keys, schema):
+        replace_bucketed_table(spark, name, frame_of(), keys)
+        return spark.table(name)
+
+    return save
+
+
+def absent_save(spark: SparkSession, paths: dict[str, str]):
+    """Save hook of the first builds: write each table to its external
+    path in ``paths`` only while the table is absent, so a replay after
+    a crash between two writes rebuilds only what is missing."""
+
+    def save(name, frame_of, keys, schema):
+        if not spark.catalog.tableExists(name):
+            write_bucketed(frame_of(), name, keys, _BUCKETS, path=paths[name])
+        return spark.table(name)
+
+    return save
+
+
 def sidecar_read_json(path: str, keys: tuple[str, ...]) -> dict | None:
     """Read a 1-record JSON metadata sidecar as ``{k: record[k] for k in
     keys}``. ``None`` when it is ABSENT, torn, or misses a key: every

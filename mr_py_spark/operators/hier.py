@@ -1,6 +1,6 @@
 """Hierarchical (two-level) coarse quantizer for the semantic tier
 (SURVEY.md §2 C2/C3 — the scale continuation of kmeans.semantic_dedup
-and similarity.incremental_semantic_dedup; VERDICT r12 item 1).
+and similarity.incremental_semantic_dedup).
 
 The flat quantizers cap their centroid count at 4096 so the centroid
 frame stays a bounded broadcast (similarity._ivf_nlist,
@@ -64,20 +64,27 @@ _ROOT_ROWS = 4096
 _LEAF_ROWS = 64
 _MAX_K = 4096  # per-level centroid cap (broadcast / per-group bound)
 
+#: Persisted layouts of the leaf table, the (bucket, leaf) inverted file
+#: and the PQ codebooks (``_books_frame``).
+_LEAF_SCHEMA = "bucket long, leaf long, lv array<double>"
+_CELL_SCHEMA = "vec_id long, bucket long, leaf long, v array<double>"
+_BOOKS_SCHEMA = "mi long, ki long, sub array<double>"
+
 
 def _hier_nroot(n: int, root_rows: int = _ROOT_ROWS) -> int:
-    """Root count sized for ~root_rows vectors per root, clamped like
-    _ivf_nlist so the root broadcast stays bounded."""
-    return max(8, min(_MAX_K, round(n / root_rows) or 1))
+    """Root count of an ``n``-vector build: sized for ~root_rows vectors
+    per root, clamped like _ivf_nlist so the root broadcast stays
+    bounded, and never more roots than vectors."""
+    return min(max(8, min(_MAX_K, round(n / root_rows) or 1)), max(1, n))
 
 
 def _spread_by_bucket(root_assigned: DataFrame, spread: int | None) -> DataFrame:
-    """BUILD-path skew fix (r15, VERDICT r14 item 5): the leaf-train /
-    assign group exchanges default to the session's shuffle-partition
-    count, so each task bundles many root groups — at 8M vectors the
-    r15 profile measured max/p50 task time 3.4x on leaf training (a
-    298 s straggler against an 89 s median, the stage wall pinned by
-    it) where 2M showed 1.2x. An explicit repartition on the group key
+    """BUILD-path skew fix: the leaf-train / assign group exchanges
+    default to the session's shuffle-partition count, so each task
+    bundles many root groups — at 8M vectors max/p50 task time on leaf
+    training measured 3.4x (a 298 s straggler against an 89 s median,
+    the stage wall pinned by it) where 2M showed 1.2x. An explicit
+    repartition on the group key
     into ~nroot partitions puts ~one group per task: HashPartitioning
     (bucket, spread) satisfies the groupBy/cogroup's required
     clustering for ANY partition count, so no second exchange is
@@ -125,7 +132,7 @@ def hier_leaf_centroids(
         )
 
     return _spread_by_bucket(root_assigned, spread).groupBy("bucket").applyInPandas(
-        train, "bucket long, leaf long, lv array<double>"
+        train, _LEAF_SCHEMA
     )
 
 
@@ -187,7 +194,7 @@ def hier_assign(
     return (
         _spread_by_bucket(root_assigned, spread).groupBy("bucket")
         .cogroup(leaf_cent.groupBy("bucket"))
-        .applyInPandas(assign, "vec_id long, bucket long, leaf long, v array<double>")
+        .applyInPandas(assign, _CELL_SCHEMA)
     )
 
 
@@ -201,29 +208,14 @@ def hier_corpus_index(spark: SparkSession, sf_dir: str):
     side. All three ride the content-stamped cache with a builder
     stamp over every function and knob the persisted bytes depend on
     (``_hier_index_stamp`` plus the corpus/delta split constants).
-
-    Cold-build cost note (r13 review, REVERSED by the r15 profile):
-    the r13 guess was that the leaf TRAINING groupBy and ASSIGNMENT
-    cogroup dominate, so the duplicated root broadcast-argmax pass
-    (leaf builder + inverted-file builder each re-derive it) was kept.
-    The r15 per-stage profile at 8M measured the opposite — the
-    O(n·nroot·d) root-assignment matmul is ~85% of build CPU (5.7k s
-    task time per pass vs ~0.7k s for ALL leaf k-means training) and
-    the composition paid it twice. The intermediate is therefore now
-    persisted (MEMORY_AND_DISK — ~n·(d+3)·8 bytes, spills rather than
-    recomputes; lazy, so the cached-table re-attach path never
-    materializes it). Returns (root_cent, leaf_cent, assigned)."""
-    from mr_py_spark.operators.bucketed import _bucketed_table, builder_stamp
+    Returns (root_cent, leaf_cent, assigned)."""
+    from mr_py_spark.operators.bucketed import builder_stamp, stamped_save
     from mr_py_spark.operators.dedup import (
         _INC_BUCKETS,
         _INC_DELTA_BUCKET,
         _INC_MULT,
     )
-    from mr_py_spark.operators.similarity import (
-        _emb_double,
-        _ivf_centroids,
-        ivf_assign_with,
-    )
+    from mr_py_spark.operators.similarity import _emb_double
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     corpus = e.filter(
@@ -231,48 +223,13 @@ def hier_corpus_index(spark: SparkSession, sf_dir: str):
         != _INC_DELTA_BUCKET
     )
     n = _table_rows(e, sf_dir, "embeddings")
-    nroot = min(_hier_nroot(n), max(1, n))
     stamp = _hier_index_stamp(n) + builder_stamp(
         inc=(_INC_MULT, _INC_BUCKETS, _INC_DELTA_BUCKET)
     )
-
-    def build_root() -> DataFrame:
-        cents = _ivf_centroids(spark, corpus, nroot)
-        return spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
-        )
-
-    root_cent = _bucketed_table(
-        spark, sf_dir, "hier_root_cent", "cid", frame_of=build_root,
-        src_name="embeddings", schema="cid long, cv array<double>",
-        stamp_extra=stamp,
+    return hier_build(
+        spark, corpus, n, stamped_save(spark, sf_dir, "embeddings", stamp),
+        ("hier_root_cent", "hier_leaf_cent", "hier_corpus_assign"),
     )
-    # the O(n·nroot·d) matmul, computed at most ONCE per cold build
-    # (r15 profile: ~85% of build CPU; both builders consume it).
-    # Lazy: the re-attach path never materializes it.
-    from pyspark import StorageLevel
-
-    root_assigned = ivf_assign_with(root_cent, corpus).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        leaf_cent = _bucketed_table(
-            spark, sf_dir, "hier_leaf_cent", "bucket",
-            frame_of=lambda: hier_leaf_centroids(root_assigned, spread=nroot),
-            src_name="embeddings",
-            schema="bucket long, leaf long, lv array<double>",
-            stamp_extra=stamp,
-        )
-        assigned = _bucketed_table(
-            spark, sf_dir, "hier_corpus_assign", ("bucket", "leaf"),
-            frame_of=lambda: hier_assign(root_assigned, leaf_cent, spread=nroot),
-            src_name="embeddings",
-            schema="vec_id long, bucket long, leaf long, v array<double>",
-            stamp_extra=stamp,
-        )
-    finally:
-        root_assigned.unpersist()
-    return root_cent, leaf_cent, assigned
 
 
 def semantic_delta_status_hier(
@@ -430,20 +387,14 @@ def hier_quantize(
     """Train a two-level quantizer over ``vectors`` (vec_id, v) and
     assign every vector to its cell, all in one lineage — the PER-RUN
     form behind ``semantic_dedup_hier`` (the standing-index form is
-    ``hier_corpus_index``). Returns (root_cent, leaf_cent, assigned)."""
-    from mr_py_spark.operators.similarity import _ivf_centroids, ivf_assign_with
-
-    nroot = min(_hier_nroot(n, root_rows), max(1, n))
-    root_cent = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(_ivf_centroids(spark, vectors, nroot))],
-        "cid long, cv array<double>",
-    )
-    root_assigned = ivf_assign_with(root_cent, vectors)
-    leaf_cent = hier_leaf_centroids(
-        root_assigned, leaf_rows=leaf_rows, spread=nroot
-    )
-    return root_cent, leaf_cent, hier_assign(
-        root_assigned, leaf_cent, spread=nroot
+    ``hier_corpus_index``); nothing is persisted, so each stage is the
+    lazy frame the last one built. Returns (root_cent, leaf_cent,
+    assigned)."""
+    return hier_build(
+        spark, vectors, n,
+        lambda name, frame_of, keys, schema: frame_of(),
+        ("hier_root", "hier_leaf", "hier_assign"),
+        root_rows=root_rows, leaf_rows=leaf_rows,
     )
 
 
@@ -661,12 +612,86 @@ def _hier_probe_cells(
 #: leaves/root × ~64 vectors/leaf ≈ 1.1e9 vectors. Past it, per-root
 #: leaf-training groups exceed ~262k rows and cell occupancy drifts off
 #: the ~_LEAF_ROWS grain — the continuation is a THIRD level (same
-#: construction; the leaf trainer is already group-local), decided
-#: AGAINST for now (VERDICT r14 item 8: no ≥100M-vector fixture is on
-#: the measurement path), so the ceiling is pinned with a loud
-#: ValueError (ADVICE r15: a bare assert is stripped under python -O)
-#: instead of a silent drift.
+#: construction; the leaf trainer is already group-local), not built
+#: while no ≥100M-vector fixture is on the measurement path, so
+#: ``hier_build`` refuses such a corpus with a ValueError instead of
+#: drifting silently.
 _HIER_TWO_LEVEL_CEIL = 4096 * 4096 * 64
+
+
+def hier_build(
+    spark: SparkSession,
+    train: DataFrame,
+    n: int,
+    save,
+    names: tuple[str, ...],
+    sample=None,
+    root_rows: int = _ROOT_ROWS,
+    leaf_rows: int = _LEAF_ROWS,
+):
+    """The one two-level quantizer build behind every hier index: roots
+    trained on ``train`` (or on the given ordered ``sample``), ``train``
+    assigned to the roots once, leaves trained per root, then ``train``
+    assigned to its (bucket, leaf) cell. ``n`` sizes the roots
+    (``_hier_nroot``); a corpus past ``_HIER_TWO_LEVEL_CEIL`` raises
+    before any Spark job runs.
+
+    ``save(name, frame_of, keys, schema)`` persists each stage and
+    returns the persisted frame (bucketed.stamped_save / replace_save /
+    absent_save, or identity for a per-run build); each later stage
+    reads the frame ``save`` returned, so it always matches the
+    generation on disk. ``names`` are the (root, leaf, cell) tables; a
+    caller whose inverted file fills later (the streaming bootstrap)
+    names only the quantizer pair.
+
+    The root assignment is persisted MEMORY_AND_DISK: its O(n·nroot·d)
+    matmul was ~85% of build CPU at 8M vectors, and both later stages
+    read it; lazy, so a re-attached cache never materializes it. Both
+    group stages are spread over ~nroot tasks (_spread_by_bucket).
+    Returns (root_cent, leaf_cent, assigned or None)."""
+    from pyspark import StorageLevel
+
+    from mr_py_spark.operators.similarity import (
+        CENT_SCHEMA,
+        _ivf_centroids,
+        centroid_frame,
+        ivf_assign_with,
+    )
+
+    if n > _HIER_TWO_LEVEL_CEIL:  # not `assert` — python -O strips those
+        raise ValueError(
+            f"hier_build: {n} vectors exceeds the two-level design "
+            f"ceiling ({_HIER_TWO_LEVEL_CEIL} ≈ 4096·4096·64) — add the "
+            "third quantizer level (hier.py module docstring) before "
+            "indexing corpora this size"
+        )
+    nroot = _hier_nroot(n, root_rows)
+    root_cent = save(
+        names[0],
+        lambda: centroid_frame(
+            spark, _ivf_centroids(spark, train, nroot, sample=sample)
+        ),
+        "cid", CENT_SCHEMA,
+    )
+    root_assigned = ivf_assign_with(root_cent, train).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        leaf_cent = save(
+            names[1],
+            lambda: hier_leaf_centroids(
+                root_assigned, leaf_rows=leaf_rows, spread=nroot
+            ),
+            "bucket", _LEAF_SCHEMA,
+        )
+        assigned = None if len(names) == 2 else save(
+            names[2],
+            lambda: hier_assign(root_assigned, leaf_cent, spread=nroot),
+            ("bucket", "leaf"), _CELL_SCHEMA,
+        )
+    finally:
+        root_assigned.unpersist()
+    return root_cent, leaf_cent, assigned
 
 
 def _hier_index_stamp(n: int) -> str:
@@ -674,16 +699,15 @@ def _hier_index_stamp(n: int) -> str:
     index build — both index builders' three tables AND the PQ code
     table (an edit to the assignment must never leave codes whose
     (bucket, leaf) cells no longer match the index). It names every
-    function the persisted bytes depend on: the root quantizer (the
-    flat IVF stamp), the leaf trainer and the Lloyd kernel it calls,
-    and the scoring kernel hier_assign delegates to — a wrapper in a
-    stamp list hides edits to the body it calls."""
+    function the persisted bytes depend on: the builder, the root
+    quantizer (the flat IVF stamp), the leaf trainer and the Lloyd
+    kernel it calls, and the scoring kernel hier_assign delegates to —
+    a wrapper in a stamp list hides edits to the body it calls."""
     from mr_py_spark.operators.bucketed import builder_stamp
     from mr_py_spark.operators.similarity import _fold_order_blocks, _ivf_stamp
 
-    nroot = min(_hier_nroot(n), max(1, n))
-    return _ivf_stamp(nroot) + builder_stamp(
-        hier_leaf_centroids, hier_assign, _fold_order_blocks,
+    return _ivf_stamp(_hier_nroot(n)) + builder_stamp(
+        hier_build, hier_leaf_centroids, hier_assign, _fold_order_blocks,
         _kmeans_init, _lloyd, _nearest, _unit_rows,
         root_rows=_ROOT_ROWS, leaf_rows=_LEAF_ROWS,
     )
@@ -696,65 +720,18 @@ def hier_index(spark: SparkSession, sf_dir: str):
     centroids bucketed by root bucket, and the inverted file bucketed
     by the composite cell key (bucket, leaf), all through the
     content-stamped cache with the full builder stamp (every function
-    and knob the persisted bytes depend on, ADVICE r12). Returns
+    and knob the persisted bytes depend on). Returns
     (root_cent, leaf_cent, assigned)."""
-    from mr_py_spark.operators.bucketed import _bucketed_table
-    from mr_py_spark.operators.similarity import (
-        _emb_double,
-        _ivf_centroids,
-        ivf_assign_with,
-    )
+    from mr_py_spark.operators.bucketed import stamped_save
+    from mr_py_spark.operators.similarity import _emb_double
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     n = _table_rows(e, sf_dir, "embeddings")
-    if n > _HIER_TWO_LEVEL_CEIL:  # not `assert` — python -O strips those
-        raise ValueError(
-            f"hier_index: {n} vectors exceeds the two-level design "
-            f"ceiling ({_HIER_TWO_LEVEL_CEIL} ≈ 4096·4096·64) — add the "
-            "third quantizer level (hier.py module docstring) before "
-            "indexing corpora this size"
-        )
-    nroot = min(_hier_nroot(n), max(1, n))
-    stamp = _hier_index_stamp(n)
-
-    def build_root() -> DataFrame:
-        cents = _ivf_centroids(spark, e, nroot)
-        return spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
-        )
-
-    root_cent = _bucketed_table(
-        spark, sf_dir, "hier_root_full", "cid", frame_of=build_root,
-        src_name="embeddings", schema="cid long, cv array<double>",
-        stamp_extra=stamp,
+    return hier_build(
+        spark, e, n,
+        stamped_save(spark, sf_dir, "embeddings", _hier_index_stamp(n)),
+        ("hier_root_full", "hier_leaf_full", "hier_assign_full"),
     )
-    # the O(n·nroot·d) root-assignment matmul, computed at most ONCE
-    # per cold build (r15 profile at 8M: ~85% of build CPU, previously
-    # paid by BOTH builders); MEMORY_AND_DISK so a big corpus spills
-    # rather than recomputes, lazy so re-attach never materializes it.
-    from pyspark import StorageLevel
-
-    root_assigned = ivf_assign_with(root_cent, e).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        leaf_cent = _bucketed_table(
-            spark, sf_dir, "hier_leaf_full", "bucket",
-            frame_of=lambda: hier_leaf_centroids(root_assigned, spread=nroot),
-            src_name="embeddings",
-            schema="bucket long, leaf long, lv array<double>",
-            stamp_extra=stamp,
-        )
-        assigned = _bucketed_table(
-            spark, sf_dir, "hier_assign_full", ("bucket", "leaf"),
-            frame_of=lambda: hier_assign(root_assigned, leaf_cent, spread=nroot),
-            src_name="embeddings",
-            schema="vec_id long, bucket long, leaf long, v array<double>",
-            stamp_extra=stamp,
-        )
-    finally:
-        root_assigned.unpersist()
-    return root_cent, leaf_cent, assigned
 
 
 #: Serve-tier PQ geometry (the knn_ivfpq_topk sizing: 16 subspaces ×
@@ -770,19 +747,46 @@ _PQ_ROOT_PROBE = 24
 _PQ_LEAF_PROBE = 24
 
 
+def _books_frame(spark: SparkSession, books) -> DataFrame:
+    """The persisted layout of (M, K, sub) PQ codebooks: one
+    (mi, ki, sub) row per sub-centroid. ``_books_array`` reads it back."""
+    return spark.createDataFrame(
+        [
+            (mi, ki, [float(x) for x in books[mi, ki]])
+            for mi in range(books.shape[0])
+            for ki in range(books.shape[1])
+        ],
+        _BOOKS_SCHEMA,
+    )
+
+
+def _books_array(books: DataFrame):
+    """The (M, K, sub) ndarray of a ``_books_frame`` table, the tensor
+    the encode kernel broadcasts. Bounded collect: M·K rows (4096 at
+    m=16, k=256)."""
+    rows = books.collect()
+    m = max(r.mi for r in rows) + 1
+    k = max(r.ki for r in rows) + 1
+    out = np.empty((m, k, len(rows[0].sub)))
+    for r in rows:
+        out[r.mi, r.ki] = r.sub
+    return out
+
+
 def _pq_books_stamp() -> str:
     """The builder stamp of the PERSISTED PQ codebooks — everything the
-    trained book bytes depend on, the Lloyd kernel _pq_train calls
-    included. Shared by _hier_pq_books (its own table's stamp) and
-    hier_pq_codes: the codes are a pure function of the books as well
-    as the assignment, so a books rebuild must never leave stale codes
-    to be scored against new books."""
+    trained book bytes depend on, the Lloyd kernel _pq_train calls and
+    the frame codec included. Shared by _hier_pq_books (its own table's
+    stamp) and hier_pq_codes: the codes are a pure function of the
+    books as well as the assignment, so a books rebuild must never
+    leave stale codes to be scored against new books."""
     from mr_py_spark.operators.bucketed import builder_stamp
     from mr_py_spark.operators.similarity import _ordered_train_sample
     from mr_py_spark.operators.vectors import _PQ_TRAIN, _pq_train
 
     return builder_stamp(
         _pq_train, _lloyd, _nearest, _ordered_train_sample,
+        _books_frame, _books_array,
         m=_PQ_M, k=_PQ_K, train=_PQ_TRAIN,
     )
 
@@ -793,8 +797,6 @@ def _hier_pq_books(spark: SparkSession, sf_dir: str):
     class), persisted as a tiny content-stamped table (m·k = 4096 rows
     of sub-vectors — bounded metadata, collected whole at serve time).
     Returns the (M, K, sub) ndarray."""
-    import numpy as np
-
     from mr_py_spark.operators.bucketed import _bucketed_table
     from mr_py_spark.operators.similarity import (
         _emb_double,
@@ -805,29 +807,18 @@ def _hier_pq_books(spark: SparkSession, sf_dir: str):
     def build() -> DataFrame:
         e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
         X = _ordered_train_sample(e, _PQ_TRAIN)
-        books = _pq_train(
-            X, m=_PQ_M, k=min(_PQ_K, len(X)), sub=X.shape[1] // _PQ_M
+        return _books_frame(
+            spark,
+            _pq_train(X, m=_PQ_M, k=min(_PQ_K, len(X)), sub=X.shape[1] // _PQ_M),
         )
-        rows = [
-            (mi, ki, [float(x) for x in books[mi, ki]])
-            for mi in range(books.shape[0])
-            for ki in range(books.shape[1])
-        ]
-        return spark.createDataFrame(rows, "mi long, ki long, sub array<double>")
 
-    tbl_books = _bucketed_table(
-        spark, sf_dir, "hier_pq_books", "mi", frame_of=build,
-        src_name="embeddings", schema="mi long, ki long, sub array<double>",
-        stamp_extra=_pq_books_stamp(),
+    return _books_array(
+        _bucketed_table(
+            spark, sf_dir, "hier_pq_books", "mi", frame_of=build,
+            src_name="embeddings", schema=_BOOKS_SCHEMA,
+            stamp_extra=_pq_books_stamp(),
+        )
     )
-    rows = tbl_books.collect()
-    m = max(r.mi for r in rows) + 1
-    k = max(r.ki for r in rows) + 1
-    sub = len(rows[0].sub)
-    books = np.empty((m, k, sub))
-    for r in rows:
-        books[r.mi, r.ki] = r.sub
-    return books
 
 
 def hier_pq_codes(
@@ -842,9 +833,9 @@ def hier_pq_codes(
     Python workers).
 
     The persisted codes are a pure function of (assignment, books,
-    encode pass), so the stamp folds in ALL THREE builders (ADVICE
-    r14: the encode-only stamp let a books or assignment rebuild serve
-    STALE codes — the r12 stale-stamp knob class)."""
+    encode pass), so the stamp folds in ALL THREE builders: an
+    encode-only stamp would let a books or assignment rebuild serve
+    STALE codes."""
     from mr_py_spark.operators.bucketed import _bucketed_table, builder_stamp
 
     n = _table_rows(tbl(spark, sf_dir, "embeddings"), sf_dir, "embeddings")
@@ -1106,7 +1097,7 @@ def hier_retrain(
     root's leaves in the one distributed pass, re-assigns every indexed
     vector to its new cell, and rewrites all THREE standing tables in
     place under their existing bucket specs via the crash-atomic
-    two-phase swap (bucketed.replace_bucketed_table).
+    two-phase swap (``hier_build`` with bucketed.replace_save).
 
     Swap order is root → leaf → inverted file, each later stage
     TRAINING/ASSIGNING FROM THE PERSISTED GENERATION it just wrote
@@ -1118,68 +1109,33 @@ def hier_retrain(
 
     Deterministic given the index contents: the root training sample
     is the tripping batch first, then the index's vectors BY vec_id
-    (`similarity._retrain_sample` — ADVICE r13: sorting the union
-    dropped the batch past the cap on any large index), leaf training
-    sorts each group by vec_id and seeds on the bucket id — a replayed
-    retrain rebuilds bit-identical tables. ``exclude_ids`` and
-    ``extra_train`` carry the streaming replay discipline over
-    unchanged (pre-batch index view for the decision AND the corpus;
-    the tripping batch rides the training sample only). Returns
-    {"nroot", "n_leaves", "n_vecs"}."""
-    from mr_py_spark.operators.bucketed import replace_bucketed_table
-    from mr_py_spark.operators.similarity import (
-        _ivf_centroids,
-        _retrain_sample,
-        ivf_assign_with,
-    )
+    (`similarity._retrain_sample`), leaf training sorts each group by
+    vec_id and seeds on the bucket id — a replayed retrain rebuilds
+    bit-identical tables. ``exclude_ids`` and ``extra_train`` carry the
+    streaming replay discipline over unchanged (pre-batch index view
+    for the decision AND the corpus; the tripping batch rides the
+    training sample only). Returns {"nroot", "n_leaves", "n_vecs"}."""
+    from mr_py_spark.operators.bucketed import replace_save
+    from mr_py_spark.operators.similarity import _retrain_sample, pin_drift_ref
 
     idx = spark.table(idx_table).select("vec_id", "v")
     if exclude_ids is not None:
         idx = idx.join(exclude_ids.select("vec_id"), "vec_id", "left_anti")
     sample = _retrain_sample(idx, extra_train)
     n_vecs = idx.count()
-    nroot = min(_hier_nroot(n_vecs, root_rows), max(1, n_vecs), len(sample))
-    cents = _ivf_centroids(spark, idx, nroot, sample=sample)
-    replace_bucketed_table(
-        spark, root_table,
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
-        ),
-        "cid",
+    root_cent, leaf_cent, assigned = hier_build(
+        spark, idx, n_vecs, replace_save(spark),
+        (root_table, leaf_table, idx_table), sample=sample,
+        root_rows=root_rows, leaf_rows=leaf_rows,
     )
-    # persist the O(n·nroot·d) assignment across the two rewrites it
-    # feeds (the r15 profile's duplicated-matmul finding, same as the
-    # builders)
-    from pyspark import StorageLevel
-
-    root_assigned = ivf_assign_with(spark.table(root_table), idx).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # pin the new generation's ROOT-level drift reference in the same
+    # pass as the swap (a hier index gauges at the root)
+    pin_drift_ref(
+        spark, root_cent, idx_table, assigned.select("vec_id", "bucket", "v")
     )
-    try:
-        replace_bucketed_table(
-            spark, leaf_table,
-            hier_leaf_centroids(root_assigned, leaf_rows=leaf_rows, spread=nroot),
-            "bucket",
-        )
-        replace_bucketed_table(
-            spark, idx_table,
-            hier_assign(root_assigned, spark.table(leaf_table), spread=nroot),
-            ("bucket", "leaf"),
-        )
-        # pin the new generation's ROOT-level drift reference in the
-        # same pass as the swap (r16, VERDICT r15 item 3 — see
-        # similarity.pin_drift_ref; a hier index gauges at the root)
-        from mr_py_spark.operators.similarity import pin_drift_ref
-
-        pin_drift_ref(
-            spark, spark.table(root_table), idx_table,
-            spark.table(idx_table).select("vec_id", "bucket", "v"),
-        )
-    finally:
-        root_assigned.unpersist()
     return {
-        "nroot": int(nroot),
-        "n_leaves": int(spark.table(leaf_table).count()),
+        "nroot": int(_hier_nroot(n_vecs, root_rows)),
+        "n_leaves": int(leaf_cent.count()),
         "n_vecs": int(n_vecs),
     }
 

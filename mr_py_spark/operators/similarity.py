@@ -1111,8 +1111,8 @@ def _ivf_candidates(
     cent = spark.createDataFrame(
         [
             (t, cid, cv)
-            for t, cents in enumerate(cents_per_table)
-            for cid, cv in enumerate(cents)
+            for t, table_cents in enumerate(cents_per_table)
+            for cid, cv in enumerate(table_cents)
         ],
         "tbl long, cid long, cv array<double>",
     )
@@ -1300,13 +1300,59 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Persisted layouts of a flat quantizer: its centroids (also the hier
+#: roots) and its inverted file.
+CENT_SCHEMA = "cid long, cv array<double>"
+_IVF_ASSIGN_SCHEMA = "vec_id long, bucket long, v array<double>"
+
+
+def centroid_frame(spark: SparkSession, cents) -> DataFrame:
+    """(cid, cv) frame of a centroid list, cid = list position: the one
+    persisted layout of every flat and root quantizer."""
+    return spark.createDataFrame([(i, c) for i, c in enumerate(cents)], CENT_SCHEMA)
+
+
+def ivf_build(
+    spark: SparkSession,
+    train: DataFrame,
+    nlist: int,
+    save,
+    names: tuple[str, ...],
+    sample=None,
+):
+    """The one flat IVF build (centroids → inverted file) behind every
+    standing flat index: ``nlist`` centroids trained on ``train`` (or
+    on the given ordered ``sample``), then ``train`` assigned to them.
+    ``save(name, frame_of, keys, schema)`` persists each stage and
+    returns the persisted frame (bucketed.stamped_save / replace_save /
+    absent_save); the inverted file is assigned against the centroids
+    ``save`` returned, so it always matches the generation on disk.
+    ``names`` are the (centroid, inverted file) tables; a caller whose
+    inverted file fills later (the streaming bootstrap) names only the
+    centroids. Returns (cent, assigned or None)."""
+    cent = save(
+        names[0],
+        lambda: centroid_frame(
+            spark, _ivf_centroids(spark, train, nlist, sample=sample)
+        ),
+        "cid", CENT_SCHEMA,
+    )
+    if len(names) == 1:
+        return cent, None
+    return cent, save(
+        names[1], lambda: ivf_assign_with(cent, train), "bucket",
+        _IVF_ASSIGN_SCHEMA,
+    )
+
+
 def _ivf_stamp(nlist: int) -> str:
     """The builder stamp of a standing flat IVF quantizer and its
     inverted file: every function and knob the persisted bytes depend
-    on — the centroid trainer AND the Lloyd kernel it calls (a wrapper
-    in a stamp list hides edits to the body it calls), the assignment
-    pass, nlist and the training cap. Shared by ivf_index,
-    ivf_corpus_index and the hier root level (_hier_index_stamp)."""
+    on — the builder, the centroid trainer AND the Lloyd kernel it
+    calls (a wrapper in a stamp list hides edits to the body it calls),
+    the assignment pass, nlist and the training cap. Shared by
+    ivf_index, ivf_corpus_index and the hier root level
+    (_hier_index_stamp)."""
     from mr_py_spark.operators.bucketed import builder_stamp
     from mr_py_spark.operators.vectors import (
         _kmeans_init,
@@ -1316,6 +1362,7 @@ def _ivf_stamp(nlist: int) -> str:
     )
 
     return builder_stamp(
+        ivf_build, centroid_frame,
         _ivf_centroids, _ivf_train_prefix, ivf_assign_with, _ivf_assign_pass,
         _kmeans_init, _lloyd, _nearest, _unit_rows,
         nlist=nlist, train_cap=_IVF_TRAIN_CAP,
@@ -1337,36 +1384,15 @@ def ivf_index(spark: SparkSession, sf_dir: str):
     rebuilds the index. Centroid training and assignment are the SAME
     deterministic code paths the per-run ``knn_ivf_topk`` uses, so
     the indexed search is bit-equal to it (property-tested)."""
-    import numpy as np
-    import pandas as pd
-
-    from mr_py_spark.operators.bucketed import _bucketed_table
+    from mr_py_spark.operators.bucketed import stamped_save
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     n = _table_rows(e, sf_dir, "embeddings")
     nlist = min(_ivf_nlist(n), max(1, n))
-
-    def build_cent() -> DataFrame:
-        cents = _ivf_centroids(spark, e, nlist)
-        return spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
-        )
-
-    # static schemas: a fresh session re-attaching valid persisted
-    # files must never invoke the builders just for the DDL — build_cent
-    # runs the full driver-side k-means eagerly (ADVICE r11)
-    stamp = _ivf_stamp(nlist)
-    cent = _bucketed_table(
-        spark, sf_dir, "ivf_cent", "cid", frame_of=build_cent,
-        src_name="embeddings", schema="cid long, cv array<double>",
-        stamp_extra=stamp,
-    )
-
-    assigned = _bucketed_table(
-        spark, sf_dir, "ivf_assign", "bucket",
-        frame_of=lambda: ivf_assign_with(cent, e), src_name="embeddings",
-        schema="vec_id long, bucket long, v array<double>",
-        stamp_extra=stamp,
+    cent, assigned = ivf_build(
+        spark, e, nlist,
+        stamped_save(spark, sf_dir, "embeddings", _ivf_stamp(nlist)),
+        ("ivf_cent", "ivf_assign"),
     )
     return cent, assigned, nlist
 
@@ -1430,9 +1456,7 @@ def _ivf_assign_pass(cent: DataFrame, vectors: DataFrame, with_score: bool) -> D
             yield pa.RecordBatch.from_arrays(out, names)
 
     out_schema = (
-        "vec_id long, bucket long, score double"
-        if with_score
-        else "vec_id long, bucket long, v array<double>"
+        "vec_id long, bucket long, score double" if with_score else _IVF_ASSIGN_SCHEMA
     )
     return vectors.select("vec_id", "v").mapInArrow(gen, out_schema)
 
@@ -1534,13 +1558,12 @@ def ivf_corpus_index(spark: SparkSession, sf_dir: str):
     ``incremental_semantic_dedup`` triages deltas against — no Lloyd
     retrain, no corpus re-assignment per snapshot. Returns
     (cent, assigned)."""
-    from mr_py_spark.operators.bucketed import _bucketed_table
+    from mr_py_spark.operators.bucketed import builder_stamp, stamped_save
     from mr_py_spark.operators.dedup import (
         _INC_BUCKETS,
         _INC_DELTA_BUCKET,
         _INC_MULT,
     )
-
     from mr_py_spark.operators.kmeans import _kmeans_k
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
@@ -1550,38 +1573,20 @@ def ivf_corpus_index(spark: SparkSession, sf_dir: str):
     )
     # Quantizer sized for CLUSTER-MATE candidate generation (~64
     # vectors per bucket, kmeans._kmeans_k — the SemDeDup scale knob),
-    # NOT for ANN probe economics (_ivf_nlist's ~4096-row buckets): the
-    # r12 sf10 A/B measured the 4096-grade index 3.5x SLOWER than the
-    # per-run Lloyd chain because candidate pairs scale with bucket
-    # occupancy (64x the pair work). nlist off the full-table footer
-    # count (the corpus is 90% of it), so sizing needs no count()
-    # action.
+    # NOT for ANN probe economics (_ivf_nlist's ~4096-row buckets): a
+    # 4096-grade index measured 3.5x SLOWER than the per-run Lloyd chain
+    # at sf10 because candidate pairs scale with bucket occupancy (64x
+    # the pair work). nlist off the full-table footer count (the corpus
+    # is 90% of it), so sizing needs no count() action.
     n = _table_rows(e, sf_dir, "embeddings")
     nlist = min(_kmeans_k(n), max(1, n))
-
-    def build_cent() -> DataFrame:
-        cents = _ivf_centroids(spark, corpus, nlist)
-        return spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
-        )
-
-    from mr_py_spark.operators.bucketed import builder_stamp
-
     stamp = _ivf_stamp(nlist) + builder_stamp(
         inc=(_INC_MULT, _INC_BUCKETS, _INC_DELTA_BUCKET)
     )
-    cent = _bucketed_table(
-        spark, sf_dir, "ivf_corpus_cent", "cid", frame_of=build_cent,
-        src_name="embeddings", schema="cid long, cv array<double>",
-        stamp_extra=stamp,
+    return ivf_build(
+        spark, corpus, nlist, stamped_save(spark, sf_dir, "embeddings", stamp),
+        ("ivf_corpus_cent", "ivf_corpus_assign"),
     )
-    assigned = _bucketed_table(
-        spark, sf_dir, "ivf_corpus_assign", "bucket",
-        frame_of=lambda: ivf_assign_with(cent, corpus), src_name="embeddings",
-        schema="vec_id long, bucket long, v array<double>",
-        stamp_extra=stamp,
-    )
-    return cent, assigned
 
 
 #: Cap on a fold-order sim block's cell count (~128 MB of float64):
@@ -2008,52 +2013,45 @@ def ivf_retrain(
 
     ``extra_train`` (vec_id, v) folds the batch that TRIPPED the drift
     alarm into the training sample — taken FIRST, before the index
-    fill (`_retrain_sample`; ADVICE r13: sorting the union by vec_id
-    dropped the batch past the cap exactly when the index was large,
-    and a retrain that never sees the drifted region would
-    re-partition the same old space and leave the alarm ringing). Only
+    fill (`_retrain_sample`: a retrain that never sees the drifted
+    region would re-partition the same old space and leave the alarm
+    ringing). Only
     the sample is widened; the inverted-file rewrite still covers
     exactly the index rows (the loop admits the batch itself through
     its normal idempotent path afterwards), and replay determinism
     holds because the batch frame is part of the replayed input.
 
     Returns {"nlist", "n_vecs"} for ledgers/monitoring."""
-    from mr_py_spark.operators.bucketed import replace_bucketed_table
+    from mr_py_spark.operators.bucketed import replace_save
     from mr_py_spark.operators.kmeans import _kmeans_k
 
     idx = spark.table(idx_table).select("vec_id", "v")
     if exclude_ids is not None:
         idx = idx.join(exclude_ids.select("vec_id"), "vec_id", "left_anti")
     sample = _retrain_sample(idx, extra_train)
-    # size the quantizer from the INDEX, not the capped training sample
-    # (r13 review: _kmeans_k(len(sample)) silently shrank the rebuilt
-    # quantizer on any index past _IVF_TRAIN_CAP — a 1M-vector index
-    # retrained into ~640-row buckets, re-entering the very occupancy
-    # regime the retrain exists to escape); the count is one bounded
-    # aggregate over the standing table, paid once per drift event
+    # size the quantizer from the INDEX, not the capped training sample:
+    # _kmeans_k(len(sample)) would shrink the rebuilt quantizer on any
+    # index past _IVF_TRAIN_CAP, back into the occupancy regime the
+    # retrain exists to escape; the count is one bounded aggregate over
+    # the standing table, paid once per drift event
     n_idx = idx.count()
     if nlist is None:
         nlist = max(2, _kmeans_k(n_idx))
     nlist = min(nlist, max(1, n_idx), max(1, len(sample)))
-    cents = _ivf_centroids(spark, idx, nlist, sample=sample)
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
+    # centroids first: a crash between the two swaps leaves cent/idx
+    # from different generations only until the next retrain — statuses
+    # stay self-consistent because triage always assigns against
+    # cent_table and verifies exactly (a stale inverted file loses
+    # candidates, never fabricates matches)
+    cent, _ = ivf_build(
+        spark, idx, nlist, replace_save(spark), (cent_table, idx_table),
+        sample=sample,
     )
-    # centroids first: the assignment pass below broadcasts this frame,
-    # and a crash between the two swaps leaves cent/idx from different
-    # generations only until the next retrain — statuses stay
-    # self-consistent because triage always assigns against cent_table
-    # and verifies exactly (a stale inverted file loses candidates,
-    # never fabricates matches)
-    replace_bucketed_table(spark, cent_table, cent_df, "cid")
-    new_assigned = ivf_assign_with(spark.table(cent_table), idx)
-    replace_bucketed_table(spark, idx_table, new_assigned, "bucket")
     # pin the new generation's drift reference in the same pass as the
-    # swap (r16, VERDICT r15 item 3): the swap renamed a fresh data dir
-    # into place, clearing the old sidecar — writing the new cohort's
-    # stats here closes the first-check window and keeps the O(index)
-    # scoring pass inside the retrain, which is already O(index)
-    pin_drift_ref(spark, spark.table(cent_table), idx_table)
+    # swap: the swap renamed a fresh data dir into place, clearing the
+    # old sidecar, and the O(index) scoring pass belongs inside the
+    # retrain, which is already O(index)
+    pin_drift_ref(spark, cent, idx_table)
     return {"nlist": int(nlist), "n_vecs": int(spark.table(idx_table).count())}
 
 
@@ -2084,8 +2082,7 @@ def ivf_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ivf_drift_retrain", tags=("C3", "B7", "A8"), oracle=None)
 def ivf_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift ACTUATOR demo, registered so the driver exercises the
-    full gauge→actuator path end-to-end (VERDICT r12 item 3: the
-    monitor emitted a signal nothing consumed): build a private IVF
+    full gauge→actuator path end-to-end: build a private IVF
     index over the fixture embeddings, present a PLANTED-DRIFT delta
     (the same vectors with their dimensions reversed — unit-norm
     preserved, but uncorrelated with every trained centroid), watch
@@ -2101,9 +2098,8 @@ def ivf_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile as _tf
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import absent_save
     from mr_py_spark.operators.kmeans import _kmeans_k
-    from mr_py_spark.sources.sinks import write_bucketed
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     # per-process workspace: a throwaway demo isolates instead of
@@ -2120,17 +2116,13 @@ def ivf_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     try:
         n = _table_rows(e, sf_dir, "embeddings")
-        cents = _ivf_centroids(spark, e, min(max(2, _kmeans_k(n)), max(1, n)))
-        write_bucketed(
-            spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cents)],
-                "cid long, cv array<double>",
-            ),
-            cent_t, "cid", _BUCKETS, path=os.path.join(root, "cent"),
-        )
-        write_bucketed(
-            ivf_assign_with(spark.table(cent_t), e), idx_t, "bucket",
-            _BUCKETS, path=os.path.join(root, "idx"),
+        ivf_build(
+            spark, e, min(max(2, _kmeans_k(n)), max(1, n)),
+            absent_save(spark, {
+                cent_t: os.path.join(root, "cent"),
+                idx_t: os.path.join(root, "idx"),
+            }),
+            (cent_t, idx_t),
         )
         delta = e.select(
             (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"),
@@ -2140,8 +2132,7 @@ def ivf_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         def p05s() -> dict:
             # NULL p05 (empty cohort) surfaces as nan in the emitted
             # metrics; the DECISION path below never re-implements the
-            # rule (r13 review: the inline copy would silently diverge
-            # from drift_degraded on a future rule fix)
+            # rule, so it cannot diverge from drift_degraded
             return {
                 r.cohort: (
                     float("nan") if r.p05_top1 is None else float(r.p05_top1)
@@ -2414,9 +2405,7 @@ def _ivfpq_topk_core(
     n_corpus = n_hint if n_hint is not None else e.count()
     nlist = min(_ivf_nlist(n_corpus), max(1, n_corpus))
     cents = _ivf_centroids(spark, e, nlist)
-    cent = spark.createDataFrame(
-        list(enumerate(cents)), "cid long, cv array<double>"
-    )
+    cent = centroid_frame(spark, cents)
     b_cmat = _bc(spark, np.asarray(cents, dtype=np.float64))
 
     train_rows = (

@@ -285,4 +285,9 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _prepend_worker_path(spark)
+    # Workers forked from the preloaded daemon import the package from
+    # the root on their PYTHONPATH, so harden() need not zip and ship it.
+    conf = spark.sparkContext.getConf()
+    if conf.get("spark.python.daemon.module") == "mr_py_spark._daemon":
+        spark._mrps_shipped = True
     return harden(spark)

@@ -1281,16 +1281,20 @@ def _ivf_maintenance_step(
     crash interrupted."""
     from pyspark.sql import functions as SF
 
-    from mr_py_spark.operators.bucketed import _BUCKETS, recover_compaction
+    from mr_py_spark.operators.bucketed import (
+        _BUCKETS,
+        absent_save,
+        recover_compaction,
+    )
     from mr_py_spark.operators.kmeans import _kmeans_k
     from mr_py_spark.operators.similarity import (
         _DRIFT_P05_RATIO,
-        _ivf_centroids,
         _ordered_train_sample,
         delta_p05,
         drift_degraded_pinned,
         drift_ref_stats,
         ivf_assign_with,
+        ivf_build,
         ivf_index_append,
         ivf_retrain,
         pin_drift_ref,
@@ -1306,16 +1310,14 @@ def _ivf_maintenance_step(
         recover_compaction(spark, idx_path)
 
     def bootstrap(batch, n_rows):
+        # checked here too: the sample collect is paid only while absent
         if spark.catalog.tableExists(cent_table):
             return
-        cents = _ivf_centroids(
+        ivf_build(
             spark, batch, max(2, _kmeans_k(n_rows())),
+            absent_save(spark, {cent_table: cent_path}), (cent_table,),
             sample=_ordered_train_sample(batch),
         )
-        cent_df = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid long, cv array<double>"
-        )
-        write_bucketed(cent_df, cent_table, "cid", _BUCKETS, path=cent_path)
 
     def view(batch, corpus):
         cent = spark.table(cent_table)
@@ -1490,21 +1492,6 @@ def _codes_gen_read(spark: SparkSession, codes_table: str) -> str | None:
     return None if rec is None else rec["root_gen"]
 
 
-def _books_np(spark: SparkSession, books_table: str):
-    """Materialize the stored PQ codebooks (mi, ki, sub) as the numpy
-    (M, K, sub) tensor the encode kernel broadcasts. Bounded collect:
-    M·K rows (≤ 4096 at production m=16, k=256)."""
-    import numpy as np
-
-    rows = spark.table(books_table).collect()
-    m = max(r.mi for r in rows) + 1
-    k = max(r.ki for r in rows) + 1
-    books = np.empty((m, k, len(rows[0].sub)))
-    for r in rows:
-        books[r.mi, r.ki] = r.sub
-    return books
-
-
 def _hier_maintenance_step(
     spark: SparkSession, root_table: str, leaf_table: str, idx_table: str,
     out: str, root_path: str, leaf_path: str, idx_path: str,
@@ -1556,26 +1543,28 @@ def _hier_maintenance_step(
 
     from mr_py_spark.operators.bucketed import (
         _BUCKETS,
+        absent_save,
         recover_compaction,
         replace_bucketed_table,
         sidecar_path,
         sidecar_write_json,
     )
     from mr_py_spark.operators.hier import (
+        _CELL_SCHEMA,
         _LEAF_ROWS,
         _ROOT_ROWS,
-        _hier_nroot,
+        _books_array,
+        _books_frame,
         _pq_encode_frame,
         hier_assign,
+        hier_build,
         hier_index_append,
-        hier_leaf_centroids,
         hier_pq_codes_append,
         hier_retrain,
         semantic_delta_status_hier,
     )
     from mr_py_spark.operators.similarity import (
         _DRIFT_P05_RATIO,
-        _ivf_centroids,
         _ordered_train_sample,
         delta_p05,
         drift_degraded_pinned,
@@ -1598,6 +1587,9 @@ def _hier_maintenance_step(
         )
     exists = spark.catalog.tableExists
 
+    def stored_books():
+        return _books_array(spark.table(books_table))
+
     def encoded_index(books):
         idx = spark.table(idx_table).select("vec_id", "bucket", "leaf", "v")
         return _pq_encode_frame(idx, books)
@@ -1606,7 +1598,7 @@ def _hier_maintenance_step(
         # a pure function of (index, books): a crash before the sidecar
         # lands only repeats it
         replace_bucketed_table(
-            spark, codes_table, encoded_index(_books_np(spark, books_table)),
+            spark, codes_table, encoded_index(stored_books()),
             ("bucket", "leaf"),
         )
         stamp_codes(gen)
@@ -1627,33 +1619,19 @@ def _hier_maintenance_step(
                 rebuild_codes(gen)
 
     def bootstrap(batch, n_rows):
-        if not exists(root_table):
-            n = n_rows()
-            nroot = min(_hier_nroot(n, r_rows), max(1, n))
-            cents = _ivf_centroids(
-                spark, batch, nroot, sample=_ordered_train_sample(batch)
-            )
-            write_bucketed(
-                spark.createDataFrame(
-                    [(i, c) for i, c in enumerate(cents)],
-                    "cid long, cv array<double>",
-                ),
-                root_table, "cid", _BUCKETS, path=root_path,
-            )
-        if not exists(leaf_table):
-            write_bucketed(
-                hier_leaf_centroids(
-                    ivf_assign_with(spark.table(root_table), batch),
-                    leaf_rows=l_rows,
-                ),
-                leaf_table, "bucket", _BUCKETS, path=leaf_path,
-            )
+        # checked here too: the sample collect is paid only while absent
+        if exists(root_table) and exists(leaf_table):
+            return
+        hier_build(
+            spark, batch, n_rows(),
+            absent_save(spark, {root_table: root_path, leaf_table: leaf_path}),
+            (root_table, leaf_table), sample=_ordered_train_sample(batch),
+            root_rows=r_rows, leaf_rows=l_rows,
+        )
 
     def view(batch, corpus):
         if corpus is None:
-            corpus = spark.createDataFrame(
-                [], "vec_id long, bucket long, leaf long, v array<double>"
-            )
+            corpus = spark.createDataFrame([], _CELL_SCHEMA)
         return spark.table(root_table), spark.table(leaf_table), corpus
 
     def trips(batch, ctx, batch_max):
@@ -1690,7 +1668,7 @@ def _hier_maintenance_step(
         if exists(codes_table):
             if warm:
                 hier_pq_codes_append(
-                    ctx[0], ctx[1], _books_np(spark, books_table), rows,
+                    ctx[0], ctx[1], stored_books(), rows,
                     codes_table, idempotent=True, stats=stats,
                 )
             return
@@ -1704,15 +1682,8 @@ def _hier_maintenance_step(
             m=pq_m, k=min(pq_k, len(X)), sub=X.shape[1] // pq_m,
         )
         write_bucketed(
-            spark.createDataFrame(
-                [
-                    (mi, ki, [float(x) for x in books[mi, ki]])
-                    for mi in range(books.shape[0])
-                    for ki in range(books.shape[1])
-                ],
-                "mi long, ki long, sub array<double>",
-            ),
-            books_table, "mi", _BUCKETS, path=books_path,
+            _books_frame(spark, books), books_table, "mi", _BUCKETS,
+            path=books_path,
         )
         write_bucketed(
             encoded_index(books), codes_table, ("bucket", "leaf"), _BUCKETS,
@@ -1785,7 +1756,7 @@ def stream_hier_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live roots. Rows-only (seeded quantizers + engine-specific code
     layout); crash-window, replay, and retrain-re-encode properties are
     byte-level-tested in tests/test_streaming_sink.py."""
-    from mr_py_spark.operators.hier import _pq_encode_frame
+    from mr_py_spark.operators.hier import _books_array, _pq_encode_frame
 
     tag = stream_table_tag(sf_dir)
     root_table, leaf_table, idx_table, codes_table, books_table = (
@@ -1812,7 +1783,7 @@ def stream_hier_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     want = _pq_encode_frame(
         idx.select("vec_id", "bucket", "leaf", "v"),
-        _books_np(spark, books_table),
+        _books_array(spark.table(books_table)),
     ).select("vec_id", F.struct("bucket", "leaf", "code").alias("want"))
     mismatches = (
         got.join(want, "vec_id", "full_outer")

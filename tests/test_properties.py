@@ -3110,6 +3110,59 @@ def test_semantic_dedup_hier_star_rule_vs_brute_force(spark):
     assert out2 == out1  # deterministic
 
 
+def test_hier_quantize_refuses_past_two_level_ceiling(spark):
+    """Every two-level build path goes through ``hier_build``, which
+    refuses a corpus past the design ceiling before any Spark job runs
+    (the per-run form included, not only the standing index)."""
+    from mr_py_spark.operators.hier import _HIER_TWO_LEVEL_CEIL, hier_quantize
+
+    tiny = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, v array<double>"
+    )
+    sc = spark.sparkContext
+    group = "hier-ceiling-probe"
+    sc.setJobGroup(group, "two-level ceiling check")
+    try:
+        with pytest.raises(ValueError, match="two-level design ceiling"):
+            hier_quantize(spark, tiny, _HIER_TWO_LEVEL_CEIL + 1)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        tiny.collect()  # the probe does see a job of this group
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+
+
+def test_hier_quantize_matches_standing_hier_index(spark):
+    """The per-run build (``hier_quantize``) and the standing full-table
+    index (``hier_index``) are the same ``hier_build`` over the same
+    vectors, so on the fixture they agree row for row: the same root
+    and leaf centroids and the same (vec_id, bucket, leaf) cells."""
+    from mr_py_spark.operators.hier import hier_index, hier_quantize
+    from mr_py_spark.operators.similarity import _emb_double
+    from mr_py_spark.sources import tbl
+    from mr_py_spark.util import table_rows
+
+    e = _emb_double(tbl(spark, SF_DIR, "embeddings"), "v")
+    run = hier_quantize(spark, e, table_rows(e, SF_DIR, "embeddings"))
+    standing = hier_index(spark, SF_DIR)
+
+    def tables(root, leaf, assigned):
+        return (
+            sorted((r.cid, tuple(r.cv)) for r in root.collect()),
+            sorted((r.bucket, r.leaf, tuple(r.lv)) for r in leaf.collect()),
+            sorted(
+                tuple(r) for r in assigned.select("vec_id", "bucket", "leaf").collect()
+            ),
+        )
+
+    got, want = tables(*run), tables(*standing)
+    assert len(got[2]) == e.count()
+    assert len(got[1]) > len(got[0])  # a real two-level split
+    assert got == want
+
+
 def test_hier_index_append_bit_equal_to_rebuild(spark, tmp_path):
     """O(delta) maintenance for the two-level inverted file: build a
     private index from part of a corpus, append the rest against the

@@ -984,7 +984,7 @@ def test_hier_maintenance_bootstrap_crash_between_quantizer_writes(
 
     from mr_py_spark.operators.bucketed import _BUCKETS
     from mr_py_spark.operators.hier import _hier_nroot
-    from mr_py_spark.operators.similarity import _ivf_centroids
+    from mr_py_spark.operators.similarity import _ivf_centroids, centroid_frame
     from mr_py_spark.sources.sinks import write_bucketed
     from mr_py_spark.streaming import _hier_maintenance_step
 
@@ -1008,15 +1008,9 @@ def test_hier_maintenance_bootstrap_crash_between_quantizer_writes(
         os.makedirs(out, exist_ok=True)
         if pre_crash:
             # reproduce exactly the bootstrap's root write, then "die"
-            n0 = batch.count()
-            nroot = min(_hier_nroot(n0, 4), max(1, n0))
-            cents = _ivf_centroids(spark, batch, nroot)
+            cents = _ivf_centroids(spark, batch, _hier_nroot(batch.count(), 4))
             write_bucketed(
-                spark.createDataFrame(
-                    [(i, c) for i, c in enumerate(cents)],
-                    "cid long, cv array<double>",
-                ),
-                root_t, "cid", _BUCKETS,
+                centroid_frame(spark, cents), root_t, "cid", _BUCKETS,
                 path=str(tmp_path / f"root_{label}"),
             )
         step = _hier_maintenance_step(
@@ -1064,9 +1058,12 @@ def test_hier_pq_codes_loop_replay_and_generation_self_heal(spark, tmp_path):
 
     import numpy as np
 
-    from mr_py_spark.operators.hier import _pq_encode_frame, hier_retrain
+    from mr_py_spark.operators.hier import (
+        _books_array,
+        _pq_encode_frame,
+        hier_retrain,
+    )
     from mr_py_spark.streaming import (
-        _books_np,
         _codes_gen_read,
         _hier_maintenance_step,
         _root_gen_hash,
@@ -1103,7 +1100,7 @@ def test_hier_pq_codes_loop_replay_and_generation_self_heal(spark, tmp_path):
             (r.vec_id, r.bucket, r.leaf, tuple(r.code))
             for r in _pq_encode_frame(
                 spark.table(idx_t).select("vec_id", "bucket", "leaf", "v"),
-                _books_np(spark, books_t),
+                _books_array(spark.table(books_t)),
             ).collect()
         )
 

@@ -27,9 +27,10 @@ probe = lambda _: [(
     gc.get_freeze_count(),
     "mr_py_spark" in sys.modules,
     hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__"),
+    __import__("mr_py_spark.operators.hier", fromlist=["hier"]).__file__,
 )]
 got = spark.sparkContext.parallelize(range(2), 2).mapPartitions(probe).collect()
-print(json.dumps(got))
+print(json.dumps([os.getpid(), got]))
 spark.stop()
 """
 
@@ -41,7 +42,11 @@ def test_fresh_session_workers_fork_from_the_preloaded_daemon(tmp_path):
     the import-time heap frozen. The task is a plain lambda that
     imports nothing of the package, and the session runs from a
     directory outside the checkout, so the daemon is importable only
-    through the PYTHONPATH entry ``get_spark`` adds."""
+    through the PYTHONPATH entry ``get_spark`` adds. Workers import
+    the package from the source tree, so the session ships no package
+    zip."""
+    import tempfile
+
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     env.pop("PYTHONPATH", None)
     proc = subprocess.run(
@@ -49,14 +54,18 @@ def test_fresh_session_workers_fork_from_the_preloaded_daemon(tmp_path):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    pid, got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert not os.path.exists(
+        os.path.join(tempfile.gettempdir(), f"mr_py_spark_pkg_{pid}.zip")
+    )
     assert len(got) == 2
-    for cmdline, threads, frozen, has_pkg, zip_cache in got:
+    for cmdline, threads, frozen, has_pkg, zip_cache, hier_file in got:
         assert "mr_py_spark._daemon" in cmdline, cmdline
         assert threads == 1
         assert frozen > 0
         assert has_pkg
         assert zip_cache
+        assert hier_file.startswith(os.path.join(ROOT, "mr_py_spark") + os.sep)
 
 
 @pytest.mark.parametrize("blas_threads,falls_back", [("1", False), ("2", True)])
