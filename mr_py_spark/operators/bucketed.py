@@ -35,21 +35,29 @@ from mr_py_spark.registry import register
 from mr_py_spark.sources import tbl
 from mr_py_spark.sources.sinks import write_bucketed
 
-#: Bucket count = this deployment's core count (local[32]). A bucketed
-#: scan reads ONE task per bucket, so the bucket count CAPS scan
-#: parallelism: the r10 sf100 A/B measured the 16-bucket layout at only
-#: ~1.1x over the shuffle form because 16 tasks scanned 13 GB of
-#: lineitem on 32 cores (vs 1.5-1.6x at sf10 where the scan fit the
-#: task width) — size buckets to the cluster's parallelism, not the
-#: fixture. At 100 TB that means thousands of buckets. r17 (VERDICT
-#: r16 item 7): env-tunable so a cluster deployment sizes it to task
-#: width without a source edit; the default is unchanged and the spec
-#: is stamped into every standing table, so a drifted value fails
-#: loudly on append (Spark validates the bucket spec) and the
-#: content-stamped warehouse rebuilds rather than serving a stale
-#: layout.
-_BUCKETS = int(os.environ.get("SPARK_GRAFT_BUCKETS", "32"))
 _CACHE_ROOT_NAME = "spark_graft_bucketed"
+
+
+def n_buckets(spark: SparkSession) -> int:
+    """Bucket count of a NEW standing table: ``$SPARK_GRAFT_BUCKETS``
+    when set, else the session's task width (``defaultParallelism``),
+    because a bucketed scan or write runs one task and writes one file
+    per bucket. An existing table keeps its own count
+    (``table_buckets``). With dynamic allocation the start-up width can
+    be small, so set the knob on a cluster. A malformed value raises
+    before any Spark work."""
+    raw = os.environ.get("SPARK_GRAFT_BUCKETS")
+    if raw is None:
+        return int(spark.sparkContext.defaultParallelism)
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_BUCKETS must be a positive integer, got {raw!r}"
+        )
+    return n
 
 
 def _src_stamp(sf_dir: str, name: str, extra: str = "") -> str:
@@ -119,7 +127,8 @@ def _bucketed_table(
     fixture rebuilds instead of serving stale buckets; a mkdir lock
     serializes concurrent first builds (two overwriting writers would
     interleave files, then both stamp complete)."""
-    tag = f"b{_BUCKETS}_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.strip("/"))
+    nb = n_buckets(spark)
+    tag = f"b{nb}_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.strip("/"))
     table = f"mrps_bkt_{name}_{tag}"
     stamp = _src_stamp(sf_dir, src_name or name, extra=stamp_extra)
 
@@ -202,7 +211,7 @@ def _bucketed_table(
                             f"{schema!r} != built frame schema "
                             f"{frame().schema.simpleString()!r}"
                         )
-                write_bucketed(frame(), table, key, _BUCKETS, path=path)
+                write_bucketed(frame(), table, key, nb, path=path)
                 tmp = done + ".tmp"
                 with open(tmp, "w") as f:
                     f.write(stamp)
@@ -222,36 +231,78 @@ def _bucketed_table(
         )
         spark.sql(
             f"CREATE TABLE {table} ({cols}) USING parquet "
-            f"CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {_BUCKETS} BUCKETS "
+            f"CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {nb} BUCKETS "
             f"LOCATION '{path}'"
         )
     return spark.table(table)
 
 
-def _table_location(spark: SparkSession, table: str) -> str:
-    """Filesystem path of ``table``'s data, scheme stripped — local
-    deployments only; an object store would keep the URI.
-
-    Fast path (r16): the session catalog's metadata lookup through the
-    JVM gateway — a few py4j calls, ~2 ms. The previous
-    ``DESCRIBE FORMATTED`` form planned and executed a whole SQL
-    command (~165 ms measured), and this helper sits under EVERY
-    per-batch sidecar read (replay guard, LSH banding/gauge, drift
-    reference), where it was the dominant term once the sidecars
-    themselves became cheap JSON reads. The DESCRIBE fallback covers
-    sessions without a JVM gateway (e.g. Spark Connect)."""
+def _catalog_entry(spark: SparkSession, table: str):
+    """``table``'s catalog entry (a JVM ``CatalogTable``) read through
+    the session catalog's gateway: a few py4j calls, ~2 ms, where
+    ``DESCRIBE FORMATTED`` plans and runs a SQL command (~165 ms) —
+    this sits under every per-batch sidecar read and every
+    standing-index append. None on a session without a JVM gateway
+    (e.g. Spark Connect): callers fall back to ``_describe``."""
     try:
         ss = spark._jsparkSession.sessionState()
         ident = ss.sqlParser().parseTableIdentifier(table)
-        loc = str(ss.catalog().getTableMetadata(ident).location())
+        return ss.catalog().getTableMetadata(ident)
     except Exception:
-        loc = (
-            spark.sql(f"DESCRIBE FORMATTED {table}")
-            .filter(F.col("col_name") == "Location")
-            .head()
-            .data_type
+        return None
+
+
+def _describe(spark: SparkSession, table: str) -> dict[str, str]:
+    return {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
+    }
+
+
+def _table_location(spark: SparkSession, table: str) -> str:
+    """Filesystem path of ``table``'s data, scheme stripped — local
+    deployments only; an object store would keep the URI."""
+    meta = _catalog_entry(spark, table)
+    if meta is not None:
+        loc = str(meta.location())
+    else:
+        loc = _describe(spark, table)["Location"]
+    return re.sub(r"^file:/+", "/", loc)
+
+
+def table_buckets(spark: SparkSession, table: str) -> int:
+    """``table``'s own bucket count, from its catalog bucket spec:
+    what every append, compaction and rebuild of an existing standing
+    table writes under, whatever ``n_buckets`` would pick for a new
+    one."""
+    meta = _catalog_entry(spark, table)
+    if meta is not None:
+        spec = meta.bucketSpec()
+        n = spec.get().numBuckets() if spec.isDefined() else None
+    else:
+        n = _describe(spark, table).get("Num Buckets")
+    if n is None:
+        raise ValueError(f"{table} is not a bucketed table")
+    return int(n)
+
+
+def _external_meta(spark: SparkSession, table: str, who: str) -> tuple[str, int]:
+    """(location, bucket count) of a standing table that a two-phase
+    swap may rewrite. The table must be EXTERNAL (every in-repo
+    standing index is — write_bucketed attaches a LOCATION): DROP TABLE
+    on a MANAGED table would delete its data directory mid-swap, so
+    that is refused up front."""
+    meta = _catalog_entry(spark, table)
+    if meta is not None:
+        kind = str(meta.tableType().name())
+    else:
+        kind = _describe(spark, table).get("Type", "")
+    if "EXTERNAL" not in kind:
+        raise ValueError(
+            f"{who}: {table} is {kind!r}, not EXTERNAL — DROP TABLE "
+            "would delete its data directory mid-swap"
         )
-    return re.sub(r"^file:", "", loc)
+    return _table_location(spark, table), table_buckets(spark, table)
 
 
 def _data_files(path: str) -> list[str]:
@@ -346,7 +397,7 @@ def recover_compaction(spark: SparkSession, path: str) -> bool:
 
 def _swap_in_side_copy(
     spark: SparkSession, table: str, tmp_tbl: str, path: str,
-    cols: str, keys: list[str], n_buckets: int,
+    cols: str, keys: list[str], nb: int,
 ) -> None:
     """Publish a COMPLETE side copy at ``<path>__compacting`` as the
     new generation of ``table`` at ``path`` — the marker-file two-phase
@@ -362,7 +413,7 @@ def _swap_in_side_copy(
     sidecar_write_json(
         marker,
         {"table": table, "tmp_tbl": tmp_tbl, "path": path,
-         "cols": cols, "keys": keys, "n_buckets": n_buckets},
+         "cols": cols, "keys": keys, "n_buckets": nb},
     )
     spark.sql(f"DROP TABLE {tmp_tbl}")
     spark.sql(f"DROP TABLE {table}")
@@ -372,7 +423,7 @@ def _swap_in_side_copy(
     spark.sql(
         f"CREATE TABLE {table} ({cols}) USING parquet "
         f"CLUSTERED BY ({key_list}) SORTED BY ({key_list}) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+        f"INTO {nb} BUCKETS LOCATION '{path}'"
     )
     os.remove(marker)  # phase 2 committed: swap fully re-attached
     shutil.rmtree(old_path, ignore_errors=True)
@@ -380,28 +431,19 @@ def _swap_in_side_copy(
 
 def replace_bucketed_table(
     spark: SparkSession, table: str, frame: DataFrame,
-    key: str | tuple[str, ...], n_buckets: int = _BUCKETS,
+    key: str | tuple[str, ...],
 ) -> None:
-    """REBUILD a standing EXTERNAL bucketed table's contents in place
-    — the maintenance primitive behind ``ivf_retrain`` (a drift-
-    triggered quantizer rebuild rewrites centroids AND the inverted
-    file under the same bucket spec). Side-write the new frame, then
+    """REBUILD a standing EXTERNAL bucketed table's contents in place,
+    under its own bucket spec — the maintenance primitive behind
+    ``ivf_retrain`` (a drift-triggered quantizer rebuild rewrites
+    centroids AND the inverted file). Side-write the new frame, then
     the same crash-atomic two-phase swap compaction uses: a reader (or
     a crashed rebuild, via ``recover_compaction``) always sees a
     complete generation, never a half-written table. Like compaction,
     the frame is repartitioned on the bucket keys so the writer emits
     one file per occupied bucket."""
     keys = [key] if isinstance(key, str) else list(key)
-    desc = {
-        r.col_name: r.data_type
-        for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    }
-    if "EXTERNAL" not in desc.get("Type", ""):
-        raise ValueError(
-            f"replace_bucketed_table: {table} is {desc.get('Type')!r}, not "
-            "EXTERNAL — DROP TABLE would delete its data directory mid-swap"
-        )
-    path = re.sub(r"^file:", "", desc["Location"])
+    path, nb = _external_meta(spark, table, "replace_bucketed_table")
     cols = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in frame.schema
     )
@@ -411,10 +453,9 @@ def replace_bucketed_table(
     shutil.rmtree(tmp_path, ignore_errors=True)
     shutil.rmtree(f"{path.rstrip('/')}__old", ignore_errors=True)
     write_bucketed(
-        frame.repartition(n_buckets, *keys), tmp_tbl, keys, n_buckets,
-        path=tmp_path,
+        frame.repartition(nb, *keys), tmp_tbl, keys, nb, path=tmp_path,
     )
-    _swap_in_side_copy(spark, table, tmp_tbl, path, cols, keys, n_buckets)
+    _swap_in_side_copy(spark, table, tmp_tbl, path, cols, keys, nb)
 
 
 # Table-save hooks of the quantizer builders (hier.hier_build,
@@ -456,7 +497,9 @@ def absent_save(spark: SparkSession, paths: dict[str, str]):
 
     def save(name, frame_of, keys, schema):
         if not spark.catalog.tableExists(name):
-            write_bucketed(frame_of(), name, keys, _BUCKETS, path=paths[name])
+            write_bucketed(
+                frame_of(), name, keys, n_buckets(spark), path=paths[name]
+            )
         return spark.table(name)
 
     return save
@@ -679,7 +722,6 @@ def append_guard(
 
 def compact_bucketed_table(
     spark: SparkSession, table: str, key: str | tuple[str, ...],
-    n_buckets: int = _BUCKETS,
 ) -> dict:
     """Index COMPACTION (VERDICT r12 item 3): rewrite a standing
     bucketed table into exactly ONE file per occupied bucket, under the
@@ -690,13 +732,13 @@ def compact_bucketed_table(
     layout exists to optimize opens N× the files and plans N× the
     row-group footers).
 
-    Mechanics: the table is repartitioned ON ITS BUCKET KEYS into
-    n_buckets tasks — Spark's repartition hash (pmod(murmur3(keys), n))
-    IS the bucket-id function, so each task holds exactly one bucket
-    and the bucketed writer emits exactly one file per occupied bucket
-    (asserted by the caller's file-count check; per-bucket sort order
-    is restored by the writer's sortBy). The rewrite lands at a side
-    path, then swaps in: drop catalog entry, rename directories,
+    Mechanics: the table is repartitioned ON ITS BUCKET KEYS into one
+    task per bucket of its own spec — Spark's repartition hash
+    (pmod(murmur3(keys), n)) IS the bucket-id function, so each task
+    holds exactly one bucket and the bucketed writer emits exactly one
+    file per occupied bucket (asserted by the caller's file-count
+    check; per-bucket sort order is restored by the writer's sortBy).
+    The rewrite lands at a side path, then swaps in: drop catalog entry, rename directories,
     re-attach with the same CLUSTERED BY DDL. The swap is a marker-file
     TWO-PHASE COMMIT (VERDICT r12: the bare DROP→rename→CREATE window
     lost the catalog entry on a mid-swap crash): a `__commit.json`
@@ -710,27 +752,13 @@ def compact_bucketed_table(
     unchanged — a co-located join is exchange-free before and after
     (property-tested in tests/test_sinks.py).
 
-    The table must be EXTERNAL (every in-repo standing index is —
-    write_bucketed attaches a LOCATION): DROP TABLE on a MANAGED
-    bucketed table would delete the data directory out from under the
-    rename (ADVICE r12), so that is refused up front.
+    The table must be EXTERNAL (``_external_meta``).
 
     Returns {"files_before", "files_after", "rows"} so callers/SCALE
     ledgers can record the debt paid.
     """
-    from mr_py_spark.sources.sinks import write_bucketed
-
     keys = [key] if isinstance(key, str) else list(key)
-    desc = {
-        r.col_name: r.data_type
-        for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    }
-    if "EXTERNAL" not in desc.get("Type", ""):
-        raise ValueError(
-            f"compact_bucketed_table: {table} is {desc.get('Type')!r}, not "
-            "EXTERNAL — DROP TABLE would delete its data directory mid-swap"
-        )
-    path = re.sub(r"^file:", "", desc["Location"])
+    path, nb = _external_meta(spark, table, "compact_bucketed_table")
     files_before = len(_data_files(path))
     # read the FILES, not the catalog table: a bucketed-scan source
     # makes the planner elide the aligning repartition below (measured:
@@ -745,10 +773,8 @@ def compact_bucketed_table(
     spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
     shutil.rmtree(tmp_path, ignore_errors=True)
     shutil.rmtree(old_path, ignore_errors=True)
-    write_bucketed(
-        df.repartition(n_buckets, *keys), tmp_tbl, keys, n_buckets, path=tmp_path
-    )
-    _swap_in_side_copy(spark, table, tmp_tbl, path, cols, keys, n_buckets)
+    write_bucketed(df.repartition(nb, *keys), tmp_tbl, keys, nb, path=tmp_path)
+    _swap_in_side_copy(spark, table, tmp_tbl, path, cols, keys, nb)
     return {
         "files_before": files_before,
         "files_after": len(_data_files(path)),
@@ -788,8 +814,9 @@ def lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session running the same registered query (review r12 — every
     # SHARED builder in this file locks; a throwaway demo isolates
     # instead)
+    nb = n_buckets(spark)
     tag = (
-        f"b{_BUCKETS}_"
+        f"b{nb}_"
         + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.strip("/"))
         + f"_p{os.getpid()}"
     )
@@ -803,7 +830,7 @@ def lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = F.col("doc_id") % 3
     write_bucketed(
         lsh_band_entries(minhash_signatures(docs.filter(part == 0))),
-        table, _LSH_INDEX_KEYS, _BUCKETS, path=path,
+        table, _LSH_INDEX_KEYS, nb, path=path,
     )
     for i in (1, 2):  # two maintenance snapshots -> 3 file sets/bucket
         lsh_index_append(docs.filter(part == i), table)
@@ -892,7 +919,7 @@ def q5_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < ts_ntz("1998-01-01 00:00:00"))
     ).select("o_orderkey", "o_custkey")
     # broadcast joins preserve the streamed side's bucket partitioning,
-    # so li_asia still satisfies hashpartitioning(l_orderkey, _BUCKETS)
+    # so li_asia still satisfies hashpartitioning(l_orderkey, <bucket count>)
     li_asia = li.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
     fact = li_asia.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
     return (

@@ -834,7 +834,7 @@ def lsh_index_append(
     The guard and the gauge bump share it, so the append runs no
     aggregation job of its own; the guard drops it when it filtered
     anything, and the append then aggregates the entries it writes."""
-    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
+    from mr_py_spark.operators.bucketed import append_guard
     from mr_py_spark.sources.sinks import write_bucketed
 
     spark = new_docs.sparkSession
@@ -861,7 +861,7 @@ def lsh_index_append(
         if not idempotent:  # the watermark raise shares the entries' stats
             append_guard(table, rows, "doc_id", False, stats)
         _lsh_gauge_bump(spark, table, entries, d0=stats)
-        write_bucketed(entries, table, _LSH_INDEX_KEYS, _BUCKETS, mode="append")
+        write_bucketed(entries, table, _LSH_INDEX_KEYS, mode="append")
     finally:
         entries.unpersist()
 
@@ -1294,7 +1294,7 @@ def lsh_reband_actuator(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile as _tf
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.sources.sinks import write_bucketed
 
     docs = tbl(spark, sf_dir, "documents")
@@ -1311,7 +1311,8 @@ def lsh_reband_actuator(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         write_bucketed(
             lsh_band_entries(minhash_signatures(corpus)),
-            table, _LSH_INDEX_KEYS, _BUCKETS, path=os.path.join(root, "idx"),
+            table, _LSH_INDEX_KEYS, n_buckets(spark),
+            path=os.path.join(root, "idx"),
         )
         # planted weak-similarity growth: near-copies whose unique tail
         # perturbs a minority of shingles — they collide with their

@@ -1155,13 +1155,13 @@ def hier_index_append(
     bucket spec (Spark validates it; drift fails loudly).
     ``idempotent``/``stats``: the shared replay guard, as in
     ivf_index_append (``bucketed.append_guard``)."""
-    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
+    from mr_py_spark.operators.bucketed import append_guard
     from mr_py_spark.operators.similarity import ivf_assign_with
     from mr_py_spark.sources.sinks import write_bucketed
 
     rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
     entries = hier_assign(ivf_assign_with(root_cent, rows), leaf_cent)
-    write_bucketed(entries, table, ("bucket", "leaf"), _BUCKETS, mode="append")
+    write_bucketed(entries, table, ("bucket", "leaf"), mode="append")
 
 
 def hier_pq_codes_append(
@@ -1194,7 +1194,7 @@ def hier_pq_codes_append(
     codes table in the same swap as its index tables. Appends
     bit-equal a full re-encode and replay-idempotence are
     property-tested (tests/test_properties.py)."""
-    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
+    from mr_py_spark.operators.bucketed import append_guard
     from mr_py_spark.operators.similarity import ivf_assign_with
     from mr_py_spark.sources.sinks import write_bucketed
 
@@ -1202,7 +1202,7 @@ def hier_pq_codes_append(
     assigned = hier_assign(ivf_assign_with(root_cent, rows), leaf_cent)
     write_bucketed(
         _pq_encode_frame(assigned, books), table, ("bucket", "leaf"),
-        _BUCKETS, mode="append",
+        mode="append",
     )
 
 
@@ -1230,7 +1230,7 @@ def hier_pq_codes_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile as _tf
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.dedup import (
         _INC_BUCKETS,
         _INC_DELTA_BUCKET,
@@ -1258,7 +1258,7 @@ def hier_pq_codes_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         write_bucketed(
             _pq_encode_frame(corpus_assigned, books),
-            table, ("bucket", "leaf"), _BUCKETS,
+            table, ("bucket", "leaf"), n_buckets(spark),
             path=os.path.join(root, "codes"),
         )
         n_corpus = spark.table(table).count()

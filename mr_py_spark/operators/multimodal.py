@@ -1181,35 +1181,14 @@ def video_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def image_band_index_append(new_images: DataFrame, table: str) -> None:
-    """O(delta) maintenance for a standing image band index: decode/
-    hash/band only the new (doc_id, payload) rows and append under the
-    SAME bucket spec (Spark validates it; drift fails loudly)."""
-    from mr_py_spark.operators.bucketed import _BUCKETS
-    from mr_py_spark.sources.sinks import write_bucketed
-
-    entries = _band_entries(
-        phash_of(new_images).select("doc_id", "phash"), "phash", _PH_BANDS
-    )
-    write_bucketed(entries, table, _MM_BAND_KEYS, _BUCKETS, mode="append")
-
-
-def audio_band_index_append(new_audio: DataFrame, table: str) -> None:
-    from mr_py_spark.operators.bucketed import _BUCKETS
-    from mr_py_spark.sources.sinks import write_bucketed
-
-    entries = _band_entries(
-        audio_sig_of(new_audio).select("doc_id", "sig"), "sig", _AU_BANDS
-    )
-    write_bucketed(entries, table, _MM_BAND_KEYS, _BUCKETS, mode="append")
-
-
 def video_frame_index_append(new_videos: DataFrame, table: str) -> None:
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    """O(delta) maintenance for a standing video frame-hash index:
+    hash only the new videos and append under the table's own bucket
+    spec."""
     from mr_py_spark.sources.sinks import write_bucketed
 
     sigs = video_sig_of(new_videos).select("doc_id", "fhash").distinct()
-    write_bucketed(sigs, table, "fhash", _BUCKETS, mode="append")
+    write_bucketed(sigs, table, "fhash", mode="append")
 
 
 @register("image_dup_pairs_indexed", tags=("C2", "C4", "B19", "B22"), oracle=None)

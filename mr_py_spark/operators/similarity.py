@@ -1495,12 +1495,11 @@ def ivf_index_append(
     a fresh batch costs zero index I/O. ``idempotent=False`` appends
     still raise the watermark. ``stats`` is the delta's precomputed
     (count, min, max) vec_id."""
-    from mr_py_spark.operators.bucketed import _BUCKETS, append_guard
+    from mr_py_spark.operators.bucketed import append_guard
     from mr_py_spark.sources.sinks import write_bucketed
 
     rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
-    write_bucketed(ivf_assign_with(cent, rows), table, "bucket",
-                   _BUCKETS, mode="append")
+    write_bucketed(ivf_assign_with(cent, rows), table, "bucket", mode="append")
 
 
 @register("knn_ivf_topk_indexed", tags=("C3", "B22"), oracle=None)

@@ -51,7 +51,7 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     key: str | tuple[str, ...] | list[str],
-    n_buckets: int = 8,
+    n_buckets: int | None = None,
     mode: str = "overwrite",
     path: str | None = None,
     row_group_bytes: int | None = None,
@@ -63,8 +63,15 @@ def write_bucketed(
     bucket by exactly what you join on. With ``path`` the table is
     EXTERNAL (data at ``path``, only metadata in the catalog) —
     required on externally-owned sessions whose static
-    ``spark.sql.warehouse.dir`` points somewhere unwritable."""
+    ``spark.sql.warehouse.dir`` points somewhere unwritable.
+    ``n_buckets=None`` writes under the existing table's own count
+    (``bucketed.table_buckets``): an append keeps the spec the table
+    was built with, and a new table must name its count."""
     keys = [key] if isinstance(key, str) else list(key)
+    if n_buckets is None:
+        from mr_py_spark.operators.bucketed import table_buckets
+
+        n_buckets = table_buckets(df.sparkSession, table)
     if row_group_bytes is None:
         # auto: vector/embedding tables (any array-typed column — fat
         # rows) get the probe-serving small row group; everything else

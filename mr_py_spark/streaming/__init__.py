@@ -1194,7 +1194,7 @@ def _lsh_maintenance_step(
     crash-atomic; ``recover`` finishes a swap a crash interrupted).
     Band entries are a pure function of (signature, band_rows), so a
     double-fired replay rewrite converges to the same rows."""
-    from mr_py_spark.operators.bucketed import _BUCKETS, recover_compaction
+    from mr_py_spark.operators.bucketed import n_buckets, recover_compaction
     from mr_py_spark.operators.dedup import (
         _LSH_COLLISION_CAP,
         _LSH_INDEX_KEYS,
@@ -1236,7 +1236,9 @@ def _lsh_maintenance_step(
 
     def first_build(ctx, rows):
         entries = lsh_band_entries(minhash_signatures(rows))
-        write_bucketed(entries, table, _LSH_INDEX_KEYS, _BUCKETS, path=idx_path)
+        write_bucketed(
+            entries, table, _LSH_INDEX_KEYS, n_buckets(spark), path=idx_path
+        )
         lsh_pin_gauge(spark, table)
 
     return maintenance_step(
@@ -1282,8 +1284,8 @@ def _ivf_maintenance_step(
     from pyspark.sql import functions as SF
 
     from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
         absent_save,
+        n_buckets,
         recover_compaction,
     )
     from mr_py_spark.operators.kmeans import _kmeans_k
@@ -1333,8 +1335,8 @@ def _ivf_maintenance_step(
 
     def first_build(ctx, rows):
         write_bucketed(
-            ivf_assign_with(ctx[0], rows), idx_table, "bucket", _BUCKETS,
-            path=idx_path,
+            ivf_assign_with(ctx[0], rows), idx_table, "bucket",
+            n_buckets(spark), path=idx_path,
         )
         pin_drift_ref(spark, ctx[0], idx_table)
 
@@ -1542,8 +1544,8 @@ def _hier_maintenance_step(
     from pyspark.sql import functions as SF
 
     from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
         absent_save,
+        n_buckets,
         recover_compaction,
         replace_bucketed_table,
         sidecar_path,
@@ -1657,7 +1659,7 @@ def _hier_maintenance_step(
         root, leaf, _ = ctx
         write_bucketed(
             hier_assign(ivf_assign_with(root, rows), leaf),
-            idx_table, ("bucket", "leaf"), _BUCKETS, path=idx_path,
+            idx_table, ("bucket", "leaf"), n_buckets(spark), path=idx_path,
         )
         pin_drift_ref(
             spark, root, idx_table,
@@ -1681,12 +1683,12 @@ def _hier_maintenance_step(
             np.asarray(X, dtype=np.float64),
             m=pq_m, k=min(pq_k, len(X)), sub=X.shape[1] // pq_m,
         )
+        nb = n_buckets(spark)
         write_bucketed(
-            _books_frame(spark, books), books_table, "mi", _BUCKETS,
-            path=books_path,
+            _books_frame(spark, books), books_table, "mi", nb, path=books_path
         )
         write_bucketed(
-            encoded_index(books), codes_table, ("bucket", "leaf"), _BUCKETS,
+            encoded_index(books), codes_table, ("bucket", "leaf"), nb,
             path=codes_path,
         )
         stamp_codes(_root_gen_hash(spark, root_table))

@@ -663,10 +663,15 @@ def test_q5_bucketed_fact_join_no_exchange(spark):
     assert "SortMergeJoin [l_orderkey" in p, p[:3000]
     assert "Exchange hashpartitioning(l_orderkey" not in p, p[:3000]
     assert "Exchange hashpartitioning(o_orderkey" not in p, p[:3000]
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    import re
+
+    from mr_py_spark.operators.bucketed import table_buckets
 
     assert "Bucketed: true" in p
-    assert f"SelectedBucketsCount: {_BUCKETS} out of {_BUCKETS}" in p
+    # every bucket of the scanned table's own spec is selected
+    li = re.search(r"spark_catalog\.default\.(mrps_bkt_lineitem_\w+)", p).group(1)
+    nb = table_buckets(spark, li)
+    assert f"SelectedBucketsCount: {nb} out of {nb}" in p
     # ASIA prune + date filter still reach the scans
     assert "EqualTo(r_name,ASIA)" in p
     assert "PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate" in p
@@ -884,7 +889,7 @@ def test_lsh_gauge_delta_probe_plan(spark, tmp_path):
     state is bounded by the delta's key count and the bucketed scan
     feeds its partial agg with NO Exchange (no shuffle of index-sized
     data anywhere in the probe)."""
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         _lsh_gauge_delta_frame,
@@ -902,7 +907,7 @@ def test_lsh_gauge_delta_probe_plan(spark, tmp_path):
     try:
         write_bucketed(
             lsh_band_entries(minhash_signatures(docs)), table,
-            _LSH_INDEX_KEYS, _BUCKETS, path=str(tmp_path / "idx"),
+            _LSH_INDEX_KEYS, n_buckets(spark), path=str(tmp_path / "idx"),
         )
         delta = lsh_band_entries(
             minhash_signatures(

@@ -1787,7 +1787,7 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
     table would band appends wrong)."""
     import os
 
-    from mr_py_spark.operators.bucketed import _BUCKETS, sidecar_path
+    from mr_py_spark.operators.bucketed import n_buckets, sidecar_path
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         lsh_band_entries,
@@ -1807,7 +1807,7 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
     try:
         write_bucketed(
             lsh_band_entries(minhash_signatures(docs)), table,
-            _LSH_INDEX_KEYS, _BUCKETS, path=path,
+            _LSH_INDEX_KEYS, n_buckets(spark), path=path,
         )
         side = sidecar_path(spark, table, "banding")
         assert not os.path.exists(side)
@@ -1840,7 +1840,7 @@ def test_lsh_table_band_rows_sidecar_lifecycle(spark, tmp_path):
         shutil.rmtree(path, ignore_errors=True)
         write_bucketed(
             lsh_band_entries(minhash_signatures(docs)), table,
-            _LSH_INDEX_KEYS, _BUCKETS, path=path,
+            _LSH_INDEX_KEYS, n_buckets(spark), path=path,
         )
         assert not os.path.exists(side)
         assert lsh_table_band_rows(spark, table) == 4
@@ -1860,7 +1860,7 @@ def test_lsh_gauge_incremental_exact_zero_io_and_replay(spark, tmp_path, monkeyp
     - a ``batch_max_id`` read serves the PRE-batch snapshot (the
       replay discipline: original and replay decide on the same view);
     - a crash-retry double-bump is a no-op (the bump watermark)."""
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         _lsh_gauge_bump,
@@ -1891,7 +1891,7 @@ def test_lsh_gauge_incremental_exact_zero_io_and_replay(spark, tmp_path, monkeyp
     try:
         write_bucketed(
             lsh_band_entries(minhash_signatures(mk(range(20)))),
-            table, _LSH_INDEX_KEYS, _BUCKETS, path=str(tmp_path / "idx"),
+            table, _LSH_INDEX_KEYS, n_buckets(spark), path=str(tmp_path / "idx"),
         )
         s0 = lsh_gauge_stats(spark, table)  # bootstrap (exact, repairs)
         assert s0 == exact() and s0["n_docs"] == 20 and s0["mass"] > 0
@@ -1943,7 +1943,7 @@ def test_lsh_gauge_bump_nonmonotone_ids_skip_stale_low(spark, tmp_path):
     exact recompute then re-counts every skipped row."""
     import pytest
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         _lsh_gauge_bump,
@@ -1972,7 +1972,7 @@ def test_lsh_gauge_bump_nonmonotone_ids_skip_stale_low(spark, tmp_path):
     try:
         write_bucketed(
             lsh_band_entries(minhash_signatures(mk(range(20)))),
-            table, _LSH_INDEX_KEYS, _BUCKETS, path=str(tmp_path / "idx"),
+            table, _LSH_INDEX_KEYS, n_buckets(spark), path=str(tmp_path / "idx"),
         )
         lsh_gauge_stats(spark, table)  # bootstrap the sidecar
         lsh_index_append(mk(range(100, 110)), table)  # wm -> 109
@@ -1989,8 +1989,7 @@ def test_lsh_gauge_bump_nonmonotone_ids_skip_stale_low(spark, tmp_path):
         # id-agnostic); the gauge runs stale-LOW until the re-band's
         # exact refresh re-counts them
         write_bucketed(
-            entries_of(range(50, 60)), table, _LSH_INDEX_KEYS, _BUCKETS,
-            mode="append",
+            entries_of(range(50, 60)), table, _LSH_INDEX_KEYS, mode="append",
         )
         m, nd, _ = _lsh_gauge_full(spark.table(table))
         assert lsh_gauge_stats(spark, table)["n_docs"] < nd  # stale-LOW
@@ -2015,7 +2014,7 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
     import os
 
     from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
+        n_buckets,
         raise_watermark,
         replay_guard,
         sidecar_path,
@@ -2040,7 +2039,7 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
         )
         write_bucketed(
             ivf_assign_with(cent, vecs(range(5))), table, "bucket",
-            _BUCKETS, path=str(tmp_path / "ivf"),
+            n_buckets(spark), path=str(tmp_path / "ivf"),
         )
         wm_path = sidecar_path(spark, table, "rwm")
         # absent sidecar: raise_watermark must NOT invent one
@@ -2076,7 +2075,7 @@ def test_drift_ref_stats_pinned_generation(spark, tmp_path):
     import numpy as np
 
     from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
+        n_buckets,
         replace_bucketed_table,
         sidecar_path,
     )
@@ -2110,7 +2109,7 @@ def test_drift_ref_stats_pinned_generation(spark, tmp_path):
     try:
         corpus = vecs(range(40), 0)
         write_bucketed(
-            ivf_assign_with(cent, corpus), table, "bucket", _BUCKETS,
+            ivf_assign_with(cent, corpus), table, "bucket", n_buckets(spark),
             path=str(tmp_path / "idx"),
         )
         assigned = spark.table(table)
@@ -2127,7 +2126,7 @@ def test_drift_ref_stats_pinned_generation(spark, tmp_path):
         # append does NOT move the pinned reference
         write_bucketed(
             ivf_assign_with(cent, vecs(range(100, 120), 1)), table,
-            "bucket", _BUCKETS, mode="append",
+            "bucket", mode="append",
         )
         assert drift_ref_stats(spark, cent, table, None) == ref
         # decisions agree with the exact rule on both cohorts
@@ -2173,7 +2172,7 @@ def test_pin_drift_ref_at_creation(spark, tmp_path):
     import numpy as np
 
     from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
+        n_buckets,
         replace_bucketed_table,
         sidecar_path,
     )
@@ -2205,10 +2204,10 @@ def test_pin_drift_ref_at_creation(spark, tmp_path):
     for t in (cent_t, idx_t):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     try:
-        write_bucketed(cent, cent_t, "cid", _BUCKETS, path=str(tmp_path / "c"))
+        write_bucketed(cent, cent_t, "cid", n_buckets(spark), path=str(tmp_path / "c"))
         write_bucketed(
             ivf_assign_with(cent, vecs(range(30), 0)), idx_t, "bucket",
-            _BUCKETS, path=str(tmp_path / "i"),
+            n_buckets(spark), path=str(tmp_path / "i"),
         )
         # creation-time pin: warm check BEFORE any append == the
         # at-creation cohort, no bootstrap frame supplied
@@ -2219,7 +2218,7 @@ def test_pin_drift_ref_at_creation(spark, tmp_path):
         # the reference cohort
         write_bucketed(
             ivf_assign_with(cent, vecs(range(100, 140), 1)), idx_t,
-            "bucket", _BUCKETS, mode="append",
+            "bucket", mode="append",
         )
         assert drift_ref_stats(spark, cent, idx_t, None) == pinned
         # pin overwrites a stale sidecar (creation defines the
@@ -2324,7 +2323,7 @@ def test_lsh_index_append_maintenance(spark, tmp_path):
     per-snapshot cost never re-bands the standing corpus."""
     from pyspark.sql import Row
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         lsh_band_entries,
@@ -2353,7 +2352,7 @@ def test_lsh_index_append_maintenance(spark, tmp_path):
             lsh_band_entries(minhash_signatures(corpus)),
             table,
             _LSH_INDEX_KEYS,
-            _BUCKETS,
+            n_buckets(spark),
             path=str(tmp_path / "idx"),
         )
         out1 = {
@@ -2464,7 +2463,7 @@ def test_ivf_index_append_consistency(spark, tmp_path):
     EXISTING centroids yields a table bit-identical to a full rebuild
     with those centroids — assignment is a pure function of the
     centroid frame, so incremental upkeep never drifts from batch."""
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.similarity import (
         _emb_double,
         _ivf_centroids,
@@ -2485,7 +2484,7 @@ def test_ivf_index_append_consistency(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
         write_bucketed(
-            ivf_assign_with(cent, sub), table, "bucket", _BUCKETS,
+            ivf_assign_with(cent, sub), table, "bucket", n_buckets(spark),
             path=str(tmp_path / "idx"),
         )
         ivf_index_append(cent, delta, table)
@@ -3033,7 +3032,7 @@ def test_video_frame_index_append_and_compaction(spark, tmp_path):
     import os
 
     from mr_py_spark.operators.bucketed import (
-        _BUCKETS,
+        n_buckets,
         _data_files,
         compact_bucketed_table,
     )
@@ -3055,7 +3054,7 @@ def test_video_frame_index_append_and_compaction(spark, tmp_path):
         write_bucketed(
             video_sig_of(corpus.filter(part == 0))
             .select("doc_id", "fhash").distinct(),
-            table, "fhash", _BUCKETS, path=path,
+            table, "fhash", n_buckets(spark), path=path,
         )
         for i in (1, 2):
             video_frame_index_append(corpus.filter(part == i), table)
@@ -3172,7 +3171,7 @@ def test_hier_index_append_bit_equal_to_rebuild(spark, tmp_path):
     admits nothing twice."""
     import numpy as np
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.hier import (
         hier_assign,
         hier_index_append,
@@ -3200,7 +3199,7 @@ def test_hier_index_append_bit_equal_to_rebuild(spark, tmp_path):
     try:
         write_bucketed(
             hier_assign(ivf_assign_with(root_cent, base), leaf_cent),
-            table, ("bucket", "leaf"), _BUCKETS,
+            table, ("bucket", "leaf"), n_buckets(spark),
             path=str(tmp_path / table),
         )
         hier_index_append(root_cent, leaf_cent, delta, table)
@@ -3231,7 +3230,7 @@ def test_hier_pq_codes_append_bit_equal_to_rebuild(spark, tmp_path):
     idempotent replay guard admits nothing twice."""
     import numpy as np
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.hier import (
         _pq_encode_frame,
         hier_assign,
@@ -3264,7 +3263,7 @@ def test_hier_pq_codes_append_bit_equal_to_rebuild(spark, tmp_path):
             _pq_encode_frame(
                 hier_assign(ivf_assign_with(root_cent, base), leaf_cent), books
             ),
-            table, ("bucket", "leaf"), _BUCKETS,
+            table, ("bucket", "leaf"), n_buckets(spark),
             path=str(tmp_path / table),
         )
         hier_pq_codes_append(root_cent, leaf_cent, books, delta, table)
@@ -3377,7 +3376,7 @@ def test_hier_retrain_planted_drift_recovers(spark, tmp_path):
     tripping batch) rebuilds bit-identical cells."""
     import numpy as np
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.hier import (
         hier_assign,
         hier_leaf_centroids,
@@ -3410,13 +3409,13 @@ def test_hier_retrain_planted_drift_recovers(spark, tmp_path):
             [(i, c) for i, c in enumerate(_ivf_centroids(spark, corpus, 8))],
             "cid long, cv array<double>",
         )
-        write_bucketed(root_cent, root_t, "cid", _BUCKETS,
+        write_bucketed(root_cent, root_t, "cid", n_buckets(spark),
                        path=str(tmp_path / root_t))
         ra = ivf_assign_with(spark.table(root_t), corpus)
         write_bucketed(hier_leaf_centroids(ra, leaf_rows=8), leaf_t,
-                       "bucket", _BUCKETS, path=str(tmp_path / leaf_t))
+                       "bucket", n_buckets(spark), path=str(tmp_path / leaf_t))
         write_bucketed(hier_assign(ra, spark.table(leaf_t)), idx_t,
-                       ("bucket", "leaf"), _BUCKETS,
+                       ("bucket", "leaf"), n_buckets(spark),
                        path=str(tmp_path / idx_t))
         assert spark.table(leaf_t).count() > 8  # a real hierarchy
 

@@ -546,12 +546,14 @@ def test_dep_closure_sees_function_local_imports():
     # constants bound by local import are folded too, as the source
     # that defines them (not the value this process gave them)
     def probe2(spark, sf_dir):
-        from mr_py_spark.operators.bucketed import _BUCKETS
+        from mr_py_spark.operators.bucketed import _CACHE_ROOT_NAME
 
-        return _BUCKETS
+        return _CACHE_ROOT_NAME
 
     _, consts = _dep_closure(probe2, {})
-    assert "SPARK_GRAFT_BUCKETS" in consts["mr_py_spark.operators.bucketed._BUCKETS"]
+    assert "spark_graft_bucketed" in consts[
+        "mr_py_spark.operators.bucketed._CACHE_ROOT_NAME"
+    ]
     # the closure is transitive THROUGH a locally-imported function
     def probe3(spark, sf_dir):
         from mr_py_spark.operators.dedup import lsh_index_append

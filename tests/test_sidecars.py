@@ -55,7 +55,8 @@ class _Table:
 
     def write(self, ids, mode="overwrite"):
         write_bucketed(
-            self.frame(ids), self.table, self.key, bk._BUCKETS, mode=mode,
+            self.frame(ids), self.table, self.key, bk.n_buckets(self.spark),
+            mode=mode,
             path=self.path if mode == "overwrite" else None,
         )
 

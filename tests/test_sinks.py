@@ -176,6 +176,7 @@ def test_compaction_preserves_content_and_layout(spark, tmp_path):
         _data_files,
         _table_location,
         compact_bucketed_table,
+        table_buckets,
     )
 
     orders = tbl(spark, SF_DIR, "orders").select(
@@ -191,9 +192,9 @@ def test_compaction_preserves_content_and_layout(spark, tmp_path):
     before = sorted(tuple(r) for r in spark.table(table).collect())
     files_before = len(_data_files(_table_location(spark, table)))
     assert files_before > 8  # the appends created the small-file debt
-    stats = compact_bucketed_table(spark, table, "k", n_buckets=8)
+    stats = compact_bucketed_table(spark, table, "k")
     assert stats["files_before"] == files_before
-    assert stats["files_after"] <= 8
+    assert stats["files_after"] <= table_buckets(spark, table) == 8
     assert stats["rows"] == len(before)
     after = sorted(tuple(r) for r in spark.table(table).collect())
     assert after == before  # bit-identical content
@@ -218,7 +219,10 @@ def test_compaction_preserves_array_columns(spark, tmp_path):
     payload — the type the lifecycle actually compacts): full-row
     bit-identity incl. every vector element, and the re-attach DDL
     round-trips the nested type."""
-    from mr_py_spark.operators.bucketed import compact_bucketed_table
+    from mr_py_spark.operators.bucketed import (
+        compact_bucketed_table,
+        table_buckets,
+    )
 
     rows = [(i, i % 5, [float(i), float(i) / 3.0, -1.5 * i]) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, bucket long, v array<double>")
@@ -235,12 +239,13 @@ def test_compaction_preserves_array_columns(spark, tmp_path):
         before = sorted(
             (r.vec_id, r.bucket, tuple(r.v)) for r in spark.table(table).collect()
         )
-        stats = compact_bucketed_table(spark, table, "bucket", n_buckets=8)
+        stats = compact_bucketed_table(spark, table, "bucket")
         after = sorted(
             (r.vec_id, r.bucket, tuple(r.v)) for r in spark.table(table).collect()
         )
         assert after == before and stats["rows"] == 200
-        assert stats["files_after"] <= 8 <= stats["files_before"]
+        nb = table_buckets(spark, table)
+        assert stats["files_after"] <= nb == 8 <= stats["files_before"]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
@@ -279,7 +284,7 @@ def _crash_then_recover(spark, monkeypatch, table, path, before, crash_pred):
 
     monkeypatch.setattr(bk.os, "replace", failing)
     with pytest.raises(RuntimeError, match="injected crash"):
-        bk.compact_bucketed_table(spark, table, "bucket", n_buckets=8)
+        bk.compact_bucketed_table(spark, table, "bucket")
     monkeypatch.setattr(bk.os, "replace", real_replace)
     assert os.path.exists(bk._commit_marker(path))  # swap is in flight
     assert bk.recover_compaction(spark, path)
@@ -330,7 +335,7 @@ def test_compaction_crash_before_marker_removal_recovers(spark, tmp_path, monkey
 
     monkeypatch.setattr(bk.os, "remove", failing)
     with pytest.raises(RuntimeError, match="injected crash"):
-        bk.compact_bucketed_table(spark, table, "bucket", n_buckets=8)
+        bk.compact_bucketed_table(spark, table, "bucket")
     monkeypatch.setattr(bk.os, "remove", real_remove)
     assert os.path.exists(marker)
     assert bk.recover_compaction(spark, path)
@@ -354,7 +359,7 @@ def test_compaction_refuses_managed_table(spark):
     try:
         write_bucketed(df, table, "b", 4)  # no path -> managed
         with pytest.raises(ValueError, match="not\\s+EXTERNAL"):
-            compact_bucketed_table(spark, table, "b", n_buckets=4)
+            compact_bucketed_table(spark, table, "b")
         # the refusal must be non-destructive: table still queryable
         assert spark.table(table).count() == 20
     finally:
@@ -434,3 +439,147 @@ def test_replay_guard_fast_path_and_exactness(spark, tmp_path):
         assert not os.path.exists(sidecar_path(spark, table, "rwm"))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def _bucket_switch_run(spark, tmp_path, monkeypatch, docs, vecs, root, leaf, switch):
+    """Build an LSH band index, an IVF inverted file and a hier
+    (bucket, leaf) table at 8 buckets, then (with ``switch``) set
+    ``SPARK_GRAFT_BUCKETS=3`` and run each kind's append, compaction
+    and replace. Checks after every step that the table keeps its own
+    8-bucket spec and that the append landed at most 8 files; returns
+    each kind's sorted rows after every step."""
+    from mr_py_spark.operators.bucketed import (
+        _data_files,
+        _table_location,
+        compact_bucketed_table,
+        n_buckets,
+        replace_bucketed_table,
+        table_buckets,
+    )
+    from mr_py_spark.operators.dedup import (
+        _LSH_INDEX_KEYS,
+        lsh_band_entries,
+        lsh_index_append,
+        minhash_signatures,
+    )
+    from mr_py_spark.operators.hier import hier_assign, hier_index_append
+    from mr_py_spark.operators.similarity import ivf_assign_with, ivf_index_append
+
+    old_docs, new_docs = docs.filter("doc_id < 40"), docs.filter("doc_id >= 40")
+    old_vecs, new_vecs = vecs.filter("vec_id < 80"), vecs.filter("vec_id >= 80")
+    kinds = {
+        "lsh": (
+            _LSH_INDEX_KEYS,
+            lambda d: lsh_band_entries(minhash_signatures(d)),
+            lambda t: lsh_index_append(new_docs, t),
+            docs, old_docs,
+        ),
+        "ivf": (
+            "bucket",
+            lambda v: ivf_assign_with(root, v),
+            lambda t: ivf_index_append(root, new_vecs, t),
+            vecs, old_vecs,
+        ),
+        "hier": (
+            ("bucket", "leaf"),
+            lambda v: hier_assign(ivf_assign_with(root, v), leaf),
+            lambda t: hier_index_append(root, leaf, new_vecs, t),
+            vecs, old_vecs,
+        ),
+    }
+
+    def rows(t):
+        return sorted(repr(tuple(r)) for r in spark.table(t).collect())
+
+    monkeypatch.setenv("SPARK_GRAFT_BUCKETS", "8")
+    for name, (key, entries, _, _, old) in kinds.items():
+        t = f"t_switch_{name}"
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        write_bucketed(
+            entries(old), t, key, n_buckets(spark),
+            path=str(tmp_path / f"{t}_{switch}"),
+        )
+    if switch:
+        monkeypatch.setenv("SPARK_GRAFT_BUCKETS", "3")
+    seen = {}
+    try:
+        for name, (key, entries, append, full, _) in kinds.items():
+            t = f"t_switch_{name}"
+            before = len(_data_files(_table_location(spark, t)))
+            append(t)
+            assert len(_data_files(_table_location(spark, t))) - before <= 8
+            steps = [rows(t)]
+            compact_bucketed_table(spark, t, key)
+            steps.append(rows(t))
+            assert len(_data_files(_table_location(spark, t))) <= 8
+            assert table_buckets(spark, t) == 8
+            replace_bucketed_table(spark, t, entries(full), key)
+            steps.append(rows(t))
+            assert table_buckets(spark, t) == 8
+            seen[name] = steps
+    finally:
+        for name in kinds:
+            spark.sql(f"DROP TABLE IF EXISTS t_switch_{name}")
+    return seen
+
+
+def test_standing_tables_keep_their_bucket_count_across_a_knob_change(
+    spark, tmp_path, monkeypatch
+):
+    """A standing table built under one bucket count keeps taking
+    appends, compactions and replaces under its own catalog spec when
+    the session's count changes: ``n_buckets`` sizes only NEW tables.
+    LSH, IVF and hier (bucket, leaf) tables stay at 8 buckets with
+    ``SPARK_GRAFT_BUCKETS=3`` set after the build, and every step
+    yields the same rows as a run that never switched."""
+    import numpy as np
+
+    from mr_py_spark.operators.hier import hier_leaf_centroids
+    from mr_py_spark.operators.similarity import centroid_frame, ivf_assign_with
+
+    docs = spark.createDataFrame(
+        [(i, f"bucket switch doc {i % 7} body {i // 7} tail {i}") for i in range(60)],
+        "doc_id long, text string",
+    )
+    rng = np.random.RandomState(17)
+    X = rng.randn(120, 4)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(len(X))],
+        "vec_id long, v array<double>",
+    )
+    root = centroid_frame(spark, [[float(x) for x in X[i]] for i in range(3)])
+    trained = hier_leaf_centroids(ivf_assign_with(root, vecs), leaf_rows=16)
+    leaf = spark.createDataFrame(trained.collect(), trained.schema)
+    args = (spark, tmp_path, monkeypatch, docs, vecs, root, leaf)
+    assert _bucket_switch_run(*args, switch=True) == _bucket_switch_run(
+        *args, switch=False
+    )
+
+
+def test_bucket_knob_refuses_malformed_values_before_any_job(spark, monkeypatch):
+    """A malformed ``SPARK_GRAFT_BUCKETS`` raises a ValueError naming
+    the knob before a standing-table build runs any Spark job."""
+    import pytest
+
+    from mr_py_spark.operators.bucketed import n_buckets, q5_bucketed
+
+    sc = spark.sparkContext
+    group = "bucket-knob-probe"
+    sc.setJobGroup(group, "bucket knob check")
+    try:
+        for bad in ("0", "-2", "x"):
+            monkeypatch.setenv("SPARK_GRAFT_BUCKETS", bad)
+            with pytest.raises(ValueError, match="SPARK_GRAFT_BUCKETS"):
+                n_buckets(spark)
+            with pytest.raises(ValueError, match="SPARK_GRAFT_BUCKETS"):
+                q5_bucketed(spark, SF_DIR)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        monkeypatch.delenv("SPARK_GRAFT_BUCKETS")
+        assert n_buckets(spark) == sc.defaultParallelism
+        spark.range(3).collect()  # the probe does see a job of this group
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)

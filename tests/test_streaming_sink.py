@@ -524,7 +524,7 @@ def test_lsh_maintenance_reband_trips_once_and_replays(spark, tmp_path):
     cap)."""
     import os
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.dedup import (
         _LSH_INDEX_KEYS,
         lsh_band_entries,
@@ -563,7 +563,7 @@ def test_lsh_maintenance_reband_trips_once_and_replays(spark, tmp_path):
     out = str(tmp_path / "out")
     os.makedirs(out, exist_ok=True)
     write_bucketed(
-        lsh_band_entries(sig), table, _LSH_INDEX_KEYS, _BUCKETS,
+        lsh_band_entries(sig), table, _LSH_INDEX_KEYS, n_buckets(spark),
         path=str(tmp_path / "index"),
     )
     log: list[int] = []
@@ -982,7 +982,7 @@ def test_hier_maintenance_bootstrap_crash_between_quantizer_writes(
 
     import numpy as np
 
-    from mr_py_spark.operators.bucketed import _BUCKETS
+    from mr_py_spark.operators.bucketed import n_buckets
     from mr_py_spark.operators.hier import _hier_nroot
     from mr_py_spark.operators.similarity import _ivf_centroids, centroid_frame
     from mr_py_spark.sources.sinks import write_bucketed
@@ -1010,7 +1010,7 @@ def test_hier_maintenance_bootstrap_crash_between_quantizer_writes(
             # reproduce exactly the bootstrap's root write, then "die"
             cents = _ivf_centroids(spark, batch, _hier_nroot(batch.count(), 4))
             write_bucketed(
-                centroid_frame(spark, cents), root_t, "cid", _BUCKETS,
+                centroid_frame(spark, cents), root_t, "cid", n_buckets(spark),
                 path=str(tmp_path / f"root_{label}"),
             )
         step = _hier_maintenance_step(
