@@ -34,6 +34,7 @@ from mr_py_spark.functions import dec4, fmt_ts, ts_ntz
 from mr_py_spark.registry import register
 from mr_py_spark.sources import tbl
 from mr_py_spark.sources.sinks import write_bucketed
+from mr_py_spark.util import positive_int_knob
 
 _CACHE_ROOT_NAME = "spark_graft_bucketed"
 
@@ -46,18 +47,8 @@ def n_buckets(spark: SparkSession) -> int:
     (``table_buckets``). With dynamic allocation the start-up width can
     be small, so set the knob on a cluster. A malformed value raises
     before any Spark work."""
-    raw = os.environ.get("SPARK_GRAFT_BUCKETS")
-    if raw is None:
-        return int(spark.sparkContext.defaultParallelism)
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0
-    if n < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_BUCKETS must be a positive integer, got {raw!r}"
-        )
-    return n
+    n = positive_int_knob("SPARK_GRAFT_BUCKETS")
+    return int(spark.sparkContext.defaultParallelism) if n is None else n
 
 
 def _src_stamp(sf_dir: str, name: str, extra: str = "") -> str:

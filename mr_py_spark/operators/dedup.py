@@ -670,22 +670,13 @@ def minhash_delta_status(
         else lsh_band_entries(minhash_signatures(corpus))
     )
 
-    # r17 (VERDICT r16 items 1+2). Expression side: the verify
-    # predicate is ONE JVM-parsed string (the old 2×16-col aliasing
-    # select + 16-term Column sum were the bulk of the ~6k py4j round
-    # trips ≈ 0.9 s per triage build), applied BEFORE any projection so
-    # only (doc_id, partner) survive each join — the 32 signature
-    # columns never flow past the filter. Plan side: the per-candidate
-    # 34-column .distinct() is gone (min() is multiplicity-invariant),
-    # and the two verified-match streams UNION into a single
-    # groupBy(doc_id) that computes both mins at once — one exchange +
-    # one left join instead of two of each (the triage executed 13 AQE
-    # stage-jobs per warm batch; this removes four of its exchanges).
-    # The candidate JOINS are untouched: the corpus side still probes
-    # the bucketed standing index exchange-free / AQE-broadcast
-    # (plan-asserted), the within-delta side is the same band
-    # self-join. Statuses are bit-identical (property-pinned: planted
-    # statuses, indexed-equals-recompute).
+    # The verify predicate is ONE JVM-parsed string (per-hash Column
+    # objects cost thousands of py4j round trips per triage build),
+    # applied before any projection, so only (doc_id, partner) survive
+    # each join; delta_status folds both verified-match streams in one
+    # groupBy (min() is multiplicity-invariant, so no per-candidate
+    # distinct). The corpus side probes the bucketed standing index
+    # exchange-free or AQE-broadcast (plan-asserted).
     verify_sql = (
         "("
         + " + ".join(
@@ -717,22 +708,32 @@ def minhash_delta_status(
     matches = verified(cband, "", "true").unionByName(
         verified(dband, " AND o.doc_id < d.doc_id", "false")
     )
-    agg = matches.groupBy("doc_id").agg(
-        F.min(F.when(F.col("is_corpus"), F.col("partner"))).alias("corpus_match"),
-        F.min(F.when(~F.col("is_corpus"), F.col("partner"))).alias("delta_match"),
-    )
-    return (
-        delta.select("doc_id")
-        .distinct()
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("corpus_match").isNotNull(), F.lit("dup_of_corpus"))
-            .when(F.col("delta_match").isNotNull(), F.lit("dup_within_delta"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
-            F.coalesce("corpus_match", "delta_match").alias("match_id"),
+    return delta_status(delta.select("doc_id").distinct(), "doc_id", matches)
+
+
+def delta_status(
+    rows: DataFrame, key: str, pairs: DataFrame | None = None
+) -> DataFrame:
+    """The status tail of every delta triage (MinHash and semantic):
+    (key, status, match_id) per row of ``rows``. ``rows`` carries
+    nullable ``corpus_match``/``delta_match`` columns itself, or they
+    are the least verified partner on each side from ``pairs`` (key,
+    partner, is_corpus), one groupBy and a left join. 'dup_of_corpus'
+    wins over 'dup_within_delta', else 'new'; match_id is the winning
+    side's match."""
+    if pairs is not None:
+        agg = pairs.groupBy(key).agg(
+            F.min(F.when(F.col("is_corpus"), F.col("partner"))).alias("corpus_match"),
+            F.min(F.when(~F.col("is_corpus"), F.col("partner"))).alias("delta_match"),
         )
+        rows = rows.join(agg, key, "left")
+    return rows.select(
+        key,
+        F.when(F.col("corpus_match").isNotNull(), F.lit("dup_of_corpus"))
+        .when(F.col("delta_match").isNotNull(), F.lit("dup_within_delta"))
+        .otherwise(F.lit("new"))
+        .alias("status"),
+        F.coalesce("corpus_match", "delta_match").alias("match_id"),
     )
 
 

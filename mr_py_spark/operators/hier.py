@@ -36,12 +36,13 @@ exchanges. Leaf scoring uses the house fold-order kernel
 (similarity._fold_order_blocks): bit-stable and row-blocked, so a hot
 root never allocates an unbounded score matrix.
 
-The flat forms stay untouched (their driver statuses are pinned);
-``incremental_semantic_dedup_hier`` is the registered production form
-for corpora past the flat cap, property-tested with planted statuses,
-a single-leaf-degeneration bit-equality pin against the flat kernel,
-and an occupancy-flatness test; the sf100 interleaved A/B vs the flat
-index lives in SCALE.md r13.
+Triage and batch dedup run the flat tier's cell kernels
+(similarity.semantic_delta_status, similarity.cell_survivors) keyed on
+the cell; ``incremental_semantic_dedup_hier`` is the registered
+production form for corpora past the flat cap, property-tested with
+planted statuses, a single-leaf-degeneration bit-equality pin against
+the flat kernel, and an occupancy-flatness test; the sf100 interleaved
+A/B vs the flat index lives in SCALE.md r13.
 """
 
 from __future__ import annotations
@@ -51,7 +52,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mr_py_spark.operators.vectors import _kmeans_init, _lloyd, _nearest, _unit_rows
+from mr_py_spark.operators.vectors import (
+    _kmeans_init,
+    _lloyd,
+    _nearest,
+    _unit_rows,
+    arrow_matrix,
+)
 from mr_py_spark.registry import register
 from mr_py_spark.sources import tbl
 from mr_py_spark.util import table_rows as _table_rows
@@ -68,6 +75,8 @@ _MAX_K = 4096  # per-level centroid cap (broadcast / per-group bound)
 #: and the PQ codebooks (``_books_frame``).
 _LEAF_SCHEMA = "bucket long, leaf long, lv array<double>"
 _CELL_SCHEMA = "vec_id long, bucket long, leaf long, v array<double>"
+#: The two-level cell key: the triage and survivor kernels group on it.
+_CELL = ("bucket", "leaf")
 _BOOKS_SCHEMA = "mi long, ki long, sub array<double>"
 
 
@@ -150,7 +159,8 @@ def hier_assign(
     exchange-free; only ``root_assigned`` shuffles. ``spread`` is the
     BUILD-path skew fix (see _spread_by_bucket) — never set it on the
     delta/serve path, where it would re-shuffle the standing leaf
-    side to match the spread partitioning."""
+    side to match the spread partitioning. A root without leaves (empty
+    at build time) assigns its vectors to leaf 0."""
     from mr_py_spark.operators.similarity import _fold_order_blocks
 
     def assign(key, vpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
@@ -164,9 +174,9 @@ def hier_assign(
                 }
             )
         if not len(cpdf):
-            # no leaves for this root (can't happen from a standing
-            # build, where every occupied root trains ≥ 1 leaf) —
-            # degrade to leaf 0 rather than dropping vectors
+            # a root that held no vectors at build time trains no leaf,
+            # and later deltas can still land in it: the whole root is
+            # then one cell, leaf 0, for every later assignment
             return pd.DataFrame(
                 {
                     "vec_id": vpdf["vec_id"].to_numpy(),
@@ -232,100 +242,16 @@ def hier_corpus_index(spark: SparkSession, sf_dir: str):
     )
 
 
-def semantic_delta_status_hier(
-    root_cent: DataFrame,
-    leaf_cent: DataFrame,
-    corpus_assigned: DataFrame,
-    delta: DataFrame,
-    tau: float | None = None,
-) -> DataFrame:
-    """``similarity.semantic_delta_status`` with the candidate
-    restriction tightened from the flat coarse bucket to the two-level
-    CELL (bucket, leaf): one row per delta vector with status
-    'dup_of_corpus' (min matching corpus cell-mate at cosine ≥ tau) /
-    'dup_within_delta' (min matching LOWER-id delta cell-mate) / 'new'.
-    The delta is assigned against EXISTING centroids only — root by
-    broadcast argmax (zero shuffle), leaf by the root-bucket cogroup —
-    never a retrain; candidate verify is the fold-order kernel per
-    cell, with the corpus side arriving pre-bucketed on (bucket, leaf)
-    from the standing table (exchange-free). Per-delta-vector pair work
-    is the CELL occupancy (~64 at any corpus size), where the flat
-    form's is the bucket occupancy (linear in n past the 4096-centroid
-    cap) — the whole point of the hierarchy."""
-    from mr_py_spark.operators.kmeans import _TAU
-    from mr_py_spark.operators.similarity import (
-        _fold_order_blocks,
-        ivf_assign_with,
-    )
-
-    tau = float(_TAU if tau is None else tau)
-    d_asg = hier_assign(ivf_assign_with(root_cent, delta), leaf_cent)
-
-    def corpus_matches(key, dpdf, opdf):
-        if not len(dpdf) or not len(opdf):
-            return pd.DataFrame({"vec_id": [], "corpus_match": []}).astype(
-                {"vec_id": "int64", "corpus_match": "int64"}
-            )
-        A = np.asarray(list(dpdf["v"]), dtype=np.float64)
-        B = np.asarray(list(opdf["v"]), dtype=np.float64)
-        did = dpdf["vec_id"].to_numpy()
-        oid = opdf["vec_id"].to_numpy()
-        out = []
-        for s, sims in _fold_order_blocks(A, B):
-            hit = sims >= tau
-            for i in np.nonzero(hit.any(axis=1))[0]:
-                out.append((did[s + i], oid[hit[i]].min()))
-        return pd.DataFrame(out, columns=["vec_id", "corpus_match"])
-
-    def delta_matches(key, pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": [], "delta_match": []}).astype(
-                {"vec_id": "int64", "delta_match": "int64"}
-            )
-        A = np.asarray(list(pdf["v"]), dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        out = []
-        for s, sims in _fold_order_blocks(A, A):
-            hit = sims >= tau
-            hit &= ids[None, :] < ids[s : s + hit.shape[0], None]
-            for i in np.nonzero(hit.any(axis=1))[0]:
-                out.append((ids[s + i], ids[hit[i]].min()))
-        return pd.DataFrame(out, columns=["vec_id", "delta_match"])
-
-    cell = ["bucket", "leaf"]
-    vs_corpus = (
-        d_asg.groupBy(*cell)
-        .cogroup(corpus_assigned.groupBy(*cell))
-        .applyInPandas(corpus_matches, "vec_id long, corpus_match long")
-    )
-    vs_delta = d_asg.groupBy(*cell).applyInPandas(
-        delta_matches, "vec_id long, delta_match long"
-    )
-    return (
-        delta.select("vec_id")
-        .join(vs_corpus, "vec_id", "left")
-        .join(vs_delta, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.when(F.col("corpus_match").isNotNull(), F.lit("dup_of_corpus"))
-            .when(F.col("delta_match").isNotNull(), F.lit("dup_within_delta"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
-            F.coalesce("corpus_match", "delta_match").alias("match_id"),
-        )
-    )
-
-
 @register(
     "incremental_semantic_dedup_hier", tags=("C2", "C3", "B22"), oracle=None
 )
 def incremental_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``semantic_delta_status_hier`` bound to the fixture's
-    deterministic snapshot split — the O(delta) semantic-dedup form
-    whose per-vector pair work stays ~_LEAF_ROWS at ANY corpus size
-    (the flat ``incremental_semantic_dedup``'s grows linearly past the
-    4096-centroid broadcast cap, SCALE.md r12 — this operator is that
-    ledger entry's named fix). Rows-only (seeded quantizers are
+    """``similarity.semantic_delta_status`` on the two-level CELLS
+    (bucket, leaf), bound to the fixture's deterministic snapshot
+    split — the O(delta) semantic-dedup form whose per-vector pair
+    work stays ~_LEAF_ROWS at ANY corpus size, where the flat
+    ``incremental_semantic_dedup``'s grows linearly past the
+    4096-centroid broadcast cap (SCALE.md r12). Rows-only (seeded quantizers are
     engine-specific); planted cross-batch / within-batch / novel
     statuses, the single-leaf degeneration pin against the flat
     kernel, occupancy flatness, and determinism are property-tested
@@ -336,7 +262,11 @@ def incremental_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFra
         _INC_DELTA_BUCKET,
         _INC_MULT,
     )
-    from mr_py_spark.operators.similarity import _emb_double
+    from mr_py_spark.operators.similarity import (
+        _emb_double,
+        ivf_assign_with,
+        semantic_delta_status,
+    )
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     delta = e.filter(
@@ -344,7 +274,10 @@ def incremental_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFra
         == _INC_DELTA_BUCKET
     )
     root_cent, leaf_cent, assigned = hier_corpus_index(spark, sf_dir)
-    return semantic_delta_status_hier(root_cent, leaf_cent, assigned, delta)
+    return semantic_delta_status(
+        hier_assign(ivf_assign_with(root_cent, delta), leaf_cent),
+        assigned, _CELL,
+    )
 
 
 @register("hier_index_occupancy", tags=("C3", "B7"), oracle=None)
@@ -398,32 +331,6 @@ def hier_quantize(
     )
 
 
-def hier_survivors(assigned: DataFrame, tau: float) -> DataFrame:
-    """SemDeDup's star rule restricted to two-level CELLS: drop a
-    vector iff some LOWER-vec_id cell-mate has cosine >= tau — the
-    kmeans.semantic_dedup survivor kernel with the cluster key widened
-    to (bucket, leaf). Verification is the row-blocked fold-order
-    kernel, so a skewed hot cell never allocates an unbounded sim
-    matrix and every compare replays Catalyst's float64 op sequence."""
-    from mr_py_spark.operators.similarity import _fold_order_blocks
-
-    def survivors(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pdf[["vec_id", "bucket", "leaf"]]
-        A = np.asarray(list(pdf["v"]), dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        keep = np.ones(len(pdf), dtype=bool)
-        for s, sims in _fold_order_blocks(A, A):
-            hit = sims >= tau
-            hit &= ids[None, :] < ids[s : s + hit.shape[0], None]
-            keep[s : s + hit.shape[0]] = ~hit.any(axis=1)
-        return pdf.loc[keep, ["vec_id", "bucket", "leaf"]]
-
-    return assigned.groupBy("bucket", "leaf").applyInPandas(
-        survivors, "vec_id long, bucket long, leaf long"
-    )
-
-
 @register("semantic_dedup_hier", tags=("C2", "C3"), oracle=None)
 def semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH semantic dedup through the two-level quantizer — the
@@ -438,12 +345,12 @@ def semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-false-positive vs brute force, and determinism are
     property-tested (tests/test_properties.py)."""
     from mr_py_spark.operators.kmeans import _TAU
-    from mr_py_spark.operators.similarity import _emb_double
+    from mr_py_spark.operators.similarity import _emb_double, cell_survivors
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     n = _table_rows(e, sf_dir, "embeddings")
     _, _, assigned = hier_quantize(spark, e, n)
-    return hier_survivors(assigned, float(_TAU))
+    return cell_survivors(assigned, _CELL, float(_TAU))
 
 
 #: Probe counts for the hier ANN serve path: per-query candidate work
@@ -992,7 +899,7 @@ def hier_topk_pq_with(
                 continue
             q_id = np.asarray(rb.column(0))
             qidx = np.searchsorted(lut_qids, q_id)
-            cds = np.asarray(rb.column(2).flatten()).reshape(len(rb), m)
+            cds = arrow_matrix(rb.column(2), "code", m)
             sim = luts[qidx[:, None], marange, cds].sum(axis=1)
             yield pa.RecordBatch.from_arrays(
                 [rb.column(0), rb.column(1), pa.array(sim, type=pa.float64())],

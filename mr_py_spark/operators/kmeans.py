@@ -65,11 +65,11 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mr_py_spark.functions import dot
+from mr_py_spark.operators.vectors import arrow_matrix
 from mr_py_spark.registry import register
 from mr_py_spark.sources import tbl
 from mr_py_spark.util import bc as _bc
@@ -137,15 +137,6 @@ def _argmin_cluster(m: np.ndarray, cf: np.ndarray, normsq: np.ndarray) -> np.nda
     return (2.0 * (m.astype(np.float64) @ cf.T) - normsq[None, :]).argmax(1)
 
 
-def _qx_mat(rb, col: int) -> np.ndarray:
-    """(rows, _DIM) int64 view of an Arrow list<int64> column — the
-    contiguous flatten/reshape trick from the PQ ADC kernel
-    (similarity.py): zero per-row Python objects, unlike a pandas
-    object Series of lists. Valid because qx is a fixed 64-wide
-    transform with no nulls."""
-    return np.asarray(rb.column(col).flatten()).reshape(len(rb), _DIM)
-
-
 def _lloyd(spark: SparkSession, sf_dir: str):
     """Run _N_ITER exact-integer Lloyd rounds; returns
     (cids, qc_prev, qc_final, counts) where qc_prev is the centroid
@@ -175,12 +166,9 @@ def _lloyd(spark: SparkSession, sf_dir: str):
             # collects O(partitions * k) rows regardless of batch
             # count — the map-side combiner, hand-rolled. Arrow, not
             # pandas: qx arrives as a contiguous list<int64> buffer
-            # that reshapes zero-copy into the (rows, dim) matrix.
-            # Measured at sf10 (SCALE.md r9): conversion 0.81 s ->
-            # 0.01 s per full pass; round wall is dgemm/scan-bound so
-            # the win is small HERE, but per-row Python list objects
-            # scale with row count while the reshape stays O(1) per
-            # batch — the PQ ADC kernel's argument (similarity.py).
+            # that arrow_matrix views zero-copy as the (rows, dim)
+            # matrix, where per-row Python list objects would scale
+            # with row count (SCALE.md r9: 0.81 s -> 0.01 s per pass).
             import pyarrow as pa
 
             c = np.asarray(b_qc.value, dtype=np.int64)
@@ -191,7 +179,7 @@ def _lloyd(spark: SparkSession, sf_dir: str):
             for rb in batches:
                 if not len(rb):
                     continue
-                m = _qx_mat(rb, 1)
+                m = arrow_matrix(rb.column(1), "qx", _DIM)
                 cl = _argmin_cluster(m, cf, normsq)
                 np.add.at(sums, cl, m)
                 cnt += np.bincount(cl, minlength=kk)
@@ -243,7 +231,7 @@ def _assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         for rb in batches:
             if not len(rb):
                 continue
-            cl = _argmin_cluster(_qx_mat(rb, 1), cf, normsq)
+            cl = _argmin_cluster(arrow_matrix(rb.column(1), "qx", _DIM), cf, normsq)
             yield pa.RecordBatch.from_arrays(
                 [rb.column(0), pa.array(ids[cl])], ["vec_id", "cluster"]
             )
@@ -376,7 +364,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate work is O(n * avg_cluster), linear where the
     cosine_near_dup_pairs oracle baseline is quadratic. Verification
     runs as one cluster-grouped fold-order Arrow kernel
-    (similarity._fold_order_sims): the per-pair float64 op sequence is
+    (similarity.cell_survivors): the per-pair float64 op sequence is
     identical to the Catalyst fold-dot AND to DuckDB's sequential
     list_dot_product, so the threshold compare stays deterministic
     cross-engine while replacing ~n*avg_cluster interpreted
@@ -385,33 +373,13 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     slower on the sf100 delta triage, SCALE.md r12). The oracle
     replays the identical exact-integer clustering, so the pair SET
     matches exactly."""
-    import pandas as pd
+    from mr_py_spark.operators.similarity import cell_survivors
 
-    from mr_py_spark.operators.similarity import _fold_order_blocks
-
-    assign = _assignment(spark, sf_dir)
     e = tbl(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    av = assign.join(e, "vec_id")
-
-    def survivors(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pdf[["vec_id", "cluster"]]
-        A = np.asarray(list(pdf["v"]), dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        keep = np.ones(len(pdf), dtype=bool)
-        # row-blocked: a skewed hot cluster never allocates an
-        # unbounded dense sim matrix (similarity._FOLD_BLOCK_CELLS)
-        for s, sims in _fold_order_blocks(A, A):
-            hit = sims >= _TAU
-            # a lower-id cluster-mate matches -> dropped
-            hit &= ids[None, :] < ids[s : s + hit.shape[0], None]
-            keep[s : s + hit.shape[0]] = ~hit.any(axis=1)
-        return pdf.loc[keep, ["vec_id", "cluster"]]
-
-    return av.groupBy("cluster").applyInPandas(
-        survivors, "vec_id long, cluster long"
+    return cell_survivors(
+        _assignment(spark, sf_dir).join(e, "vec_id"), ("cluster",), _TAU
     )
 
 
@@ -480,7 +448,7 @@ def kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
         for rb in batches:
             if not len(rb):
                 continue
-            m = _qx_mat(rb, 1)
+            m = arrow_matrix(rb.column(1), "qx", _DIM)
             cl = _argmin_cluster(m, cf, normsq)
             # per-vector SSE = |qx|^2 - (2<qx,qc*> - |qc*|^2), all
             # integer-exact in float64 at these magnitudes; the

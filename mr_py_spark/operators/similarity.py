@@ -22,11 +22,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mr_py_spark.functions import dot
+from mr_py_spark.operators.vectors import arrow_matrix
 from mr_py_spark.registry import register
 from mr_py_spark.sources import tbl
 from mr_py_spark.util import (
     _LocalBroadcast,
     bc as _bc,
+    positive_int_knob,
     shuffle_width,
     table_rows as _table_rows,
 )
@@ -441,14 +443,6 @@ def cosine_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("vec_id"), F.lit(B)).cast("int").alias("bj"),
     ).withColumn("bi", F.explode(F.sequence(F.lit(0).cast("int"), F.col("bj"))))
 
-    def _mat(table: pa.Table, col: str) -> "np.ndarray":
-        flat = table.column(col).combine_chunks().flatten()
-        return (
-            flat.to_numpy(zero_copy_only=False)
-            .reshape(table.num_rows, -1)
-            .astype(np.float64)
-        )
-
     _EMPTY = pa.table(
         {"id_a": pa.array([], pa.int64()), "id_b": pa.array([], pa.int64())}
     )
@@ -470,8 +464,10 @@ def cosine_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def block_top_pairs(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return _EMPTY
-        am = _mat(left, "embedding").astype(np.float32)
-        bm = _mat(right, "cemb").astype(np.float32)
+        am = arrow_matrix(left.column("embedding"), "embedding")
+        bm = arrow_matrix(right.column("cemb"), "cemb", am.shape[1])
+        am = am.astype(np.float32, copy=False)
+        bm = bm.astype(np.float32, copy=False)
         aids = left.column("vec_id").to_numpy()
         bids = right.column("nn_id").to_numpy()
         # Diagonal task: both sides are block p's vectors, so each
@@ -787,15 +783,6 @@ def knn_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         every_block.alias("qb"),
     )
 
-    def _mat(table: pa.Table, col: str) -> "np.ndarray":
-        # zero-copy list<float> -> (rows, dim) float64, no per-row hop
-        flat = table.column(col).combine_chunks().flatten()
-        return (
-            flat.to_numpy(zero_copy_only=False)
-            .reshape(table.num_rows, -1)
-            .astype(np.float64)
-        )
-
     _EMPTY = pa.table(
         {
             "q_id": pa.array([], pa.int64()),
@@ -807,7 +794,9 @@ def knn_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     def block_topk(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return _EMPTY
-        qm, cm = _mat(left, "embedding"), _mat(right, "cemb")
+        qm = arrow_matrix(left.column("embedding"), "embedding")
+        cm = arrow_matrix(right.column("cemb"), "cemb", qm.shape[1])
+        qm, cm = qm.astype(np.float64), cm.astype(np.float64)
         qids = left.column("vec_id").to_numpy()
         cids = right.column("nn_id").to_numpy()
         sims = qm @ cm.T  # (n/B, n/B)
@@ -1350,9 +1339,9 @@ def _ivf_stamp(nlist: int) -> str:
     inverted file: every function and knob the persisted bytes depend
     on — the builder, the centroid trainer AND the Lloyd kernel it
     calls (a wrapper in a stamp list hides edits to the body it calls),
-    the assignment pass, nlist and the training cap. Shared by
-    ivf_index, ivf_corpus_index and the hier root level
-    (_hier_index_stamp)."""
+    the assignment pass and the matrix conversion it delegates its
+    vector check to, nlist and the training cap. Shared by ivf_index,
+    ivf_corpus_index and the hier root level (_hier_index_stamp)."""
     from mr_py_spark.operators.bucketed import builder_stamp
     from mr_py_spark.operators.vectors import (
         _kmeans_init,
@@ -1364,7 +1353,7 @@ def _ivf_stamp(nlist: int) -> str:
     return builder_stamp(
         ivf_build, centroid_frame,
         _ivf_centroids, _ivf_train_prefix, ivf_assign_with, _ivf_assign_pass,
-        _kmeans_init, _lloyd, _nearest, _unit_rows,
+        arrow_matrix, _kmeans_init, _lloyd, _nearest, _unit_rows,
         nlist=nlist, train_cap=_IVF_TRAIN_CAP,
     )
 
@@ -1401,25 +1390,15 @@ def _ivf_assign_pass(cent: DataFrame, vectors: DataFrame, with_score: bool) -> D
     """The one broadcast-argmax assignment kernel behind both
     ``ivf_assign_with`` (emits the vector, for the inverted file) and
     ``ivf_assign_scored`` (emits the top-1 similarity, for the drift
-    monitor) — a single body so a future fix cannot silently diverge
-    assignment from scoring (review r12).
+    monitor) — a single body, so a fix cannot diverge assignment from
+    scoring.
 
-    r17 (VERDICT r16 item 4, guide §4.2): ``mapInArrow`` instead of
-    ``mapInPandas``. The O(n·nroot·d) matmul this pass exists for is
-    NOT where its task time went — at 8M×1953×64 the dgemm floor is
-    ~2·10^12 flops ≈ a few hundred CPU-seconds, while the pass
-    measured 3.6-4.3k s — the rest was the pandas boundary: every
-    batch paid Series-of-ndarray → list → np.asarray on the way in and
-    an object-Series → Arrow list re-serialization of the untouched
-    ``v`` payload on the way out. In Arrow a list<double> column is
-    ONE contiguous values buffer + offsets, so the input matrix is a
-    zero-copy ``flatten().reshape(n, d)`` and the ``v``/``vec_id``
-    output columns are the INPUT ARRAYS passed through untouched —
-    only ``bucket``/``score`` are newly materialized. The similarity
-    values are the same float64 ``m @ cmat.T`` dgemm over the same
-    rows, so assignments are bit-identical (pinned by the standing
-    append-equals-rebuild property tests). A null or wrong-length
-    vector raises instead of reshaping into misaligned rows."""
+    ``mapInArrow``, because the pandas boundary, not the matmul, was
+    where this pass spent its task time: the input matrix is a
+    zero-copy view from ``vectors.arrow_matrix`` (which refuses a null
+    or wrong-length vector), and the ``v``/``vec_id`` output columns
+    are the input arrays passed through, so only ``bucket``/``score``
+    are newly materialized."""
     import numpy as np
     import pyarrow as pa
 
@@ -1436,15 +1415,7 @@ def _ivf_assign_pass(cent: DataFrame, vectors: DataFrame, with_score: bool) -> D
                 continue
             vec_id = rb.column(rb.schema.get_field_index("vec_id"))
             v = rb.column(rb.schema.get_field_index("v"))
-            vals = v.flatten()
-            d = cmat.shape[1]
-            # per-row lengths, not just the total: a 63- and a 65-dim
-            # row still flatten to 2·64 values
-            if v.null_count or vals.null_count or (np.diff(v.offsets) != d).any():
-                raise ValueError(
-                    f"column 'v' holds a null or a vector whose length is not {d}"
-                )
-            m = vals.to_numpy(zero_copy_only=False).reshape(rb.num_rows, d)
+            m = arrow_matrix(v, "v", cmat.shape[1])
             sims = m @ cmat.T
             bucket = pa.array(sims.argmax(1).astype(np.int64), type=pa.int64())
             if with_score:
@@ -1635,122 +1606,149 @@ def _fold_order_sims(A, B):
     )
 
 
+def _cell_match(A, a_ids, B, b_ids, tau: float, lower: bool):
+    """The one fold-order pair kernel of the semantic tier: for each row
+    of ``A``, whether some row of ``B`` has a fold-order dot >= tau with
+    it (with ``lower``, only rows whose id is strictly below the row's
+    own — the house star rule), and the least such id. Returns
+    (matched, match) int64/bool arrays; ``match`` is meaningless where
+    ``matched`` is False. ``B`` is ordered by id first, so the least
+    matching id is the first hit of a row; reordering ``B`` changes no
+    pair's op sequence, so every compare is bit-identical to
+    ``functions.dot``."""
+    import numpy as np
+
+    matched = np.zeros(len(A), dtype=bool)
+    match = np.zeros(len(A), dtype=np.int64)
+    if not len(B):
+        return matched, match
+    order = np.argsort(b_ids, kind="stable")
+    B, b_ids = B[order], b_ids[order]
+    for s, sims in _fold_order_blocks(A, B):
+        rows = slice(s, s + sims.shape[0])
+        hit = sims >= tau
+        if lower:
+            hit &= b_ids[None, :] < a_ids[rows, None]
+        matched[rows] = hit.any(axis=1)
+        match[rows] = b_ids[hit.argmax(axis=1)]
+    return matched, match
+
+
+def _cell_side(t, d: int | None = None):
+    """(float64 vectors, int64 ids) of one cell's Arrow table; ``d``
+    is the row length the other side of a cogroup fixed."""
+    import numpy as np
+
+    return (
+        arrow_matrix(t.column("v"), "v", d).astype(np.float64, copy=False),
+        t.column("vec_id").to_numpy(),
+    )
+
+
+def cell_survivors(assigned: DataFrame, cell: tuple[str, ...], tau: float) -> DataFrame:
+    """SemDeDup's star rule within each cell: (vec_id, *cell) of every
+    vector of ``assigned`` (vec_id, *cell, v) with NO lower-vec_id
+    cell-mate at cosine >= tau. One grouped Arrow kernel per cell
+    (``_cell_match``), so a hot cell never allocates an unbounded sim
+    matrix; the cell key is ``cluster`` for kmeans.semantic_dedup and
+    (bucket, leaf) for the two-level quantizer."""
+    import pyarrow as pa
+
+    keys = ["vec_id", *cell]
+
+    def survivors(t: pa.Table) -> pa.Table:
+        A, ids = _cell_side(t)
+        dropped, _ = _cell_match(A, ids, A, ids, tau, lower=True)
+        return t.select(keys).filter(pa.array(~dropped))
+
+    return assigned.select(*keys, "v").groupBy(*cell).applyInArrow(
+        survivors, ", ".join(f"{k} long" for k in keys)
+    )
+
+
 def semantic_delta_status(
-    cent: DataFrame,
+    delta_assigned: DataFrame,
     corpus_assigned: DataFrame,
-    delta: DataFrame,
+    cell: tuple[str, ...] = ("bucket",),
     tau: float | None = None,
     kernel: str = "arrow",
 ) -> DataFrame:
-    """Incremental SEMANTIC near-dup triage of a delta batch
-    (vec_id, v) against a standing IVF-indexed corpus — SemDeDup's
-    cluster-mate restriction (kmeans.py:semantic_dedup) made O(delta):
-    the delta is assigned against the EXISTING centroids (broadcast
-    argmax, zero shuffle — never a retrain), and candidate pairs are
-    an equi-join on the coarse bucket id against the bucket-bucketed
-    inverted file, exchange-free on the corpus side. Re-running the
-    per-snapshot Lloyd chain (the kmeans.py form) is the O(total)
-    alternative this replaces — the same recompute the r11 standing
-    LSH/IVF indexes eliminated for text dedup and kNN.
+    """Incremental SEMANTIC near-dup triage of a delta batch against a
+    standing quantized corpus — SemDeDup's cluster-mate restriction
+    (kmeans.semantic_dedup) made O(delta). ``delta_assigned`` is the
+    delta (vec_id, *cell, v) assigned against the EXISTING quantizer
+    (never a retrain): ``ivf_assign_with`` for the flat IVF tier,
+    keyed on ``("bucket",)``, or root argmax then ``hier.hier_assign``
+    for the two-level tier, keyed on ``("bucket", "leaf")``.
+    ``corpus_assigned`` is the standing inverted file bucketed by the
+    same cell, so its side never exchanges. Candidate pairs are
+    cell-mates only; corpus-vs-corpus pairs are never formed.
 
     Returns one row per delta vector: (vec_id, status, match_id) with
-    status 'dup_of_corpus' (some same-bucket corpus vector at cosine
-    >= tau; match_id = min such), else 'dup_within_delta' (a LOWER
-    vec_id same-bucket delta vector matches — the house star rule),
-    else 'new'. tau defaults to kmeans._TAU so the two semantic-dedup
-    forms share one threshold. Corpus-vs-corpus pairs are never
-    formed; unit-norm embeddings make fold-dot == cosine.
+    status 'dup_of_corpus' (some corpus cell-mate at cosine >= tau;
+    match_id = min such), else 'dup_within_delta' (a LOWER vec_id
+    delta cell-mate matches — the house star rule), else 'new'. tau
+    defaults to kmeans._TAU so every semantic-dedup form shares one
+    threshold; unit-norm embeddings make fold-dot == cosine.
 
-    ``kernel`` selects the pair-verification engine, both producing
-    BIT-IDENTICAL statuses (property-pinned on fixture + plants):
-    'arrow' (default) cogroups the two sides per bucket and verifies
-    with the fold-order numpy kernel (_fold_order_sims) — the corpus
-    side arrives pre-bucketed so only the small delta exchanges, and
-    per-bucket work is one vectorized (m x k x dim) pass instead of
-    m*k interpreted fold-dot expressions (>4x at sf100, SCALE.md r12);
-    'join' is the declarative reference form (bucket equi-join +
-    Catalyst dot), kept as the semantics oracle for the kernel."""
+    ``kernel`` selects the verify engine; both give BIT-IDENTICAL
+    statuses (property-pinned on the flat and two-level cells).
+    'arrow' (default) cogroups the two sides per cell and emits both
+    matches of every delta row from one ``_cell_match`` pass; 'join'
+    is the declarative reference form (cell equi-join + Catalyst
+    fold-dot), kept as the kernel's semantics oracle."""
+    import pyarrow as pa
+
+    from mr_py_spark.operators.dedup import delta_status
+
     if tau is None:
         from mr_py_spark.operators.kmeans import _TAU as tau
     tau = float(tau)
 
-    d_asg = ivf_assign_with(cent, delta)
-
     if kernel == "arrow":
-        import numpy as np
-        import pandas as pd
+        cols = ("vec_id", "corpus_match", "delta_match")
+        empty = pa.table({c: pa.array([], pa.int64()) for c in cols})
 
-        def corpus_matches(key, dpdf, opdf):
-            if not len(dpdf) or not len(opdf):
-                return pd.DataFrame({"vec_id": [], "corpus_match": []}).astype(
-                    {"vec_id": "int64", "corpus_match": "int64"}
-                )
-            A = np.asarray(list(dpdf["v"]), dtype=np.float64)
-            B = np.asarray(list(opdf["v"]), dtype=np.float64)
-            did = dpdf["vec_id"].to_numpy()
-            oid = opdf["vec_id"].to_numpy()
-            # min matching partner per delta row (== F.min over the
-            # join); row-blocked so a skewed bucket never allocates an
-            # unbounded dense matrix
-            out = []
-            for s, sims in _fold_order_blocks(A, B):
-                hit = sims >= tau
-                for i in np.nonzero(hit.any(axis=1))[0]:
-                    out.append((did[s + i], oid[hit[i]].min()))
-            return pd.DataFrame(out, columns=["vec_id", "corpus_match"])
+        def matches(dt: pa.Table, ct: pa.Table) -> pa.Table:
+            if not dt.num_rows:  # a corpus-only cell
+                return empty
+            A, ids = _cell_side(dt)
+            B, oids = _cell_side(ct, A.shape[1])
+            hit_c, m_c = _cell_match(A, ids, B, oids, tau, lower=False)
+            hit_d, m_d = _cell_match(A, ids, A, ids, tau, lower=True)
+            return pa.table({
+                "vec_id": dt.column("vec_id"),
+                "corpus_match": pa.array(m_c, pa.int64(), mask=~hit_c),
+                "delta_match": pa.array(m_d, pa.int64(), mask=~hit_d),
+            })
 
-        def delta_matches(pdf):
-            if len(pdf) < 2:
-                return pd.DataFrame({"vec_id": [], "delta_match": []}).astype(
-                    {"vec_id": "int64", "delta_match": "int64"}
-                )
-            A = np.asarray(list(pdf["v"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            out = []
-            for s, sims in _fold_order_blocks(A, A):
-                hit = sims >= tau
-                # partner strictly lower
-                hit &= ids[None, :] < ids[s : s + hit.shape[0], None]
-                for i in np.nonzero(hit.any(axis=1))[0]:
-                    out.append((ids[s + i], ids[hit[i]].min()))
-            return pd.DataFrame(out, columns=["vec_id", "delta_match"])
-
-        vs_corpus = (
-            d_asg.groupBy("bucket")
-            .cogroup(corpus_assigned.groupBy("bucket"))
-            .applyInPandas(corpus_matches, "vec_id long, corpus_match long")
-        )
-        vs_delta = d_asg.groupBy("bucket").applyInPandas(
-            delta_matches, "vec_id long, delta_match long"
-        )
-    else:
-
-        def verified(other: DataFrame, cond, out: str) -> DataFrame:
-            d, o = d_asg.alias("d"), other.alias("o")
-            return (
-                d.join(o, (F.col("d.bucket") == F.col("o.bucket")) & cond)
-                .filter(dot(F.col("d.v"), F.col("o.v")) >= F.lit(tau))
-                .groupBy(F.col("d.vec_id").alias("vec_id"))
-                .agg(F.min(F.col("o.vec_id")).alias(out))
-            )
-
-        vs_corpus = verified(corpus_assigned, F.lit(True), "corpus_match")
-        vs_delta = verified(
-            d_asg, F.col("o.vec_id") < F.col("d.vec_id"), "delta_match"
-        )
-    return (
-        delta.select("vec_id")
-        .join(vs_corpus, "vec_id", "left")
-        .join(vs_delta, "vec_id", "left")
-        .select(
+        return delta_status(
+            delta_assigned.groupBy(*cell)
+            .cogroup(corpus_assigned.groupBy(*cell))
+            .applyInArrow(matches, ", ".join(f"{c} long" for c in cols)),
             "vec_id",
-            F.when(F.col("corpus_match").isNotNull(), F.lit("dup_of_corpus"))
-            .when(F.col("delta_match").isNotNull(), F.lit("dup_within_delta"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
-            F.coalesce("corpus_match", "delta_match").alias("match_id"),
         )
+
+    def verified(other: DataFrame, cond, is_corpus: bool) -> DataFrame:
+        """(delta vec_id, verified cell-mate, side) from a cell equi-join."""
+        on = cond
+        for c in cell:
+            on = on & (F.col(f"d.{c}") == F.col(f"o.{c}"))
+        return (
+            delta_assigned.alias("d")
+            .join(other.alias("o"), on)
+            .filter(dot(F.col("d.v"), F.col("o.v")) >= F.lit(tau))
+            .select(
+                F.col("d.vec_id").alias("vec_id"),
+                F.col("o.vec_id").alias("partner"),
+                F.lit(is_corpus).alias("is_corpus"),
+            )
+        )
+
+    pairs = verified(corpus_assigned, F.lit(True), True).unionByName(
+        verified(delta_assigned, F.col("o.vec_id") < F.col("d.vec_id"), False)
     )
+    return delta_status(delta_assigned.select("vec_id"), "vec_id", pairs)
 
 
 def ivf_assign_scored(cent: DataFrame, vectors: DataFrame) -> DataFrame:
@@ -1784,16 +1782,21 @@ def ivf_drift_frame(
     d_scored = ivf_assign_scored(cent, delta).select("score").withColumn(
         "cohort", F.lit("delta")
     )
-    return (
-        idx_scored.unionByName(d_scored)
-        .groupBy("cohort")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.avg("score").alias("mean_top1"),
-            F.expr("percentile(score, 0.05)").alias("p05_top1"),
-            F.expr("percentile(score, 0.5)").alias("p50_top1"),
-        )
-    )
+    return idx_scored.unionByName(d_scored).groupBy("cohort").agg(*_top1_stats())
+
+
+def _top1_stats() -> list:
+    """The drift cohort's statistics over a ``score`` column: count,
+    mean, p05 and median. Every one is independent of the partition
+    layout: the mean sums in DECIMAL, whose addition is exact, where a
+    float avg's last digit follows the partition count (and with it
+    the bucket count and the machine's cores)."""
+    return [
+        F.count(F.lit(1)).alias("n_vecs"),
+        F.avg(F.col("score").cast("decimal(38,18)")).cast("double").alias("mean_top1"),
+        F.expr("percentile(score, 0.05)").alias("p05_top1"),
+        F.expr("percentile(score, 0.5)").alias("p50_top1"),
+    ]
 
 
 #: Retrain trigger: the delta cohort's p05 top-1 centroid similarity
@@ -1888,12 +1891,7 @@ def _drift_ref_compute(cent: DataFrame, assigned: DataFrame) -> dict:
     row = (
         assigned.join(F.broadcast(cent), assigned["bucket"] == cent["cid"])
         .select(dot("v", "cv").alias("score"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.avg("score").alias("mean_top1"),
-            F.expr("percentile(score, 0.05)").alias("p05_top1"),
-            F.expr("percentile(score, 0.5)").alias("p50_top1"),
-        )
+        .agg(*_top1_stats())
         .collect()[0]
     )
     return {
@@ -2192,16 +2190,16 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         == _INC_DELTA_BUCKET
     )
     cent, assigned = ivf_corpus_index(spark, sf_dir)
-    return semantic_delta_status(cent, assigned, delta)
+    return semantic_delta_status(ivf_assign_with(cent, delta), assigned)
 
 
-# The sub-Θ(n) tier's knobs: L independently-seeded quantizer tables,
-# each probed at a small FIXED depth. Defaults (4 tables x 6 probes)
-# hold recall at-or-above the single-table Θ(n/4) figure on the 50k
-# zipf corpus (tests/test_properties.py) while bounding per-query
-# candidates at L*n_probe*~4096 rows REGARDLESS of corpus size.
-_IVF_TABLES = int(os.environ.get("SPARK_GRAFT_IVF_TABLES", "4"))
-_IVF_PROBE_CAP = int(os.environ.get("SPARK_GRAFT_IVF_PROBE_CAP", str(_N_PROBE)))
+# The sub-Θ(n) tier: L independently-seeded quantizer tables
+# (SPARK_GRAFT_IVF_TABLES, default 4), each probed at the fixed depth
+# _N_PROBE. 4 tables x 6 probes hold recall at-or-above the
+# single-table Θ(n/4) figure on the 50k zipf corpus
+# (tests/test_properties.py) while bounding per-query candidates at
+# L*n_probe*~4096 rows REGARDLESS of corpus size.
+_IVF_TABLES = 4
 
 
 @register("knn_ivf_multitable_topk", tags=("C3",), oracle=None)
@@ -2211,7 +2209,7 @@ def knn_ivf_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zero-shuffle assignment, bucket equi-join candidates, window
     top-k) but with L independently-seeded coarse quantizers (default
     4, SPARK_GRAFT_IVF_TABLES) and a FIXED probe depth per table
-    (default 6, SPARK_GRAFT_IVF_PROBE_CAP), so per-query candidate
+    (_N_PROBE = 6), so per-query candidate
     work is L * n_probe * ~4096 rows — constant
     in corpus size, vs the single-table form's honest Θ(n/4) (whose
     probe count scales with nlist to hold the probed fraction).
@@ -2228,6 +2226,7 @@ def knn_ivf_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector in the inverted file — the classic memory-for-latency LSH
     trade. Rows-only: seeded quantizers admit no engine-independent
     SQL oracle; recall properties gate correctness."""
+    tables = positive_int_knob("SPARK_GRAFT_IVF_TABLES", _IVF_TABLES)
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
     queries = (
         e.filter(F.col("vec_id") < 50)
@@ -2239,8 +2238,8 @@ def knn_ivf_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         e,
         queries,
         n_hint=_table_rows(e, sf_dir, "embeddings"),
-        tables=_IVF_TABLES,
-        n_probe=_IVF_PROBE_CAP,
+        tables=tables,
+        n_probe=_N_PROBE,
     )
 
 
@@ -2478,8 +2477,8 @@ def _ivfpq_topk_core(
         # rows per query set; per-row Python objects (and especially a
         # per-candidate copy of the 512-byte query vector — 13 GB at
         # sf100) are what the broadcast LUTs exist to avoid. Arrow list
-        # values are contiguous per batch, so codes reshape zero-copy
-        # into a (rows, M) matrix; scoring is one gather + sum.
+        # values are contiguous per batch, so codes view zero-copy as a
+        # (rows, M) matrix; scoring is one gather + sum.
         import pyarrow as pa
 
         lut_qids, luts = b_lut.value  # (nq,), (nq, M, K')
@@ -2489,7 +2488,7 @@ def _ivfpq_topk_core(
                 continue
             q_id = np.asarray(rb.column(0))
             qidx = np.searchsorted(lut_qids, q_id)
-            codes = np.asarray(rb.column(2).flatten()).reshape(len(rb), M)
+            codes = arrow_matrix(rb.column(2), "code", M)
             sim = luts[qidx[:, None], marange, codes].sum(axis=1)
             yield pa.RecordBatch.from_arrays(
                 [rb.column(0), rb.column(1), pa.array(sim, type=pa.float64())],

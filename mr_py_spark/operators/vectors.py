@@ -133,6 +133,32 @@ _PQ_TRAIN = 4096  # bounded training sample (hash-ordered, deterministic)
 _PQ_ITERS = 8
 
 
+def arrow_matrix(col, name: str, d: int | None = None):
+    """The one Arrow list -> ``(n, d)`` numpy matrix conversion behind
+    every vector kernel: ``col`` is a list Array or ChunkedArray, ``d``
+    the required row length (default: the first row's). A list column
+    is one contiguous values buffer plus offsets, so the matrix is a
+    zero-copy view of the values in their own dtype. Every row's length
+    is checked, not just the total: a 63- and a 65-dim row flatten to
+    2·64 values and would reshape silently into two wrong rows. A null
+    vector, a null value or a wrong-length row raises a ValueError
+    naming ``name``."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    n = len(col)
+    lengths = np.diff(np.asarray(col.offsets))
+    if d is None:
+        d = int(lengths[0]) if n else 0
+    vals = col.flatten()
+    if col.null_count or vals.null_count or (lengths != d).any():
+        raise ValueError(
+            f"column {name!r} holds a null or a vector whose length is not {d}"
+        )
+    return vals.to_numpy(zero_copy_only=False).reshape(n, d)
+
+
 def _kmeans_init(X, k: int, seed: int):
     """Start centres for the driver/worker Lloyd kernel: ``k`` clamped
     to the sample size, farthest-point picks at k <= 64 (argmax of d2 —

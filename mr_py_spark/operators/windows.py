@@ -166,8 +166,9 @@ def ranking_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatches to the bitwise-identical two-pass range-partition plan
     of ``ranking_window_scaled`` (same oracle, both driver-green).
     Below it, the single window is correct and cheaper."""
+    limit = scale_form_threshold()  # a malformed knob fails before any read
     c = tbl(spark, sf_dir, "customer")
-    if table_rows(c, sf_dir, "customer") > scale_form_threshold():
+    if table_rows(c, sf_dir, "customer") > limit:
         return ranking_window_scaled(spark, sf_dir)
     w = W.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return c.select(

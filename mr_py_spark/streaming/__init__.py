@@ -1352,7 +1352,9 @@ def _ivf_maintenance_step(
         actuate=lambda batch, ids, ctx: ivf_retrain(
             spark, cent_table, idx_table, exclude_ids=ids, extra_train=batch
         ),
-        triage=lambda batch, ctx: semantic_delta_status(*ctx, batch),
+        triage=lambda batch, ctx: semantic_delta_status(
+            ivf_assign_with(ctx[0], batch), ctx[1]
+        ),
         first_build=first_build,
         append=lambda ctx, rows, stats: ivf_index_append(
             ctx[0], rows, idx_table, idempotent=True, stats=stats
@@ -1510,7 +1512,7 @@ def _hier_maintenance_step(
     the two bootstrap writes are guarded separately, so a crash
     between them replays into a leaf rebuild from the persisted roots
     and the same batch (deterministic). Triage runs through the
-    (bucket, leaf) cells (``semantic_delta_status_hier``); admits go
+    (bucket, leaf) cells (``semantic_delta_status``); admits go
     through ``hier_index_append``. The gauge scores the ROOT level (a
     hier index drifts at the root first) against the generation-pinned
     reference, and a trip triggers ``hier_retrain``, the crash-atomic
@@ -1552,6 +1554,7 @@ def _hier_maintenance_step(
         sidecar_write_json,
     )
     from mr_py_spark.operators.hier import (
+        _CELL,
         _CELL_SCHEMA,
         _LEAF_ROWS,
         _ROOT_ROWS,
@@ -1563,7 +1566,6 @@ def _hier_maintenance_step(
         hier_index_append,
         hier_pq_codes_append,
         hier_retrain,
-        semantic_delta_status_hier,
     )
     from mr_py_spark.operators.similarity import (
         _DRIFT_P05_RATIO,
@@ -1573,6 +1575,7 @@ def _hier_maintenance_step(
         drift_ref_stats,
         ivf_assign_with,
         pin_drift_ref,
+        semantic_delta_status,
     )
     from mr_py_spark.operators.vectors import _pq_train
     from mr_py_spark.sources.sinks import write_bucketed
@@ -1703,7 +1706,9 @@ def _hier_maintenance_step(
         view=view,
         trips=trips,
         actuate=actuate,
-        triage=lambda batch, ctx: semantic_delta_status_hier(*ctx, batch),
+        triage=lambda batch, ctx: semantic_delta_status(
+            hier_assign(ivf_assign_with(ctx[0], batch), ctx[1]), ctx[2], _CELL
+        ),
         first_build=first_build,
         append=lambda ctx, rows, stats: hier_index_append(
             ctx[0], ctx[1], rows, idx_table, idempotent=True, stats=stats

@@ -56,12 +56,26 @@ _SCALE_FORM_ROWS = 50_000_000
 
 
 def scale_form_threshold() -> int:
+    return positive_int_knob("SPARK_GRAFT_SCALE_ROWS", _SCALE_FORM_ROWS)
+
+
+def positive_int_knob(name: str, default=None):
+    """The positive integer in environment variable ``name``, read at
+    use, or ``default`` when it is unset. A malformed value raises a
+    ValueError naming the knob, so it fails before any Spark work
+    instead of falling back silently."""
     import os
 
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
     try:
-        return int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", _SCALE_FORM_ROWS))
-    except (TypeError, ValueError):
-        return _SCALE_FORM_ROWS
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return n
 
 
 def shuffle_width(spark: SparkSession, default: int = 32) -> int:

@@ -16,6 +16,7 @@ from mr_py_spark.operators.vectors import (
     _nearest,
     _pq_train,
     _unit_rows,
+    arrow_matrix,
 )
 
 
@@ -126,6 +127,31 @@ def test_ivf_assign_refuses_ragged_or_null_vectors(spark, bad):
         ivf_assign_with(cent, vecs).collect()
 
 
+@pytest.mark.parametrize(
+    "rows,other",
+    [
+        ([[0.1] * 63, [0.1] * 65], None),  # ragged against row 0
+        ([[0.1] * 64, None], None),
+        ([[0.1] * 64, [0.1] * 63 + [None]], None),
+        ([[0.1] * 63], [[0.1] * 64]),  # fine alone, wrong against the other side
+    ],
+    ids=["ragged", "null_vector", "null_value", "cross_side"],
+)
+def test_arrow_matrix_refuses_ragged_or_null_vectors(rows, other):
+    """The one list -> matrix conversion checks every row, so a bad
+    vector raises naming its column instead of reshaping into wrong
+    rows; a good column comes back as a zero-copy view."""
+    import pyarrow as pa
+
+    good = pa.chunked_array([pa.array([[1.0, 2.0], [3.0, 4.0]])])
+    m = arrow_matrix(good, "emb")
+    assert not m.flags.writeable  # a view of the Arrow buffer, no copy
+    assert np.array_equal(m, [[1.0, 2.0], [3.0, 4.0]])
+    d = None if other is None else arrow_matrix(pa.array(other), "emb").shape[1]
+    with pytest.raises(ValueError, match="column 'emb'"):
+        arrow_matrix(pa.array(rows, pa.list_(pa.float64())), "emb", d)
+
+
 def test_builder_stamps_name_the_lloyd_kernel(monkeypatch):
     """Each quantizer kind's stamp helper must hash the kernel's source,
     not only the trainer that wraps it: otherwise a kernel edit
@@ -143,10 +169,13 @@ def test_builder_stamps_name_the_lloyd_kernel(monkeypatch):
 
     monkeypatch.setattr(bucketed, "builder_stamp", recording)
     cases = [
-        (lambda: _ivf_stamp(16), {_kmeans_init, _lloyd, _nearest, _unit_rows}),
+        (
+            lambda: _ivf_stamp(16),
+            {_kmeans_init, _lloyd, _nearest, _unit_rows, arrow_matrix},
+        ),
         (
             lambda: _hier_index_stamp(10_000),
-            {_kmeans_init, _lloyd, _nearest, _unit_rows},
+            {_kmeans_init, _lloyd, _nearest, _unit_rows, arrow_matrix},
         ),
         (_pq_books_stamp, {_lloyd, _nearest, _pq_train}),
     ]

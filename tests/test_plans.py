@@ -108,17 +108,16 @@ def test_ann_plans_have_no_cartesian(spark):
 
 
 def test_incremental_semantic_dedup_reads_standing_index(spark):
-    """The O(delta) semantic-dedup form (VERDICT r12 item 4): the
+    """The O(delta) semantic-dedup form: the
     corpus side is the persisted bucket-bucketed inverted file and the
     persisted centroid table — no Lloyd retrain collect, no corpus
-    assignment pass at query time. MapInArrow (r17; MapInPandas
-    before) is the DELTA's
+    assignment pass at query time. MapInArrow is the DELTA's
     broadcast-argmax assignment (O(delta) by construction); pair
     verification is the bucket-cogrouped fold-order Arrow kernel,
     never a nested loop."""
     p = plan_of(spark, "incremental_semantic_dedup")
     assert "mrps_bkt_ivf_corpus_assign" in p
-    assert "FlatMapCoGroupsInPandas" in p
+    assert "FlatMapCoGroupsInArrow" in p
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -959,17 +958,19 @@ def test_lsh_gauge_delta_probe_plan(spark, tmp_path):
 
 
 def test_incremental_semantic_dedup_hier_reads_standing_index(spark):
-    """The hierarchical O(delta) semantic form (VERDICT r12 item 1):
+    """The hierarchical O(delta) semantic form:
     the corpus side is the persisted (bucket, leaf)-bucketed inverted
     file — no retrain, no corpus re-assignment at query time; delta
     root assignment is the broadcast-argmax Arrow pass and every
-    candidate stage is a cogroup on cell keys, never a product. The
-    leaf-centroid table is joined through its own standing table, not
-    broadcast (it outgrows any broadcast budget at scale)."""
+    candidate stage is a cogroup on cell keys, never a product (the
+    verify stage is the Arrow cell kernel; the leaf assignment is
+    still a pandas cogroup). The leaf-centroid table is joined through
+    its own standing table, not broadcast (it outgrows any broadcast
+    budget at scale)."""
     p = plan_of(spark, "incremental_semantic_dedup_hier")
     assert "mrps_bkt_hier_corpus_assign" in p
     assert "mrps_bkt_hier_leaf_cent" in p
-    assert "FlatMapCoGroupsInPandas" in p
+    assert "FlatMapCoGroupsInArrow" in p
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 

@@ -2511,7 +2511,7 @@ def test_ivf_index_append_consistency(spark, tmp_path):
 
 
 def test_semantic_delta_status_planted(spark):
-    """Incremental semantic dedup (VERDICT r12 item 4): planted
+    """Incremental semantic dedup: planted
     statuses over a controlled corpus/delta. Corpus lives in dims 0-5;
     the delta plants (a) an exact copy of a corpus vector ->
     dup_of_corpus with a genuinely-tau-close corpus match, (b) a
@@ -2548,16 +2548,18 @@ def test_semantic_delta_status_planted(spark):
         [(1000, [float(x) for x in X[5]]), (1001, e7), (1002, twin)],
         "vec_id long, v array<double>",
     )
-    out = {r.vec_id: (r.status, r.match_id)
-           for r in semantic_delta_status(cent, assigned, delta).collect()}
+
+    def triage():
+        return semantic_delta_status(ivf_assign_with(cent, delta), assigned)
+
+    out = {r.vec_id: (r.status, r.match_id) for r in triage().collect()}
     assert set(out) == {1000, 1001, 1002}  # one status per delta vec
     s, m = out[1000]
     assert s == "dup_of_corpus" and m is not None and m <= 5
     assert float(X[m] @ X[5]) >= _TAU  # the match is genuinely tau-close
     assert out[1001] == ("new", None)
     assert out[1002] == ("dup_within_delta", 1001)
-    out2 = {r.vec_id: (r.status, r.match_id)
-            for r in semantic_delta_status(cent, assigned, delta).collect()}
+    out2 = {r.vec_id: (r.status, r.match_id) for r in triage().collect()}
     assert out2 == out  # deterministic
 
 
@@ -2598,20 +2600,24 @@ def test_incremental_semantic_dedup_fixture_sanity(spark):
             assert r.status == "new" and r.match_id is None
 
 
-def test_semantic_delta_status_kernels_bit_equal(spark):
+@pytest.mark.parametrize("cells", ["flat", "hier"])
+def test_semantic_delta_status_kernels_bit_equal(spark, cells):
     """The arrow kernel (cogrouped fold-order numpy verify, the default
-    path) and the declarative join kernel (bucket equi-join + Catalyst
+    path) and the declarative join kernel (cell equi-join + Catalyst
     fold-dot, the semantics reference) must produce IDENTICAL status
-    frames — _fold_order_sims replays the exact float64 op sequence of
-    functions.dot, so even knife-edge tau pairs cannot flip between
-    engines."""
+    frames on the flat IVF cells (bucket) and the two-level cells
+    (bucket, leaf) — _fold_order_blocks replays the exact float64 op
+    sequence of functions.dot, so even knife-edge tau pairs cannot flip
+    between engines."""
     from mr_py_spark.operators.dedup import (
         _INC_BUCKETS,
         _INC_DELTA_BUCKET,
         _INC_MULT,
     )
+    from mr_py_spark.operators.hier import _CELL, hier_assign, hier_corpus_index
     from mr_py_spark.operators.similarity import (
         _emb_double,
+        ivf_assign_with,
         ivf_corpus_index,
         semantic_delta_status,
     )
@@ -2622,14 +2628,20 @@ def test_semantic_delta_status_kernels_bit_equal(spark):
         (F.col("vec_id") * F.lit(_INC_MULT)) % F.lit(_INC_BUCKETS)
         == _INC_DELTA_BUCKET
     )
-    cent, assigned = ivf_corpus_index(spark, SF_DIR)
-    a = sorted(
-        tuple(r)
-        for r in semantic_delta_status(cent, assigned, delta, kernel="arrow").collect()
-    )
-    j = sorted(
-        tuple(r)
-        for r in semantic_delta_status(cent, assigned, delta, kernel="join").collect()
+    if cells == "flat":
+        cent, assigned = ivf_corpus_index(spark, SF_DIR)
+        d_asg, cell = ivf_assign_with(cent, delta), ("bucket",)
+    else:
+        root, leaf, assigned = hier_corpus_index(spark, SF_DIR)
+        d_asg, cell = hier_assign(ivf_assign_with(root, delta), leaf), _CELL
+    a, j = (
+        sorted(
+            tuple(r)
+            for r in semantic_delta_status(
+                d_asg, assigned, cell, kernel=kernel
+            ).collect()
+        )
+        for kernel in ("arrow", "join")
     )
     assert a == j and len(a) > 0
 
@@ -2722,6 +2734,27 @@ def test_ivf_drift_monitor_moves_on_planted_drift(spark):
     # drifted delta: orthogonal to every centroid -> scores collapse
     assert moved["delta"][1] < 0.1 < moved["indexed"][1]
     assert moved["delta"][1] < moved["indexed"][1] - 0.3
+
+
+def test_drift_stats_do_not_depend_on_partitioning(spark):
+    """The drift cohort statistics (``ivf_drift_frame`` and the pinned
+    reference share them) over one scored frame are bitwise equal at 1
+    and 5 partitions: the mean sums in DECIMAL, so its last digit no
+    longer follows the partition count."""
+    import struct
+
+    import numpy as np
+
+    from mr_py_spark.operators.similarity import _top1_stats
+
+    scores = np.random.RandomState(23).uniform(-0.2, 1.0, 5000)
+    df = spark.createDataFrame([(float(x),) for x in scores], "score double")
+
+    def stats(parts):
+        row = df.repartition(parts).agg(*_top1_stats()).first()
+        return [struct.pack("<d", x) if isinstance(x, float) else x for x in row]
+
+    assert stats(1) == stats(5)
 
 
 def test_gen_sf_mutate_structure():
@@ -2820,7 +2853,7 @@ def _hier_toy_index(spark, X, leaf_rows=16, nroot=4):
 
 
 def test_hier_delta_status_planted(spark):
-    """Hierarchical semantic delta triage (VERDICT r12 item 1): the
+    """Hierarchical semantic delta triage: the
     planted-status contract of the flat form holds through the
     two-level quantizer — exact corpus copy -> dup_of_corpus with a
     genuinely-tau-close match, orthogonal plant -> new, its higher-id
@@ -2828,8 +2861,12 @@ def test_hier_delta_status_planted(spark):
     forces multiple leaves per root on this corpus)."""
     import numpy as np
 
+    from mr_py_spark.operators.hier import _CELL, hier_assign
     from mr_py_spark.operators.kmeans import _TAU
-    from mr_py_spark.operators.hier import semantic_delta_status_hier
+    from mr_py_spark.operators.similarity import (
+        ivf_assign_with,
+        semantic_delta_status,
+    )
 
     rng = np.random.RandomState(3)
     X = rng.randn(200, 6)
@@ -2845,24 +2882,19 @@ def test_hier_delta_status_planted(spark):
         [(1000, [float(x) for x in X[5]]), (1001, e7), (1002, twin)],
         "vec_id long, v array<double>",
     )
-    out = {
-        r.vec_id: (r.status, r.match_id)
-        for r in semantic_delta_status_hier(
-            root_cent, leaf_cent, assigned, delta
-        ).collect()
-    }
+
+    def triage():
+        d_asg = hier_assign(ivf_assign_with(root_cent, delta), leaf_cent)
+        return semantic_delta_status(d_asg, assigned, _CELL)
+
+    out = {r.vec_id: (r.status, r.match_id) for r in triage().collect()}
     assert set(out) == {1000, 1001, 1002}
     s, m = out[1000]
     assert s == "dup_of_corpus" and m is not None
     assert float(X[m] @ X[5]) >= _TAU
     assert out[1001] == ("new", None)
     assert out[1002] == ("dup_within_delta", 1001)
-    out2 = {
-        r.vec_id: (r.status, r.match_id)
-        for r in semantic_delta_status_hier(
-            root_cent, leaf_cent, assigned, delta
-        ).collect()
-    }
+    out2 = {r.vec_id: (r.status, r.match_id) for r in triage().collect()}
     assert out2 == out  # deterministic
 
 
@@ -2874,7 +2906,7 @@ def test_hier_single_leaf_degenerates_to_flat(spark):
     hierarchy as a pure refinement of the flat form."""
     import numpy as np
 
-    from mr_py_spark.operators.hier import semantic_delta_status_hier
+    from mr_py_spark.operators.hier import _CELL, hier_assign
     from mr_py_spark.operators.similarity import (
         ivf_assign_with,
         semantic_delta_status,
@@ -2899,19 +2931,50 @@ def test_hier_single_leaf_degenerates_to_flat(spark):
         [(i, [float(x) for x in X[i]]) for i in range(len(X))],
         "vec_id long, v array<double>",
     )
+    d_root = ivf_assign_with(root_cent, delta)
     flat = sorted(
         tuple(r)
         for r in semantic_delta_status(
-            root_cent, ivf_assign_with(root_cent, corpus), delta
+            d_root, ivf_assign_with(root_cent, corpus)
         ).collect()
     )
     hier = sorted(
         tuple(r)
-        for r in semantic_delta_status_hier(
-            root_cent, leaf_cent, assigned, delta
+        for r in semantic_delta_status(
+            hier_assign(d_root, leaf_cent), assigned, _CELL
         ).collect()
     )
     assert hier == flat and any(t[1] == "dup_of_corpus" for t in hier)
+
+
+def test_hier_assign_puts_a_leafless_roots_vectors_in_leaf_0(spark):
+    """A root that held no vectors at build time trains no leaf, yet the
+    maintenance loop's later deltas can land in it (the drift test's
+    off-distribution batch does). Such a root is one cell, leaf 0, for
+    every assignment, so its deltas meet each other and their own
+    earlier admits; the other roots keep their trained leaves."""
+    import numpy as np
+
+    from mr_py_spark.operators.hier import hier_assign
+    from mr_py_spark.operators.similarity import ivf_assign_with
+
+    rng = np.random.RandomState(5)
+    X = rng.randn(120, 8)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    root_cent, leaf_cent, assigned = _hier_toy_index(spark, X, leaf_rows=16)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(len(X))],
+        "vec_id long, v array<double>",
+    )
+    root_assigned = ivf_assign_with(root_cent, corpus)
+    b = root_assigned.agg(F.min("bucket")).first()[0]
+    leafless = leaf_cent.filter(F.col("bucket") != b)
+    got = {r.vec_id: (r.bucket, r.leaf)
+           for r in hier_assign(root_assigned, leafless).collect()}
+    want = {r.vec_id: (r.bucket, r.leaf) for r in assigned.collect()}
+    assert set(got) == set(want)
+    assert {got[v] for v in got if got[v][0] == b} == {(b, 0)}
+    assert all(got[v] == want[v] for v in got if want[v][0] != b)
 
 
 def test_hier_leaf_training_deterministic(spark):
@@ -3084,7 +3147,8 @@ def test_semantic_dedup_hier_star_rule_vs_brute_force(spark):
     a cell deterministically), and two runs agree."""
     import numpy as np
 
-    from mr_py_spark.operators.hier import hier_quantize, hier_survivors
+    from mr_py_spark.operators.hier import _CELL, hier_quantize
+    from mr_py_spark.operators.similarity import cell_survivors
 
     tau = 0.35
     rng = np.random.RandomState(17)
@@ -3097,7 +3161,7 @@ def test_semantic_dedup_hier_star_rule_vs_brute_force(spark):
     )
     _, _, assigned = hier_quantize(spark, corpus, len(X), root_rows=64, leaf_rows=8)
     cells = {r.vec_id: (r.bucket, r.leaf) for r in assigned.collect()}
-    out1 = {r.vec_id for r in hier_survivors(assigned, tau).collect()}
+    out1 = {r.vec_id for r in cell_survivors(assigned, _CELL, tau).collect()}
     assert set(range(350, 400)).isdisjoint(out1)  # planted dups dropped
     for v in range(len(X)):
         mates = [
@@ -3105,7 +3169,7 @@ def test_semantic_dedup_hier_star_rule_vs_brute_force(spark):
             and float(X[u] @ X[v]) >= tau
         ]
         assert (v not in out1) == bool(mates), (v, mates[:3])
-    out2 = {r.vec_id for r in hier_survivors(assigned, tau).collect()}
+    out2 = {r.vec_id for r in cell_survivors(assigned, _CELL, tau).collect()}
     assert out2 == out1  # deterministic
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mr_py_spark.sources import tbl
@@ -557,26 +558,54 @@ def test_standing_tables_keep_their_bucket_count_across_a_knob_change(
     )
 
 
-def test_bucket_knob_refuses_malformed_values_before_any_job(spark, monkeypatch):
-    """A malformed ``SPARK_GRAFT_BUCKETS`` raises a ValueError naming
-    the knob before a standing-table build runs any Spark job."""
-    import pytest
-
+def _knob_cases():
+    """(knob, resolver, its unset value, a query that reads the knob)."""
     from mr_py_spark.operators.bucketed import n_buckets, q5_bucketed
+    from mr_py_spark.operators.similarity import _IVF_TABLES, knn_ivf_multitable_topk
+    from mr_py_spark.operators.windows import ranking_window
+    from mr_py_spark.util import (
+        _SCALE_FORM_ROWS,
+        positive_int_knob,
+        scale_form_threshold,
+    )
 
+    return {
+        "SPARK_GRAFT_BUCKETS": (
+            n_buckets, lambda spark: spark.sparkContext.defaultParallelism,
+            q5_bucketed,
+        ),
+        "SPARK_GRAFT_IVF_TABLES": (
+            lambda spark: positive_int_knob("SPARK_GRAFT_IVF_TABLES", _IVF_TABLES),
+            lambda spark: _IVF_TABLES, knn_ivf_multitable_topk,
+        ),
+        "SPARK_GRAFT_SCALE_ROWS": (
+            lambda spark: scale_form_threshold(),
+            lambda spark: _SCALE_FORM_ROWS, ranking_window,
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "knob",
+    ["SPARK_GRAFT_BUCKETS", "SPARK_GRAFT_IVF_TABLES", "SPARK_GRAFT_SCALE_ROWS"],
+)
+def test_bucket_knob_refuses_malformed_values_before_any_job(spark, monkeypatch, knob):
+    """A malformed positive-integer knob raises a ValueError naming the
+    knob before the query that reads it runs any Spark job."""
+    resolve, unset, query = _knob_cases()[knob]
     sc = spark.sparkContext
-    group = "bucket-knob-probe"
-    sc.setJobGroup(group, "bucket knob check")
+    group = f"knob-probe-{knob}"  # a group's jobs outlive the test case
+    sc.setJobGroup(group, "knob check")
     try:
         for bad in ("0", "-2", "x"):
-            monkeypatch.setenv("SPARK_GRAFT_BUCKETS", bad)
-            with pytest.raises(ValueError, match="SPARK_GRAFT_BUCKETS"):
-                n_buckets(spark)
-            with pytest.raises(ValueError, match="SPARK_GRAFT_BUCKETS"):
-                q5_bucketed(spark, SF_DIR)
+            monkeypatch.setenv(knob, bad)
+            with pytest.raises(ValueError, match=knob):
+                resolve(spark)
+            with pytest.raises(ValueError, match=knob):
+                query(spark, SF_DIR)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        monkeypatch.delenv("SPARK_GRAFT_BUCKETS")
-        assert n_buckets(spark) == sc.defaultParallelism
+        monkeypatch.delenv(knob)
+        assert resolve(spark) == unset(spark)
         spark.range(3).collect()  # the probe does see a job of this group
         assert list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
