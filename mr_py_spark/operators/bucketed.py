@@ -277,6 +277,24 @@ def table_buckets(spark: SparkSession, table: str) -> int:
     return int(n)
 
 
+def table_bucket_keys(spark: SparkSession, table: str) -> list[str]:
+    """``table``'s own bucket columns, from its catalog bucket spec the
+    way ``table_buckets`` reads the count: an append names the keys the
+    table was built with, never a caller's copy of them."""
+    meta = _catalog_entry(spark, table)
+    if meta is not None:
+        spec = meta.bucketSpec()
+        cols = spec.get().bucketColumnNames() if spec.isDefined() else None
+        n = 0 if cols is None else cols.size()
+        keys = [str(cols.apply(i)) for i in range(n)]
+    else:
+        cols = _describe(spark, table).get("Bucket Columns", "")
+        keys = re.findall(r"`([^`]+)`", cols)
+    if not keys:
+        raise ValueError(f"{table} is not a bucketed table")
+    return keys
+
+
 def _external_meta(spark: SparkSession, table: str, who: str) -> tuple[str, int]:
     """(location, bucket count) of a standing table that a two-phase
     swap may rewrite. The table must be EXTERNAL (every in-repo
@@ -645,8 +663,8 @@ def raise_watermark(
     sound only if every append raises the watermark first, and an
     idempotent=False append of above-watermark ids would otherwise
     leave it stale-LOW, so a later idempotent replay of those rows
-    would take the zero-I/O fast path and re-admit duplicates. The
-    ``*_index_append`` helpers call this on every non-guarded append.
+    would take the zero-I/O fast path and re-admit duplicates.
+    ``append_entries`` calls this on every non-guarded append.
 
     Only an EXISTING watermark is raised: while no sidecar exists the
     table has never been guard-checked, and ``replay_guard``'s
@@ -659,8 +677,7 @@ def raise_watermark(
 
     ``max_id``: precomputed max of ``new_rows``'s ``id_col`` (None for
     a known-empty batch) — supplied by callers that already aggregated
-    the delta (``lsh_index_append`` shares one stats pass across the
-    gauge bump and this raise), making the raise job-free."""
+    the delta, making the raise job-free."""
     if not spark.catalog.tableExists(table):
         return
     wm_path = sidecar_path(spark, table, "rwm")
@@ -711,17 +728,53 @@ def append_guard(
     return rows, stats
 
 
+def append_entries(
+    table: str,
+    entries: DataFrame,
+    id_col: str,
+    idempotent: bool = False,
+    stats: tuple[int, int | None, int | None] | None = None,
+    before_write=None,
+) -> None:
+    """Append prebuilt index ``entries`` (rows in ``table``'s own
+    schema) to a standing bucketed table: the replay discipline
+    (``append_guard``) and then one ``write_bucketed`` under the table's
+    own catalog bucket spec. The one guard-then-write of every
+    standing-index append, so an entry is derived once, by whoever
+    built it (the maintenance step's triage), never again here.
+
+    ``stats`` is the precomputed (count, min_id, max_id) of the ids
+    ``entries`` carries (not of its rows, which may be several per id).
+    ``before_write(kept, stats)``, when given, runs after the guard and
+    before the rows land, with the entries left to append and the
+    stats that still describe them (None if the guard filtered): the
+    LSH gauge bump, which must land first. The kept entries are then
+    persisted across both readers, so a guard that filtered probes the
+    table once, not once per reader."""
+    spark = entries.sparkSession
+    keys = table_bucket_keys(spark, table)
+    kept, stats = append_guard(table, entries, id_col, idempotent, stats)
+    if before_write is None:
+        write_bucketed(kept, table, keys, mode="append")
+        return
+    kept = kept.persist()
+    try:
+        before_write(kept, stats)
+        write_bucketed(kept, table, keys, mode="append")
+    finally:
+        kept.unpersist()
+
+
 def compact_bucketed_table(
     spark: SparkSession, table: str, key: str | tuple[str, ...],
 ) -> dict:
-    """Index COMPACTION (VERDICT r12 item 3): rewrite a standing
-    bucketed table into exactly ONE file per occupied bucket, under the
-    SAME bucket spec and at the SAME location — the maintenance pass
-    that pays down the small-file debt ``mode="append"`` upkeep
-    accrues (every lsh_index_append / ivf_index_append snapshot adds a
-    file set per bucket, and after N snapshots the bucketed scan the
-    layout exists to optimize opens N× the files and plans N× the
-    row-group footers).
+    """Index COMPACTION: rewrite a standing bucketed table into exactly
+    ONE file per occupied bucket, under the SAME bucket spec and at the
+    SAME location — the maintenance pass that pays down the small-file
+    debt ``mode="append"`` upkeep accrues (every ``append_entries``
+    snapshot adds a file set per bucket, and after N snapshots the
+    bucketed scan the layout exists to optimize opens N× the files and
+    plans N× the row-group footers).
 
     Mechanics: the table is repartitioned ON ITS BUCKET KEYS into one
     task per bucket of its own spec — Spark's repartition hash
@@ -731,8 +784,8 @@ def compact_bucketed_table(
     check; per-bucket sort order is restored by the writer's sortBy).
     The rewrite lands at a side path, then swaps in: drop catalog entry, rename directories,
     re-attach with the same CLUSTERED BY DDL. The swap is a marker-file
-    TWO-PHASE COMMIT (VERDICT r12: the bare DROP→rename→CREATE window
-    lost the catalog entry on a mid-swap crash): a `__commit.json`
+    TWO-PHASE COMMIT (a bare DROP→rename→CREATE window would lose the
+    catalog entry on a mid-swap crash): a `__commit.json`
     marker carrying the replay DDL is written after the side copy is
     complete and before the first destructive step, and removed only
     after the re-attach — ``recover_compaction(spark, path)`` finishes
@@ -771,7 +824,7 @@ def compact_bucketed_table(
         "files_after": len(_data_files(path)),
         # counted AFTER the swap, on the compacted layout — an extra
         # pre-rewrite full scan over the fragmented files would double
-        # compaction I/O for a statistic (review r12); content equality
+        # compaction I/O for a statistic; content equality
         # is the caller's bit-identity check, not this count
         "rows": spark.table(table).count(),
     }
@@ -802,7 +855,7 @@ def lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # per-PROCESS table name and path: the demo rmtree/DROPs its own
     # workspace, and a shared fixed name would race a concurrent
-    # session running the same registered query (review r12 — every
+    # session running the same registered query (every
     # SHARED builder in this file locks; a throwaway demo isolates
     # instead)
     nb = n_buckets(spark)
@@ -824,10 +877,12 @@ def lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         table, _LSH_INDEX_KEYS, nb, path=path,
     )
     for i in (1, 2):  # two maintenance snapshots -> 3 file sets/bucket
-        lsh_index_append(docs.filter(part == i), table)
+        lsh_index_append(
+            lsh_band_entries(minhash_signatures(docs.filter(part == i))), table
+        )
     # counted BEFORE the swap, over the fragmented layout — the emitted
     # rows-must-survive metric has to be a real before/after comparison
-    # (ADVICE r12: stats["rows"] is deliberately post-swap, so using it
+    # (stats["rows"] is deliberately post-swap, so using it
     # as rows_before made the comparison tautological)
     rows_before = spark.table(table).count()
     stats = compact_bucketed_table(spark, table, _LSH_INDEX_KEYS)

@@ -617,7 +617,7 @@ def minhash_delta_status(
     delta: DataFrame,
     tau: float = 0.5,
     corpus_bands: DataFrame | None = None,
-    band_rows: int | None = None,
+    delta_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup triage of a delta batch (doc_id, text)
     against a standing corpus — the fuzzy companion to
@@ -649,21 +649,23 @@ def minhash_delta_status(
     be None. This is the production shape: the corpus contributes a
     scan of 18 small columns instead of a full text re-shingling. The
     delta is banded to MATCH the index's banding (lsh_index_band_rows
-    — one bounded column-pruned agg; r14, the re-band actuator means
-    an index's rows-per-band is no longer a compile-time constant),
-    so a re-banded index keeps answering probes correctly.
+    — one bounded column-pruned agg: the re-band actuator means an
+    index's rows-per-band is not a compile-time constant), so a
+    re-banded index keeps answering probes correctly.
 
-    ``band_rows`` short-circuits THAT derivation for per-batch callers
-    on a STANDING table (ADVICE r14: deriving from the frame each
-    micro-batch re-paid the O(index) column agg the banding sidecar
-    exists to avoid — pass ``lsh_table_band_rows(spark, table)``,
-    sidecar-cached). Ignored when ``corpus_bands`` is None (both sides
-    band at the build default)."""
-    if corpus_bands is None:
-        band_rows = None
-    elif band_rows is None:
-        band_rows = lsh_index_band_rows(corpus_bands)
-    dband = lsh_band_entries(minhash_signatures(delta), band_rows)
+    ``delta_bands`` is the delta's own PREBUILT ``lsh_band_entries``
+    frame, banded like the corpus side, used in place of banding
+    ``delta`` here. A per-batch caller on a STANDING table bands once
+    at ``lsh_table_band_rows`` (sidecar-cached, where deriving from the
+    frame would be an O(index) agg per batch) and writes the same
+    entries to the index afterwards."""
+    if delta_bands is not None:
+        dband = delta_bands
+    else:
+        band_rows = (
+            None if corpus_bands is None else lsh_index_band_rows(corpus_bands)
+        )
+        dband = lsh_band_entries(minhash_signatures(delta), band_rows)
     cband = (
         corpus_bands
         if corpus_bands is not None
@@ -798,29 +800,22 @@ def corpus_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lsh_index_append(
-    new_docs: DataFrame,
+    entries: DataFrame,
     table: str,
     idempotent: bool = False,
     stats: tuple[int, int | None, int | None] | None = None,
 ) -> None:
-    """Index MAINTENANCE: band ``new_docs`` (doc_id, text) and append
-    their entries into the standing index table under the SAME bucket
-    spec — the O(delta) upkeep step after a snapshot's survivors are
-    admitted to the corpus. Spark validates the bucket spec against
-    the existing table, so a drifted bucket count fails loudly instead
-    of silently mixing layouts; the append bands at the TABLE's
-    current rows-per-band (after a re-band, appends must not
-    reintroduce the old banding). (Tests exercise this on a private
-    table — the per-sf_dir cached index is content-stamped to the
-    fixture file and must stay a pure function of it.)
+    """Index MAINTENANCE: append prebuilt band ``entries`` (an
+    ``lsh_band_entries`` frame banded at the TABLE's current
+    rows-per-band, ``lsh_table_band_rows``) into the standing index
+    through ``bucketed.append_entries`` — the O(delta) upkeep step
+    after a snapshot's survivors are admitted to the corpus.
 
-    Before the rows land, the shared replay guard runs
-    (``bucketed.append_guard``: ``idempotent=True`` drops doc_ids the
-    table already holds, otherwise the watermark is raised), and the
-    gauge sufficient statistics are bumped O(delta)
-    (``_lsh_gauge_bump``; a no-op while no gauge sidecar exists). The
-    entries frame is persisted across its consumers so the delta is
-    shingled once.
+    The one LSH-specific step is the gauge bump (``_lsh_gauge_bump``,
+    O(delta); a no-op while no gauge sidecar exists), which runs after
+    the replay guard and before the rows land. ``stats`` is the
+    (n_docs, min_id, max_id) of the doc_ids ``entries`` carries; the
+    guard and the bump share it.
 
     CONTRACT: batch doc_ids are MONOTONE across appends — each fresh
     batch's ids exceed every previously appended id. Both sidecars
@@ -829,42 +824,14 @@ def lsh_index_append(
     violating batch still APPENDS correctly (the index itself is
     id-agnostic) but is skipped by the gauge with a warning
     (stale-LOW — see ``_lsh_gauge_bump``) and, if idempotent replay is
-    in use, may be re-admitted by a later replay.
+    in use, may be re-admitted by a later replay."""
+    from mr_py_spark.operators.bucketed import append_entries
 
-    ``stats``: precomputed (n_docs, min_id, max_id) of ``new_docs``.
-    The guard and the gauge bump share it, so the append runs no
-    aggregation job of its own; the guard drops it when it filtered
-    anything, and the append then aggregates the entries it writes."""
-    from mr_py_spark.operators.bucketed import append_guard
-    from mr_py_spark.sources.sinks import write_bucketed
-
-    spark = new_docs.sparkSession
-    rows, stats = (
-        append_guard(table, new_docs, "doc_id", True, stats)
-        if idempotent
-        else (new_docs, stats)
+    spark = entries.sparkSession
+    append_entries(
+        table, entries, "doc_id", idempotent, stats,
+        before_write=lambda kept, st: _lsh_gauge_bump(spark, table, kept, d0=st),
     )
-    entries = lsh_band_entries(
-        minhash_signatures(rows), lsh_table_band_rows(spark, table)
-    ).persist()
-    try:
-        if stats is None:
-            row = (
-                entries.filter(F.col("band_id") == 0)
-                .agg(
-                    F.count(F.lit(1)).alias("nd"),
-                    F.min("doc_id").alias("mn"),
-                    F.max("doc_id").alias("mx"),
-                )
-                .collect()[0]
-            )
-            stats = (int(row.nd), row.mn, row.mx)
-        if not idempotent:  # the watermark raise shares the entries' stats
-            append_guard(table, rows, "doc_id", False, stats)
-        _lsh_gauge_bump(spark, table, entries, d0=stats)
-        write_bucketed(entries, table, _LSH_INDEX_KEYS, mode="append")
-    finally:
-        entries.unpersist()
 
 
 def lsh_index_band_rows(bands: DataFrame) -> int:
@@ -1151,7 +1118,7 @@ def _lsh_gauge_bump(
     double-count its delta, and the watermark skip is exactly the
     idempotence the atomic (stats, prev, watermark) write provides.
 
-    PRECONDITION (r16, VERDICT r15 item 4): ingest ids are MONOTONE —
+    PRECONDITION: ingest ids are MONOTONE —
     every fresh batch's min doc_id exceeds the bump watermark, the
     same discipline ``bucketed.replay_guard`` already rests on and the
     streaming loops satisfy by construction. The watermark cannot tell
@@ -1165,10 +1132,10 @@ def _lsh_gauge_bump(
     stale-LOW (a check-interval-late alarm), the direction the warning
     names so an id-reusing caller is loud, never silent.
 
-    ``d0`` (r17): precomputed (n_docs, min_id, max_id) of the delta —
-    ``lsh_index_append`` computes it once and shares it with the
-    replay-watermark raise, so the bump adds no job beyond the
-    O(delta) occupancy probe."""
+    ``d0``: precomputed (n_docs, min_id, max_id) of the delta's
+    doc_ids, shared with the replay guard so the bump adds no job
+    beyond the O(delta) occupancy probe; when None (unknown, or a guard
+    that filtered) it is aggregated from the band-0 entries."""
     from mr_py_spark.operators.bucketed import sidecar_path, sidecar_read_json
 
     path = sidecar_path(spark, table, "gauge")
@@ -1286,10 +1253,9 @@ def lsh_reband_actuator(spark: SparkSession, sf_dir: str) -> DataFrame:
     text re-read), and emit before/after collision mass plus a recall
     guard: a byte-identical probe twin is still triaged dup_of_corpus
     through the re-banded index (exact dups agree on every mh
-    component, so every banding preserves them — deterministic, the
-    planted-LSH-oracle lesson r13). Rows-only (hash-layout metrics);
-    trip-exactly-once and statuses-unchanged-without-growth are
-    property-tested."""
+    component, so every banding preserves them — deterministic).
+    Rows-only (hash-layout metrics); trip-exactly-once and
+    statuses-unchanged-without-growth are property-tested."""
     import os
     import re as _re
     import shutil
@@ -1326,7 +1292,7 @@ def lsh_reband_actuator(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array(F.lit(0), F.lit(1), F.lit(2))
             ).alias("c"),  # scan-local explode — no join of any kind
         ).select(
-            # copies live in a DISJOINT id range (ADVICE r14: doc_id*10
+            # copies live in a DISJOINT id range (doc_id*10
             # + c + 1 collided with standing corpus ids — doc 1's
             # copies 11-13 vs corpus docs 11-13 — appending a second
             # signature set under an existing id, so n_docs undercounted
@@ -1341,7 +1307,7 @@ def lsh_reband_actuator(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("c").cast("string"),
             ).alias("text"),
         )
-        lsh_index_append(copies, table)
+        lsh_index_append(lsh_band_entries(minhash_signatures(copies)), table)
         before = lsh_occupancy_frame(spark.table(table))
         fired = lsh_reband_needed(before)
         b_row = before.collect()[0]

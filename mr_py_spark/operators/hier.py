@@ -1047,97 +1047,34 @@ def hier_retrain(
     }
 
 
-def hier_index_append(
-    root_cent: DataFrame,
-    leaf_cent: DataFrame,
-    new_vectors: DataFrame,
-    table: str,
-    idempotent: bool = False,
-    stats: tuple[int, int | None, int | None] | None = None,
-) -> None:
-    """O(delta) maintenance for a standing two-level inverted file:
-    assign ``new_vectors`` (vec_id, v) against the EXISTING root and
-    leaf centroids — never a retrain at either level — and append the
-    (vec_id, bucket, leaf, v) entries under the same (bucket, leaf)
-    bucket spec (Spark validates it; drift fails loudly).
-    ``idempotent``/``stats``: the shared replay guard, as in
-    ivf_index_append (``bucketed.append_guard``)."""
-    from mr_py_spark.operators.bucketed import append_guard
-    from mr_py_spark.operators.similarity import ivf_assign_with
-    from mr_py_spark.sources.sinks import write_bucketed
-
-    rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
-    entries = hier_assign(ivf_assign_with(root_cent, rows), leaf_cent)
-    write_bucketed(entries, table, ("bucket", "leaf"), mode="append")
-
-
-def hier_pq_codes_append(
-    root_cent: DataFrame,
-    leaf_cent: DataFrame,
-    books,
-    new_vectors: DataFrame,
-    table: str,
-    idempotent: bool = False,
-    stats: tuple[int, int | None, int | None] | None = None,
-) -> None:
-    """O(delta) maintenance for a standing PQ-CODE inverted file:
-    assign ``new_vectors`` (vec_id, v) against the EXISTING root and
-    leaf centroids, encode under the EXISTING codebooks (one
-    zero-shuffle mapInPandas pass over the delta — never a books
-    retrain), and append the (vec_id, bucket, leaf, code) rows under
-    the same (bucket, leaf) bucket spec (Spark validates it; spec
-    drift fails loudly). ``idempotent``/``stats``: the shared replay
-    guard (``bucketed.append_guard``), against the CODES table's own
-    watermark sidecar.
-
-    GENERATION CONTRACT: codes are a pure function of (root/leaf
-    assignment, books). A ``hier_retrain`` or books rebuild
-    invalidates EVERY stored code — the caller rebuilds the codes
-    table from the new generation (one zero-shuffle encode pass, the
-    same cost this append path avoids per batch) instead of appending
-    across generations. The batch tier enforces this with the shared
-    content stamp (``hier_pq_codes`` folds the books + assignment
-    builders in); a streaming loop does it by dropping/rebuilding the
-    codes table in the same swap as its index tables. Appends
-    bit-equal a full re-encode and replay-idempotence are
-    property-tested (tests/test_properties.py)."""
-    from mr_py_spark.operators.bucketed import append_guard
-    from mr_py_spark.operators.similarity import ivf_assign_with
-    from mr_py_spark.sources.sinks import write_bucketed
-
-    rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
-    assigned = hier_assign(ivf_assign_with(root_cent, rows), leaf_cent)
-    write_bucketed(
-        _pq_encode_frame(assigned, books), table, ("bucket", "leaf"),
-        mode="append",
-    )
-
-
 @register("hier_pq_codes_maintenance", tags=("C3", "A8", "B22"), oracle=None)
 def hier_pq_codes_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible end-to-end of the PQ-code table's O(delta)
-    lifecycle (r16, VERDICT r15 item 7 — the codes table previously
-    had append-by-rebuild only): build a PRIVATE standing codes table
-    from the fixture's corpus split under the shared hier quantizers
-    and codebooks, admit the fixture's delta split through
-    ``hier_pq_codes_append`` (assign + encode the delta only — never a
-    corpus re-encode), replay the same append under the idempotent
-    guard, and emit the audit the maintenance contract promises:
-    the appended table is row-identical (codes included) to a one-pass
-    encode of the full corpus — codes are a pure function of
-    (assignment, books), so the O(delta) path must be bit-equal to the
-    rebuild it replaces — and the replay admits exactly zero rows.
-    Rows-only (PQ codes are engine-specific layout); the same
-    bit-equality and replay-idempotence are property-tested on
-    synthetic corpora (tests/test_properties.py), and the generation
-    contract (a retrain invalidates every stored code) is documented
-    on ``hier_pq_codes_append``."""
+    lifecycle: build a PRIVATE standing codes table from the fixture's
+    corpus split under the shared hier quantizers and codebooks, admit
+    the fixture's delta split through ``bucketed.append_entries``
+    (assign + encode the delta only — never a corpus re-encode),
+    replay the same append under the idempotent guard, and emit the
+    audit the maintenance contract promises: the appended table is
+    row-identical (codes included) to a one-pass encode of the full
+    corpus — codes are a pure function of (assignment, books), so the
+    O(delta) path must be bit-equal to the rebuild it replaces — and
+    the replay admits exactly zero rows. Rows-only (PQ codes are
+    engine-specific layout); the same bit-equality and
+    replay-idempotence are property-tested on synthetic corpora
+    (tests/test_properties.py).
+
+    GENERATION CONTRACT: a retrain or books rebuild invalidates every
+    stored code, so the owner rebuilds the codes table from the new
+    generation instead of appending across generations (the batch tier
+    through the shared content stamp, the streaming loop through its
+    ``codes_gen`` sidecar)."""
     import os
     import re as _re
     import shutil
     import tempfile as _tf
 
-    from mr_py_spark.operators.bucketed import n_buckets
+    from mr_py_spark.operators.bucketed import append_entries, n_buckets
     from mr_py_spark.operators.dedup import (
         _INC_BUCKETS,
         _INC_DELTA_BUCKET,
@@ -1153,6 +1090,9 @@ def hier_pq_codes_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebooks — only the codes table itself is private to this demo
     root_cent, leaf_cent, corpus_assigned = hier_corpus_index(spark, sf_dir)
     books = _hier_pq_books(spark, sf_dir)
+    delta_codes = _pq_encode_frame(
+        hier_assign(ivf_assign_with(root_cent, delta), leaf_cent), books
+    )
 
     tag = (
         _re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.strip("/")) + f"_p{os.getpid()}"
@@ -1169,7 +1109,7 @@ def hier_pq_codes_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             path=os.path.join(root, "codes"),
         )
         n_corpus = spark.table(table).count()
-        hier_pq_codes_append(root_cent, leaf_cent, books, delta, table)
+        append_entries(table, delta_codes, "vec_id")
         n_after = spark.table(table).count()
         # bit-equality vs the one-pass full encode this path replaces:
         # full outer on vec_id, any missing/extra/differing row counts
@@ -1195,9 +1135,7 @@ def hier_pq_codes_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .count()
         )
         # replayed append under the idempotent guard admits nothing
-        hier_pq_codes_append(
-            root_cent, leaf_cent, books, delta, table, idempotent=True
-        )
+        append_entries(table, delta_codes, "vec_id", idempotent=True)
         replay_admitted = spark.table(table).count() - n_after
         return spark.createDataFrame(
             [

@@ -34,21 +34,12 @@ from mr_py_spark.util import (
 )
 
 
-# Block-grid size for the exact kNN self-join: a block pair is an
-# (n/B x n/B) matmul in one task, so raise this as the corpus grows
-# (target: 2*(n/B)*64*8 bytes of input + the sim tile per task).
-_KNN_BLOCKS = int(os.environ.get("SPARK_GRAFT_KNN_BLOCKS", "0"))  # 0 = auto
-
-
 def _knn_blocks(n: int) -> int:
-    """Auto-size the block grid: keep each block near _BLOCK_ROWS rows
-    so a pair's matmul tile stays cache/memory-friendly and the B^2
-    pairs spread evenly over the executor cores; explicit env wins."""
-    if _KNN_BLOCKS > 0:
-        return _KNN_BLOCKS
+    """Block-grid size for the exact kNN self-join: a block pair is an
+    (n/B x n/B) matmul in one task, so keep each block near _BLOCK_ROWS
+    rows, which holds a pair's tile cache/memory-friendly and spreads
+    the B^2 pairs evenly over the executor cores."""
     return max(4, min(64, round(n / _BLOCK_ROWS)))
-
-
 
 
 # ~B^2 pairs of (n/B)-row blocks: n/B near 1500 keeps a pair's tile at
@@ -750,11 +741,11 @@ def knn_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     cartesian, and — unlike a broadcast-index build — NO driver
     materialization: rows shuffled are n*B per side and rows emitted
     are ~n*B*k, never n^2. Exact all-pairs kNN is O(n^2*d) compute on
-    any engine; the grid auto-sizes with n (SPARK_GRAFT_KNN_BLOCKS
-    overrides) so a block pair (~(n/B)^2 sims, 2*(n/B)*d*8 bytes in)
-    stays one cache-friendly task and the B^2 pairs level across the
-    cores. Past the exact tier's budget, switch to the sub-quadratic
-    tiers (knn_ivf_topk / knn_rplsh_topk).
+    any engine; the grid auto-sizes with n (``_knn_blocks``) so a
+    block pair (~(n/B)^2 sims, 2*(n/B)*d*8 bytes in) stays one
+    cache-friendly task and the B^2 pairs level across the cores.
+    Past the exact tier's budget, switch to the sub-quadratic tiers
+    (knn_ivf_topk / knn_rplsh_topk).
 
     Similarities are not emitted: BLAS accumulation order differs from
     a sequential fold at the last ULP, so ids+rank are the stable
@@ -766,8 +757,8 @@ def knn_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 
     e = tbl(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # pinned grid skips sizing; auto reads the parquet footer (no job)
-    B = _KNN_BLOCKS if _KNN_BLOCKS > 0 else _knn_blocks(_table_rows(e, sf_dir, "embeddings"))
+    # sized from the parquet footer (no job)
+    B = _knn_blocks(_table_rows(e, sf_dir, "embeddings"))
     every_block = F.explode(F.array(*[F.lit(i).cast("int") for i in range(B)]))
 
     q = e.select(
@@ -1435,42 +1426,12 @@ def _ivf_assign_pass(cent: DataFrame, vectors: DataFrame, with_score: bool) -> D
 def ivf_assign_with(cent: DataFrame, vectors: DataFrame) -> DataFrame:
     """(vec_id, bucket, v) assignment of ``vectors`` against an
     EXISTING centroid frame (cid, cv): the broadcast-argmax pass shared
-    by the index build and the maintenance append — assignment is a
-    pure function of the centroids, so entries appended later are
-    bit-identical to what a full rebuild with the same centroids would
-    produce (the consistency property ivf_index_append's test pins)."""
+    by the index build and the maintenance triage, whose entries the
+    append writes — assignment is a pure function of the centroids, so
+    entries appended later are bit-identical to what a full rebuild
+    with the same centroids would produce (pinned by
+    test_ivf_index_append_consistency)."""
     return _ivf_assign_pass(cent, vectors, with_score=False)
-
-
-def ivf_index_append(
-    cent: DataFrame,
-    new_vectors: DataFrame,
-    table: str,
-    idempotent: bool = False,
-    stats: tuple[int, int | None, int | None] | None = None,
-) -> None:
-    """Index MAINTENANCE for the standing IVF index (the ANN twin of
-    dedup.py:lsh_index_append): assign ``new_vectors`` (vec_id, v)
-    against the EXISTING centroids — never retrain; a production
-    warehouse re-trains on drift schedules, not per ingest — and
-    append the entries into the inverted-file table under the same
-    bucket spec (Spark validates it; drift fails loudly). O(delta)
-    work: one broadcast-argmax pass over the delta plus a bucketed
-    append. (Tests exercise this on a private table — the per-sf_dir
-    cached index is content-stamped to the fixture and must stay a
-    pure function of it.)
-
-    ``idempotent``/``stats``: the shared replay guard
-    (``bucketed.append_guard``). ``idempotent=True`` drops vec_ids the
-    table already holds, so re-running a crashed batch admits nothing;
-    a fresh batch costs zero index I/O. ``idempotent=False`` appends
-    still raise the watermark. ``stats`` is the delta's precomputed
-    (count, min, max) vec_id."""
-    from mr_py_spark.operators.bucketed import append_guard
-    from mr_py_spark.sources.sinks import write_bucketed
-
-    rows, _ = append_guard(table, new_vectors, "vec_id", idempotent, stats)
-    write_bucketed(ivf_assign_with(cent, rows), table, "bucket", mode="append")
 
 
 @register("knn_ivf_topk_indexed", tags=("C3", "B22"), oracle=None)
@@ -1764,25 +1725,30 @@ def ivf_drift_frame(
     cent: DataFrame, assigned: DataFrame, delta: DataFrame
 ) -> DataFrame:
     """Quantization-quality comparison of the INDEXED vectors vs a
-    DELTA batch against the same centroids — the drift signal that
-    makes ``ivf_index_append``'s "re-train on drift schedules" note
-    actionable (VERDICT r12 item 7): when the delta's top-1 centroid
-    similarity distribution sits well below the indexed cohort's, new
-    data has drifted off the quantizer's partition of the space and a
-    retrain is due. Per cohort: count, mean, p05 and median of the
-    top-1 similarity. The indexed cohort's score needs NO re-argmax —
-    its bucket IS its top-1 centroid, so the score is one broadcast
-    join on the bounded centroid frame; the delta side is the usual
-    zero-shuffle scored assignment pass."""
-    idx_scored = (
-        assigned.join(F.broadcast(cent), assigned["bucket"] == cent["cid"])
-        .select(dot("v", "cv").alias("score"))
-        .withColumn("cohort", F.lit("indexed"))
+    DELTA batch against the same centroids — the drift signal behind
+    the standing index's "re-train on drift schedules" policy: when the
+    delta's top-1 centroid similarity distribution sits well below the
+    indexed cohort's, new data has drifted off the quantizer's
+    partition of the space and a retrain is due. Per cohort: count,
+    mean, p05 and median of the top-1 similarity. The indexed cohort is
+    ``_indexed_scores``; the delta side is the usual zero-shuffle
+    scored assignment pass."""
+    idx_scored = _indexed_scores(cent, assigned).withColumn(
+        "cohort", F.lit("indexed")
     )
     d_scored = ivf_assign_scored(cent, delta).select("score").withColumn(
         "cohort", F.lit("delta")
     )
     return idx_scored.unionByName(d_scored).groupBy("cohort").agg(*_top1_stats())
+
+
+def _indexed_scores(cent: DataFrame, assigned: DataFrame) -> DataFrame:
+    """The indexed cohort's top-1 scores: an indexed vector's bucket IS
+    its top-1 centroid, so the score is one broadcast join on the
+    bounded centroid frame and a dot, with no re-argmax."""
+    return assigned.join(
+        F.broadcast(cent), assigned["bucket"] == cent["cid"]
+    ).select(dot("v", "cv").alias("score"))
 
 
 def _top1_stats() -> list:
@@ -1858,13 +1824,10 @@ def drift_ref_stats(
     caller's PRE-BATCH index view, scored once and pinned. An EMPTY
     cohort is returned but never pinned (a replay-window first check
     with the whole index anti-joined away must not freeze n_vecs=0 for
-    the generation). Pass ``assigned=None`` on a known-warm path; the
-    read path never touches the index (property-tested)."""
-    from mr_py_spark.operators.bucketed import (
-        sidecar_path,
-        sidecar_read_json,
-        sidecar_write_json,
-    )
+    the generation; ``pin_drift_ref`` applies the rule). Pass
+    ``assigned=None`` on a known-warm path; the read path never touches
+    the index (property-tested)."""
+    from mr_py_spark.operators.bucketed import sidecar_path, sidecar_read_json
 
     path = sidecar_path(spark, idx_table, "drift_ref")
     got = sidecar_read_json(
@@ -1877,10 +1840,7 @@ def drift_ref_stats(
             f"drift_ref_stats: no pinned reference at {path} and no "
             "bootstrap frame supplied"
         )
-    stats = _drift_ref_compute(cent, assigned)
-    if stats["n_vecs"] > 0:
-        sidecar_write_json(path, stats)
-    return stats
+    return pin_drift_ref(spark, cent, idx_table, assigned)
 
 
 def _drift_ref_compute(cent: DataFrame, assigned: DataFrame) -> dict:
@@ -1888,12 +1848,7 @@ def _drift_ref_compute(cent: DataFrame, assigned: DataFrame) -> dict:
     against its own centroids — the reference cohort's sufficient
     statistics. O(cohort); callers decide when that cost is paid
     (generation creation, or the repair bootstrap)."""
-    row = (
-        assigned.join(F.broadcast(cent), assigned["bucket"] == cent["cid"])
-        .select(dot("v", "cv").alias("score"))
-        .agg(*_top1_stats())
-        .collect()[0]
-    )
+    row = _indexed_scores(cent, assigned).agg(*_top1_stats()).collect()[0]
     return {
         "n_vecs": int(row.n_vecs),
         "mean_top1": None if row.mean_top1 is None else float(row.mean_top1),
@@ -1942,10 +1897,13 @@ def delta_p05(cent: DataFrame, delta: DataFrame) -> float | None:
 def drift_degraded_pinned(
     ref: dict, d_p05: float | None, ratio: float = _DRIFT_P05_RATIO
 ) -> bool:
-    """``drift_degraded`` over a pinned reference dict + a delta p05
-    instead of the 2-row exact frame — the in-loop decision form
-    (sidecar read + one O(batch) pass; zero index I/O when warm).
-    Same rule, same threshold function, shared with the exact path."""
+    """The drift rule: True when the delta cohort's p05 top-1
+    similarity ``d_p05`` sits below ``drift_threshold`` of the
+    reference cohort's (``ref``: n_vecs and p05_top1) — the actuator
+    condition for a retrain. The in-loop form reads a pinned reference
+    dict (sidecar read + one O(batch) pass; zero index I/O when warm);
+    ``drift_degraded`` reads the same two numbers off the exact frame
+    and calls this, so both paths share one rule."""
     if not ref or ref.get("n_vecs", 0) == 0 or ref.get("p05_top1") is None:
         return False
     if d_p05 is None:
@@ -1954,26 +1912,16 @@ def drift_degraded_pinned(
 
 
 def drift_degraded(drift: DataFrame, ratio: float = _DRIFT_P05_RATIO) -> bool:
-    """Decision rule over an ``ivf_drift_frame`` result: True when the
-    delta cohort's p05 top-1 similarity has degraded past ``ratio`` of
-    the indexed cohort's — the actuator condition for ``ivf_retrain``
-    (VERDICT r12 item 3: the monitor emitted the signal but nothing
-    consumed it). Bounded: the frame is 2 rows by construction.
-
-    Cosine p05 lives in [-1, 1], and the multiplicative rule only has
-    degradation semantics for a POSITIVE indexed p05 (r13 review: with
-    idx p05 = -0.10, a delta at -0.09 — strictly BETTER quantized —
-    satisfied dlt < 0.8·idx and tripped a retrain on healthy data,
-    while idx p05 = 0 could never fire at all). The fire condition is
-    ``dlt < drift_threshold(idx, ratio)`` — see there for the
-    continuity/monotonicity contract and the margin-floor sizing."""
-    rows = {r.cohort: r for r in drift.collect()}
+    """``drift_degraded_pinned`` over an ``ivf_drift_frame`` result:
+    the indexed row is the reference, the delta row's p05 the probe.
+    Bounded: the frame is 2 rows by construction. The fire condition
+    is ``dlt < drift_threshold(idx, ratio)`` — see there for why a
+    plain multiplicative rule misfires around a zero or negative
+    indexed p05, and for the margin-floor sizing."""
+    rows = {r.cohort: r.asDict() for r in drift.collect()}
     if "indexed" not in rows or "delta" not in rows:
         return False
-    idx, dlt = rows["indexed"], rows["delta"]
-    if idx.p05_top1 is None or dlt.p05_top1 is None:
-        return False
-    return float(dlt.p05_top1) < drift_threshold(float(idx.p05_top1), ratio)
+    return drift_degraded_pinned(rows["indexed"], rows["delta"]["p05_top1"], ratio)
 
 
 def ivf_retrain(
@@ -2056,7 +2004,7 @@ def ivf_retrain(
 def ivf_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ivf_drift_frame`` bound to the standing corpus index and the
     fixture's delta split — the monitoring query a production vector
-    warehouse runs after each ``ivf_index_append`` batch to decide
+    warehouse runs after each index append batch to decide
     whether the never-retrain maintenance policy still holds. Rows-only
     (seeded quantizers are engine-specific); a planted-drift property
     test shows the metric MOVES when the delta drifts and sits level

@@ -270,8 +270,8 @@ def _const_node(key: tuple[str, str], memo: dict) -> tuple[str, list]:
     function is followed as a function (``_fn_node``). A data name of
     an mr_py_spark module renders as the ``ast.dump`` of every
     top-level statement binding it, so the hash sees the code that
-    computes the value (``_KNN_BLOCKS = int(os.environ.get(...))``), never
-    the value a process or environment gave it. A ``from
+    computes the value (``_BLOCK_ROWS = 1500``), never the value a
+    process or environment gave it. A ``from
     mr_py_spark... import`` binding resolves to the defining module,
     and names read inside a binding statement are followed too, so
     ``_X = _Y * 2`` re-stamps when ``_Y`` changes."""
@@ -320,7 +320,7 @@ def _dep_closure(fn, memo: dict) -> tuple[dict[str, str], dict[str, str]]:
     reachable from it (see ``_fn_node`` and ``_const_node``). Folding
     helper sources in means a behaviour-changing edit to a SHARED
     helper re-stamps every query that uses it; folding data names in
-    catches a module-level knob (_TAU, _KNN_BLOCKS, _RUNTIME_CONFS) that
+    catches a module-level knob (_TAU, _BLOCK_ROWS, _RUNTIME_CONFS) that
     changes behaviour without touching any function. ``memo`` caches
     renderings across the queries of one pass."""
     funcs: dict[str, str] = {}

@@ -1029,15 +1029,20 @@ def maintenance_step(
        ``actuate(batch, ids, ctx)`` rebuilds the index in place
        (crash-atomic), ``actuation_log`` records the batch_id, and the
        view is derived again;
-    5. ``triage(batch, ctx)`` yields the statuses, which are persisted;
-    6. one aggregate over them and the batch ids materialises the cache,
-       yields the admitted ids' (count, min, max) — the STATS — and
-       refuses a batch that repeats an id;
+    5. ``triage(batch, ctx)`` yields ``(status, entries)``: the
+       statuses, and the batch's rows in the index table's own schema
+       (band entries, IVF or hier cells), built once. Both are
+       persisted;
+    6. one aggregate over the statuses and the batch ids materialises
+       both caches, yields the admitted ids' (count, min, max) — the
+       STATS — and refuses a batch that repeats an id;
     7. the statuses land in the batch_id partition of ``out``;
-    8. the admitted rows are the batch semi-joined to the 'new' ids;
-    9. ``append(ctx, rows, stats)`` (index present) or
-       ``first_build(ctx, rows)``; then ``after(ctx, rows, stats,
-       warm)``; the statuses are unpersisted on every exit.
+    8. the admitted entries are ``entries`` semi-joined to the 'new'
+       ids, so no admitted row is read, banded or assigned again;
+    9. ``append(ctx, admitted, stats)`` (index present) or
+       ``first_build(ctx, admitted)``; then ``after(ctx, admitted,
+       stats, warm)``; statuses and entries are unpersisted on every
+       exit.
 
     DUPLICATE IDS: a batch that repeats an ``id_col`` value raises a
     ValueError naming the column and batch_id before anything is
@@ -1068,11 +1073,13 @@ def maintenance_step(
     run and its replay make the same decision and build the same
     tables.
 
-    STATS CONTRACT: the stats describe exactly ``rows`` as handed to
-    ``append``/``after`` (the semi-join keeps precisely the 'new' ids).
-    An append passes them to ``append_guard``, which drops them when
-    its guard filtered anything; the append then aggregates what it
-    writes itself.
+    STATS CONTRACT: the stats describe exactly the IDS of the admitted
+    entries handed to ``append``/``after`` (the semi-join keeps
+    precisely the 'new' ids): their count, min and max, not the entry
+    rows (LSH holds one row per band per id). An append passes them to
+    ``bucketed.append_entries``, whose guard drops them when it
+    filtered anything; a consumer that needs them then aggregates what
+    it writes itself.
 
     PRECONDITIONS: one writer per index (the watermark and gauge
     sidecars are read-modify-write), and ids monotone across batches
@@ -1134,7 +1141,9 @@ def maintenance_step(
             if actuation_log is not None:
                 actuation_log.append(int(batch_id))
             ctx = pre_batch_view()
-        status = triage(batch, ctx).persist()
+        status, entries = triage(batch, ctx)
+        # entries first: the statuses' cached plan then reads them
+        entries, status = entries.persist(), status.persist()
         try:
             new = SF.col("status") == "new"
             adm, key = SF.col("adm"), SF.col(id_col)
@@ -1161,15 +1170,18 @@ def maintenance_step(
                 .partitionBy("batch_id")
                 .parquet(out)
             )
-            rows = batch.join(status.filter(new).select(id_col), id_col, "left_semi")
+            admitted = entries.join(
+                status.filter(new).select(id_col), id_col, "left_semi"
+            )
             if warm:
-                append(ctx, rows, stats)  # guard 3
+                append(ctx, admitted, stats)  # guard 3
             else:
-                first_build(ctx, rows)
+                first_build(ctx, admitted)
             if after is not None:
-                after(ctx, rows, stats, warm)
+                after(ctx, admitted, stats, warm)
         finally:
             status.unpersist()
+            entries.unpersist()
 
     return step
 
@@ -1180,10 +1192,12 @@ def _lsh_maintenance_step(
     actuation_log: list | None = None,
 ):
     """``maintenance_step`` for the text LSH index (doc_id, text).
-    Triage is ``minhash_delta_status`` against the band table at the
-    TABLE's current rows-per-band (the banding sidecar), the first
-    batch builds the index at ``idx_path`` and later batches admit
-    through ``lsh_index_append``.
+    Triage bands the batch once at the TABLE's current rows-per-band
+    (the banding sidecar; the build default before the first batch)
+    and runs ``minhash_delta_status`` on those entries against the
+    band table; the first batch writes the admitted entries as the
+    index at ``idx_path`` and later batches admit them through
+    ``lsh_index_append``.
 
     Gauge: the collision mass from the incremental sufficient
     statistics (``lsh_gauge_stats`` — a sidecar read, pinned by the
@@ -1227,15 +1241,16 @@ def _lsh_maintenance_step(
 
     def triage(batch, ctx):
         bands, cur = ctx
-        return minhash_delta_status(
+        entries = lsh_band_entries(minhash_signatures(batch), cur)
+        status = minhash_delta_status(
             batch.limit(0) if bands is None else None,
             batch,
             corpus_bands=bands,
-            band_rows=cur,
+            delta_bands=entries,
         )
+        return status, entries
 
-    def first_build(ctx, rows):
-        entries = lsh_band_entries(minhash_signatures(rows))
+    def first_build(ctx, entries):
         write_bucketed(
             entries, table, _LSH_INDEX_KEYS, n_buckets(spark), path=idx_path
         )
@@ -1252,8 +1267,8 @@ def _lsh_maintenance_step(
         ),
         triage=triage,
         first_build=first_build,
-        append=lambda ctx, rows, stats: lsh_index_append(
-            rows, table, idempotent=True, stats=stats
+        append=lambda ctx, entries, stats: lsh_index_append(
+            entries, table, idempotent=True, stats=stats
         ),
         check_every=check_every,
         actuation_log=actuation_log,
@@ -1269,9 +1284,10 @@ def _ivf_maintenance_step(
     The quantizer trains once, on the first batch, from an EXPLICITLY
     ORDERED sample (a bare-limit sample's row order is not
     replay-stable), with ``_kmeans_k`` sizing for cluster-mate work.
-    Triage is ``semantic_delta_status``; admits go through
-    ``ivf_index_append``; the first build also pins the drift
-    reference (the quantizer's own training cohort).
+    Triage assigns the batch once (``ivf_assign_with``) and runs
+    ``semantic_delta_status`` on those cells; the admitted cells go
+    through ``bucketed.append_entries``; the first build also pins the
+    drift reference (the quantizer's own training cohort).
 
     Gauge: the batch's p05 top-1 similarity against the
     GENERATION-PINNED reference (``drift_ref_stats`` — a sidecar inside
@@ -1285,6 +1301,7 @@ def _ivf_maintenance_step(
 
     from mr_py_spark.operators.bucketed import (
         absent_save,
+        append_entries,
         n_buckets,
         recover_compaction,
     )
@@ -1297,7 +1314,6 @@ def _ivf_maintenance_step(
         drift_ref_stats,
         ivf_assign_with,
         ivf_build,
-        ivf_index_append,
         ivf_retrain,
         pin_drift_ref,
         semantic_delta_status,
@@ -1333,10 +1349,13 @@ def _ivf_maintenance_step(
             drift_ratio,
         )
 
-    def first_build(ctx, rows):
+    def triage(batch, ctx):
+        entries = ivf_assign_with(ctx[0], batch)
+        return semantic_delta_status(entries, ctx[1]), entries
+
+    def first_build(ctx, entries):
         write_bucketed(
-            ivf_assign_with(ctx[0], rows), idx_table, "bucket",
-            n_buckets(spark), path=idx_path,
+            entries, idx_table, "bucket", n_buckets(spark), path=idx_path
         )
         pin_drift_ref(spark, ctx[0], idx_table)
 
@@ -1352,12 +1371,10 @@ def _ivf_maintenance_step(
         actuate=lambda batch, ids, ctx: ivf_retrain(
             spark, cent_table, idx_table, exclude_ids=ids, extra_train=batch
         ),
-        triage=lambda batch, ctx: semantic_delta_status(
-            ivf_assign_with(ctx[0], batch), ctx[1]
-        ),
+        triage=triage,
         first_build=first_build,
-        append=lambda ctx, rows, stats: ivf_index_append(
-            ctx[0], rows, idx_table, idempotent=True, stats=stats
+        append=lambda ctx, entries, stats: append_entries(
+            idx_table, entries, "vec_id", idempotent=True, stats=stats
         ),
         check_every=check_every,
         actuation_log=actuation_log,
@@ -1413,8 +1430,8 @@ def _drain_maintenance(
 def stream_semantic_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest loop for the STANDING IVF index: semantic
     near-dup triage of each micro-batch of newly-embedded documents
-    against the live index, statuses to a parquet sink, survivors
-    admitted via ``ivf_index_append``, drift-triggered retrains in
+    against the live index, statuses to a parquet sink, survivors'
+    cells appended to the inverted file, drift-triggered retrains in
     loop (``_ivf_maintenance_step``). Replay-idempotent under
     foreachBatch's at-least-once contract (``maintenance_step``).
 
@@ -1511,9 +1528,10 @@ def _hier_maintenance_step(
     The quantizer pair (roots + leaf table) trains on the first batch;
     the two bootstrap writes are guarded separately, so a crash
     between them replays into a leaf rebuild from the persisted roots
-    and the same batch (deterministic). Triage runs through the
-    (bucket, leaf) cells (``semantic_delta_status``); admits go
-    through ``hier_index_append``. The gauge scores the ROOT level (a
+    and the same batch (deterministic). Triage assigns the batch to
+    its (bucket, leaf) cells once and runs ``semantic_delta_status``
+    on them; the admitted cells go through ``bucketed.append_entries``.
+    The gauge scores the ROOT level (a
     hier index drifts at the root first) against the generation-pinned
     reference, and a trip triggers ``hier_retrain``, the crash-atomic
     three-table rebuild. ``root_rows``/``leaf_rows`` are test knobs
@@ -1528,11 +1546,11 @@ def _hier_maintenance_step(
       index present" so an empty or all-dup first batch defers it and a
       crash before it lands repeats it on replay. They quantize RAW
       subspaces, so retrains do not invalidate them.
-    - Admitted vectors are encoded O(delta) per batch
-      (``hier_pq_codes_append``, replay-guarded against the codes
-      table's own watermark — a crash between the index append and the
-      codes append replays into an idx no-op plus the missed codes
-      append).
+    - Admitted vectors are encoded O(delta) per batch from the cells
+      triage assigned (``_pq_encode_frame``; ``append_entries``
+      replay-guards against the codes table's own watermark — a crash
+      between the index append and the codes append replays into an
+      idx no-op plus the missed codes append).
     - GENERATION COHERENCE self-heals: the codes table's ``codes_gen``
       sidecar (``bucketed.sidecar_path``) records the ROOT-table content
       hash the codes were encoded under; every step entry compares it to the
@@ -1547,6 +1565,7 @@ def _hier_maintenance_step(
 
     from mr_py_spark.operators.bucketed import (
         absent_save,
+        append_entries,
         n_buckets,
         recover_compaction,
         replace_bucketed_table,
@@ -1563,8 +1582,6 @@ def _hier_maintenance_step(
         _pq_encode_frame,
         hier_assign,
         hier_build,
-        hier_index_append,
-        hier_pq_codes_append,
         hier_retrain,
     )
     from mr_py_spark.operators.similarity import (
@@ -1658,23 +1675,27 @@ def _hier_maintenance_step(
         if codes_on and exists(codes_table):
             rebuild_codes(_root_gen_hash(spark, root_table))
 
-    def first_build(ctx, rows):
-        root, leaf, _ = ctx
+    def triage(batch, ctx):
+        root, leaf, corpus = ctx
+        entries = hier_assign(ivf_assign_with(root, batch), leaf)
+        return semantic_delta_status(entries, corpus, _CELL), entries
+
+    def first_build(ctx, entries):
         write_bucketed(
-            hier_assign(ivf_assign_with(root, rows), leaf),
-            idx_table, ("bucket", "leaf"), n_buckets(spark), path=idx_path,
+            entries, idx_table, ("bucket", "leaf"), n_buckets(spark),
+            path=idx_path,
         )
         pin_drift_ref(
-            spark, root, idx_table,
+            spark, ctx[0], idx_table,
             spark.table(idx_table).select("vec_id", "bucket", "v"),
         )
 
-    def after(ctx, rows, stats, warm):
+    def after(ctx, entries, stats, warm):
         if exists(codes_table):
             if warm:
-                hier_pq_codes_append(
-                    ctx[0], ctx[1], stored_books(), rows,
-                    codes_table, idempotent=True, stats=stats,
+                append_entries(
+                    codes_table, _pq_encode_frame(entries, stored_books()),
+                    "vec_id", idempotent=True, stats=stats,
                 )
             return
         if not exists(idx_table):
@@ -1706,12 +1727,10 @@ def _hier_maintenance_step(
         view=view,
         trips=trips,
         actuate=actuate,
-        triage=lambda batch, ctx: semantic_delta_status(
-            hier_assign(ivf_assign_with(ctx[0], batch), ctx[1]), ctx[2], _CELL
-        ),
+        triage=triage,
         first_build=first_build,
-        append=lambda ctx, rows, stats: hier_index_append(
-            ctx[0], ctx[1], rows, idx_table, idempotent=True, stats=stats
+        append=lambda ctx, entries, stats: append_entries(
+            idx_table, entries, "vec_id", idempotent=True, stats=stats
         ),
         after=after if codes_on else None,
         check_every=check_every,
@@ -1726,8 +1745,8 @@ def stream_hier_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     4096-centroid cap (cell occupancy stays ~64 at any corpus size,
     where the flat loop's bucket occupancy grows linearly): each
     micro-batch is triaged against the live (bucket, leaf) cells,
-    statuses land in a parquet sink, survivors are admitted via
-    ``hier_index_append``, and root-level drift triggers the
+    statuses land in a parquet sink, survivors' cells are appended to
+    the index, and root-level drift triggers the
     crash-atomic three-table ``hier_retrain``
     (``_hier_maintenance_step``). Replay-idempotent under
     foreachBatch's at-least-once contract (``maintenance_step``).

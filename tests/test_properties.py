@@ -1886,6 +1886,11 @@ def test_lsh_gauge_incremental_exact_zero_io_and_replay(spark, tmp_path, monkeyp
         m, nd, _ = _lsh_gauge_full(spark.table(table))
         return {"mass": m, "n_docs": nd}
 
+    def entries_of(ids):
+        return lsh_band_entries(
+            minhash_signatures(mk(ids)), lsh_table_band_rows(spark, table)
+        )
+
     table = "t_gauge_stats"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     try:
@@ -1895,10 +1900,10 @@ def test_lsh_gauge_incremental_exact_zero_io_and_replay(spark, tmp_path, monkeyp
         )
         s0 = lsh_gauge_stats(spark, table)  # bootstrap (exact, repairs)
         assert s0 == exact() and s0["n_docs"] == 20 and s0["mass"] > 0
-        lsh_index_append(mk(range(100, 110)), table)  # bump O(delta)
+        lsh_index_append(entries_of(range(100, 110)), table)  # bump O(delta)
         s1 = lsh_gauge_stats(spark, table)
         assert s1 == exact() and s1["n_docs"] == 30
-        lsh_index_append(mk(range(200, 210)), table)
+        lsh_index_append(entries_of(range(200, 210)), table)
         s2 = lsh_gauge_stats(spark, table)
         assert s2 == exact() and s2["n_docs"] == 40
         # replay discipline: a check on behalf of the already-bumped
@@ -1975,7 +1980,7 @@ def test_lsh_gauge_bump_nonmonotone_ids_skip_stale_low(spark, tmp_path):
             table, _LSH_INDEX_KEYS, n_buckets(spark), path=str(tmp_path / "idx"),
         )
         lsh_gauge_stats(spark, table)  # bootstrap the sidecar
-        lsh_index_append(mk(range(100, 110)), table)  # wm -> 109
+        lsh_index_append(entries_of(range(100, 110)), table)  # wm -> 109
         s = lsh_gauge_stats(spark, table)
         # straddling batch (105..114): warned, NOT bumped
         straddle = entries_of(range(105, 115))
@@ -2014,6 +2019,7 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
     import os
 
     from mr_py_spark.operators.bucketed import (
+        append_entries,
         n_buckets,
         raise_watermark,
         replay_guard,
@@ -2026,10 +2032,12 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
             [(i, [float(i), 1.0]) for i in ids], "vec_id long, v array<double>"
         )
 
-    from mr_py_spark.operators.similarity import (
-        ivf_assign_with,
-        ivf_index_append,
-    )
+    from mr_py_spark.operators.similarity import ivf_assign_with
+
+    def append_cells(cent, new_vectors, table, idempotent):
+        append_entries(
+            table, ivf_assign_with(cent, new_vectors), "vec_id", idempotent
+        )
 
     table = "t_rwm_mixed"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -2046,13 +2054,13 @@ def test_raise_watermark_closes_mixed_mode_replay(spark, tmp_path):
         raise_watermark(spark, table, vecs([100]), "vec_id")
         assert not os.path.exists(wm_path)
         # an idempotent append bootstraps the watermark (full max)
-        ivf_index_append(cent, vecs(range(5, 8)), table, idempotent=True)
+        append_cells(cent, vecs(range(5, 8)), table, idempotent=True)
         # the mixed-mode hole: a NON-idempotent append of higher ids...
-        ivf_index_append(cent, vecs(range(10, 13)), table, idempotent=False)
+        append_cells(cent, vecs(range(10, 13)), table, idempotent=False)
         # ...must have raised the watermark, so an idempotent REPLAY of
         # exactly those rows admits nothing
         before = spark.table(table).count()
-        ivf_index_append(cent, vecs(range(10, 13)), table, idempotent=True)
+        append_cells(cent, vecs(range(10, 13)), table, idempotent=True)
         assert spark.table(table).count() == before
         # and replay_guard itself sees them as suspects, not fast-path
         kept = replay_guard(spark, table, vecs(range(10, 13)), "vec_id")
@@ -2367,7 +2375,10 @@ def test_lsh_index_append_maintenance(spark, tmp_path):
         assert out1[13] == ("new", None)
         # admit the snapshot's survivors (status 'new') to the index
         lsh_index_append(
-            delta.filter(F.col("doc_id").isin([11, 13])), table
+            lsh_band_entries(
+                minhash_signatures(delta.filter(F.col("doc_id").isin([11, 13])))
+            ),
+            table,
         )
         out2 = {
             r.doc_id: (r.status, r.match_id)
@@ -2463,12 +2474,11 @@ def test_ivf_index_append_consistency(spark, tmp_path):
     EXISTING centroids yields a table bit-identical to a full rebuild
     with those centroids — assignment is a pure function of the
     centroid frame, so incremental upkeep never drifts from batch."""
-    from mr_py_spark.operators.bucketed import n_buckets
+    from mr_py_spark.operators.bucketed import append_entries, n_buckets
     from mr_py_spark.operators.similarity import (
         _emb_double,
         _ivf_centroids,
         ivf_assign_with,
-        ivf_index_append,
     )
     from mr_py_spark.sources import tbl
     from mr_py_spark.sources.sinks import write_bucketed
@@ -2487,7 +2497,7 @@ def test_ivf_index_append_consistency(spark, tmp_path):
             ivf_assign_with(cent, sub), table, "bucket", n_buckets(spark),
             path=str(tmp_path / "idx"),
         )
-        ivf_index_append(cent, delta, table)
+        append_entries(table, ivf_assign_with(cent, delta), "vec_id")
         merged = sorted(
             (r.vec_id, r.bucket, tuple(r.v))
             for r in spark.table(table).collect()
@@ -2500,7 +2510,9 @@ def test_ivf_index_append_consistency(spark, tmp_path):
         assert len(merged) == e.count()
         # REPLAY guard (VERDICT r12 item 1): an idempotent re-append of
         # the same delta is a no-op — the table stays bit-identical.
-        ivf_index_append(cent, delta, table, idempotent=True)
+        append_entries(
+            table, ivf_assign_with(cent, delta), "vec_id", idempotent=True
+        )
         replayed = sorted(
             (r.vec_id, r.bucket, tuple(r.v))
             for r in spark.table(table).collect()
@@ -3235,12 +3247,8 @@ def test_hier_index_append_bit_equal_to_rebuild(spark, tmp_path):
     admits nothing twice."""
     import numpy as np
 
-    from mr_py_spark.operators.bucketed import n_buckets
-    from mr_py_spark.operators.hier import (
-        hier_assign,
-        hier_index_append,
-        hier_leaf_centroids,
-    )
+    from mr_py_spark.operators.bucketed import append_entries, n_buckets
+    from mr_py_spark.operators.hier import hier_assign, hier_leaf_centroids
     from mr_py_spark.operators.similarity import _ivf_centroids, ivf_assign_with
     from mr_py_spark.sources.sinks import write_bucketed
 
@@ -3266,7 +3274,8 @@ def test_hier_index_append_bit_equal_to_rebuild(spark, tmp_path):
             table, ("bucket", "leaf"), n_buckets(spark),
             path=str(tmp_path / table),
         )
-        hier_index_append(root_cent, leaf_cent, delta, table)
+        delta_cells = hier_assign(ivf_assign_with(root_cent, delta), leaf_cent)
+        append_entries(table, delta_cells, "vec_id")
         got = sorted(
             (r.vec_id, r.bucket, r.leaf) for r in spark.table(table).collect()
         )
@@ -3276,7 +3285,7 @@ def test_hier_index_append_bit_equal_to_rebuild(spark, tmp_path):
         )
         assert got == want
         # replayed append admits nothing under the idempotent guard
-        hier_index_append(root_cent, leaf_cent, delta, table, idempotent=True)
+        append_entries(table, delta_cells, "vec_id", idempotent=True)
         again = sorted(
             (r.vec_id, r.bucket, r.leaf) for r in spark.table(table).collect()
         )
@@ -3294,12 +3303,11 @@ def test_hier_pq_codes_append_bit_equal_to_rebuild(spark, tmp_path):
     idempotent replay guard admits nothing twice."""
     import numpy as np
 
-    from mr_py_spark.operators.bucketed import n_buckets
+    from mr_py_spark.operators.bucketed import append_entries, n_buckets
     from mr_py_spark.operators.hier import (
         _pq_encode_frame,
         hier_assign,
         hier_leaf_centroids,
-        hier_pq_codes_append,
     )
     from mr_py_spark.operators.similarity import _ivf_centroids, ivf_assign_with
     from mr_py_spark.operators.vectors import _pq_train
@@ -3330,7 +3338,10 @@ def test_hier_pq_codes_append_bit_equal_to_rebuild(spark, tmp_path):
             table, ("bucket", "leaf"), n_buckets(spark),
             path=str(tmp_path / table),
         )
-        hier_pq_codes_append(root_cent, leaf_cent, books, delta, table)
+        delta_codes = _pq_encode_frame(
+            hier_assign(ivf_assign_with(root_cent, delta), leaf_cent), books
+        )
+        append_entries(table, delta_codes, "vec_id")
         got = sorted(
             (r.vec_id, r.bucket, r.leaf, tuple(r.code))
             for r in spark.table(table).collect()
@@ -3343,9 +3354,7 @@ def test_hier_pq_codes_append_bit_equal_to_rebuild(spark, tmp_path):
         )
         assert got == want and len(got) == 300
         # replayed append admits nothing under the idempotent guard
-        hier_pq_codes_append(
-            root_cent, leaf_cent, books, delta, table, idempotent=True
-        )
+        append_entries(table, delta_codes, "vec_id", idempotent=True)
         again = sorted(
             (r.vec_id, r.bucket, r.leaf, tuple(r.code))
             for r in spark.table(table).collect()

@@ -533,7 +533,7 @@ def test_dep_closure_sees_function_local_imports():
     """A dependency bound by a function-LOCAL ``from mr_py_spark...
     import x`` must be in the closure: the streaming module imports
     almost everything this way, so a globals-only walk silently missed
-    e.g. an ivf_index_append edit under every streaming query."""
+    e.g. an append_entries edit under every streaming query."""
     from mr_py_spark.registry import _dep_closure
 
     def probe(spark, sf_dir):

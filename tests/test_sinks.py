@@ -452,6 +452,7 @@ def _bucket_switch_run(spark, tmp_path, monkeypatch, docs, vecs, root, leaf, swi
     from mr_py_spark.operators.bucketed import (
         _data_files,
         _table_location,
+        append_entries,
         compact_bucketed_table,
         n_buckets,
         replace_bucketed_table,
@@ -463,8 +464,8 @@ def _bucket_switch_run(spark, tmp_path, monkeypatch, docs, vecs, root, leaf, swi
         lsh_index_append,
         minhash_signatures,
     )
-    from mr_py_spark.operators.hier import hier_assign, hier_index_append
-    from mr_py_spark.operators.similarity import ivf_assign_with, ivf_index_append
+    from mr_py_spark.operators.hier import hier_assign
+    from mr_py_spark.operators.similarity import ivf_assign_with
 
     old_docs, new_docs = docs.filter("doc_id < 40"), docs.filter("doc_id >= 40")
     old_vecs, new_vecs = vecs.filter("vec_id < 80"), vecs.filter("vec_id >= 80")
@@ -472,19 +473,25 @@ def _bucket_switch_run(spark, tmp_path, monkeypatch, docs, vecs, root, leaf, swi
         "lsh": (
             _LSH_INDEX_KEYS,
             lambda d: lsh_band_entries(minhash_signatures(d)),
-            lambda t: lsh_index_append(new_docs, t),
+            lambda t: lsh_index_append(
+                lsh_band_entries(minhash_signatures(new_docs)), t
+            ),
             docs, old_docs,
         ),
         "ivf": (
             "bucket",
             lambda v: ivf_assign_with(root, v),
-            lambda t: ivf_index_append(root, new_vecs, t),
+            lambda t: append_entries(
+                t, ivf_assign_with(root, new_vecs), "vec_id"
+            ),
             vecs, old_vecs,
         ),
         "hier": (
             ("bucket", "leaf"),
             lambda v: hier_assign(ivf_assign_with(root, v), leaf),
-            lambda t: hier_index_append(root, leaf, new_vecs, t),
+            lambda t: append_entries(
+                t, hier_assign(ivf_assign_with(root, new_vecs), leaf), "vec_id"
+            ),
             vecs, old_vecs,
         ),
     }

@@ -476,6 +476,83 @@ def test_maintenance_step_crash_replay(spark, tmp_path, monkeypatch, loop_refere
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+#: per kind, the builders that derive a batch's index entries: banding
+#: (LSH), flat cell assignment (IVF), and root + leaf assignment (hier)
+_ENTRY_BUILDERS = {
+    "lsh": (("dedup", "minhash_signatures"),),
+    "ivf": (("similarity", "ivf_assign_with"),),
+    "hier": (("similarity", "ivf_assign_with"), ("hier", "hier_assign")),
+}
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "hier"])
+def test_maintenance_step_builds_entries_once(spark, tmp_path, monkeypatch, kind):
+    """A warm, non-gauge step derives the batch's index entries once, in
+    triage: the append (and, for hier, the PQ-codes upkeep) writes those
+    entries and never re-bands or re-assigns the admitted rows. The rows
+    the step appends to the index are exactly the triage entries of the
+    ids it marked 'new'."""
+    import collections
+    import importlib
+    import os
+
+    import mr_py_spark.streaming as streaming
+
+    counts = collections.Counter()
+    for mod_name, fn_name in _ENTRY_BUILDERS[kind]:
+        mod = importlib.import_module(f"mr_py_spark.operators.{mod_name}")
+        real_fn = getattr(mod, fn_name)
+
+        def counted(*args, _real=real_fn, _name=fn_name, **kw):
+            counts[_name] += 1
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(mod, fn_name, counted)
+
+    triaged = []
+    real_step = streaming.maintenance_step
+
+    def recording_step(*args, triage, **kw):
+        def run(batch, ctx):
+            out = triage(batch, ctx)
+            triaged.append(out)
+            return out
+
+        return real_step(*args, triage=run, **kw)
+
+    monkeypatch.setattr(streaming, "maintenance_step", recording_step)
+    root = str(tmp_path)
+    step, id_col, (b0, b1), _, tables = _loop_kind(spark, kind, root)
+    idx = [t for t in tables if t.endswith("_idx")][0]
+
+    def idx_rows():
+        return collections.Counter(repr(tuple(r)) for r in spark.table(idx).collect())
+
+    try:
+        step(b0, 0)
+        before = idx_rows()
+        counts.clear()
+        step(b1, 1)  # warm; check_every=8, so no gauge check at batch 1
+        assert dict(counts) == {name: 1 for _, name in _ENTRY_BUILDERS[kind]}
+        appended = idx_rows() - before
+        new_ids = (
+            spark.read.parquet(os.path.join(root, "out"))
+            .filter((F.col("batch_id") == 1) & (F.col("status") == "new"))
+            .select(id_col)
+        )
+        want = collections.Counter(
+            repr(tuple(r))
+            for r in triaged[-1][1]  # (status, entries)
+            .join(new_ids, id_col, "left_semi")
+            .select(*spark.table(idx).columns)
+            .collect()
+        )
+        assert appended == want and sum(want.values()) > 0
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 @pytest.mark.parametrize("kind", ["lsh", "ivf", "hier"])
 def test_maintenance_step_refuses_duplicate_ids(spark, tmp_path, kind):
     """A batch that repeats an id fails loudly — a ValueError naming the
