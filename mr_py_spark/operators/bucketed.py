@@ -488,6 +488,12 @@ def stamped_save(spark: SparkSession, sf_dir: str, src_name: str, stamp: str):
     return save
 
 
+def identity_save(name, frame_of, keys, schema):
+    """Save hook of the per-run builds: nothing is persisted, so each
+    stage is the lazy frame the last one built."""
+    return frame_of()
+
+
 def replace_save(spark: SparkSession):
     """Save hook of the retrains: rewrite the standing table in place
     through the crash-atomic swap (``replace_bucketed_table``)."""

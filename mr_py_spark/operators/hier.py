@@ -49,13 +49,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mr_py_spark.operators.vectors import (
+    _ADC_K,
+    _ADC_M,
     _kmeans_init,
     _lloyd,
     _nearest,
+    _pq_encode_frame,
     _unit_rows,
     arrow_matrix,
 )
@@ -323,9 +326,10 @@ def hier_quantize(
     ``hier_corpus_index``); nothing is persisted, so each stage is the
     lazy frame the last one built. Returns (root_cent, leaf_cent,
     assigned)."""
+    from mr_py_spark.operators.bucketed import identity_save
+
     return hier_build(
-        spark, vectors, n,
-        lambda name, frame_of, keys, schema: frame_of(),
+        spark, vectors, n, identity_save,
         ("hier_root", "hier_leaf", "hier_assign"),
         root_rows=root_rows, leaf_rows=leaf_rows,
     )
@@ -382,61 +386,26 @@ def hier_topk_with(
     k: int = 5,
     root_probe: int = _ROOT_PROBE,
     leaf_probe: int = _LEAF_PROBE,
-    emit_candidates: bool = False,
 ) -> DataFrame:
     """Approximate top-k over a standing two-level index: each query
-    probes its ``root_probe`` nearest roots (broadcast argmax over the
-    ≤ _MAX_K-row root frame — the exempt bounded nested loop), then its
-    ``leaf_probe`` nearest leaves WITHIN each probed root (a cogroup on
-    the root bucket, so the full leaf table is never broadcast and a
-    query only ever scores its probed roots' leaves), and candidates
-    are an equi-join on the composite CELL key against the
-    (bucket, leaf)-bucketed inverted file — exchange-free on the corpus
-    side, exactly like the dedup tier. Exact re-rank with the house
-    Catalyst fold ``dot`` and the (desc sim, asc nn_id) tie-break all
-    kNN forms share.
+    probes its ``root_probe`` nearest roots, then its ``leaf_probe``
+    nearest leaves within each probed root (``_hier_probe_cells``), and
+    candidates are an equi-join on the composite CELL key against the
+    (bucket, leaf)-bucketed inverted file, pruned to the probed roots —
+    exchange-free on the corpus side, exactly like the dedup tier. The
+    exact rank is the one every kNN form shares
+    (``similarity.exact_serve``).
 
     Per-query candidate work is root_probe·leaf_probe·~_LEAF_ROWS rows
     at ANY corpus size — the constant-cost serve tier the flat IVF
-    form's Θ(n/4) probed-fraction rule can't reach (its own docstring
-    names this knob). Leaf probing uses the fold-order kernel, so probe
-    sets are bit-deterministic; with probes ≥ the level widths the
-    result degenerates to the exact brute-force top-k (property-pinned
-    in tests/test_properties.py)."""
-    from mr_py_spark.functions import dot
+    form's Θ(n/4) probed-fraction rule can't reach. Leaf probing uses
+    the fold-order kernel, so probe sets are bit-deterministic; with
+    probes ≥ the level widths the result degenerates to the exact
+    brute-force top-k (property-pinned in tests/test_properties.py)."""
+    from mr_py_spark.operators.similarity import exact_serve
 
-    cells = _hier_probe_cells(
-        root_cent, leaf_cent, queries, root_probe, leaf_probe
-    )
-    # Prune the corpus side of the candidate join to the probed roots
-    # (r16): the bounded `isin` (≤ n_q·root_probe values — probe
-    # metadata, the documented bounded-collect class) pushes to the
-    # parquet scan, where the bucket-key-sorted small-row-group layout
-    # (sinks.write_bucketed) + the raised In-pushdown threshold
-    # (session.harden) skip the unprobed buckets' row groups. A filter
-    # preserves the scan's output partitioning, so the cell-key join
-    # stays exchange-free on the corpus side. Before this prune the
-    # candidate scan decoded ALL n rows at ANY probe selectivity
-    # (SCALE.md r16: 2.03M records at 39/488 probed roots). At full
-    # probes the filter selects everything — the exact-degeneration
-    # property is unchanged.
-    probed = sorted(
-        r.bucket for r in cells.select("bucket").distinct().collect()
-    )
-    cand = cells.join(
-        assigned.filter(F.col("bucket").isin(probed)), ["bucket", "leaf"]
-    ).filter(F.col("q_id") != F.col("vec_id"))
-    if emit_candidates:  # audit hook: the per-query candidate frame
-        return cand.select("q_id", "vec_id", "bucket", "leaf")
-    wk = W.partitionBy("q_id").orderBy(F.desc("sim_raw"), F.asc("nn_id"))
-    scored = cand.select(
-        "q_id", F.col("vec_id").alias("nn_id"), dot("qv", "v").alias("sim_raw")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn")
-    )
+    cells = _hier_probe_cells(root_cent, leaf_cent, queries, root_probe, leaf_probe)
+    return exact_serve(cells, assigned, _CELL, k)
 
 
 def _hier_probe_cells(
@@ -453,17 +422,9 @@ def _hier_probe_cells(
     cogroup on the root bucket (the leaf table is never broadcast;
     only the query side exchanges). Returns (q_id, bucket, leaf, qv)
     — one row per probed CELL."""
-    from mr_py_spark.functions import dot
-    from mr_py_spark.operators.similarity import _fold_order_blocks
+    from mr_py_spark.operators.similarity import _fold_order_blocks, centroid_probe
 
-    wq = W.partitionBy("q_id").orderBy(F.desc("csim"), F.asc("cid"))
-    root_probes = (
-        queries.join(F.broadcast(root_cent), how="cross")
-        .select("q_id", "qv", "cid", dot("qv", "cv").alias("csim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= root_probe)
-        .select("q_id", "qv", F.col("cid").alias("bucket"))
-    )
+    root_probes = centroid_probe(root_cent, queries, root_probe)
 
     lp = int(leaf_probe)
 
@@ -641,15 +602,11 @@ def hier_index(spark: SparkSession, sf_dir: str):
     )
 
 
-#: Serve-tier PQ geometry (the knn_ivfpq_topk sizing: 16 subspaces ×
-#: 256 centroids = 16 one-byte codes per vector — coarse codes
-#: collapse within-cell neighbors, see vectors._pq_train's measured
-#: cliff) and the ADC tier's default operating point: the wider-probe
-#: knob the r13 verdict asked for (all-neighbor recall had no
-#: mitigation beyond probes, and probes paid LINEARLY in full-vector
-#: candidates — 16-byte codes make 4× the cells cost ~1/8 the
-#: candidate bytes of the exact 12×12 tier).
-_PQ_M, _PQ_K = 16, 256
+#: The ADC tier's default operating point: twice the exact tier's
+#: probes per level. All-neighbor recall has no lever but probes, and
+#: exact probes pay linearly in full-vector candidates; 16-byte codes
+#: make 4x the cells cost ~1/8 the candidate bytes of the exact 12x12
+#: tier.
 _PQ_ROOT_PROBE = 24
 _PQ_LEAF_PROBE = 24
 
@@ -694,7 +651,7 @@ def _pq_books_stamp() -> str:
     return builder_stamp(
         _pq_train, _lloyd, _nearest, _ordered_train_sample,
         _books_frame, _books_array,
-        m=_PQ_M, k=_PQ_K, train=_PQ_TRAIN,
+        m=_ADC_M, k=_ADC_K, train=_PQ_TRAIN,
     )
 
 
@@ -716,7 +673,7 @@ def _hier_pq_books(spark: SparkSession, sf_dir: str):
         X = _ordered_train_sample(e, _PQ_TRAIN)
         return _books_frame(
             spark,
-            _pq_train(X, m=_PQ_M, k=min(_PQ_K, len(X)), sub=X.shape[1] // _PQ_M),
+            _pq_train(X, m=_ADC_M, k=min(_ADC_K, len(X)), sub=X.shape[1] // _ADC_M),
         )
 
     return _books_array(
@@ -725,6 +682,24 @@ def _hier_pq_books(spark: SparkSession, sf_dir: str):
             src_name="embeddings", schema=_BOOKS_SCHEMA,
             stamp_extra=_pq_books_stamp(),
         )
+    )
+
+
+def _pq_codes_stamp(n: int) -> str:
+    """The builder stamp of the standing PQ-code table. The codes are a
+    pure function of (assignment, books, encode pass), so it folds in
+    all three builders, the encode kernel and the matrix conversion it
+    calls included: an encode-only stamp would let a books or
+    assignment rebuild serve STALE codes, and a wrapper in a stamp list
+    hides edits to the body it calls."""
+    from mr_py_spark.operators.bucketed import builder_stamp
+
+    return (
+        builder_stamp(
+            hier_pq_codes, _pq_encode_frame, arrow_matrix, m=_ADC_M, k=_ADC_K
+        )
+        + _pq_books_stamp()
+        + _hier_index_stamp(n)
     )
 
 
@@ -737,13 +712,8 @@ def hier_pq_codes(
     join is exchange-free on the corpus side exactly like the exact
     tier's, but each candidate row carries 16 one-byte codes instead
     of the 512-byte double vector (~20× less through the join and the
-    Python workers).
-
-    The persisted codes are a pure function of (assignment, books,
-    encode pass), so the stamp folds in ALL THREE builders: an
-    encode-only stamp would let a books or assignment rebuild serve
-    STALE codes."""
-    from mr_py_spark.operators.bucketed import _bucketed_table, builder_stamp
+    Python workers). Stamped by ``_pq_codes_stamp``."""
+    from mr_py_spark.operators.bucketed import _bucketed_table
 
     n = _table_rows(tbl(spark, sf_dir, "embeddings"), sf_dir, "embeddings")
     return _bucketed_table(
@@ -751,49 +721,7 @@ def hier_pq_codes(
         frame_of=lambda: _pq_encode_frame(assigned, books),
         src_name="embeddings",
         schema="vec_id long, bucket long, leaf long, code array<int>",
-        stamp_extra=builder_stamp(
-            hier_pq_codes, _pq_encode_frame, m=_PQ_M, k=_PQ_K
-        )
-        + _pq_books_stamp()
-        + _hier_index_stamp(n),
-    )
-
-
-def _pq_encode_frame(assigned: DataFrame, books) -> DataFrame:
-    """One zero-shuffle encode pass: (vec_id, bucket, leaf, v) →
-    (vec_id, bucket, leaf, code) under the broadcast codebooks. The
-    argmax is the matmul form (sub @ bookᵀ − ||book||²/2) — the
-    difference-tensor form was memory-bandwidth-bound at sf100
-    (the knn_ivfpq encode lesson)."""
-    from mr_py_spark.util import bc as _bc
-
-    b_books = _bc(
-        assigned.sparkSession, np.asarray(books, dtype=np.float64)
-    )
-
-    def encode(batches):
-        bks = b_books.value  # (M, K, sub)
-        m, _, sub = bks.shape
-        half = 0.5 * (bks**2).sum(-1)  # (M, K)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(list(pdf["v"]), dtype=np.float64)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for mi in range(m):
-                s = X[:, mi * sub : (mi + 1) * sub]
-                codes[:, mi] = (s @ bks[mi].T - half[mi]).argmax(1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "bucket": pdf["bucket"],
-                    "leaf": pdf["leaf"],
-                    "code": list(codes),
-                }
-            )
-
-    return assigned.mapInPandas(
-        encode, "vec_id long, bucket long, leaf long, code array<int>"
+        stamp_extra=_pq_codes_stamp(n),
     )
 
 
@@ -809,127 +737,29 @@ def hier_topk_pq_with(
     leaf_probe: int = _PQ_LEAF_PROBE,
     rerank: int = 20,
 ) -> DataFrame:
-    """ADC-pre-ranked top-k over the standing two-level index — the
-    all-neighbor recall lift (VERDICT r13 item 6; chosen over
-    multi-assignment because the measured failure mode is NOISE-
-    direction neighbors no bucketing co-locates, so the fix is
-    affording WIDER probes, not spilling boundary vectors): probe
-    root_probe×leaf_probe cells (double the exact tier's default),
-    rank the candidates with 16-byte PQ codes through the broadcast
-    per-query ADC lookup tables (the knn_ivfpq machinery — the
-    candidate stream carries (q_id, vec_id, code), never a vector),
-    then exact-re-rank only the ADC top rerank·k per query.
+    """ADC-pre-ranked top-k over the standing two-level index, the
+    all-neighbor recall lift: the measured misses are noise-direction
+    neighbors that no bucketing co-locates, so the fix is affording
+    wider probes (twice the exact tier's) rather than spilling
+    boundary vectors. Candidates are the probed cells' rows of the
+    (bucket, leaf)-bucketed code table, pruned to the probed roots, so
+    the candidate stream carries (q_id, vec_id, code), never a vector;
+    the shared ADC stage (``similarity.adc_rerank``) keeps the ADC top
+    rerank·k per query and re-ranks them exactly against the assigned
+    table pruned to the same roots, so no stage reads the corpus. With
+    probes covering every cell and ``rerank·k`` ≥ the candidate count
+    this degenerates to the exact tier bit-for-bit (property-pinned).
+    The ~1.5x ADC task time over the exact tier at matched probes is
+    decode volume by design; exact stays the default serve tier on a
+    single node, because PQ's win is candidate bytes through a real
+    multi-executor shuffle."""
+    from mr_py_spark.operators.similarity import adc_rerank, probed_join
 
-    Scale shape: candidate join exchange-free on the (bucket, leaf)-
-    bucketed code table, PRUNED to the probed roots by a bounded
-    `isin` pushed to the parquet scan (the exact tier's re-rank
-    pattern — without it every serve batch read the full codes table);
-    ADC is one zero-shuffle mapInArrow; the exact
-    re-rank joins the BROADCAST shortlist (rerank·k·n_q rows) against
-    the assigned table PRUNED to the probed buckets — an `isin` over
-    the bounded probed-root set that parquet row-group stats on the
-    sorted bucket column turn into O(probed) I/O, so no stage reads
-    the corpus. Query LUTs are driver-built from the bounded query
-    set (the knn_ivfpq bounded-collect class). With probes covering
-    every cell and ``rerank·k`` ≥ the candidate count this degenerates
-    to the exact tier bit-for-bit (property-pinned).
-
-    r17 DECISION (VERDICT r16 item 5): the ~1.5× ADC task-time premium
-    vs the exact tier at matched probes is decode volume by DESIGN
-    (this tier exists to afford wider probes) plus a memory-bound LUT
-    gather that is already one vectorized fancy-index per Arrow batch
-    (LUTs L2-resident at bounded query counts) — no row-at-a-time or
-    conversion overhead remains to batch wider. Exact stays the
-    default serve tier on a single node (r14): PQ's win is candidate
-    BYTES through a real multi-executor shuffle, which local mode
-    never pays."""
-    from mr_py_spark.functions import dot
-    from mr_py_spark.util import bc as _bc
-
-    books = np.asarray(books, dtype=np.float64)
-    m, _, sub = books.shape
-
-    cells = _hier_probe_cells(
-        root_cent, leaf_cent, queries, root_probe, leaf_probe
+    cells = _hier_probe_cells(root_cent, leaf_cent, queries, root_probe, leaf_probe)
+    cand, probed = probed_join(cells.select("q_id", "bucket", "leaf"), codes, _CELL)
+    return adc_rerank(
+        cand, queries, books, assigned.filter(F.col("bucket").isin(probed)), k, rerank
     )
-    # Probed-root set collected ONCE (≤ n_q·root_probe values — probe
-    # metadata, bounded by contract) and used to prune BOTH candidate-
-    # side scans: without the isin the candidate join read the FULL
-    # codes table per serve batch (r15 stage metrics: 126.9 MB vs the
-    # exact tier's 19.1 MB isin-pruned scan at 2M — VERDICT r15 item 1;
-    # at 1e9 vectors that unpruned read is ~16 GB+ per batch). The
-    # filter sits ON the bucketed scan, so it pushes to parquet
-    # (row-group skipping on the bucket-sorted files) and preserves the
-    # table's (bucket, leaf) output partitioning — the join stays
-    # exchange-free on the codes side (both plan-asserted,
-    # tests/test_plans.py).
-    probed = sorted(
-        r.bucket
-        for r in cells.select("bucket").distinct().collect()
-    )
-    cand = (
-        cells.select("q_id", "bucket", "leaf")
-        .join(
-            codes.filter(F.col("bucket").isin(probed)),
-            ["bucket", "leaf"],
-        )
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", "code")
-    )
-
-    # per-query ADC LUTs, driver-side (bounded query set by contract)
-    q_rows = queries.select("q_id", "qv").collect()
-    qids = np.asarray([r["q_id"] for r in q_rows], dtype=np.int64)
-    order = np.argsort(qids)
-    qids = qids[order]
-    Q = np.asarray(
-        [q_rows[i]["qv"] for i in order], dtype=np.float64
-    ).reshape(len(qids), m, sub)
-    b_lut = _bc(
-        queries.sparkSession, (qids, np.einsum("qms,mks->qmk", Q, books))
-    )
-
-    def adc(batches):
-        import pyarrow as pa
-
-        lut_qids, luts = b_lut.value
-        marange = np.arange(m)[None, :]
-        for rb in batches:
-            if not len(rb):
-                continue
-            q_id = np.asarray(rb.column(0))
-            qidx = np.searchsorted(lut_qids, q_id)
-            cds = arrow_matrix(rb.column(2), "code", m)
-            sim = luts[qidx[:, None], marange, cds].sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), rb.column(1), pa.array(sim, type=pa.float64())],
-                ["q_id", "nn_id", "adc_sim"],
-            )
-
-    scored = cand.mapInArrow(adc, "q_id long, nn_id long, adc_sim double")
-    wk = W.partitionBy("q_id").orderBy(F.desc("adc_sim"), F.asc("nn_id"))
-    short = (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= rerank * k)
-        .select("q_id", "nn_id")
-    )
-
-    # exact re-rank: broadcast the shortlist+query vectors, prune the
-    # assigned scan to the same probed roots, map-side join on vec_id —
-    # no corpus shuffle, no corpus-wide read
-    corpus = assigned.filter(F.col("bucket").isin(probed)).select(
-        F.col("vec_id").alias("nn_id"), F.col("v").alias("cv")
-    )
-    wr = W.partitionBy("q_id").orderBy(F.desc("sim_raw"), F.asc("nn_id"))
-    return (
-        F.broadcast(short.join(queries.select("q_id", "qv"), "q_id"))
-        .join(corpus, "nn_id")
-        .select("q_id", "nn_id", dot("qv", "cv").alias("sim_raw"))
-        .withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn")
-    )
-
 
 
 @register("knn_hier_pq_topk_indexed", tags=("C3", "B22"), oracle=None)
@@ -943,19 +773,14 @@ def knn_hier_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the exact tier at matched probes are property-tested
     (tests/test_properties.py); SCALE.md r14 records the 2M-fixture
     recall-vs-candidates curve against r13's probe sweep."""
-    from mr_py_spark.operators.similarity import _emb_double
+    from mr_py_spark.operators.similarity import _emb_double, knn_queries
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
-    queries = (
-        e.filter(F.col("vec_id") < 50)
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("v", "qv")
-    )
     root_cent, leaf_cent, assigned = hier_index(spark, sf_dir)
     books = _hier_pq_books(spark, sf_dir)
     codes = hier_pq_codes(spark, sf_dir, assigned, books)
     return hier_topk_pq_with(
-        root_cent, leaf_cent, codes, assigned, queries, books
+        root_cent, leaf_cent, codes, assigned, knn_queries(e), books
     )
 
 
@@ -972,16 +797,11 @@ def knn_hier_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_properties.py); the standing-index scan, the absence
     of any query-time assignment pass, and cartesian-freedom are
     plan-asserted (tests/test_plans.py)."""
-    from mr_py_spark.operators.similarity import _emb_double
+    from mr_py_spark.operators.similarity import _emb_double, knn_queries
 
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
-    queries = (
-        e.filter(F.col("vec_id") < 50)
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("v", "qv")
-    )
     root_cent, leaf_cent, assigned = hier_index(spark, sf_dir)
-    return hier_topk_with(root_cent, leaf_cent, assigned, queries)
+    return hier_topk_with(root_cent, leaf_cent, assigned, knn_queries(e))
 
 
 def hier_retrain(

@@ -916,13 +916,8 @@ def knn_rplsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "bucket",
     ).filter(F.col("q_id") != F.col("nn_id"))
-    wk = W.partitionBy("q_id").orderBy(F.desc("sim_raw"), F.asc("nn_id"))
-    return (
-        cand.select("q_id", "nn_id", dot("qv", "cv").alias("sim_raw"))
-        .distinct()
-        .withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn")
+    return rank_topk(
+        cand.select("q_id", "nn_id", dot("qv", "cv").alias("sim_raw")).distinct(), 5
     )
 
 
@@ -1057,32 +1052,172 @@ def _ivf_train_prefix(e: DataFrame):
     )
 
 
+def knn_queries(e: DataFrame) -> DataFrame:
+    """The kNN forms' query set: the first 50 vectors of ``e``
+    (vec_id, v), as (q_id, qv)."""
+    return (
+        e.filter(F.col("vec_id") < 50)
+        .withColumnRenamed("vec_id", "q_id")
+        .withColumnRenamed("v", "qv")
+    )
+
+
+def _ivf_n_probe(nlist: int) -> int:
+    """Probe count of the single-table flat tiers. It scales with nlist
+    so the probed FRACTION stays ~25%: at 150k clustered vectors
+    (nlist 37) recall@5 read 0.744/0.796/0.844 at 6/9/12 probes with
+    flat runtime, so the fraction, not the count, is what recall
+    tracks."""
+    return max(_N_PROBE, nlist // 4)
+
+
+def centroid_probe(
+    cent: DataFrame, queries: DataFrame, n_probe: int, by: tuple[str, ...] = ()
+) -> DataFrame:
+    """(q_id, qv, *by, bucket): each query's ``n_probe`` nearest
+    centroids of the (cid, cv) frame by (desc cosine, asc cid), per
+    ``by`` group of it (the L-table form's ``tbl``). The one coarse
+    probe of every IVF and hier serve form; the broadcast of the
+    bounded centroid frame is the exempt nested loop."""
+    wq = W.partitionBy("q_id", *by).orderBy(F.desc("csim"), F.asc("cid"))
+    return (
+        queries.join(F.broadcast(cent), how="cross")
+        .select("q_id", "qv", *by, "cid", dot("qv", "cv").alias("csim"))
+        .withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= n_probe)
+        .select("q_id", "qv", *by, F.col("cid").alias("bucket"))
+    )
+
+
+def _top_rows(scored: DataFrame, k: int, by: str) -> DataFrame:
+    """The first ``k`` rows per q_id of ``scored`` by (desc ``by``,
+    asc nn_id), numbered ``rn``."""
+    wk = W.partitionBy("q_id").orderBy(F.desc(by), F.asc("nn_id"))
+    return scored.withColumn("rn", F.row_number().over(wk)).filter(F.col("rn") <= k)
+
+
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, nn_id, sim_raw) -> each query's top ``k`` as
+    (q_id, nn_id, sim, rn): the exact rank and emit shape every
+    approximate kNN form shares, sim rounded to 6 places."""
+    return _top_rows(scored, k, "sim_raw").select(
+        "q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn"
+    )
+
+
+def probed_join(probes: DataFrame, table: DataFrame, keys: tuple[str, ...]):
+    """(candidates, probed): ``probes`` joined to the inverted file
+    ``table`` on the cell ``keys``, self-matches dropped. The table side
+    is first pruned to the probed buckets by a bounded ``isin``
+    (<= n_q·probes values), which a bucketed parquet scan takes as a
+    pushed filter (kept as a value list up to
+    ``session._PARQUET_IN_THRESHOLD``, not degraded to a range): row
+    groups of unprobed buckets are skipped, and the
+    scan keeps its partitioning, so the join stays exchange-free on the
+    corpus side. At full probes it selects everything."""
+    probed = sorted(r.bucket for r in probes.select("bucket").distinct().collect())
+    cand = probes.join(table.filter(F.col("bucket").isin(probed)), list(keys)).filter(
+        F.col("q_id") != F.col("vec_id")
+    )
+    return cand, probed
+
+
+def exact_serve(
+    probes: DataFrame, assigned: DataFrame, keys: tuple[str, ...], k: int
+) -> DataFrame:
+    """Top-``k`` of the probed cells: ``probes`` (q_id, qv, *keys)
+    against the (vec_id, *keys, v) inverted file ``assigned``, ranked by
+    the exact Catalyst ``dot``."""
+    cand, _ = probed_join(probes, assigned, keys)
+    return rank_topk(
+        cand.select(
+            "q_id", F.col("vec_id").alias("nn_id"), dot("qv", "v").alias("sim_raw")
+        ),
+        k,
+    )
+
+
+def adc_rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    books,
+    corpus: DataFrame,
+    k: int,
+    rerank: int,
+) -> DataFrame:
+    """The one ADC stage (IVFADC, Jegou et al. TPAMI 2011): candidates
+    (q_id, vec_id, code) scored through per-query lookup tables of
+    sub-dot-products with the (M, K, sub) ``books``, the ADC top
+    ``rerank·k`` per query kept, and those re-ranked exactly against
+    the (vec_id, v) ``corpus``. The LUTs are built on the driver from
+    the bounded query set (n_q·M·K doubles) and broadcast, so the
+    candidate stream carries codes, never a query vector (attaching the
+    512-byte query to each candidate was 13 GB through the Python
+    workers at sf100). The shortlist with its query vectors is
+    broadcast into the re-rank join, so the corpus side never
+    shuffles."""
+    import numpy as np
+
+    books = np.asarray(books, dtype=np.float64)
+    m, _, sub = books.shape
+    q_rows = queries.select("q_id", "qv").collect()
+    qids = np.asarray([r["q_id"] for r in q_rows], dtype=np.int64)
+    order = np.argsort(qids)
+    qids = qids[order]
+    Q = np.asarray([q_rows[i]["qv"] for i in order], dtype=np.float64).reshape(
+        len(qids), m, sub
+    )
+    b_lut = _bc(queries.sparkSession, (qids, np.einsum("qms,mks->qmk", Q, books)))
+
+    def adc(batches):
+        import pyarrow as pa
+
+        lut_qids, luts = b_lut.value  # (nq,), (nq, M, K)
+        marange = np.arange(m)[None, :]
+        for rb in batches:
+            if not len(rb):
+                continue
+            qidx = np.searchsorted(lut_qids, np.asarray(rb.column(0)))
+            codes = arrow_matrix(rb.column(2), "code", m)
+            sim = luts[qidx[:, None], marange, codes].sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), rb.column(1), pa.array(sim, type=pa.float64())],
+                ["q_id", "nn_id", "adc_sim"],
+            )
+
+    scored = cand.select("q_id", "vec_id", "code").mapInArrow(
+        adc, "q_id long, nn_id long, adc_sim double"
+    )
+    short = _top_rows(scored, rerank * k, "adc_sim").select("q_id", "nn_id")
+    cv = corpus.select(F.col("vec_id").alias("nn_id"), F.col("v").alias("cv"))
+    return rank_topk(
+        F.broadcast(short.join(queries.select("q_id", "qv"), "q_id"))
+        .join(cv, "nn_id")
+        .select("q_id", "nn_id", dot("qv", "cv").alias("sim_raw")),
+        k,
+    )
+
+
 def _ivf_candidates(
     spark: SparkSession,
     e: DataFrame,
     queries: DataFrame,
-    n_hint: int | None = None,
-    tables: int = 1,
-    n_probe: int | None = None,
-    nlist: int | None = None,
+    nlist: int,
+    tables: int,
+    n_probe: int,
 ) -> DataFrame:
-    """Candidate stage of the IVF search (build index, probe, bucket
-    equi-join) — split out so scale measurements can count candidate
-    rows directly (SCALE.md r8 boundedness ledger). Single-table form
-    returns one row per (query, candidate) with vector payloads
-    carried through the bucket join; the L-table form returns pairs
-    already DEDUPED across tables (the id-only index + pair distinct
-    + vector join-back plan — see the inline comment)."""
+    """Candidate stage of the L-table IVF search: ``tables``
+    independently-seeded quantizers, one assignment pass emitting
+    ``tables`` id-only index rows per vector, each query probing its
+    ``n_probe`` nearest buckets per table, and candidate pairs deduped
+    across tables before the vectors join back by id. Shipping vectors
+    through the L-way replication instead made the candidate pass 4.5x
+    slower than single-table despite 5x fewer candidates."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    n_corpus = n_hint if n_hint is not None else e.count()
-    if nlist is None:
-        nlist = min(_ivf_nlist(n_corpus), max(1, n_corpus))
-    tables = max(1, tables)
-    # collect the bounded training prefix ONCE and share it across the
-    # L independently-seeded k-means builds (the seeds vary the init,
-    # not the data — re-collecting per table paid L scans)
+    # one training prefix shared by the L builds: the seeds vary the
+    # init, not the data
     sample = _ivf_train_prefix(e)
     cents_per_table = [
         _ivf_centroids(spark, e, nlist, seed=7 + 13 * t, sample=sample)
@@ -1096,81 +1231,36 @@ def _ivf_candidates(
         ],
         "tbl long, cid long, cv array<double>",
     )
-
-    # assignment: vector -> nearest centroid per table. A vectorized
-    # argmax over the broadcast (tables*nlist, dim) centroid matrix —
-    # one pass, NO shuffle, emitting `tables` index rows per vector.
-    # The former broadcast-cross + row_number() window shuffled
-    # n * nlist rows (vector payload included) just to pick each row's
-    # max: 32 GB of exchange at sf100 (SCALE.md round 6). np.argmax
-    # takes the first maximum, matching ORDER BY csim DESC, cid ASC.
+    # a broadcast argmax per table over the (tables*nlist, dim) centroid
+    # matrix; np.argmax takes the first maximum, matching the probe's
+    # (desc csim, asc cid) order
     b_cmat = _bc(
         spark,
-        np.asarray(
-            [c for cents in cents_per_table for c in cents], dtype=np.float64
-        ),
-    )
-    n_tables = tables  # closure-captured plain int
-
-    def assign(with_payload: bool):
-        def gen(batches):
-            cmat = np.asarray(b_cmat.value, dtype=np.float64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.asarray(list(pdf["v"]), dtype=np.float64)
-                sims = m @ cmat.T  # (rows, tables*nlist)
-                nl = sims.shape[1] // n_tables
-                buckets = sims.reshape(len(pdf), n_tables, nl).argmax(axis=2)
-                cols = {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_tables),
-                    "tbl": np.tile(np.arange(n_tables, dtype=np.int64), len(pdf)),
-                    "bucket": buckets.reshape(-1).astype(np.int64),
-                }
-                if with_payload:
-                    cols["v"] = np.repeat(pdf["v"].to_numpy(), n_tables)
-                yield pd.DataFrame(cols)
-
-        return gen
-
-    # Single-table probe count scales with nlist so the probed
-    # FRACTION stays roughly constant (~25%) as both grow: at 150k
-    # synthetic clustered vectors (nlist 37), recall@5 measured
-    # 0.744/0.796/0.844 at 6/9/12 probes with flat runtime (SCALE.md
-    # r6) — the fraction, not the count, is what recall tracks. The
-    # L-table tier passes a small fixed n_probe instead.
-    if n_probe is None:
-        n_probe = max(_N_PROBE, nlist // 4)
-    wq = W.partitionBy("q_id", "tbl").orderBy(F.desc("csim"), F.asc("cid"))
-    probes = (
-        queries.join(F.broadcast(cent), how="cross")
-        .select("q_id", "qv", "tbl", "cid", dot("qv", "cv").alias("csim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("q_id", "qv", "tbl", F.col("cid").alias("bucket"))
+        np.asarray([c for cents in cents_per_table for c in cents], dtype=np.float64),
     )
 
-    if tables == 1:
-        # candidate generation: equi-join on (table, bucket), vector
-        # payload carried through the inverted file (one row per
-        # vector, no replication — the r6-tuned plan)
-        assigned = e.mapInPandas(
-            assign(True), "vec_id long, tbl long, bucket long, v array<double>"
-        )
-        return probes.join(assigned, ["tbl", "bucket"]).filter(
-            F.col("q_id") != F.col("vec_id")
-        )
+    def assign(batches):
+        cmat = b_cmat.value
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            m = arrow_matrix(rb.column(1), "v", cmat.shape[1])
+            buckets = (m @ cmat.T).reshape(len(m), tables, -1).argmax(axis=2)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(np.asarray(rb.column(0)), tables)),
+                    pa.array(np.tile(np.arange(tables, dtype=np.int64), len(m))),
+                    pa.array(buckets.reshape(-1).astype(np.int64)),
+                ],
+                ["vec_id", "tbl", "bucket"],
+            )
 
-    # L-table form: the inverted file is ID-ONLY (24-byte rows), so the
-    # L-way replication never ships vector payload; candidate PAIRS are
-    # deduped across tables first and the vectors join back by id once
-    # per surviving pair. (First cut replicated v through the bucket
-    # join: 4 tables x 2M vectors of payload made the candidate pass
-    # 4.5x slower than single-table despite 5x fewer candidates —
-    # SCALE.md r8.)
-    idx = e.mapInPandas(assign(False), "vec_id long, tbl long, bucket long")
+    idx = e.select("vec_id", "v").mapInArrow(
+        assign, "vec_id long, tbl long, bucket long"
+    )
     pairs = (
-        probes.select("q_id", "tbl", "bucket")
+        centroid_probe(cent, queries, n_probe, by=("tbl",))
+        .select("q_id", "tbl", "bucket")
         .join(idx, ["tbl", "bucket"])
         .filter(F.col("q_id") != F.col("vec_id"))
         .select("q_id", "vec_id")
@@ -1200,7 +1290,9 @@ def _ivf_topk_core(
     ``tables``/``n_probe`` select the cost regime:
     - tables=1, n_probe=None (default): single quantizer, probe count
       scales with nlist so the probed FRACTION stays ~25% — Θ(n/4)
-      per-query work, the constant-factor tier.
+      per-query work, the constant-factor tier. This is ``ivf_build``
+      with nothing persisted, then the standing index's serve, so it
+      is bit-equal to ``knn_ivf_topk_indexed``.
     - tables=L>1 with a small fixed ``n_probe``: L independently-
       seeded k-means quantizers; every vector is indexed once per
       table ((table, bucket) composite key), every query probes only
@@ -1212,27 +1304,25 @@ def _ivf_topk_core(
       another's (the same L-repetition argument as classic LSH
       tables), property-tested on a 50k zipf-clustered corpus against
       brute force (tests/test_properties.py)."""
-    cand = _ivf_candidates(
-        spark,
-        e,
-        queries,
-        n_hint=n_hint,
-        tables=tables,
-        n_probe=n_probe,
-        nlist=nlist,
+    from mr_py_spark.operators.bucketed import identity_save
+
+    n_corpus = n_hint if n_hint is not None else e.count()
+    if nlist is None:
+        nlist = min(_ivf_nlist(n_corpus), max(1, n_corpus))
+    if n_probe is None:
+        n_probe = _ivf_n_probe(nlist)
+    if tables > 1:
+        cand = _ivf_candidates(spark, e, queries, nlist, tables, n_probe)
+        return rank_topk(
+            cand.select(
+                "q_id", F.col("vec_id").alias("nn_id"), dot("qv", "v").alias("sim_raw")
+            ),
+            k,
+        )
+    cent, assigned = ivf_build(
+        spark, e, nlist, identity_save, ("ivf_cent", "ivf_assign")
     )
-    wk = W.partitionBy("q_id").orderBy(F.desc("sim_raw"), F.asc("nn_id"))
-    # candidate pairs reach here unique on (q_id, vec_id): single-table
-    # by construction (one bucket per vector, distinct probed buckets),
-    # multi-table via the pair distinct inside _ivf_candidates
-    scored = cand.select(
-        "q_id", F.col("vec_id").alias("nn_id"), dot("qv", "v").alias("sim_raw")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn")
-    )
+    return exact_serve(centroid_probe(cent, queries, n_probe), assigned, ("bucket",), k)
 
 
 @register("knn_ivf_topk", tags=("C3",), oracle=None)
@@ -1241,18 +1331,15 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures recall against knn_cosine_topk (fixture) and against a
     numpy brute force on a skewed synthetic corpus.
 
-    Index build (one pass, all joins keyed):
+    Index build (``ivf_build``, nothing persisted):
       centroids  = n/4096 seeded spherical k-means centers (clamped to
                    [16, 4096], see _ivf_nlist) learned on a bounded
-                   prefix — sized so the AVERAGE BUCKET stays ~4096
-                   vectors at any corpus size, keeping candidate-join
-                   fan-out bounded (r6: fixed 16 centroids at 2M
-                   vectors meant 125k-row buckets and 3x the runtime)
-      assignment = each vector -> nearest centroid id via a vectorized
-                   argmax against the broadcast centroid matrix inside
-                   mapInPandas — one pass, ZERO shuffle (r6: the old
-                   broadcast-cross + window shuffled n*nlist payload
-                   rows, 32 GB at sf100)
+                   prefix, sized so the AVERAGE BUCKET stays ~4096
+                   vectors at any corpus size and candidate-join fan-out
+                   stays bounded
+      assignment = each vector -> nearest centroid id by a vectorized
+                   argmax against the broadcast centroid matrix, one
+                   zero-shuffle Arrow pass
     Search: each query probes its nprobe (= max(6, nlist/4)) nearest
     centroids' buckets only — candidate generation is an equi-join on
     centroid_id with fan-out n_queries * 4096 * nprobe. Honest
@@ -1261,22 +1348,15 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-factor win over brute force plus the structural win that
     the work is a bucketed equi-join (shuffle-partitionable, no
     cross join) instead of an all-pairs nested loop. Sub-linear
-    per-query cost at a fixed recall target would need L repeated
-    hash tables / a probe CAP with multi-probe, which is the
-    documented knob if 25% probing is too hot at 10^9 vectors
-    (recall/runtime trade-off ledger in SCALE.md r6). The only nested-loop join in the plan is the
-    broadcast of the bounded (<= 4096-row) centroid frame on the
-    probe side (exempt from the no-cross-join invariant, asserted in
-    tests/test_plans.py).
+    per-query cost at a fixed recall target needs L repeated tables
+    (``knn_ivf_multitable_topk``) or the hier tier. The only
+    nested-loop join in the plan is the broadcast of the bounded
+    (<= 4096-row) centroid frame on the probe side (exempt from the
+    no-cross-join invariant, asserted in tests/test_plans.py).
     """
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
-    queries = (
-        e.filter(F.col("vec_id") < 50)
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("v", "qv")
-    )
     return _ivf_topk_core(
-        spark, e, queries, n_hint=_table_rows(e, sf_dir, "embeddings")
+        spark, e, knn_queries(e), n_hint=_table_rows(e, sf_dir, "embeddings")
     )
 
 
@@ -1439,43 +1519,15 @@ def knn_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``knn_ivf_topk`` over the STANDING index (``ivf_index``): the
     per-query-batch cost is probe (bounded centroid broadcast, the
     exempt nested loop) + one equi-join against the bucket-bucketed
-    inverted file + exact re-rank — no quantizer training, no corpus
-    assignment pass, no full-corpus scan beyond the probed buckets.
-    Rows-only (the per-run form is too); property-tested bit-equal to
-    ``knn_ivf_topk`` on the fixture — the index stores exactly what
-    the per-run form recomputes."""
+    inverted file pruned to the probed buckets + exact re-rank — no
+    quantizer training, no corpus assignment pass. Rows-only (the
+    per-run form is too); property-tested bit-equal to
+    ``knn_ivf_topk``, which runs the same serve over the same build."""
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
-    queries = (
-        e.filter(F.col("vec_id") < 50)
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("v", "qv")
-    )
     cent, assigned, nlist = ivf_index(spark, sf_dir)
-    n_probe = max(_N_PROBE, nlist // 4)
-    wq = W.partitionBy("q_id").orderBy(F.desc("csim"), F.asc("cid"))
-    probes = (
-        queries.join(F.broadcast(cent), how="cross")
-        .select("q_id", "qv", "cid", dot("qv", "cv").alias("csim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("q_id", "qv", F.col("cid").alias("bucket"))
-    )
-    # prune the inverted-file side to the probed buckets (r16, the hier
-    # tiers' pattern): bounded isin (≤ n_q·n_probe values) pushed to
-    # the bucket-sorted parquet scan; filter preserves the bucketed
-    # scan's partitioning so the join stays exchange-free
-    probed = sorted(r.bucket for r in probes.select("bucket").distinct().collect())
-    cand = probes.join(
-        assigned.filter(F.col("bucket").isin(probed)), "bucket"
-    ).filter(F.col("q_id") != F.col("vec_id"))
-    wk = W.partitionBy("q_id").orderBy(F.desc("sim_raw"), F.asc("nn_id"))
-    scored = cand.select(
-        "q_id", F.col("vec_id").alias("nn_id"), dot("qv", "v").alias("sim_raw")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn")
+    return exact_serve(
+        centroid_probe(cent, knn_queries(e), _ivf_n_probe(nlist)),
+        assigned, ("bucket",), 5,
     )
 
 
@@ -2176,15 +2228,10 @@ def knn_ivf_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL oracle; recall properties gate correctness."""
     tables = positive_int_knob("SPARK_GRAFT_IVF_TABLES", _IVF_TABLES)
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
-    queries = (
-        e.filter(F.col("vec_id") < 50)
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("v", "qv")
-    )
     return _ivf_topk_core(
         spark,
         e,
-        queries,
+        knn_queries(e),
         n_hint=_table_rows(e, sf_dir, "embeddings"),
         tables=tables,
         n_probe=_N_PROBE,
@@ -2324,36 +2371,27 @@ def _ivfpq_topk_core(
     carries (vec_id, bucket, 16 one-byte codes) — ~24 bytes of payload
     instead of the 512-byte double vector — so the memory/network cost
     of candidate generation drops ~20x and a 10^9-vector index fits a
-    modest cluster's RAM. Scoring is asymmetric distance (ADC): every
-    query's (M x K) lookup table of sub-dot-products is precomputed
-    ON THE DRIVER from the bounded query set and broadcast (50 queries
-    = 1.6 MB; queries are the small side of a top-k search by
-    definition — the same bounded-collect class as the IVF centroid
-    fallback), so the candidate stream carries only (q_id, vec_id,
-    code): attaching the 512-byte query vector to each of the ~n/4
-    candidate rows instead was 13 GB through the Python workers at
-    sf100 and dominated the runtime. The top ``rerank * k`` ADC
-    candidates per query are re-ranked with exact dot products via an
-    equi-join back to the full vectors — the standard two-stage recall
-    repair, touching only O(rerank*k) full vectors per query."""
+    modest cluster's RAM. The per-run form of the hier ADC tier:
+    ``ivf_build`` with nothing persisted, codebooks trained on a
+    hash-ordered bounded sample, then the shared encode pass and ADC
+    stage (``adc_rerank``), whose exact re-rank touches only
+    O(rerank·k) full vectors per query."""
     import numpy as np
-    import pandas as pd
 
-    from mr_py_spark.operators.vectors import _PQ_TRAIN, _pq_train
-
-    # Search-tier PQ geometry: 16 subspaces x 256 centroids = 16 bytes
-    # per vector. Finer than the storage tier's 8x16 on purpose: ADC
-    # must RANK within-cluster neighbors, and coarse codes collapse
-    # them to identical codes (see _pq_train docstring for the
-    # measured cliff).
-    M, K = 16, 256
+    from mr_py_spark.operators.bucketed import identity_save
+    from mr_py_spark.operators.vectors import (
+        _ADC_K,
+        _ADC_M,
+        _PQ_TRAIN,
+        _pq_encode_frame,
+        _pq_train,
+    )
 
     n_corpus = n_hint if n_hint is not None else e.count()
     nlist = min(_ivf_nlist(n_corpus), max(1, n_corpus))
-    cents = _ivf_centroids(spark, e, nlist)
-    cent = centroid_frame(spark, cents)
-    b_cmat = _bc(spark, np.asarray(cents, dtype=np.float64))
-
+    cent, assigned = ivf_build(
+        spark, e, nlist, identity_save, ("ivf_cent", "ivf_assign")
+    )
     train_rows = (
         e.orderBy(F.xxhash64("vec_id"), F.asc("vec_id"))
         .limit(_PQ_TRAIN)
@@ -2361,113 +2399,10 @@ def _ivfpq_topk_core(
         .collect()
     )
     X = np.asarray([r[0] for r in train_rows], dtype=np.float64)
-    sub_d = X.shape[1] // M
-    b_books = _bc(spark, _pq_train(X, m=M, k=min(K, len(X)), sub=sub_d))
-
-    def assign_encode(batches):
-        cmat = np.asarray(b_cmat.value, dtype=np.float64)
-        books = np.asarray(b_books.value, dtype=np.float64)
-        # argmin ||x-c||^2 == argmax (x.c - ||c||^2/2): a (rows x K)
-        # matmul per subspace instead of materializing the
-        # (rows x K x sub_d) difference tensor — the tensor form was
-        # memory-bandwidth-bound and dominated the sf100 encode pass.
-        half_c2 = 0.5 * (books**2).sum(-1)  # (M, K')
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray(list(pdf["v"]), dtype=np.float64)
-            codes = np.empty((len(m), M), dtype=np.int32)
-            for mi in range(M):
-                sub = m[:, mi * sub_d : (mi + 1) * sub_d]
-                codes[:, mi] = (sub @ books[mi].T - half_c2[mi]).argmax(1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "bucket": (m @ cmat.T).argmax(axis=1).astype(np.int64),
-                    "code": list(codes),
-                }
-            )
-
-    # the index frame: NO vector payload — this is the point of PQ
-    index = e.mapInPandas(
-        assign_encode, "vec_id long, bucket long, code array<int>"
-    )
-
-    # per-query ADC lookup tables, driver-side: the query set is the
-    # bounded side of a top-k search (50 rows here), so its LUTs are
-    # n_q * M * K doubles — broadcast metadata, not data.
-    q_rows = queries.select("q_id", "qv").collect()
-    qids = np.asarray([r["q_id"] for r in q_rows], dtype=np.int64)
-    order = np.argsort(qids)
-    qids = qids[order]
-    Q = np.asarray([q_rows[i]["qv"] for i in order], dtype=np.float64).reshape(
-        len(qids), M, sub_d
-    )
-    b_lut = _bc(
-        spark,
-        (qids, np.einsum("qms,mks->qmk", Q, np.asarray(b_books.value))),
-    )
-
-    n_probe = max(_N_PROBE, nlist // 4)
-    wq = W.partitionBy("q_id").orderBy(F.desc("csim"), F.asc("cid"))
-    probes = (
-        queries.join(F.broadcast(cent), how="cross")
-        .select("q_id", "qv", "cid", dot("qv", "cv").alias("csim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("q_id", F.col("cid").alias("bucket"))
-    )
-
-    cand = probes.join(index, "bucket").filter(F.col("q_id") != F.col("vec_id"))
-
-    def adc(batches):
-        # mapInArrow, not pandas: the candidate stream is ~n*probe_frac
-        # rows per query set; per-row Python objects (and especially a
-        # per-candidate copy of the 512-byte query vector — 13 GB at
-        # sf100) are what the broadcast LUTs exist to avoid. Arrow list
-        # values are contiguous per batch, so codes view zero-copy as a
-        # (rows, M) matrix; scoring is one gather + sum.
-        import pyarrow as pa
-
-        lut_qids, luts = b_lut.value  # (nq,), (nq, M, K')
-        marange = np.arange(M)[None, :]
-        for rb in batches:
-            if not len(rb):
-                continue
-            q_id = np.asarray(rb.column(0))
-            qidx = np.searchsorted(lut_qids, q_id)
-            codes = arrow_matrix(rb.column(2), "code", M)
-            sim = luts[qidx[:, None], marange, codes].sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), rb.column(1), pa.array(sim, type=pa.float64())],
-                ["q_id", "nn_id", "adc_sim"],
-            )
-
-    scored = cand.select("q_id", "vec_id", "code").mapInArrow(
-        adc, "q_id long, nn_id long, adc_sim double"
-    )
-    wk = W.partitionBy("q_id").orderBy(F.desc("adc_sim"), F.asc("nn_id"))
-    short = (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= rerank * k)
-        .select("q_id", "nn_id")
-    )
-
-    # exact re-rank: only rerank*k full vectors per query cross the wire
-    wr = W.partitionBy("q_id").orderBy(F.desc("sim_raw"), F.asc("nn_id"))
-    return (
-        short.join(
-            queries.select("q_id", "qv"), "q_id"
-        )
-        .join(
-            e.select(F.col("vec_id").alias("nn_id"), F.col("v").alias("cv")),
-            "nn_id",
-        )
-        .select("q_id", "nn_id", dot("qv", "cv").alias("sim_raw"))
-        .withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "nn_id", F.round("sim_raw", 6).alias("sim"), "rn")
-    )
+    books = _pq_train(X, m=_ADC_M, k=min(_ADC_K, len(X)), sub=X.shape[1] // _ADC_M)
+    probes = centroid_probe(cent, queries, _ivf_n_probe(nlist)).select("q_id", "bucket")
+    cand, _ = probed_join(probes, _pq_encode_frame(assigned, books), ("bucket",))
+    return adc_rerank(cand, queries, books, e, k, rerank)
 
 
 @register("knn_ivfpq_topk", tags=("C3",), oracle=None)
@@ -2482,13 +2417,8 @@ def knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula and centroid tier as ``knn_ivf_topk``; the only
     nested-loop join is the exempt bounded centroid broadcast."""
     e = _emb_double(tbl(spark, sf_dir, "embeddings"), "v")
-    queries = (
-        e.filter(F.col("vec_id") < 50)
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("v", "qv")
-    )
     return _ivfpq_topk_core(
-        spark, e, queries, n_hint=_table_rows(e, sf_dir, "embeddings")
+        spark, e, knn_queries(e), n_hint=_table_rows(e, sf_dir, "embeddings")
     )
 
 

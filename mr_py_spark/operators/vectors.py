@@ -132,6 +132,13 @@ _PQ_K = 16
 _PQ_TRAIN = 4096  # bounded training sample (hash-ordered, deterministic)
 _PQ_ITERS = 8
 
+#: The serve tiers' PQ geometry (knn_ivfpq_topk and the hier ADC tier):
+#: 16 subspaces x 256 codewords = 16 one-byte codes per vector. Finer
+#: than the storage tier's 8x16 on purpose: ADC must rank
+#: within-cluster neighbours, and coarse codes collapse them to
+#: identical codes (the cliff measured in _pq_train's docstring).
+_ADC_M, _ADC_K = 16, 256
+
 
 def arrow_matrix(col, name: str, d: int | None = None):
     """The one Arrow list -> ``(n, d)`` numpy matrix conversion behind
@@ -157,6 +164,49 @@ def arrow_matrix(col, name: str, d: int | None = None):
             f"column {name!r} holds a null or a vector whose length is not {d}"
         )
     return vals.to_numpy(zero_copy_only=False).reshape(n, d)
+
+
+def _pq_encode_frame(frame: DataFrame, books) -> DataFrame:
+    """The one PQ encode pass: ``frame`` with its ``v`` column replaced
+    by ``code``, each sub-vector's nearest codeword under the broadcast
+    (M, K, sub) ``books``. The argmax is the matmul form
+    (x·c − |c|²/2); the (rows × K × sub) difference tensor was
+    memory-bandwidth-bound at sf100. A ``mapInArrow`` pass on
+    ``arrow_matrix``, so a null vector or one whose length is not M·sub
+    raises naming ``v``, and every other column passes through as its
+    input array."""
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+    from mr_py_spark.util import bc
+
+    b_books = bc(frame.sparkSession, np.asarray(books, dtype=np.float64))
+    code = StructField("code", ArrayType(IntegerType()))
+    schema = StructType([code if f.name == "v" else f for f in frame.schema])
+
+    def encode(batches):
+        bks = b_books.value
+        m, _, sub = bks.shape
+        half = 0.5 * (bks**2).sum(-1)
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            vi = rb.schema.get_field_index("v")
+            X = arrow_matrix(rb.column(vi), "v", m * sub)
+            codes = np.empty((len(X), m), dtype=np.int32)
+            for mi in range(m):
+                s = X[:, mi * sub : (mi + 1) * sub]
+                codes[:, mi] = (s @ bks[mi].T - half[mi]).argmax(1)
+            arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, codes.size + 1, m, dtype=np.int32)),
+                pa.array(codes.reshape(-1)),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [arr if i == vi else rb.column(i) for i in range(rb.num_columns)],
+                [f.name for f in schema],
+            )
+
+    return frame.mapInArrow(encode, schema)
 
 
 def _kmeans_init(X, k: int, seed: int):

@@ -22,6 +22,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from mr_py_spark.util import positive_int_knob
+
 # Confs that are runtime-settable and required for correctness.
 _RUNTIME_CONFS = {
     # events.parquet stores TIMESTAMP(NANOS) which Spark's parquet reader
@@ -183,6 +185,26 @@ def _driver_memory() -> str:
 #: about 53 KB of Metaspace per class, a full cache holds ~210 MB.
 _CODEGEN_CACHE_ENTRIES = 4096
 
+#: BLAS threads per Python worker of ``get_spark`` sessions. The
+#: bundled OpenBLAS spawns a thread per core per process for a ~1.25x
+#: single-matmul gain (23.2 vs 28.9 ms on the knn block tile), so 32
+#: concurrent Arrow-cogroup workers ran ~1024 BLAS threads: the
+#: oversubscription behind sf1 knn_selfjoin's 1.8-17 s wall bands on
+#: identical code (SCALE.md r16). Task parallelism comes from Spark;
+#: the driver, which runs the bounded-sample root k-means, stays
+#: unpinned.
+_WORKER_BLAS_THREADS = 1
+
+#: ``spark.sql.parquet.pushdown.inFilterThreshold`` of ``get_spark``
+#: sessions (Spark's default is 10): above it an In-predicate is pushed
+#: as a [min, max] range, useless for the ANN serve tiers' probed-bucket
+#: ``isin``, whose values scatter across the key domain. With the list
+#: kept, row-group skipping on the bucket-sorted layout tracks the
+#: probed fraction. Not in harden(), which every query's fingerprint
+#: reaches; a vanilla session keeps the default, a performance
+#: difference only.
+_PARQUET_IN_THRESHOLD = 1024
+
 
 def _prepend_worker_path(spark: SparkSession) -> None:
     """Put the package root first on the Python workers' PYTHONPATH,
@@ -211,7 +233,7 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
     only, never correctness).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        cpus = positive_int_knob("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
     # Shuffle partitioning: default = core count (right for the sub-GB
     # driver/bench fixtures where 200 over-parallelizes). Above sf~10 a
     # single local machine needs more: per-partition shuffle volume
@@ -223,45 +245,10 @@ def get_spark(app_name: str = "mr_py_spark", cpus: int | None = None) -> SparkSe
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle_parts)
-        # Pin PYTHON-WORKER BLAS to one thread (static conf — workers
-        # inherit spark.executorEnv.*). This container's OpenBLAS
-        # spawns a thread per core per process for a ~1.25× single-
-        # matmul gain (measured: 23.2 vs 28.9 ms on the knn block
-        # tile), so 32 concurrent Arrow-cogroup workers ran ~1024 BLAS
-        # threads — the oversubscription behind sf1 knn_selfjoin's
-        # session-to-session wall bands (1.8–17 s on identical code,
-        # VERDICT r15 item 5; A/B in SCALE.md r16). Task-level
-        # parallelism comes from Spark; intra-task BLAS threads only
-        # fight it. The DRIVER process is deliberately left unpinned —
-        # the bounded-sample root k-means (vectors._lloyd) runs there
-        # and does benefit from threaded BLAS.
+        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", str(_WORKER_BLAS_THREADS))
+        .config("spark.executorEnv.OMP_NUM_THREADS", str(_WORKER_BLAS_THREADS))
         .config(
-            "spark.executorEnv.OPENBLAS_NUM_THREADS",
-            os.environ.get("SPARK_GRAFT_WORKER_BLAS_THREADS", "1"),
-        )
-        .config(
-            "spark.executorEnv.OMP_NUM_THREADS",
-            os.environ.get("SPARK_GRAFT_WORKER_BLAS_THREADS", "1"),
-        )
-        # Parquet In-predicate pushdown keeps the literal value list
-        # only up to this threshold (default 10); above it the filter
-        # is rewritten to a [min, max] range, which is useless for a
-        # probed-bucket set scattered across the key domain (the ANN
-        # serve tiers' bounded `isin` over probed roots — r16: measured
-        # decoding the FULL 2M-row assigned table at 39/488-root
-        # selectivity because the 400-odd-value INSET degraded to the
-        # range form; with the value list kept, row-group skipping on
-        # the bucket-key-sorted small-row-group layout tracks the
-        # probed fraction). Set here and NOT in harden(): harden is in
-        # every registered query's fingerprint closure, so a conf
-        # nudge there re-stamps the whole registry into the driver
-        # verification window at once (the `_fingerprint` hazard —
-        # this exact edit did it in-session before being moved). A
-        # vanilla harness session keeps Spark's default; the prune is
-        # a performance pushdown, never a correctness dependency.
-        .config(
-            "spark.sql.parquet.pushdown.inFilterThreshold",
-            os.environ.get("SPARK_GRAFT_PARQUET_IN_THRESHOLD", "1024"),
+            "spark.sql.parquet.pushdown.inFilterThreshold", str(_PARQUET_IN_THRESHOLD)
         )
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")

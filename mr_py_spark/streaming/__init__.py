@@ -1579,7 +1579,6 @@ def _hier_maintenance_step(
         _ROOT_ROWS,
         _books_array,
         _books_frame,
-        _pq_encode_frame,
         hier_assign,
         hier_build,
         hier_retrain,
@@ -1594,7 +1593,7 @@ def _hier_maintenance_step(
         pin_drift_ref,
         semantic_delta_status,
     )
-    from mr_py_spark.operators.vectors import _pq_train
+    from mr_py_spark.operators.vectors import _pq_encode_frame, _pq_train
     from mr_py_spark.sources.sinks import write_bucketed
 
     if drift_ratio is None:
@@ -1782,7 +1781,8 @@ def stream_hier_pq_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live roots. Rows-only (seeded quantizers + engine-specific code
     layout); crash-window, replay, and retrain-re-encode properties are
     byte-level-tested in tests/test_streaming_sink.py."""
-    from mr_py_spark.operators.hier import _books_array, _pq_encode_frame
+    from mr_py_spark.operators.hier import _books_array
+    from mr_py_spark.operators.vectors import _pq_encode_frame
 
     tag = stream_table_tag(sf_dir)
     root_table, leaf_table, idx_table, codes_table, books_table = (

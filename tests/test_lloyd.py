@@ -103,28 +103,42 @@ def test_ivf_centroids_refuses_a_ragged_training_vector(spark):
         _ivf_centroids(spark, df, 4)
 
 
-@pytest.mark.parametrize(
-    "bad",
-    [
-        [[0.1] * 63, [0.1] * 65],  # 128 values: reshapes into two rows silently
-        [[0.1] * 64, None],
-        [[0.1] * 64, [0.1] * 63 + [None]],
-    ],
-    ids=["ragged", "null_vector", "null_value"],
-)
-def test_ivf_assign_refuses_ragged_or_null_vectors(spark, bad):
-    from mr_py_spark.operators.similarity import ivf_assign_with
+_BAD_VECTORS = {
+    "ragged": [[0.1] * 63, [0.1] * 65],  # 128 values: reshapes into two rows silently
+    "null_vector": [[0.1] * 64, None],
+    "null_value": [[0.1] * 64, [0.1] * 63 + [None]],
+    # every row consistent, but not the kernel's width: a slicing
+    # encoder silently used the first 64 dims
+    "all_wide": [[0.1] * 65, [0.1] * 65],
+}
 
-    C = _unit_sample(7, 4, 64)
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
-        "cid long, cv array<double>",
-    )
+
+@pytest.mark.parametrize(
+    "kernel,bad",
+    [("assign", b) for b in _BAD_VECTORS] + [("encode", b) for b in _BAD_VECTORS],
+    ids=[*_BAD_VECTORS, *(f"encode_{b}" for b in _BAD_VECTORS)],
+)
+def test_ivf_assign_refuses_ragged_or_null_vectors(spark, kernel, bad):
+    """The broadcast-argmax assignment and the PQ encode pass both
+    refuse a malformed vector batch, naming the ``v`` column: 64-dim
+    centroids, and 16 x 4-dim codebooks."""
+    from mr_py_spark.operators.similarity import ivf_assign_with
+    from mr_py_spark.operators.vectors import _pq_encode_frame
+
     vecs = spark.createDataFrame(
-        list(enumerate(bad)), "vec_id long, v array<double>"
+        list(enumerate(_BAD_VECTORS[bad])), "vec_id long, v array<double>"
     ).coalesce(1)
+    if kernel == "assign":
+        C = _unit_sample(7, 4, 64)
+        cent = spark.createDataFrame(
+            [(i, [float(x) for x in C[i]]) for i in range(len(C))],
+            "cid long, cv array<double>",
+        )
+        out = ivf_assign_with(cent, vecs)
+    else:
+        out = _pq_encode_frame(vecs, _unit_sample(8, 16 * 8, 4).reshape(16, 8, 4))
     with pytest.raises(Exception, match="column 'v'"):
-        ivf_assign_with(cent, vecs).collect()
+        out.collect()
 
 
 @pytest.mark.parametrize(
@@ -157,7 +171,12 @@ def test_builder_stamps_name_the_lloyd_kernel(monkeypatch):
     not only the trainer that wraps it: otherwise a kernel edit
     re-attaches stale cached tables."""
     from mr_py_spark.operators import bucketed
-    from mr_py_spark.operators.hier import _hier_index_stamp, _pq_books_stamp
+    from mr_py_spark.operators.hier import (
+        _hier_index_stamp,
+        _pq_books_stamp,
+        _pq_codes_stamp,
+    )
+    from mr_py_spark.operators.vectors import _pq_encode_frame
     from mr_py_spark.operators.similarity import _ivf_stamp
 
     real = bucketed.builder_stamp
@@ -178,6 +197,10 @@ def test_builder_stamps_name_the_lloyd_kernel(monkeypatch):
             {_kmeans_init, _lloyd, _nearest, _unit_rows, arrow_matrix},
         ),
         (_pq_books_stamp, {_lloyd, _nearest, _pq_train}),
+        (
+            lambda: _pq_codes_stamp(10_000),
+            {_pq_encode_frame, arrow_matrix, _lloyd, _nearest, _pq_train},
+        ),
     ]
     for helper, kernel in cases:
         seen.clear()

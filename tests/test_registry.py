@@ -343,9 +343,9 @@ _FP_EDITS = {
         '"spark.sql.adaptive.enabled": "false",',
     ),
     "pq_k": (
-        "operators/hier.py",
-        "_PQ_M, _PQ_K = 16, 256\n",
-        "_PQ_M, _PQ_K = 16, 128\n",
+        "operators/vectors.py",
+        "_ADC_M, _ADC_K = 16, 256\n",
+        "_ADC_M, _ADC_K = 16, 128\n",
     ),
     "body": (
         "functions/__init__.py",
@@ -514,8 +514,8 @@ def test_fingerprint_sees_tuple_bindings_bodies_and_defaults(fp_variants):
     called as an attribute of a package module global
     (``mr_compat.mapreduce``) each re-stamp exactly the queries that
     reach them."""
-    hier = "mr_py_spark.operators.hier"
-    pq = _changed_by_edit(fp_variants, "pq_k", f"{hier}._PQ_M", f"{hier}._PQ_K")
+    vec = "mr_py_spark.operators.vectors"
+    pq = _changed_by_edit(fp_variants, "pq_k", f"{vec}._ADC_M", f"{vec}._ADC_K")
     assert "knn_hier_pq_topk_indexed" in pq
     body = _changed_by_edit(fp_variants, "body", "mr_py_spark.functions.ts_ntz")
     assert "q1_pricing_summary" in body

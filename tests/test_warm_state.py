@@ -87,6 +87,24 @@ def test_daemon_forks_only_when_single_threaded(tmp_path, blas_threads, falls_ba
     assert (b"starting the stock pyspark.daemon" in proc.stderr) == falls_back
 
 
+@pytest.mark.parametrize("bad", ["0", "-2", "x"])
+def test_get_spark_refuses_a_malformed_cpu_knob_before_building(monkeypatch, bad):
+    """``$SPARK_GRAFT_CPUS`` is parsed before the builder is touched: a
+    malformed value raises a ValueError naming the knob, and no
+    session (not even the running one) is looked up."""
+    from mr_py_spark import session
+
+    class NoBuilder:
+        @property
+        def builder(self):
+            raise AssertionError("a session builder was reached")
+
+    monkeypatch.setattr(session, "SparkSession", NoBuilder())
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.get_spark("cpu-knob-probe")
+
+
 def _compiles(spark) -> int:
     cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return cm.METRIC_COMPILATION_TIME().getCount()
